@@ -1,9 +1,9 @@
 package graft.operators
 
-import graft.sources.{GraftTable, Lake}
-import graft.streaming.MirrorLoop
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.streaming.ChangeFold
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** §2.C — MAINTAINED DSIR IMPORTANCE MODEL off the change feed: the
   * MomentsDelta discipline applied to DATA SELECTION. A growing corpus
@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   *   counts += counts(inserts ∪ update_postimages)
   *          −  counts(deletes ∪ update_preimages)
   *
-  * — one batch-sized hashed-featurize pass per side, a ≤B-row collect,
-  * and a KB state write. Unlike the float moment fold (MomentsDelta's
-  * documented 1e-9 drift), the integer fold is LOSSLESS: the maintained
+  * — one batch-sized hashed-featurize pass over the signed change rows,
+  * a ≤B-row collect, and a KB state write. Unlike the float moment fold
+  * (MomentsDelta's documented 1e-9 drift), the integer fold is
+  * LOSSLESS: the maintained
   * model equals the from-scratch recompute bit-for-bit, forever — no
   * refit cadence needed (DsirDeltaSpec asserts exact equality).
   *
@@ -29,119 +30,77 @@ import org.apache.spark.sql.functions._
   * are the same estimator over different bucketings — the spec pins the
   * hashed scorer against an independent local reference.
   *
-  * State lives under `root/gen-<cursor>/` with the MirrorLoop cursor
-  * discipline (cursor marks LAST; a crash between state write and
-  * cursor leaves the previous round authoritative; old gens prune). */
+  * State lives under `root/gen-<cursor>/` as a [[ChangeFold]] additive
+  * state (cursor marks LAST; a crash between state write and cursor
+  * leaves the previous round authoritative; old gens prune). */
 object DsirDelta {
 
   /** Hash buckets — the paper's model dimension (fixed state size). */
   val Buckets = 4096
 
-  private def genDir(root: String, snap: Long) = s"$root/gen-$snap"
-
-  private def writeState(spark: SparkSession, root: String, snap: Long,
-      rawC: Array[Long], tgtC: Array[Long]): Unit = {
-    import spark.implicits._
-    Seq((rawC.toSeq, tgtC.toSeq)).toDF("raw_c", "tgt_c")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"${genDir(root, snap)}/counts")
-  }
+  private val State = StructType.fromDDL("raw_c array<bigint>, tgt_c array<bigint>")
 
   /** The maintained per-bucket (raw, target) counts at the cursor. */
   def counts(spark: SparkSession, root: String): (Array[Long], Array[Long]) = {
-    val cur = MirrorLoop.cursorOf(spark, root).getOrElse(
-      throw new IllegalStateException(s"dsir state at $root not bootstrapped"))
-    val r = spark.read.parquet(s"${genDir(root, cur)}/counts").head()
+    val r = ChangeFold.state(spark, root, "dsir state")
     (r.getSeq[Long](0).toArray, r.getSeq[Long](1).toArray)
   }
 
   /** Per-doc hashed unigram+bigram BUCKET ARRAY (one entry per feature
     * occurrence, order = token order then bigram order): (doc_id, __tgt,
-    * bs array<int>). Built entirely in-row (r18 — zip_with bigrams over
-    * two slices: operands, never a lambda re-split). The count folds
-    * explode it; scoring folds it in place. Scoring passes `lit(false)`
-    * so UNLABELED docs score fine — only the count folds need lang. */
+    * __w, bs array<int>). Built entirely in-row (r18 — zip_with bigrams
+    * over two slices: operands, never a lambda re-split). The count fold
+    * explodes it; scoring folds it in place. Scoring passes `lit(false)`
+    * so UNLABELED docs score fine — only the count fold needs lang. */
   private def bucketArrays(docs: DataFrame,
-      flag: Column = isTarget): DataFrame = {
+      flag: Column = isTarget, w: Column = lit(1L)): DataFrame = {
     def hashB(c: Column): Column =
       pmod(xxhash64(c), lit(Buckets)).cast("int")
     docs
-      .select(col("doc_id"), flag.as("__tgt"),
+      .select(col("doc_id"), flag.as("__tgt"), w.as("__w"),
         TextOps.tokens(col("text")).as("t"))
-      .select(col("doc_id"), col("__tgt"), col("t"),
+      .select(col("doc_id"), col("__tgt"), col("__w"), col("t"),
         when(size(col("t")) >= 2,
           zip_with(slice(col("t"), lit(1), size(col("t")) - 1),
             slice(col("t"), lit(2), size(col("t")) - 1),
             (a, b) => hashB(concat(a, lit(" "), b))))
           .otherwise(typedLit(Array.empty[Int])).as("bg"))
-      .select(col("doc_id"), col("__tgt"),
+      .select(col("doc_id"), col("__tgt"), col("__w"),
         concat(transform(col("t"), hashB(_)), col("bg")).as("bs"))
   }
 
-  /** The exploded (doc_id, __tgt, b) occurrence stream (count folds). */
-  private def bucketed(docs: DataFrame,
-      flag: Column = isTarget): DataFrame =
-    bucketArrays(docs, flag)
-      .select(col("doc_id"), col("__tgt"), explode(col("bs")).as("b"))
-
   private def isTarget: Column = col("lang") === "en"
 
-  /** Per-bucket (raw, tgt) counts of a batch — a ≤B-row collect. */
-  private def batchCounts(docs: DataFrame): (Array[Long], Array[Long]) = {
+  /** Per-bucket (raw, tgt) counts of the rows at weight `w` — one
+    * exploded aggregate and a ≤B-row collect. Counts are EXACTLY
+    * additive, so the signed sums over a change batch are the state's
+    * delta. */
+  private def sums(docs: DataFrame, w: Column): Row = {
     val rawC = new Array[Long](Buckets)
     val tgtC = new Array[Long](Buckets)
-    bucketed(docs)
+    bucketArrays(docs, isTarget, w)
+      .select(col("__tgt"), col("__w"), explode(col("bs")).as("b"))
       .groupBy(col("b"))
-      .agg(count(lit(1)).as("n"), count(when(col("__tgt"), 1)).as("nt"))
+      .agg(sum(col("__w")), sum(when(col("__tgt"), col("__w")).otherwise(0L)))
       .collect().foreach { r =>
         rawC(r.getInt(0)) = r.getLong(1)
         tgtC(r.getInt(0)) = r.getLong(2)
       }
-    (rawC, tgtC)
+    Row(rawC.toSeq, tgtC.toSeq)
   }
 
   /** Fit the state from the source lake's current snapshot; no-op when
     * already bootstrapped. */
   def bootstrap(spark: SparkSession, srcLedger: String, root: String): Long =
-    MirrorLoop.cursorOf(spark, root).getOrElse {
-      MirrorLoop.rmrf(new java.io.File(root))
-      val snap = Lake.currentSnapshot(spark, srcLedger)
-      val (rawC, tgtC) = batchCounts(Lake.readAt(spark, srcLedger, snap))
-      writeState(spark, root, snap, rawC, tgtC)
-      MirrorLoop.markCursor(spark, root, snap)
-      snap
-    }
+    ChangeFold.additiveBootstrap(spark, srcLedger, root, State)(sums)
 
-  /** Fold every source change past the cursor into the counts: two
-    * batch-sized featurize passes + one KB state write. Returns the new
-    * cursor (unchanged when no commit landed). */
-  def applyRound(spark: SparkSession, srcLedger: String, root: String): Long = {
-    val cur = MirrorLoop.cursorOf(spark, root).getOrElse(
-      throw new IllegalStateException(s"dsir state at $root not bootstrapped"))
-    val changes = Lake.readChanges(spark, srcLedger, cur)
-    if (changes.isEmpty) return cur
-    val target = changes.agg(max(col("_commit_snapshot"))).head().getLong(0)
-    // counts fold over change ROWS directly (both update images ride the
-    // feed) — the per-row additive identity, like the moment fold
-    val batch = changes.localCheckpoint()
-    val (rawC, tgtC) = counts(spark, root)
-    def fold(df: DataFrame, sign: Int): Unit =
-      if (!df.isEmpty) {
-        val (br, bt) = batchCounts(df)
-        var i = 0
-        while (i < Buckets) {
-          rawC(i) += sign * br(i); tgtC(i) += sign * bt(i); i += 1
-        }
-      }
-    fold(batch.filter(
-      col("_change_type").isin("insert", "update_postimage")), 1)
-    fold(batch.filter(
-      col("_change_type").isin("delete", "update_preimage")), -1)
-    writeState(spark, root, target, rawC, tgtC)
-    MirrorLoop.markCursor(spark, root, target)
-    MirrorLoop.pruneGens(root, target)
-    target
-  }
+  /** Fold every source change past the cursor into the counts: one
+    * batch-sized featurize pass + one KB state write. Returns the new
+    * cursor (unchanged when no commit landed). Counts fold over change
+    * ROWS directly (both update images ride the feed) — the per-row
+    * additive identity, like the moment fold. */
+  def applyRound(spark: SparkSession, srcLedger: String, root: String): Long =
+    ChangeFold.additiveRound(spark, srcLedger, root, "dsir state")(sums)
 
   /** Score a documents frame against the MAINTAINED model — the
     * [[Sampling.qDocDsir]] estimator over the hashed bucketing: every
@@ -184,8 +143,8 @@ object DsirDelta {
     * one fold per micro-batch (cursor-replay-safe). */
   def maintainStream(spark: SparkSession, srcLedger: String, root: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    MirrorLoop.ledgerWatcher(spark, srcLedger, checkpointDir) { () =>
-      applyRound(spark, srcLedger, root): Unit
+    ChangeFold.stream(spark, srcLedger, checkpointDir) {
+      applyRound(spark, srcLedger, root)
     }
 
   /** Driver-gate entry ([rows] — the hashed bucketing has no SQL oracle;
@@ -196,15 +155,9 @@ object DsirDelta {
     * corpus re-reads after bootstrap. Fixture vs op bench-phase-split. */
   def qDocDsirDelta(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dsird").toString
-    val src = GraftTable(spark, s"$tmp/src_ledger", s"$tmp/src_gen")
-    val root = s"$tmp/dsir"
-    graft.BenchPhase("fixture") {
-      spark.read.parquet(s"$d/documents.parquet")
-        .select("doc_id", "text", "lang")
-        .repartition(4).write.parquet(s"$tmp/landing")
-      src.ingest(s"$tmp/landing")
-      bootstrap(spark, src.ledgerDir, root): Unit
+    ChangeFold.gate(spark.read.parquet(s"$d/documents.parquet")
+        .select("doc_id", "text", "lang"), "graft_dsird")(
+        bootstrap(spark, _, _)) { src =>
       val maxId = src.read().agg(max(col("doc_id"))).head().getLong(0)
       // wave: three arrivals (one clearly on-target), one text rewrite,
       // one deletion — the live-corpus churn a maintained model absorbs
@@ -220,12 +173,9 @@ object DsirDelta {
       src.merge(
         Seq((maxId, "", "")).toDF("doc_id", "text", "lang"),
         "doc_id", deleteWhen = Some(lit(true)), changeFeed = true): Unit
-    }
-    val out = graft.BenchPhase("op") {
+    } { (src, root) =>
       applyRound(spark, src.ledgerDir, root)
-      score(spark, root, src.read()).localCheckpoint()
+      score(spark, root, src.read())
     }
-    MirrorLoop.rmrf(new java.io.File(tmp))
-    out
   }
 }

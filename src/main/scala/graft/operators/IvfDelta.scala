@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.sources.{GraftTable, Lake}
-import graft.streaming.MirrorLoop
+import graft.streaming.ChangeFold
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -66,91 +66,99 @@ object IvfDelta {
           .as("codes"),
         col("w.list_id").as("list_id"))
 
+  /** Fit the FROZEN router over the source snapshot `snap` — k-means
+    * centroids + global int8 bounds, written under `indexRoot` (shared
+    * with [[NswDelta]]). Returns (corpus with its double `vec` column,
+    * centroids, quant). */
+  private[graft] def fitRouter(spark: SparkSession, srcLedger: String,
+      snap: Long, indexRoot: String, maxIter: Int)
+      : (DataFrame, DataFrame, DataFrame) = {
+    import org.apache.spark.ml.clustering.KMeans
+    import org.apache.spark.ml.functions.array_to_vector
+    import spark.implicits._
+    val corpus = Lake.readAt(spark, srcLedger, snap)
+      .withColumn("vec",
+        transform(col("embedding"), v => v.cast("double")))
+    val model = new KMeans().setK(Similarity.IvfK).setSeed(42L)
+      .setMaxIter(maxIter).setFeaturesCol("features")
+      .fit(corpus.withColumn("features", array_to_vector(col("vec"))))
+    model.clusterCenters.zipWithIndex
+      .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
+      .toDF("list_id", "centroid")
+      .coalesce(1).write.mode("overwrite")
+      .parquet(s"$indexRoot/centroids")
+    corpus.agg(min(array_min(col("vec"))).as("gmin"),
+        max(array_max(col("vec"))).as("gmax"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$indexRoot/quant")
+    (corpus, spark.read.parquet(s"$indexRoot/centroids"),
+      spark.read.parquet(s"$indexRoot/quant"))
+  }
+
+  /** The `IvfNProbe` lists nearest the probe vector `p` (one row,
+    * `probe_vec`), picked in-plan from the k-row centroid table. */
+  private[graft] def probeLists(spark: SparkSession, indexRoot: String,
+      p: DataFrame): Seq[Int] =
+    spark.read.parquet(s"$indexRoot/centroids")
+      .crossJoin(broadcast(p))
+      .select(col("list_id"),
+        aggregate(zip_with(col("centroid"), col("probe_vec"),
+          (c, q) => (c - q) * (c - q)), lit(0.0), _ + _).as("dist"))
+      .orderBy(col("dist"), col("list_id")).limit(Similarity.IvfNProbe)
+      .select(col("list_id"))
+      .collect().map(_.getInt(0)).toSeq // ≤ nProbe values
+
   /** Fit the frozen quantizer over the source lake's current snapshot and
     * land the full assignment table; no-op (cursor returned) when already
     * bootstrapped. */
   def bootstrap(spark: SparkSession, srcLedger: String,
       indexRoot: String, maxIter: Int = 5): Long =
-    MirrorLoop.cursorOf(spark, indexRoot).getOrElse {
-      import org.apache.spark.ml.clustering.KMeans
-      import org.apache.spark.ml.functions.array_to_vector
-      val snap = Lake.currentSnapshot(spark, srcLedger)
-      val corpus = Lake.readAt(spark, srcLedger, snap)
-        .withColumn("vec",
-          transform(col("embedding"), v => v.cast("double")))
-      val model = new KMeans().setK(Similarity.IvfK).setSeed(42L)
-        .setMaxIter(maxIter).setFeaturesCol("features")
-        .fit(corpus.withColumn("features", array_to_vector(col("vec"))))
-      import spark.implicits._
-      model.clusterCenters.zipWithIndex
-        .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
-        .toDF("list_id", "centroid")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$indexRoot/centroids")
-      corpus.agg(min(array_min(col("vec"))).as("gmin"),
-          max(array_max(col("vec"))).as("gmax"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexRoot/quant")
-      assign(corpus,
-          spark.read.parquet(s"$indexRoot/centroids"),
-          spark.read.parquet(s"$indexRoot/quant"))
+    ChangeFold.bootstrap(spark, srcLedger, indexRoot) { snap =>
+      val (corpus, centroids, quant) =
+        fitRouter(spark, srcLedger, snap, indexRoot, maxIter)
+      assign(corpus, centroids, quant)
         .repartition(col("list_id")) // list-pure files → tight list_id stats
         .write.parquet(s"$indexRoot/landing")
       // list_id stats in the ledger = manifest-level pruning of a probe's
       // nProbe lists (the lake-native form of directory partitioning)
       table(spark, indexRoot).ingest(s"$indexRoot/landing",
-        statsCols = Seq("list_id"))
-      MirrorLoop.markCursor(spark, indexRoot, snap)
-      snap
+        statsCols = Seq("list_id")): Unit
     }
 
   /** Fold every source change after the cursor into the index: one
     * change-batch-shaped assignment pass + one file-targeted COW merge.
     * Returns the new cursor (unchanged when nothing landed). */
   def applyRound(spark: SparkSession, srcLedger: String,
-      indexRoot: String): Long = {
-    val cur = MirrorLoop.cursorOf(spark, indexRoot).getOrElse(
-      throw new IllegalStateException(s"index at $indexRoot not bootstrapped"))
-    val changes = Lake.readChanges(spark, srcLedger, cur)
-    if (changes.isEmpty) return cur
-    val target = changes.agg(max(col("_commit_snapshot"))).head().getLong(0)
-    // latest image per id across the whole window: later snapshots win,
-    // post-images beat pre-images within one commit — insert-then-delete
-    // nets to a drop, delete-then-reinsert to the new assignment
-    val rank = when(col("_change_type")
-      .isin("insert", "update_postimage"), lit(1)).otherwise(lit(0))
-    val latest = changes
-      .groupBy(col("vec_id"))
-      .agg(max_by(struct(col("_change_type"), col("embedding")),
-        struct(col("_commit_snapshot"), rank)).as("w"))
-      .select(col("vec_id"), col("w._change_type").as("_change_type"),
-        col("w.embedding").as("embedding"))
-    val centroids = spark.read.parquet(s"$indexRoot/centroids")
-    val quant = spark.read.parquet(s"$indexRoot/quant")
-    val upserts = assign(latest.filter(col("_change_type")
-        .isin("insert", "update_postimage")), centroids, quant)
-      .withColumn("_drop", lit(false))
-    // drops restricted to ids the index actually carries: MERGE inserts
-    // UNMATCHED source rows regardless of the delete arm, so a vector
-    // inserted-and-deleted within one window (never indexed) would
-    // otherwise land as a null-assignment ghost row. The semi-join reads
-    // only the pruned vec_id column of the assignment lake — and ONLY
-    // when the window carries deletes at all: an insert-only round never
-    // reads the index (the MatView fold-path property).
-    val deleted = latest.filter(col("_change_type") === "delete")
-    val source =
-      if (deleted.isEmpty) upserts
-      else upserts.unionByName(deleted
-        .join(table(spark, indexRoot).read().select(col("vec_id")),
-          Seq("vec_id"), "left_semi")
-        .select(col("vec_id"),
-          lit(null).cast("array<int>").as("codes"),
-          lit(null).cast("int").as("list_id"),
-          lit(true).as("_drop")))
-    table(spark, indexRoot).merge(source, "vec_id",
-      deleteWhen = Some(col("_drop")))
-    MirrorLoop.markCursor(spark, indexRoot, target)
-    target
-  }
+      indexRoot: String): Long =
+    ChangeFold.round(spark, srcLedger, indexRoot,
+        ChangeFold.cursor(spark, indexRoot, "index")) { (_, changes) =>
+      // latest image per id across the whole window: a delete-then-
+      // reinsert lands the new assignment
+      val latest = ChangeFold.latest(changes, "vec_id", "embedding")
+      val centroids = spark.read.parquet(s"$indexRoot/centroids")
+      val quant = spark.read.parquet(s"$indexRoot/quant")
+      val upserts = assign(latest.filter(ChangeFold.isUpsert),
+          centroids, quant)
+        .withColumn("_drop", lit(false))
+      // drops restricted to ids the index actually carries: MERGE inserts
+      // UNMATCHED source rows regardless of the delete arm, so a vector
+      // inserted-and-deleted within one window (never indexed) would
+      // otherwise land as a null-assignment ghost row. The semi-join reads
+      // only the pruned vec_id column of the assignment lake — and ONLY
+      // when the window carries deletes at all: an insert-only round never
+      // reads the index (the MatView fold-path property).
+      val deleted = latest.filter(col("_change_type") === "delete")
+      val source =
+        if (deleted.isEmpty) upserts
+        else upserts.unionByName(deleted
+          .join(table(spark, indexRoot).read().select(col("vec_id")),
+            Seq("vec_id"), "left_semi")
+          .select(col("vec_id"),
+            lit(null).cast("array<int>").as("codes"),
+            lit(null).cast("int").as("list_id"),
+            lit(true).as("_drop")))
+      table(spark, indexRoot).merge(source, "vec_id",
+        deleteWhen = Some(col("_drop"))): Unit
+    }
 
   /** QUANTIZER-DRIFT report — the operational signal for "retrain the
     * frozen centroids": per inverted list, the assignment fraction at
@@ -193,9 +201,8 @@ object IvfDelta {
   def maintainStream(spark: SparkSession, srcLedger: String,
       indexRoot: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    graft.streaming.MirrorLoop.ledgerWatcher(spark, srcLedger,
-      checkpointDir) { () =>
-      applyRound(spark, srcLedger, indexRoot): Unit
+    ChangeFold.stream(spark, srcLedger, checkpointDir) {
+      applyRound(spark, srcLedger, indexRoot)
     }
 
   /** ANN probe over the MAINTAINED index — qAnnIvf's plan shape reading
@@ -210,14 +217,7 @@ object IvfDelta {
       .select(transform(col("embedding"), v => v.cast("double"))
         .as("probe_vec"))
       .withColumn("probe_nrm", Similarity.norm(col("probe_vec")))
-    val lists = spark.read.parquet(s"$indexRoot/centroids")
-      .crossJoin(broadcast(p))
-      .select(col("list_id"),
-        aggregate(zip_with(col("centroid"), col("probe_vec"),
-          (c, q) => (c - q) * (c - q)), lit(0.0), _ + _).as("dist"))
-      .orderBy(col("dist"), col("list_id")).limit(Similarity.IvfNProbe)
-      .select(col("list_id"))
-    val listIds = lists.collect().map(_.getInt(0)).toSeq // ≤ nProbe values
+    val listIds = probeLists(spark, indexRoot, p)
     val cands = table(spark, indexRoot).read()
       .filter(col("list_id").isin(listIds: _*) && col("vec_id") =!= probeId)
     val full = probeFrom.select(col("vec_id"),
@@ -244,26 +244,17 @@ object IvfDelta {
     * from-scratch exactly, including the delete/ghost matrix this bench
     * entry deliberately omits. */
   def qAnnIvfDelta(spark: SparkSession, sfDir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivfd").toString
-    val (landing, ledger, gen, idx) =
-      (s"$tmp/landing", s"$tmp/ledger", s"$tmp/gen", s"$tmp/idx")
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val t = GraftTable(spark, ledger, gen)
-    graft.BenchPhase("fixture") {
-      emb.repartition(4).write.parquet(landing)
-      t.ingest(landing)
-      bootstrap(spark, ledger, idx, maxIter = 2): Unit
-    }
     val maxId = emb.agg(max(col("vec_id"))).head().getLong(0) + 1
     val wave = emb.filter(col("vec_id") % 31 === 0)
       .withColumn("vec_id", col("vec_id") + maxId)
-    graft.BenchPhase("fixture") { t.merge(wave, "vec_id", changeFeed = true): Unit }
-    val out = graft.BenchPhase("op") {
-      applyRound(spark, ledger, idx)
+    ChangeFold.gate(emb, "graft_ivfd")(
+        bootstrap(spark, _, _, maxIter = 2)) {
+      _.merge(wave, "vec_id", changeFeed = true): Unit
+    } { (t, idx) =>
+      applyRound(spark, t.ledgerDir, idx)
       val probeId = wave.agg(min(col("vec_id"))).head().getLong(0)
-      probe(spark, idx, t.read(), probeId).localCheckpoint()
+      probe(spark, idx, t.read(), probeId)
     }
-    MirrorLoop.rmrf(new java.io.File(tmp))
-    out
   }
 }

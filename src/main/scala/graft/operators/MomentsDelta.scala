@@ -1,9 +1,9 @@
 package graft.operators
 
-import graft.sources.{GraftTable, Lake}
-import graft.streaming.MirrorLoop
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.streaming.ChangeFold
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** §2.E — MAINTAINED MOMENT STATISTICS off the change feed: the
   * IvfDelta discipline applied to MODEL FITTING. A 100 TB embedding
@@ -15,17 +15,17 @@ import org.apache.spark.sql.functions._
   *   moments += moments(inserts ∪ update_postimages)
   *           −  moments(deletes ∪ update_preimages)
   *
-  * — two map-side-combined partial passes over the BATCH (never the
-  * table), a driver-side KB-sized state update (d(d+1)+1 doubles), and
-  * one tiny state write. Everything a moment statistic derives —
-  * mean, covariance, per-dim variance/stddev for normalization, and
+  * — one map-side-combined partial pass over the signed BATCH rows
+  * (never the table), a driver-side KB-sized state update (d(d+1)+1
+  * doubles), and one tiny state write. Everything a moment statistic
+  * derives — mean, covariance, per-dim variance/stddev for normalization, and
   * the PCA model via [[Pca.fitFromCov]]'s driver eigensolve — refreshes
   * from the maintained state with ZERO data reads.
   *
-  * State lives under `root/gen-<cursor>/` with the MirrorLoop cursor
-  * discipline (cursor marks LAST, so a crash between the state write
-  * and the cursor leaves the previous round authoritative and the
-  * re-run is idempotent); old generations prune once unreachable.
+  * State lives under `root/gen-<cursor>/` as a [[ChangeFold]] additive
+  * state (cursor marks LAST, so a crash between the state write and the
+  * cursor leaves the previous round authoritative and the re-run is
+  * idempotent); old generations prune once unreachable.
   *
   * Float caveat (documented, spec-bounded): the fold subtracts doubles,
   * so cancellation error accumulates over rounds at ~ulp(Σ|x|) per
@@ -37,23 +37,20 @@ import org.apache.spark.sql.functions._
   */
 object MomentsDelta {
 
-  private def genDir(root: String, snap: Long) = s"$root/gen-$snap"
-
-  private def writeState(spark: SparkSession, root: String, snap: Long,
-      n: Long, s: Array[Double], ss: Array[Double]): Unit = {
-    import spark.implicits._
-    Seq((n, s.toSeq, ss.toSeq)).toDF("n", "s", "ss")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"${genDir(root, snap)}/moments")
-  }
+  private val State = StructType.fromDDL("n bigint, s array<double>, ss array<double>")
 
   /** The maintained raw moments (n, Σx, Σxxᵀ) at the current cursor. */
   def moments(spark: SparkSession, root: String)
       : (Long, Array[Double], Array[Double]) = {
-    val cur = MirrorLoop.cursorOf(spark, root).getOrElse(
-      throw new IllegalStateException(s"moments at $root not bootstrapped"))
-    val r = spark.read.parquet(s"${genDir(root, cur)}/moments").head()
+    val r = ChangeFold.state(spark, root, "moments")
     (r.getLong(0), r.getSeq[Double](1).toArray, r.getSeq[Double](2).toArray)
+  }
+
+  /** (n, Σx, Σxxᵀ) of the rows at weight `w` — one map-side-combined
+    * partial pass. */
+  private def sums(embCol: String)(rows: DataFrame, w: Column): Row = {
+    val (n, s, ss) = Pca.rawMoments(rows, embCol, w)
+    Row(n, s.toSeq, ss.toSeq)
   }
 
   /** Mean + biased covariance from the maintained state — no data read. */
@@ -76,52 +73,18 @@ object MomentsDelta {
     * when already bootstrapped. */
   def bootstrap(spark: SparkSession, srcLedger: String, root: String,
       embCol: String = "embedding"): Long =
-    MirrorLoop.cursorOf(spark, root).getOrElse {
-      MirrorLoop.rmrf(new java.io.File(root)) // wipe partial crash state
-      val snap = Lake.currentSnapshot(spark, srcLedger)
-      val (n, s, ss) = Pca.rawMoments(
-        Lake.readAt(spark, srcLedger, snap), embCol)
-      writeState(spark, root, snap, n, s, ss)
-      MirrorLoop.markCursor(spark, root, snap)
-      snap
-    }
+    ChangeFold.additiveBootstrap(spark, srcLedger, root, State)(sums(embCol))
 
-  /** Fold every source change past the cursor into the state: two
-    * batch-sized partial passes + one KB state write. Returns the new
-    * cursor (unchanged when no commit landed). */
+  /** Fold every source change past the cursor into the state: one
+    * batch-sized partial pass + one KB state write. Returns the new
+    * cursor (unchanged when no commit landed). The change feed carries
+    * BOTH images of an update, so moments fold over change ROWS
+    * directly — no per-key latest-image resolution (the additive
+    * identity is per-row, unlike the index's per-doc posting
+    * replacement). */
   def applyRound(spark: SparkSession, srcLedger: String, root: String,
-      embCol: String = "embedding"): Long = {
-    val cur = MirrorLoop.cursorOf(spark, root).getOrElse(
-      throw new IllegalStateException(s"moments at $root not bootstrapped"))
-    val changes = Lake.readChanges(spark, srcLedger, cur)
-    if (changes.isEmpty) return cur
-    val target = changes.agg(max(col("_commit_snapshot"))).head().getLong(0)
-    // the change feed carries BOTH images of an update, so moments fold
-    // over change ROWS directly — no per-key latest-image resolution
-    // (the additive identity is per-row, unlike the index's per-doc
-    // posting replacement)
-    val batch = changes.localCheckpoint() // feeds both partial passes
-    val adds = batch.filter(
-      col("_change_type").isin("insert", "update_postimage"))
-    val rems = batch.filter(
-      col("_change_type").isin("delete", "update_preimage"))
-    var (n, s, ss) = moments(spark, root)
-    def fold(df: DataFrame, sign: Int): Unit =
-      if (!df.filter(col(embCol).isNotNull).isEmpty) {
-        val (bn, bs, bss) = Pca.rawMoments(df, embCol)
-        n += sign * bn
-        var i = 0
-        while (i < s.length) { s(i) += sign * bs(i); i += 1 }
-        i = 0
-        while (i < ss.length) { ss(i) += sign * bss(i); i += 1 }
-      }
-    fold(adds, 1)
-    fold(rems, -1)
-    writeState(spark, root, target, n, s, ss)
-    MirrorLoop.markCursor(spark, root, target)
-    MirrorLoop.pruneGens(root, target)
-    target
-  }
+      embCol: String = "embedding"): Long =
+    ChangeFold.additiveRound(spark, srcLedger, root, "moments")(sums(embCol))
 
   /** Continuous maintenance: a file stream on the source LEDGER fires
     * one fold per micro-batch; cursor-replay-safe (the IvfDelta /
@@ -129,8 +92,8 @@ object MomentsDelta {
   def maintainStream(spark: SparkSession, srcLedger: String, root: String,
       checkpointDir: String, embCol: String = "embedding")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    MirrorLoop.ledgerWatcher(spark, srcLedger, checkpointDir) { () =>
-      applyRound(spark, srcLedger, root, embCol): Unit
+    ChangeFold.stream(spark, srcLedger, checkpointDir) {
+      applyRound(spark, srcLedger, root, embCol)
     }
 
   /** Driver-gate entry ([rows] — float moment folds are summation-order
@@ -142,15 +105,9 @@ object MomentsDelta {
     * read zero table bytes). Fixture vs operator bench-phase-split. */
   def qEmbPcaDelta(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_momd").toString
-    val src = GraftTable(spark, s"$tmp/src_ledger", s"$tmp/src_gen")
-    val root = s"$tmp/moments"
-    graft.BenchPhase("fixture") {
-      spark.read.parquet(s"$d/embeddings.parquet")
-        .select("vec_id", "embedding")
-        .repartition(4).write.parquet(s"$tmp/landing")
-      src.ingest(s"$tmp/landing")
-      bootstrap(spark, src.ledgerDir, root): Unit
+    ChangeFold.gate(spark.read.parquet(s"$d/embeddings.parquet")
+        .select("vec_id", "embedding"), "graft_momd")(
+        bootstrap(spark, _, _)) { src =>
       val maxId = src.read().agg(max(col("vec_id"))).head().getLong(0)
       val dim = src.read().select(size(col("embedding")))
         .head().getInt(0)
@@ -165,8 +122,7 @@ object MomentsDelta {
       src.merge(Seq((maxId, "x")).toDF("vec_id", "junk").select(col("vec_id"),
           lit(null).cast("array<float>").as("embedding")), "vec_id",
         deleteWhen = Some(lit(true)), changeFeed = true): Unit
-    }
-    val out = graft.BenchPhase("op") {
+    } { (src, root) =>
       applyRound(spark, src.ledgerDir, root)
       val (m, c, n) = meanCov(spark, root)
       val eigs = Pca.fitFromCov(m, c, k = 4).eigenvalues
@@ -176,9 +132,7 @@ object MomentsDelta {
           eigs.zipWithIndex.map { case (v, j) => ("eig", j.toLong, v) }
       rows.toDF("stat", "idx", "value")
         .select(col("stat"), col("idx"), round(col("value"), 6).as("value"))
-        .orderBy(col("stat"), col("idx")).localCheckpoint()
+        .orderBy(col("stat"), col("idx"))
     }
-    MirrorLoop.rmrf(new java.io.File(tmp))
-    out
   }
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.sources.{GraftTable, Lake}
-import graft.streaming.MirrorLoop
+import graft.streaming.ChangeFold
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -55,29 +55,12 @@ object NswDelta {
     * bootstrapped. */
   def bootstrap(spark: SparkSession, srcLedger: String,
       indexRoot: String, maxIter: Int = 5): Long =
-    MirrorLoop.cursorOf(spark, indexRoot).getOrElse {
-      import org.apache.spark.ml.clustering.KMeans
-      import org.apache.spark.ml.functions.array_to_vector
+    ChangeFold.bootstrap(spark, srcLedger, indexRoot) { snap =>
       import spark.implicits._
-      val snap = Lake.currentSnapshot(spark, srcLedger)
-      val corpus = Lake.readAt(spark, srcLedger, snap)
-        .withColumn("vec",
-          transform(col("embedding"), v => v.cast("double")))
-      val model = new KMeans().setK(Similarity.IvfK).setSeed(42L)
-        .setMaxIter(maxIter).setFeaturesCol("features")
-        .fit(corpus.withColumn("features", array_to_vector(col("vec"))))
-      model.clusterCenters.zipWithIndex
-        .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
-        .toDF("list_id", "centroid")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$indexRoot/centroids")
-      corpus.agg(min(array_min(col("vec"))).as("gmin"),
-          max(array_max(col("vec"))).as("gmax"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexRoot/quant")
+      val (corpus, centroids, quant) =
+        IvfDelta.fitRouter(spark, srcLedger, snap, indexRoot, maxIter)
       val (gmin, gmax) = quantOf(spark, indexRoot)
-      IvfDelta.assign(corpus,
-          spark.read.parquet(s"$indexRoot/centroids"),
-          spark.read.parquet(s"$indexRoot/quant"))
+      IvfDelta.assign(corpus, centroids, quant)
         .select(col("list_id").cast("int"), col("vec_id"), col("codes"))
         .as[(Int, Long, Seq[Int])]
         .groupByKey(_._1)
@@ -90,33 +73,24 @@ object NswDelta {
       // vec_id stats feed applyRound's range-pruned old-cell lookup;
       // merges re-stat both columns per the liveStatsContract
       table(spark, indexRoot).ingest(s"$indexRoot/landing",
-        statsCols = Seq("list_id", "vec_id"))
-      MirrorLoop.markCursor(spark, indexRoot, snap)
-      snap
+        statsCols = Seq("list_id", "vec_id")): Unit
     }
 
   /** Fold every source change after the cursor into the graphs: one
     * change-batch-shaped routing pass, per-touched-cell in-task folds,
     * one blast-radius COW merge. Returns the new cursor. */
   def applyRound(spark: SparkSession, srcLedger: String,
-      indexRoot: String): Long = {
+      indexRoot: String): Long =
+    ChangeFold.round(spark, srcLedger, indexRoot,
+        ChangeFold.cursor(spark, indexRoot, "graph index")) { (_, changes) =>
+      fold(spark, indexRoot, changes)
+    }
+
+  private def fold(spark: SparkSession, indexRoot: String,
+      changes: DataFrame): Unit = {
     import spark.implicits._
-    val cur = MirrorLoop.cursorOf(spark, indexRoot).getOrElse(
-      throw new IllegalStateException(
-        s"graph index at $indexRoot not bootstrapped"))
-    val changes = Lake.readChanges(spark, srcLedger, cur)
-    if (changes.isEmpty) return cur
-    val target = changes.agg(max(col("_commit_snapshot"))).head().getLong(0)
-    // latest image per id across the window (the IvfDelta rule): later
-    // snapshots win, post-images beat pre-images within one commit
-    val rank = when(col("_change_type")
-      .isin("insert", "update_postimage"), lit(1)).otherwise(lit(0))
-    val latest = changes
-      .groupBy(col("vec_id"))
-      .agg(max_by(struct(col("_change_type"), col("embedding")),
-        struct(col("_commit_snapshot"), rank)).as("w"))
-      .select(col("vec_id"), col("w._change_type").as("_change_type"),
-        col("w.embedding").as("embedding"))
+    // latest image per id across the window (the IvfDelta rule)
+    val latest = ChangeFold.latest(changes, "vec_id", "embedding")
       .localCheckpoint() // feeds routing + the delete restriction
     val centroids = spark.read.parquet(s"$indexRoot/centroids")
     val quant = spark.read.parquet(s"$indexRoot/quant")
@@ -124,9 +98,8 @@ object NswDelta {
     // upserts route to cells via the frozen router; deletes take their
     // cell from the standing graph (only ids the index actually carries
     // — an insert-then-delete inside one window never touches a cell)
-    val upserts = IvfDelta.assign(
-        latest.filter(col("_change_type")
-          .isin("insert", "update_postimage")), centroids, quant)
+    val upserts = IvfDelta.assign(latest.filter(ChangeFold.isUpsert),
+        centroids, quant)
       .select(col("list_id").cast("int").as("list_id"), col("vec_id"),
         col("codes"), lit(false).as("_del"))
     // the OLD cell of every batch id, pruned to the batch's vec_id RANGE
@@ -161,8 +134,7 @@ object NswDelta {
       .unionByName(deletes).unionByName(moves).localCheckpoint()
     val touched: Seq[Int] = batch.select(col("list_id")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted // ≤ k cell ids
-    if (touched.isEmpty) { MirrorLoop.markCursor(spark, indexRoot, target)
-      return target }
+    if (touched.isEmpty) return
     // one frame, grouped per touched cell: kind 0 = standing graph rows
     // (manifest-pruned to the touched cells), kind 1 = the change batch
     val standing = table(spark, indexRoot).read()
@@ -189,9 +161,7 @@ object NswDelta {
       }
       .toDF("list_id", "vec_id", "nbrs", "codes", "_drop")
     table(spark, indexRoot).merge(folded, "vec_id",
-      deleteWhen = Some(col("_drop")))
-    MirrorLoop.markCursor(spark, indexRoot, target)
-    target
+      deleteWhen = Some(col("_drop"))): Unit
   }
 
   /** RE-BOOTSTRAP — the action [[driftReport]]'s flag calls for (r16,
@@ -205,7 +175,7 @@ object NswDelta {
     * cursor. */
   def rebootstrap(spark: SparkSession, srcLedger: String,
       newIndexRoot: String, maxIter: Int = 5): Long = {
-    require(MirrorLoop.cursorOf(spark, newIndexRoot).isEmpty,
+    require(ChangeFold.cursorOf(spark, newIndexRoot).isEmpty,
       s"$newIndexRoot already holds a bootstrapped index — re-bootstrap " +
         "builds into a FRESH root, then the caller switches probes over")
     bootstrap(spark, srcLedger, newIndexRoot, maxIter)
@@ -264,14 +234,7 @@ object NswDelta {
     val p = probeFrom.filter(col("vec_id") === probeId)
       .select(transform(col("embedding"), v => v.cast("double"))
         .as("probe_vec"))
-    val lists = spark.read.parquet(s"$indexRoot/centroids")
-      .crossJoin(broadcast(p))
-      .select(col("list_id"),
-        aggregate(zip_with(col("centroid"), col("probe_vec"),
-          (c, q) => (c - q) * (c - q)), lit(0.0), _ + _).as("dist"))
-      .orderBy(col("dist"), col("list_id")).limit(Similarity.IvfNProbe)
-      .select(col("list_id"))
-    val listIds = lists.collect().map(_.getInt(0)).toSeq
+    val listIds = IvfDelta.probeLists(spark, indexRoot, p)
     val pv = p.head().getSeq[Double](0).toArray
     val pn = math.max(Nsw.l2(pv), 1e-12)
     val cands = table(spark, indexRoot).read()
@@ -318,31 +281,21 @@ object NswDelta {
     * `rebootstrap` (the operational signal that a navigable graph under
     * sustained deletion needs a rebuild — the published HNSW caveat
     * made measurable). Output is the k-row report (scalar cells). */
-  def qAnnDrift(spark: SparkSession, sfDir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_nswdr").toString
-    val t = GraftTable(spark, s"$tmp/ledger", s"$tmp/gen")
-    graft.BenchPhase("fixture") {
-      spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .repartition(4).write.parquet(s"$tmp/landing")
-      t.ingest(s"$tmp/landing")
-      bootstrap(spark, t.ledgerDir, s"$tmp/idx", maxIter = 2): Unit
+  def qAnnDrift(spark: SparkSession, sfDir: String): DataFrame =
+    ChangeFold.gate(spark.read.parquet(s"$sfDir/embeddings.parquet"),
+        "graft_nswdr")(bootstrap(spark, _, _, maxIter = 2))(_ => ()) {
+      (t, idx) =>
+        // ~8% deletion wave: enough churn mass that the per-cell fractions
+        // discriminate under the explicit 5% reporting threshold, while
+        // the fold stays change-batch-shaped (a half-corpus wave made the
+        // op corpus-shaped — measured 38.6 s vs ~8 s). MOR delete: the
+        // wave's scattered ids would COW-rewrite every file for a KB of
+        // row removals — the sidecar path is exactly what MOR exists for,
+        // and its change feed drives the fold identically
+        t.deleteMor(col("vec_id") % 97 < 8, changeFeed = true)
+        applyRound(spark, t.ledgerDir, idx)
+        driftReport(spark, idx, churnThreshold = 0.05)
     }
-    val out = graft.BenchPhase("op") {
-      // ~8% deletion wave: enough churn mass that the per-cell fractions
-      // discriminate under the explicit 5% reporting threshold, while
-      // the fold stays change-batch-shaped (a half-corpus wave made the
-      // op corpus-shaped — measured 38.6 s vs ~8 s). MOR delete: the
-      // wave's scattered ids would COW-rewrite every file for a KB of
-      // row removals — the sidecar path is exactly what MOR exists for,
-      // and its change feed drives the fold identically
-      t.deleteMor(col("vec_id") % 97 < 8, changeFeed = true)
-      applyRound(spark, t.ledgerDir, s"$tmp/idx")
-      driftReport(spark, s"$tmp/idx", churnThreshold = 0.05)
-        .localCheckpoint()
-    }
-    MirrorLoop.rmrf(new java.io.File(tmp))
-    out
-  }
 
   /** Driver query [rows]: the maintained-graph lifecycle on a temp lake
     * — ingest the embeddings corpus, bootstrap (2 Lloyd iterations:
@@ -352,29 +305,18 @@ object NswDelta {
     * surface at rank 1 (cos = 1 lands in the probe's own cell), and no
     * deleted id may appear. */
   def qAnnNswDelta(spark: SparkSession, sfDir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_nswd").toString
-    val (landing, ledger, gen, idx) =
-      (s"$tmp/landing", s"$tmp/ledger", s"$tmp/gen", s"$tmp/idx")
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val t = GraftTable(spark, ledger, gen)
-    graft.BenchPhase("fixture") {
-      emb.repartition(4).write.parquet(landing)
-      t.ingest(landing)
-      bootstrap(spark, ledger, idx, maxIter = 2): Unit
-    }
     val maxId = emb.agg(max(col("vec_id"))).head().getLong(0) + 1
     val wave = emb.filter(col("vec_id") % 31 === 0)
       .withColumn("vec_id", col("vec_id") + maxId)
-    graft.BenchPhase("fixture") {
+    ChangeFold.gate(emb, "graft_nswd")(
+        bootstrap(spark, _, _, maxIter = 2)) { t =>
       t.merge(wave, "vec_id", changeFeed = true)
       t.delete(col("vec_id") % 97 === 3, changeFeed = true): Unit
-    }
-    val out = graft.BenchPhase("op") {
-      applyRound(spark, ledger, idx)
+    } { (t, idx) =>
+      applyRound(spark, t.ledgerDir, idx)
       val probeId = wave.agg(min(col("vec_id"))).head().getLong(0)
-      probe(spark, idx, t.read(), probeId).localCheckpoint()
+      probe(spark, idx, t.read(), probeId)
     }
-    MirrorLoop.rmrf(new java.io.File(tmp))
-    out
   }
 }

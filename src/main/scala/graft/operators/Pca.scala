@@ -37,36 +37,40 @@ object Pca {
     * maintenance in [[MomentsDelta]] exact-in-structure: a batch's
     * moments add, a removed batch's subtract, and the table is never
     * rescanned. Map-side combine, no shuffle; partials are KB and
-    * collect to the driver. */
-  def rawMoments(emb: DataFrame, embCol: String = "embedding")
-      : (Long, Array[Double], Array[Double]) = {
+    * collect to the driver. `w` weighs each row — ±1 over a change batch
+    * is the signed fold; a weight of 1 multiplies exactly, so it
+    * reproduces the unweighted sums bit-for-bit. (0, [], []) when no row
+    * carries an embedding. */
+  def rawMoments(emb: DataFrame, embCol: String = "embedding",
+      w: Column = lit(1L)): (Long, Array[Double], Array[Double]) = {
     val sp = emb.sparkSession
     import sp.implicits._
     val parts = emb
       .filter(col(embCol).isNotNull)
-      .select(transform(col(embCol), v => v.cast("double")).as("v"))
-      .as[Array[Double]]
+      .select(transform(col(embCol), v => v.cast("double")).as("v"),
+        w.cast("long").as("w"))
+      .as[(Array[Double], Long)]
       .mapPartitions { it =>
         var n = 0L; var s: Array[Double] = null; var ss: Array[Double] = null
-        it.foreach { x =>
+        it.foreach { case (x, wt) =>
           if (s == null) { s = new Array[Double](x.length)
             ss = new Array[Double](x.length * x.length) }
           var i = 0
           while (i < x.length) {
-            s(i) += x(i)
+            val wx = wt * x(i)
+            s(i) += wx
             var j = 0
             val base = i * x.length
-            while (j < x.length) { ss(base + j) += x(i) * x(j); j += 1 }
+            while (j < x.length) { ss(base + j) += wx * x(j); j += 1 }
             i += 1
           }
-          n += 1
+          n += wt
         }
-        if (n == 0) Iterator.empty
+        if (s == null) Iterator.empty
         else Iterator.single((n, s.toSeq, ss.toSeq))
       }
       .collect() // ≤ #partitions rows of d(d+1)+1 doubles — KB-scale
-    require(parts.nonEmpty, "empty embedding set")
-    val d = parts.head._2.size
+    val d = parts.headOption.fold(0)(_._2.size)
     val (n, s, ss) = (new Array[Long](1), new Array[Double](d),
       new Array[Double](d * d))
     parts.foreach { case (pn, ps, pss) =>

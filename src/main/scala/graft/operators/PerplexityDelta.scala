@@ -1,9 +1,9 @@
 package graft.operators
 
-import graft.sources.{GraftTable, Lake}
-import graft.streaming.MirrorLoop
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.streaming.ChangeFold
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** §2.C — MAINTAINED PERPLEXITY MODEL off the change feed: the
   * DsirDelta discipline applied to the CCNet-style bigram LM
@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   *   counts += counts(inserts ∪ update_postimages)
   *          −  counts(deletes ∪ update_preimages)
   *
-  * — one batch-sized bigram pass per side, two ≤B-row aggregations,
-  * one KB state write. The integer fold is LOSSLESS: the maintained
-  * model equals the from-scratch recompute bit-for-bit forever
+  * — one batch-sized bigram pass over the signed change rows, one
+  * ≤B-row aggregation, one KB state write. The integer fold is
+  * LOSSLESS: the maintained model equals the from-scratch recompute bit-for-bit forever
   * (PerplexityDeltaSpec asserts exact equality), unlike any float
   * fold.
   *
@@ -29,101 +29,63 @@ import org.apache.spark.sql.functions._
   * Add-1 smoothing uses ACTIVE context buckets + 1, not the table
   * size (the DsirDelta +B pseudo-mass lesson).
   *
-  * State lives under `root/gen-<cursor>/` with the MirrorLoop cursor
-  * discipline (cursor marks LAST; a crash between state write and
-  * cursor leaves the previous round authoritative; old gens prune). */
+  * State lives under `root/gen-<cursor>/` as a [[ChangeFold]] additive
+  * state (cursor marks LAST; a crash between state write and cursor
+  * leaves the previous round authoritative; old gens prune). */
 object PerplexityDelta {
 
   /** Context / bigram hash buckets (fixed state size). */
   val CtxBuckets = 2048
   val BigBuckets = 8192
 
-  private def genDir(root: String, snap: Long) = s"$root/gen-$snap"
-
-  private def writeState(spark: SparkSession, root: String, snap: Long,
-      ctxC: Array[Long], bigC: Array[Long]): Unit = {
-    import spark.implicits._
-    Seq((ctxC.toSeq, bigC.toSeq)).toDF("ctx_c", "big_c")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"${genDir(root, snap)}/counts")
-  }
+  private val State = StructType.fromDDL("ctx_c array<bigint>, big_c array<bigint>")
 
   /** The maintained (context, bigram) bucket counts at the cursor. */
   def counts(spark: SparkSession, root: String): (Array[Long], Array[Long]) = {
-    val cur = MirrorLoop.cursorOf(spark, root).getOrElse(
-      throw new IllegalStateException(s"ppl state at $root not bootstrapped"))
-    val r = spark.read.parquet(s"${genDir(root, cur)}/counts").head()
+    val r = ChangeFold.state(spark, root, "ppl state")
     (r.getSeq[Long](0).toArray, r.getSeq[Long](1).toArray)
   }
 
-  /** Hashed bigram stream of a documents frame: one row per adjacent
-    * pair with its context bucket b1 = h(a) and bigram bucket
-    * b2 = h(a·b). The context count of `a` is by definition the number
-    * of bigrams with left token `a`, so ONE stream feeds both counts. */
-  private def bucketed(docs: DataFrame): DataFrame =
+  /** Hashed bigram stream of a documents frame at row weight `w`: one
+    * row per adjacent pair with its context bucket b1 = h(a) and bigram
+    * bucket b2 = h(a·b). The context count of `a` is by definition the
+    * number of bigrams with left token `a`, so ONE stream feeds both
+    * counts. */
+  private def bucketed(docs: DataFrame, w: Column): DataFrame =
     docs
-      .select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
+      .select(w.as("__w"), TextOps.tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 2) // sequence(1,0) counts DOWN — guard
-      .select(col("doc_id"),
+      .select(col("__w"),
         explode(transform(sequence(lit(1), size(col("t")) - 1),
           i => struct(element_at(col("t"), i).as("a"),
             concat(element_at(col("t"), i), lit(" "),
               element_at(col("t"), i + 1)).as("ab")))).as("p"))
-      .select(col("doc_id"),
+      .select(col("__w"),
         pmod(xxhash64(col("p.a")), lit(CtxBuckets)).cast("int").as("b1"),
         pmod(xxhash64(col("p.ab")), lit(BigBuckets)).cast("int").as("b2"))
 
-  /** Per-bucket counts of a batch — two ≤B-row collects off one pass. */
-  private def batchCounts(docs: DataFrame): (Array[Long], Array[Long]) = {
-    val ctxC = new Array[Long](CtxBuckets)
-    val bigC = new Array[Long](BigBuckets)
-    val st = bucketed(docs).localCheckpoint()
-    st.groupBy(col("b1")).agg(count(lit(1)).as("n")).collect()
-      .foreach(r => ctxC(r.getInt(0)) = r.getLong(1))
-    st.groupBy(col("b2")).agg(count(lit(1)).as("n")).collect()
-      .foreach(r => bigC(r.getInt(0)) = r.getLong(1))
-    (ctxC, bigC)
+  /** Per-bucket counts at weight `w` — ONE ≤B-row aggregate: both
+    * bucketings share one index space (bigram buckets offset past the
+    * context buckets), so each bigram adds its weight to two slots. */
+  private def sums(docs: DataFrame, w: Column): Row = {
+    val c = new Array[Long](CtxBuckets + BigBuckets)
+    bucketed(docs, w)
+      .select(col("__w"),
+        explode(array(col("b1"), col("b2") + CtxBuckets)).as("i"))
+      .groupBy(col("i")).agg(sum(col("__w")))
+      .collect().foreach(r => c(r.getInt(0)) = r.getLong(1))
+    Row(c.take(CtxBuckets).toSeq, c.drop(CtxBuckets).toSeq)
   }
 
   /** Fit the state from the source lake's current snapshot; no-op when
     * already bootstrapped. */
   def bootstrap(spark: SparkSession, srcLedger: String, root: String): Long =
-    MirrorLoop.cursorOf(spark, root).getOrElse {
-      MirrorLoop.rmrf(new java.io.File(root))
-      val snap = Lake.currentSnapshot(spark, srcLedger)
-      val (ctxC, bigC) = batchCounts(Lake.readAt(spark, srcLedger, snap))
-      writeState(spark, root, snap, ctxC, bigC)
-      MirrorLoop.markCursor(spark, root, snap)
-      snap
-    }
+    ChangeFold.additiveBootstrap(spark, srcLedger, root, State)(sums)
 
   /** Fold every source change past the cursor into the counts. Returns
     * the new cursor (unchanged when no commit landed). */
-  def applyRound(spark: SparkSession, srcLedger: String, root: String): Long = {
-    val cur = MirrorLoop.cursorOf(spark, root).getOrElse(
-      throw new IllegalStateException(s"ppl state at $root not bootstrapped"))
-    val changes = Lake.readChanges(spark, srcLedger, cur)
-    if (changes.isEmpty) return cur
-    val target = changes.agg(max(col("_commit_snapshot"))).head().getLong(0)
-    val batch = changes.localCheckpoint()
-    val (ctxC, bigC) = counts(spark, root)
-    def fold(df: DataFrame, sign: Int): Unit =
-      if (!df.isEmpty) {
-        val (bc, bb) = batchCounts(df)
-        var i = 0
-        while (i < CtxBuckets) { ctxC(i) += sign * bc(i); i += 1 }
-        i = 0
-        while (i < BigBuckets) { bigC(i) += sign * bb(i); i += 1 }
-      }
-    fold(batch.filter(
-      col("_change_type").isin("insert", "update_postimage")), 1)
-    fold(batch.filter(
-      col("_change_type").isin("delete", "update_preimage")), -1)
-    writeState(spark, root, target, ctxC, bigC)
-    MirrorLoop.markCursor(spark, root, target)
-    MirrorLoop.pruneGens(root, target)
-    target
-  }
+  def applyRound(spark: SparkSession, srcLedger: String, root: String): Long =
+    ChangeFold.additiveRound(spark, srcLedger, root, "ppl state")(sums)
 
   /** Score a documents frame against the MAINTAINED model — the
     * [[TextOps.qDocPerplexity]] NLL over the hashed bucketing: per
@@ -167,8 +129,8 @@ object PerplexityDelta {
     * one fold per micro-batch (cursor-replay-safe). */
   def maintainStream(spark: SparkSession, srcLedger: String, root: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    MirrorLoop.ledgerWatcher(spark, srcLedger, checkpointDir) { () =>
-      applyRound(spark, srcLedger, root): Unit
+    ChangeFold.stream(spark, srcLedger, checkpointDir) {
+      applyRound(spark, srcLedger, root)
     }
 
   /** Driver-gate entry ([rows] — the hashed bucketing has no SQL
@@ -179,15 +141,9 @@ object PerplexityDelta {
     * full-corpus re-reads after bootstrap. */
   def qDocPerplexityDelta(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ppld").toString
-    val src = GraftTable(spark, s"$tmp/src_ledger", s"$tmp/src_gen")
-    val root = s"$tmp/ppl"
-    graft.BenchPhase("fixture") {
-      spark.read.parquet(s"$d/documents.parquet")
-        .select("doc_id", "text", "lang")
-        .repartition(4).write.parquet(s"$tmp/landing")
-      src.ingest(s"$tmp/landing")
-      bootstrap(spark, src.ledgerDir, root): Unit
+    ChangeFold.gate(spark.read.parquet(s"$d/documents.parquet")
+        .select("doc_id", "text", "lang"), "graft_ppld")(
+        bootstrap(spark, _, _)) { src =>
       val maxId = src.read().agg(max(col("doc_id"))).head().getLong(0)
       // wave: one in-distribution arrival, one gibberish arrival (the
       // doc a perplexity gate exists to catch), a rewrite, a deletion
@@ -202,12 +158,9 @@ object PerplexityDelta {
       src.merge(
         Seq((maxId, "", "")).toDF("doc_id", "text", "lang"),
         "doc_id", deleteWhen = Some(lit(true)), changeFeed = true): Unit
-    }
-    val out = graft.BenchPhase("op") {
+    } { (src, root) =>
       applyRound(spark, src.ledgerDir, root)
-      score(spark, root, src.read()).localCheckpoint()
+      score(spark, root, src.read())
     }
-    MirrorLoop.rmrf(new java.io.File(tmp))
-    out
   }
 }

@@ -1,8 +1,7 @@
 package graft.operators
 
-import graft.sources.GraftTable
-import graft.sources.Lake
-import graft.streaming.MirrorLoop
+import graft.sources.{GraftTable, Lake}
+import graft.streaming.ChangeFold
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -58,16 +57,13 @@ object TextIndexDelta {
     .agg(count(lit(1)).as("tf"))
 
   /** Index the source lake's current snapshot; no-op when already
-    * bootstrapped (cursor returned). Crash-idempotent: the cursor is the
-    * LAST artifact, so a missing cursor means the index never went live —
-    * any partial state (a crash between the two ingests and the cursor
-    * write left ledgered rows pointing at landing files a re-run's
-    * overwrite would delete) is wiped before rebuilding. */
+    * bootstrapped (cursor returned). Crash-idempotent through
+    * [[ChangeFold.bootstrap]]'s wipe: a crash between the two ingests and
+    * the cursor write leaves ledgered rows pointing at landing files a
+    * re-run's overwrite would delete. */
   def bootstrap(spark: SparkSession, srcLedger: String,
       indexRoot: String): Long =
-    MirrorLoop.cursorOf(spark, indexRoot).getOrElse {
-      MirrorLoop.rmrf(new java.io.File(indexRoot))
-      val snap = Lake.currentSnapshot(spark, srcLedger)
+    ChangeFold.bootstrap(spark, srcLedger, indexRoot) { snap =>
       val posts = postingsOf(Lake.readAt(spark, srcLedger, snap))
         .localCheckpoint()
       posts
@@ -80,83 +76,64 @@ object TextIndexDelta {
         .repartitionByRange(4, col("doc_id"))
         .write.mode("overwrite").parquet(s"$indexRoot/dl_landing")
       dlTable(spark, indexRoot).ingest(s"$indexRoot/dl_landing",
-        statsCols = Seq("doc_id"))
-      MirrorLoop.markCursor(spark, indexRoot, snap)
-      snap
+        statsCols = Seq("doc_id")): Unit
     }
 
   /** Fold every source change past the cursor into the index: one
     * change-batch tokenize + one MOR tombstone wave + one fresh segment
     * append + one doc-keyed doclens merge. Returns the new cursor. */
   def applyRound(spark: SparkSession, srcLedger: String,
-      indexRoot: String): Long = {
-    val cur = MirrorLoop.cursorOf(spark, indexRoot).getOrElse(
-      throw new IllegalStateException(s"index at $indexRoot not bootstrapped"))
-    val changes = Lake.readChanges(spark, srcLedger, cur)
-    if (changes.isEmpty) return cur
-    val target = changes.agg(max(col("_commit_snapshot"))).head().getLong(0)
-    // latest image per doc across the window (IvfDelta rule). The
-    // composite ordering (snapshot, post-over-pre) packs into ONE long —
-    // a struct ordering OR value demotes the aggregate to SortAggregate
-    // (struct buffers aren't UnsafeRow-mutable); two max_by over the
-    // same packed key pick the same row (within a doc's group each
-    // change row has a distinct (snapshot, rank) pair).
-    val rank = when(col("_change_type")
-      .isin("insert", "update_postimage"), lit(1)).otherwise(lit(0))
-    val ord = col("_commit_snapshot") * lit(2L) + rank
-    val latest = changes
-      .groupBy(col("doc_id"))
-      .agg(max_by(col("_change_type"), ord).as("_change_type"),
-        max_by(col("text"), ord).as("text"))
-      .localCheckpoint() // feeds tombstones, new postings, and doclens
-    // driver list ONLY while change-batch-sized (the JoinView
-    // PruneKeyCap discipline — `limit(cap+1)` BEFORE the collect): a
-    // daily increment's In list prunes posting files at the manifest; a
-    // BACKFILL wave (a corpus slice re-ingested through the change feed)
-    // must never materialize millions of ids on the driver — past the
-    // cap the tombstone and the doclens probe go relational instead
-    val changedIds = latest.select(col("doc_id"))
-      .limit(IdListCap + 1).collect().map(_.getLong(0)).toSeq
-    val smallWave = changedIds.length <= IdListCap
-    val t = table(spark, indexRoot)
-    // 1. tombstone EVERY changed doc's old postings (update = replace
-    //    whole posting set; delete = drop it) — KB sidecars, no rewrite
-    if (smallWave) t.deleteMor(col("doc_id").isin(changedIds: _*))
-    else t.deleteMorKeys(latest.select(col("doc_id")), "doc_id")
-    // 2. fresh token-clustered segment for the surviving docs
-    val live = latest
-      .filter(col("_change_type").isin("insert", "update_postimage"))
-    val newPosts = postingsOf(live).localCheckpoint()
-    if (!newPosts.isEmpty)
-      t.append(newPosts
-        .repartitionByRange(2, col("token"))
-        .sortWithinPartitions(col("token")))
-    // 3. doclens: file-targeted COW merge with a delete arm. EVERY
-    //    changed doc that ends the round with no postings loses its dl
-    //    row — explicit deletes AND updates to token-less text (a
-    //    from-scratch bootstrap has no dl row for either). The
-    //    had-a-row guard keeps never-indexed deletes out of the merge
-    //    source, and its isin filter keeps the probe file-pruned
-    //    (change-batch-sized) instead of a full doclens scan.
-    val dl = dlTable(spark, indexRoot)
-    val dlUpserts = newPosts.groupBy(col("doc_id"))
-      .agg(sum(col("tf")).as("dl"))
-      .withColumn("_drop", lit(false))
-    val dlHad = // had-a-row probe: file-pruned In under the cap, a
-      // relational semi-join for a backfill wave (same guard as above)
-      if (smallWave) dl.read().filter(col("doc_id").isin(changedIds: _*))
-      else dl.read().join(latest.select(col("doc_id")), Seq("doc_id"),
-        "left_semi")
-    val deleted = latest.select(col("doc_id"))
-      .join(dlUpserts.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .join(dlHad.select(col("doc_id")), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), lit(null).cast("long").as("dl"),
-        lit(true).as("_drop"))
-    dl.merge(dlUpserts.unionByName(deleted), "doc_id",
-      deleteWhen = Some(col("_drop")))
-    MirrorLoop.markCursor(spark, indexRoot, target)
-    target
-  }
+      indexRoot: String): Long =
+    ChangeFold.round(spark, srcLedger, indexRoot,
+        ChangeFold.cursor(spark, indexRoot, "index")) { (_, changes) =>
+      // latest image per doc across the window
+      val latest = ChangeFold.latest(changes, "doc_id", "text")
+        .localCheckpoint() // feeds tombstones, new postings, and doclens
+      // driver list ONLY while change-batch-sized (the JoinView
+      // PruneKeyCap discipline — `limit(cap+1)` BEFORE the collect): a
+      // daily increment's In list prunes posting files at the manifest; a
+      // BACKFILL wave (a corpus slice re-ingested through the change feed)
+      // must never materialize millions of ids on the driver — past the
+      // cap the tombstone and the doclens probe go relational instead
+      val changedIds = latest.select(col("doc_id"))
+        .limit(IdListCap + 1).collect().map(_.getLong(0)).toSeq
+      val smallWave = changedIds.length <= IdListCap
+      val t = table(spark, indexRoot)
+      // 1. tombstone EVERY changed doc's old postings (update = replace
+      //    whole posting set; delete = drop it) — KB sidecars, no rewrite
+      if (smallWave) t.deleteMor(col("doc_id").isin(changedIds: _*))
+      else t.deleteMorKeys(latest.select(col("doc_id")), "doc_id")
+      // 2. fresh token-clustered segment for the surviving docs
+      val live = latest.filter(ChangeFold.isUpsert)
+      val newPosts = postingsOf(live).localCheckpoint()
+      if (!newPosts.isEmpty)
+        t.append(newPosts
+          .repartitionByRange(2, col("token"))
+          .sortWithinPartitions(col("token")))
+      // 3. doclens: file-targeted COW merge with a delete arm. EVERY
+      //    changed doc that ends the round with no postings loses its dl
+      //    row — explicit deletes AND updates to token-less text (a
+      //    from-scratch bootstrap has no dl row for either). The
+      //    had-a-row guard keeps never-indexed deletes out of the merge
+      //    source, and its isin filter keeps the probe file-pruned
+      //    (change-batch-sized) instead of a full doclens scan.
+      val dl = dlTable(spark, indexRoot)
+      val dlUpserts = newPosts.groupBy(col("doc_id"))
+        .agg(sum(col("tf")).as("dl"))
+        .withColumn("_drop", lit(false))
+      val dlHad = // had-a-row probe: file-pruned In under the cap, a
+        // relational semi-join for a backfill wave (same guard as above)
+        if (smallWave) dl.read().filter(col("doc_id").isin(changedIds: _*))
+        else dl.read().join(latest.select(col("doc_id")), Seq("doc_id"),
+          "left_semi")
+      val deleted = latest.select(col("doc_id"))
+        .join(dlUpserts.select(col("doc_id")), Seq("doc_id"), "left_anti")
+        .join(dlHad.select(col("doc_id")), Seq("doc_id"), "left_semi")
+        .select(col("doc_id"), lit(null).cast("long").as("dl"),
+          lit(true).as("_drop"))
+      dl.merge(dlUpserts.unionByName(deleted), "doc_id",
+        deleteWhen = Some(col("_drop"))): Unit
+    }
 
   /** Driver-gate entry ([rows]): lake the documents table, bootstrap,
     * fold one mixed wave (inserts + updates + a delete) through the
@@ -166,14 +143,8 @@ object TextIndexDelta {
     * from-scratch. */
   def qDocSearchDelta(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_tidxd").toString
-    val src = GraftTable(spark, s"$tmp/src_ledger", s"$tmp/src_gen")
-    val idx = s"$tmp/idx"
-    graft.BenchPhase("fixture") {
-      graft.Tables.documents(spark, d).select("doc_id", "text")
-        .repartition(4).write.parquet(s"$tmp/landing")
-      src.ingest(s"$tmp/landing")
-      bootstrap(spark, src.ledgerDir, idx): Unit
+    ChangeFold.gate(graft.Tables.documents(spark, d).select("doc_id", "text"),
+        "graft_tidxd")(bootstrap(spark, _, _)) { src =>
       val maxId = src.read().agg(max(col("doc_id"))).head().getLong(0)
       src.merge(Seq(
         (maxId + 1, "spark merge window fresh doc"),
@@ -182,14 +153,10 @@ object TextIndexDelta {
         "doc_id", changeFeed = true)
       src.merge(Seq((2L, "tombstoned")).toDF("doc_id", "text"), "doc_id",
         deleteWhen = Some(lit(true)), changeFeed = true): Unit
-    }
-    val out = graft.BenchPhase("op") {
+    } { (src, idx) =>
       applyRound(spark, src.ledgerDir, idx)
-      search(spark, idx, Seq("spark", "merge"))
-        .orderBy(col("doc_id")).localCheckpoint()
+      search(spark, idx, Seq("spark", "merge")).orderBy(col("doc_id"))
     }
-    MirrorLoop.rmrf(new java.io.File(tmp))
-    out
   }
 
   /** The streaming form — the index stays fresh CONTINUOUSLY: a file
@@ -201,8 +168,8 @@ object TextIndexDelta {
   def maintainStream(spark: SparkSession, srcLedger: String,
       indexRoot: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    MirrorLoop.ledgerWatcher(spark, srcLedger, checkpointDir) { () =>
-      applyRound(spark, srcLedger, indexRoot): Unit
+    ChangeFold.stream(spark, srcLedger, checkpointDir) {
+      applyRound(spark, srcLedger, indexRoot)
     }
 
   /** Boolean AND search over the MAINTAINED index (DV-applied read) —

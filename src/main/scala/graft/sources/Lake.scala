@@ -441,7 +441,7 @@ object Lake {
     val tmp = new java.io.File(s"$ledgerDir/_ckpt/.tmp-$head")
     // coalesce(1) rides into the distributed fallback unchanged — the
     // checkpoint contract is ONE consolidated file either way
-    writeGenDir(spark, rows.coalesce(1), tmp.getPath)
+    writeGenDir(spark, rows.coalesce(1), tmp.getPath, commitInput = false)
     val fin = new java.io.File(s"$ledgerDir/_ckpt/ckpt-$head")
     if (!tmp.renameTo(fin)) {
       deleteRecursively(tmp)
@@ -1890,9 +1890,12 @@ object Lake {
     * attempt at the same reserved id) is cleared first. A 0-row frame
     * leaves no parquet file — exactly the FileFormatWriter behavior the
     * addsTagged empty-dir arm documents. NOT for layout-bearing rewrites
-    * (compaction sizes its output files deliberately). */
+    * (compaction sizes its output files deliberately). Only a dir a
+    * commit will ingest (`commitInput`) records its file rows: the
+    * commit claims them, and nothing would claim any other dir's. */
   private[graft] def writeGenDir(spark: SparkSession, df: DataFrame,
-      dir: String, knownBytes: Option[Long] = None): Unit = {
+      dir: String, knownBytes: Option[Long] = None,
+      commitInput: Boolean = true): Unit = {
     val est: BigInt = knownBytes.map(BigInt(_)).getOrElse {
       try df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
         .queryExecution.optimizedPlan.stats.sizeInBytes
@@ -1912,7 +1915,7 @@ object Lake {
       val n = org.apache.spark.sql.execution.datasources.parquet
         .GraftParquetShim.writeSingleFile(spark, df, out.getPath)
       if (n == 0) { out.delete(): Unit }
-      else {
+      else if (commitInput) {
         // record (path, size, adler32) at write time so the commit's
         // post-write file scan skips the binaryFile job for this dir.
         // java.util.zip.Adler32 IS zlib adler32 — the same checksum the
@@ -1939,7 +1942,7 @@ object Lake {
     * job per commit — CommitProfile r18). Entries are claimed
     * (removed) by the reader; a crashed commit's residue is bounded by
     * in-flight writes and re-keyed dirs overwrite on retry. */
-  private val driverWrittenDirs =
+  private[graft] val driverWrittenDirs =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long, Long)]]()
 
   private def appendSnapshot(spark: SparkSession, ledgerDir: String,

@@ -103,7 +103,7 @@ object JoinView {
       Lake.writeGenDir(spark,
         aggregate(Lake.readAt(spark, ledgerA, sA),
           Lake.readAt(spark, ledgerB, sB), spec),
-        genDir(viewDir, sA, sB))
+        genDir(viewDir, sA, sB), commitInput = false)
       markCursor(spark, viewDir, sA, sB)
       (sA, sB)
     }
@@ -166,7 +166,8 @@ object JoinView {
       .reduce(_ unionByName _)
     val next = MatView.applyDelta(v, changes, aggSpec(spec),
       sys.error("count/sum join view never rescans the table"))
-    Lake.writeGenDir(spark, next, genDir(viewDir, tgtA, tgtB))
+    Lake.writeGenDir(spark, next, genDir(viewDir, tgtA, tgtB),
+      commitInput = false)
     markCursor(spark, viewDir, tgtA, tgtB)
     pruneGens(viewDir, Set(s"gen-$tgtA-$tgtB", s"gen-$curA-$curB"))
     (tgtA, tgtB)

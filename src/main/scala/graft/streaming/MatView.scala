@@ -92,8 +92,7 @@ object MatView {
     * columns (the touched-group rescan); the count/sum path never reads it. */
   def applyDelta(view: DataFrame, changes: DataFrame, spec: AggSpec,
       tableAt: => DataFrame): DataFrame = {
-    val w = when(col("_change_type").isin("insert", "update_postimage"),
-      lit(1L)).otherwise(lit(-1L))
+    val w = ChangeFold.sign
     val dAggs =
       (sum(w).as("d_cnt") +:
         spec.sumCols.map(c =>
@@ -141,29 +140,21 @@ object MatView {
     * aggregate — paid once); a no-op returning the existing cursor if
     * already bootstrapped. */
   def bootstrap(spark: SparkSession, ledgerDir: String, viewDir: String,
-      spec: AggSpec): Long =
-    MirrorLoop.cursorOf(spark, viewDir) match {
-      case Some(cur) =>
-        // already bootstrapped: the no-op must still reject a DIFFERENT
-        // spec, or the caller walks away believing their definition is live
-        requireSpecMatches(spark.read.parquet(s"$viewDir/gen-$cur"), spec,
-          viewDir)
-        cur
-      case None =>
-        val snap = Lake.currentSnapshot(spark, ledgerDir)
-        Lake.writeGenDir(spark,
-          aggregate(Lake.readAt(spark, ledgerDir, snap), spec),
-          s"$viewDir/gen-$snap")
-        MirrorLoop.markCursor(spark, viewDir, snap)
-        snap
+      spec: AggSpec): Long = {
+    // already bootstrapped: the no-op must still reject a DIFFERENT
+    // spec, or the caller walks away believing their definition is live
+    ChangeFold.cursorOf(spark, viewDir).foreach(cur => requireSpecMatches(
+      spark.read.parquet(ChangeFold.genDir(viewDir, cur)), spec, viewDir))
+    ChangeFold.bootstrap(spark, ledgerDir, viewDir) { snap =>
+      ChangeFold.writeGen(spark,
+        aggregate(Lake.readAt(spark, ledgerDir, snap), spec), viewDir, snap)
     }
+  }
 
   /** The view's current contents (the generation the cursor names). */
-  def view(spark: SparkSession, viewDir: String): DataFrame = {
-    val cur = MirrorLoop.cursorOf(spark, viewDir).getOrElse(
-      throw new IllegalStateException(s"view at $viewDir not bootstrapped"))
-    spark.read.parquet(s"$viewDir/gen-$cur")
-  }
+  def view(spark: SparkSession, viewDir: String): DataFrame =
+    spark.read.parquet(ChangeFold.genDir(viewDir,
+      ChangeFold.cursor(spark, viewDir, "view")))
 
   /** Spec-checked read: same as [[view]] but validates the caller's spec
     * against the persisted schema first. */
@@ -178,19 +169,14 @@ object MatView {
     * new cursor (unchanged when no merge landed). */
   def applyRound(spark: SparkSession, ledgerDir: String, viewDir: String,
       spec: AggSpec): Long = {
-    val cur = MirrorLoop.cursorOf(spark, viewDir).getOrElse(
-      throw new IllegalStateException(s"view at $viewDir not bootstrapped"))
-    val v = spark.read.parquet(s"$viewDir/gen-$cur")
+    val cur = ChangeFold.cursor(spark, viewDir, "view")
+    val v = spark.read.parquet(ChangeFold.genDir(viewDir, cur))
     requireSpecMatches(v, spec, viewDir)
-    val changes = Lake.readChanges(spark, ledgerDir, cur)
-    if (changes.isEmpty) return cur
-    val target = changes.agg(max(col("_commit_snapshot"))).head().getLong(0)
-    Lake.writeGenDir(spark,
-      applyDelta(v, changes, spec, Lake.readAt(spark, ledgerDir, target)),
-      s"$viewDir/gen-$target")
-    MirrorLoop.markCursor(spark, viewDir, target)
-    MirrorLoop.pruneGens(viewDir, cur)
-    target
+    ChangeFold.round(spark, ledgerDir, viewDir, cur) { (target, changes) =>
+      ChangeFold.writeGen(spark,
+        applyDelta(v, changes, spec, Lake.readAt(spark, ledgerDir, target)),
+        viewDir, target)
+    }
   }
 
   /** The streaming form: a file stream watches the LEDGER dir as the
@@ -199,8 +185,8 @@ object MatView {
     * (exactly-once under checkpoint replay, the [[MirrorLoop]] shape). */
   def viewStream(spark: SparkSession, ledgerDir: String, viewDir: String,
       spec: AggSpec, checkpointDir: String): StreamingQuery =
-    MirrorLoop.ledgerWatcher(spark, ledgerDir, checkpointDir) { () =>
-      applyRound(spark, ledgerDir, viewDir, spec): Unit
+    ChangeFold.stream(spark, ledgerDir, checkpointDir) {
+      applyRound(spark, ledgerDir, viewDir, spec)
     }
 
   /** Oracle-checked incremental-view round-trip: build a lake from the

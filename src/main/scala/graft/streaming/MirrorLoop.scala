@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.sources.Lake
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The continuously-running CHANGE-FEED CONSUMER — the deployment shape a
@@ -39,67 +38,34 @@ object MirrorLoop {
 
   /** The last APPLIED source snapshot, from the `_cursor` sidecar; None
     * before bootstrap. */
-  def cursorOf(spark: SparkSession, mirrorDir: String): Option[Long] = {
-    val dir = new java.io.File(s"$mirrorDir/_cursor")
-    if (!dir.isDirectory) None
-    else Some(spark.read.parquet(dir.getPath)
-      .agg(max(col("snapshot_id"))).head().getLong(0))
-  }
-
-  private[graft] def markCursor(spark: SparkSession, mirrorDir: String, snap: Long): Unit = {
-    import spark.implicits._
-    Seq(snap).toDF("snapshot_id")
-      .write.mode("append").parquet(s"$mirrorDir/_cursor")
-  }
-
-  /** Bound a consumer dir's disk at two generations: anything OLDER than
-    * `below` can no longer be named by any cursor value (shared by every
-    * cursor-disciplined consumer — mirror, materialized view). */
-  private[graft] def pruneGens(dir: String, below: Long): Unit =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("gen-"))
-      .filter(_.getName.stripPrefix("gen-").toLongOption.exists(_ < below))
-      .foreach(rmrf)
+  def cursorOf(spark: SparkSession, mirrorDir: String): Option[Long] =
+    ChangeFold.cursorOf(spark, mirrorDir)
 
   /** Bootstrap the mirror from the source's CURRENT snapshot (a full
     * read — paid once); a no-op returning the existing cursor if the
     * mirror is already bootstrapped. Changes are consumed from here on. */
   def bootstrap(spark: SparkSession, ledgerDir: String, mirrorDir: String): Long =
-    cursorOf(spark, mirrorDir).getOrElse {
-      val snap = Lake.currentSnapshot(spark, ledgerDir)
-      Lake.writeGenDir(spark, Lake.readAt(spark, ledgerDir, snap),
-        s"$mirrorDir/gen-$snap")
-      markCursor(spark, mirrorDir, snap)
-      snap
+    ChangeFold.bootstrap(spark, ledgerDir, mirrorDir) { snap =>
+      ChangeFold.writeGen(spark, Lake.readAt(spark, ledgerDir, snap),
+        mirrorDir, snap)
     }
 
   /** The mirror's current contents (the generation the cursor names). */
-  def mirror(spark: SparkSession, mirrorDir: String): DataFrame = {
-    val cur = cursorOf(spark, mirrorDir).getOrElse(
-      throw new IllegalStateException(s"mirror at $mirrorDir not bootstrapped"))
-    spark.read.parquet(s"$mirrorDir/gen-$cur")
-  }
+  def mirror(spark: SparkSession, mirrorDir: String): DataFrame =
+    spark.read.parquet(ChangeFold.genDir(mirrorDir,
+      ChangeFold.cursor(spark, mirrorDir, "mirror")))
 
   /** One consumer round: read every change after the cursor, apply them to
     * the current generation, land the next generation, then the cursor
     * marker. Returns the new cursor (unchanged when no merge landed). */
   def applyRound(spark: SparkSession, ledgerDir: String, mirrorDir: String,
       key: String): Long = {
-    val cur = cursorOf(spark, mirrorDir).getOrElse(
-      throw new IllegalStateException(s"mirror at $mirrorDir not bootstrapped"))
-    val changes = Lake.readChanges(spark, ledgerDir, cur)
-    if (changes.isEmpty) return cur
-    val target = changes.agg(max(col("_commit_snapshot"))).head().getLong(0)
-    val m = spark.read.parquet(s"$mirrorDir/gen-$cur")
-    Lake.writeGenDir(spark, Lake.applyChanges(m, changes, key),
-      s"$mirrorDir/gen-$target")
-    markCursor(spark, mirrorDir, target)
-    // bound the mirror's disk at two generations: anything OLDER than the
-    // pre-round cursor can no longer be named by any cursor value (the
-    // marker for `target` is durable; `cur` stays as the crash-window
-    // fallback for a torn marker append)
-    pruneGens(mirrorDir, cur)
-    target
+    val cur = ChangeFold.cursor(spark, mirrorDir, "mirror")
+    ChangeFold.round(spark, ledgerDir, mirrorDir, cur) { (target, changes) =>
+      val m = spark.read.parquet(ChangeFold.genDir(mirrorDir, cur))
+      ChangeFold.writeGen(spark, Lake.applyChanges(m, changes, key),
+        mirrorDir, target)
+    }
   }
 
   private[graft] def rmrf(f: java.io.File): Unit = {
@@ -115,12 +81,13 @@ object MirrorLoop {
     * re-runs a round that sees no changes past the cursor and no-ops). */
   def changeStream(spark: SparkSession, ledgerDir: String, mirrorDir: String,
       key: String, checkpointDir: String): StreamingQuery =
-    ledgerWatcher(spark, ledgerDir, checkpointDir) { () =>
-      applyRound(spark, ledgerDir, mirrorDir, key): Unit
+    ChangeFold.stream(spark, ledgerDir, checkpointDir) {
+      applyRound(spark, ledgerDir, mirrorDir, key)
     }
 
   /** THE cursor-replay-safe ledger watcher every maintained artifact
-    * shares (mirror, MatView, IvfDelta, TextIndexDelta, JoinView): a
+    * shares (every [[ChangeFold]] state — mirror, MatView and the six
+    * `*Delta` operators — and JoinView): a
     * file stream on the ledger dir as the arrival signal, one
     * consumer-supplied round per micro-batch, AvailableNow. The batch's
     * rows are deliberately unused — the consumer's CURSOR decides what

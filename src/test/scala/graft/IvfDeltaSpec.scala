@@ -113,4 +113,26 @@ class IvfDeltaSpec extends GraftSpec {
     assert(maxSkew < 3.0,
       s"replica-wave fixture should not report strong drift, skew=$maxSkew")
   }
+
+  test("bootstrap is crash-idempotent: a lost cursor re-bootstraps to " +
+      "the same index a fresh build lands") {
+    val tmp = Files.createTempDirectory("graft_ivfd_reboot").toString
+    val t = GraftTable(spark, s"$tmp/ledger", s"$tmp/gen")
+    spark.read.parquet(s"$sf/embeddings.parquet")
+      .repartition(4).write.parquet(s"$tmp/landing")
+    t.ingest(s"$tmp/landing")
+    val idx = s"$tmp/idx"
+    IvfDelta.bootstrap(spark, t.ledgerDir, idx, maxIter = 2)
+    // the crash window: index landed, cursor never written
+    graft.streaming.MirrorLoop.rmrf(new java.io.File(s"$idx/_cursor"))
+    IvfDelta.bootstrap(spark, t.ledgerDir, idx, maxIter = 2)
+    IvfDelta.bootstrap(spark, t.ledgerDir, s"$tmp/fresh", maxIter = 2)
+    assert(canon(IvfDelta.table(spark, idx).read()) ==
+      canon(IvfDelta.table(spark, s"$tmp/fresh").read()),
+      "re-bootstrapped index differs from a fresh build")
+    def centroids(root: String) = spark.read.parquet(s"$root/centroids")
+      .collect().map(r => (r.getInt(0), r.getSeq[Double](1))).toSet
+    assert(centroids(idx) == centroids(s"$tmp/fresh"))
+    graft.streaming.MirrorLoop.rmrf(new java.io.File(tmp))
+  }
 }

@@ -98,4 +98,26 @@ class MirrorLoopSpec extends GraftSpec {
       .filter(f => f.isDirectory && f.getName.startsWith("gen-"))
     assert(gens.length <= 2, s"stale generations not pruned: ${gens.map(_.getName).toSeq}")
   }
+
+  test("generation writes leave no driver-written-dir entry behind") {
+    import scala.jdk.CollectionConverters._
+    val t = Files.createTempDirectory("graft_mirror_leak").toString
+    val (landing, ledger, gen, mir) =
+      (s"$t/landing", s"$t/ledger", s"$t/gen", s"$t/mirror")
+    val cust = spark.read.parquet(s"$sf/customer.parquet")
+    cust.repartitionByRange(2, col("c_custkey")).write.parquet(landing)
+    Lake.ingestNewFiles(spark, landing, ledger)
+    MirrorLoop.bootstrap(spark, ledger, mir)
+    for (i <- 1 to 3) {
+      Lake.mergeInto(spark, ledger, gen,
+        cust.filter(col("c_custkey") % 10 === i)
+          .withColumn("c_acctbal", col("c_acctbal") + i),
+        "c_custkey", changeFeed = true)
+      MirrorLoop.applyRound(spark, ledger, mir, "c_custkey")
+    }
+    assert(canon(MirrorLoop.mirror(spark, mir)) == canon(truth(ledger)))
+    val left = Lake.driverWrittenDirs.keySet.asScala.filter(_.startsWith(mir))
+    assert(left.isEmpty, s"entries left behind: ${left.toSeq.sorted}")
+    rmrf(new java.io.File(t))
+  }
 }

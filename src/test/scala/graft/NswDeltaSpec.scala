@@ -176,4 +176,21 @@ class NswDeltaSpec extends GraftSpec {
     val b = run()
     assert(a == b, "maintenance fold is not deterministic")
   }
+
+  test("bootstrap is crash-idempotent: a lost cursor re-bootstraps to " +
+      "the same graph a fresh build lands") {
+    val (t, idx, tmp) = fixture()
+    // the crash window: graph landed, cursor never written
+    graft.streaming.MirrorLoop.rmrf(new java.io.File(s"$idx/_cursor"))
+    NswDelta.bootstrap(spark, t.ledgerDir, idx, maxIter = 2)
+    NswDelta.bootstrap(spark, t.ledgerDir, s"$tmp/fresh", maxIter = 2)
+    def graph(root: String) = NswDelta.table(spark, root).read()
+      .select(col("list_id").cast("int"), col("vec_id"), col("nbrs"),
+        col("codes")).collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2),
+        r.getSeq[Int](3))).sortBy(_._2).toSeq
+    assert(graph(idx) == graph(s"$tmp/fresh"),
+      "re-bootstrapped graph differs from a fresh build")
+    graft.streaming.MirrorLoop.rmrf(new java.io.File(tmp))
+  }
 }
