@@ -124,11 +124,7 @@ object CommitProfile {
       t.sql("DELETE FROM cprof_cust WHERE c_acctbal < -990"): Unit
     }
 
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array()).foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(tmp))
+    graft.streaming.MirrorLoop.rmrf(new java.io.File(tmp))
     spark.stop()
   }
 }

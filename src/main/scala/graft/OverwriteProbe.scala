@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sources.Lake
+import graft.streaming.MirrorLoop.rmrf
 
 /** 10x probe for the r12 OVERWRITE verb: `overwriteWith`'s documented
   * cost is O(new data + old file COUNT) — the old table's DATA is never
@@ -25,10 +26,6 @@ object OverwriteProbe {
     def report(line: String): Unit = { println(line); probeLines += line }
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array()).foreach(rmrf)
-      f.delete(): Unit
     }
     val root = "/tmp/ow_probe"
     rmrf(new java.io.File(root))

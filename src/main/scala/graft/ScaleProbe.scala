@@ -391,10 +391,7 @@ object ScaleProbe {
       // size — the ratio is the incremental-view claim, measured.
       import graft.sources.Lake
       import graft.streaming.MatView
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmrf)
-        f.delete(); ()
-      }
+      import graft.streaming.MirrorLoop.rmrf
       val mvRoot = "/tmp/sf1_synth_mv"
       rmrf(new java.io.File(mvRoot))
       val spec = MatView.AggSpec(Seq("o_orderpriority"), Seq("o_totalprice"))

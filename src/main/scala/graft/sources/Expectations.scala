@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.streaming.MirrorLoop
 
 /** Write-time row-level quality gates — the lake analog of the reference's
   * refuse-bad-input posture (cf. `config/create_daq_config.sh`, which
@@ -120,7 +121,7 @@ object Expectations {
       .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).sum }
 
     if (onViolation == "fail" && quarantined > 0) {
-      deleteRecursively(new java.io.File(genDir))
+      MirrorLoop.rmrf(new java.io.File(genDir))
       throw new IllegalStateException(
         s"expectations failed for $quarantined row(s): " +
           byExpectation.toSeq.sortBy(_._1)
@@ -128,7 +129,7 @@ object Expectations {
     }
     if (onViolation == "drop")
       parts.filterNot(_.getName == s"$PartCol=$PartOk")
-        .foreach(deleteRecursively)
+        .foreach(MirrorLoop.rmrf)
 
     val snapshot =
       if (passed > 0) {
@@ -157,11 +158,5 @@ object Expectations {
     gens.map(g => spark.read.option("basePath", g.toString)
         .parquet(g.toString).filter(col(PartCol) =!= PartOk))
       .reduce(_.unionByName(_))
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array()).foreach(deleteRecursively)
-    f.delete(): Unit
   }
 }

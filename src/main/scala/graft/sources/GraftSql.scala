@@ -1757,11 +1757,7 @@ object GraftSql {
       .localCheckpoint() // eager: materialize before the files vanish
     unbind(spark, "sqlct_t")
     spark.catalog.dropTempView("sqlct_src")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array()).foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(tmp))
+    graft.streaming.MirrorLoop.rmrf(new java.io.File(tmp))
     out
   }
 
@@ -1891,11 +1887,7 @@ object GraftSql {
       .localCheckpoint() // eager: materialize before the files vanish
     }
     unbind(spark, "sqldml_cust")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array()).foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(tmp))
+    graft.streaming.MirrorLoop.rmrf(new java.io.File(tmp))
     out
   }
 
@@ -1948,11 +1940,7 @@ object GraftSql {
       .localCheckpoint() // eager: materialize before the files vanish
     }
     unbind(spark, "sqlow_cust")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array()).foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(tmp))
+    graft.streaming.MirrorLoop.rmrf(new java.io.File(tmp))
     out
   }
 
@@ -2003,11 +1991,7 @@ object GraftSql {
       .localCheckpoint() // eager: materialize before the files vanish
     }
     unbind(spark, "sqlrw_cust")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array()).foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(tmp))
+    graft.streaming.MirrorLoop.rmrf(new java.io.File(tmp))
     out
   }
 

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.streaming.MirrorLoop
 
 /** Lake-layout writers — the storage discipline side of the engine
   * (the reference's file mover lands run data + metadata sidecars into a
@@ -444,7 +445,7 @@ object Lake {
     writeGenDir(spark, rows.coalesce(1), tmp.getPath, commitInput = false)
     val fin = new java.io.File(s"$ledgerDir/_ckpt/ckpt-$head")
     if (!tmp.renameTo(fin)) {
-      deleteRecursively(tmp)
+      MirrorLoop.rmrf(tmp)
       sys.error(s"checkpoint ckpt-$head already exists under $ledgerDir/_ckpt")
     }
     // prune the superseded per-commit files: only files ALL of whose rows
@@ -461,7 +462,7 @@ object Lake {
       .getOrElse(Array.empty)
       .filter(f => f.getName.startsWith("ckpt-")
         && f.getName.stripPrefix("ckpt-").toLongOption.exists(_ < head))
-      .foreach(deleteRecursively)
+      .foreach(MirrorLoop.rmrf)
     head
   }
 
@@ -960,20 +961,20 @@ object Lake {
     p.replaceFirst("^file:/+", "/")
 
   /** True once a schema-evolving merge landed on this table (persistent
-    * `_evolved` marker): reads must then UNION the per-file footers so
-    * files written before a column existed surface it as null. Plan-time
-    * cost is a footer pass per live file, paid only by evolved tables —
-    * un-evolved tables keep the single-footer fast path. (The next tier —
-    * schema-in-manifest like Iceberg's — would drop the footer pass; the
-    * marker records which tables would need it.) */
+    * [[TableMeta.Evolved]] marker): reads must then UNION the per-file
+    * footers so files written before a column existed surface it as null.
+    * Plan-time cost is a footer pass per live file, paid only by evolved
+    * tables — un-evolved tables keep the single-footer fast path. (The
+    * next tier — schema-in-manifest like Iceberg's — would drop the
+    * footer pass; the marker records which tables would need it.) */
   private def isEvolved(ledgerDir: String): Boolean =
-    new java.io.File(s"$ledgerDir/_evolved").exists()
+    TableMeta.Evolved.exists(ledgerDir)
 
   // ---------------------------------------------- schema-in-manifest
 
   /** SCHEMA-IN-MANIFEST (the Iceberg metadata-schema analog): the table
-    * schema is RECORDED in the ledger dir (`_schema/schema-<snapshot>.json`,
-    * KB metadata like `_constraints`) at first ingest and re-recorded by
+    * schema is RECORDED beside the ledger ([[TableMeta.Schemas]]) at
+    * first ingest and re-recorded by
     * every schema-evolving commit, so PLAN TIME pays ZERO parquet footer
     * reads — an `_evolved` table previously paid a merged-footer
     * inference job over every live file per plan (10^5 files = 10^5
@@ -985,8 +986,9 @@ object Lake {
     * columns null-fill — the standard evolution read). Tables created
     * before this feature have no recording and keep the footer path
     * byte-identically. */
-  private def schemaDirF(ledgerDir: String) =
-    new java.io.File(s"$ledgerDir/_schema")
+  private def parseSchema(json: String): org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.DataType.fromJson(json)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
 
   // -------------------------------- column-mapping field ids (r15)
 
@@ -1004,14 +1006,8 @@ object Lake {
 
   /** Every schema recording of this table, parsed (KB driver-side). */
   private def allRecordedSchemas(ledgerDir: String)
-      : Seq[org.apache.spark.sql.types.StructType] = {
-    val re = """schema-(\d+)\.json""".r
-    Option(schemaDirF(ledgerDir).listFiles()).getOrElse(Array.empty)
-      .filter(f => re.findFirstIn(f.getName).isDefined)
-      .map(f => org.apache.spark.sql.types.DataType.fromJson(new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-        .asInstanceOf[org.apache.spark.sql.types.StructType]).toSeq
-  }
+      : Seq[org.apache.spark.sql.types.StructType] =
+    TableMeta.Schemas.list(ledgerDir).map(e => parseSchema(e._2))
 
   /** Every (id, lower-name) pair any recording of this table ever
     * declared — the trust set for incoming metadata ids and the floor
@@ -1056,38 +1052,38 @@ object Lake {
   private[sources] def recordSchema(ledgerDir: String, snapshot: Long,
       schema: org.apache.spark.sql.types.StructType,
       trustIds: Boolean = false): Unit = {
-    schemaDirF(ledgerDir).mkdirs()
     val toWrite =
       if (trustIds && schema.fields.forall(fieldId(_).isDefined)) schema
       else withFieldIds(ledgerDir, schema)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$ledgerDir/_schema/schema-$snapshot.json"),
-      toWrite.json.getBytes("UTF-8")): Unit
+    TableMeta.Schemas.put(ledgerDir, snapshot, toWrite.json)
   }
+
+  /** The one inert op="schema" ledger row a metadata-only commit lands
+    * (op neither add/remove/dv/cdc — invisible to every live-set /
+    * incremental / CDC reader, like expire rows); its path names the
+    * schema recording it committed. */
+  private def schemaAction(spark: SparkSession, snapshot: Long,
+      snapshotOp: String): DataFrame =
+    removeActions(spark, Seq(TableMeta.Schemas.relPath(snapshot)))
+      .withColumn("op", lit("schema"))
+      .withColumn("snapshot_op", lit(snapshotOp))
+      .withColumn("stats", lit(null).cast(StatsType))
 
   // ------------------------------------ RENAME COLUMN (r15)
 
-  /** One rename, as logged under `_renames/` at its commit snapshot. */
+  /** One rename, as logged in [[TableMeta.Renames]] at its commit
+    * snapshot. */
   final case class RenameRec(snapshot: Long, id: Long,
     from: String, to: String)
 
-  private def renamesDirF(ledgerDir: String) =
-    new java.io.File(s"$ledgerDir/_renames")
-
   /** The table's rename log, ascending by snapshot (KB driver-side). */
   private[sources] def renameLog(ledgerDir: String): Seq[RenameRec] = {
-    val fre = """rename-(\d+)\.json""".r
     val jre =
       """\{"snapshot":(\d+),"id":(\d+),"from":"(\w+)","to":"(\w+)"\}""".r
-    Option(renamesDirF(ledgerDir).listFiles()).getOrElse(Array.empty)
-      .flatMap(f => f.getName match {
-        case fre(_) => new String(java.nio.file.Files.readAllBytes(f.toPath),
-          "UTF-8").trim match {
-          case jre(s, i, o, n) => Some(RenameRec(s.toLong, i.toLong, o, n))
-          case _ => None
-        }
-        case _ => None
-      }).sortBy(_.snapshot).toSeq
+    TableMeta.Renames.list(ledgerDir).flatMap(_._2.trim match {
+      case jre(s, i, o, n) => Some(RenameRec(s.toLong, i.toLong, o, n))
+      case _ => None
+    })
   }
 
   /** ALTER TABLE … RENAME COLUMN — safe through column-mapping ids (the
@@ -1100,7 +1096,7 @@ object Lake {
     * serving the column under its new logical name, data skipping
     * included (pushed filters reach each epoch's scan bearing that
     * epoch's physical name, which is how the per-file stats are keyed).
-    * One-time retrofit: the first rename rewrites the existing `_schema`
+    * One-time retrofit: the first rename rewrites the existing schema
     * recordings in place with by-name-reconciled ids (names never change
     * except through renames, so by-name backfill is exact), and a table
     * without any recording gets one at the current head so the
@@ -1153,16 +1149,11 @@ object Lake {
     val next = snap + 1
     reserving(spark, ledgerDir, next) {
       recordSchema(ledgerDir, next, renamed, trustIds = true)
-      renamesDirF(ledgerDir).mkdirs()
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$ledgerDir/_renames/rename-$next.json"),
-        (s"""{"snapshot":$next,"id":$id,"from":"${preField.name}",""" +
-          s""""to":"$newName"}""").getBytes("UTF-8"))
-      val action = removeActions(spark, Seq(s"_schema/schema-$next.json"))
-        .withColumn("op", lit("schema"))
-        .withColumn("snapshot_op", lit("rename-column"))
-        .withColumn("stats", lit(null).cast(StatsType))
-      appendSnapshot(spark, ledgerDir, next, action, preReserved = true,
+      TableMeta.Renames.put(ledgerDir, next,
+        s"""{"snapshot":$next,"id":$id,"from":"${preField.name}",""" +
+          s""""to":"$newName"}""")
+      appendSnapshot(spark, ledgerDir, next,
+        schemaAction(spark, next, "rename-column"), preReserved = true,
         stagedSchema = true, stagedRename = true)
       next
     }
@@ -1170,30 +1161,21 @@ object Lake {
 
   // ------------------------------------ ALTER COLUMN TYPE (r16)
 
-  /** One type widening, as logged under `_widen/` at its commit
+  /** One type widening, as logged in [[TableMeta.Widens]] at its commit
     * snapshot. */
   final case class WidenRec(snapshot: Long, col: String,
     from: String, to: String)
-
-  private def widenDirF(ledgerDir: String) =
-    new java.io.File(s"$ledgerDir/_widen")
 
   /** The table's type-widening log, ascending by snapshot (KB
     * driver-side). Only its presence gates the epoch scan — per-epoch
     * TYPES resolve from the schema recordings themselves. */
   private[sources] def widenLog(ledgerDir: String): Seq[WidenRec] = {
-    val fre = """widen-(\d+)\.json""".r
     val jre = ("""\{"snapshot":(\d+),"col":"(\w+)","from":"([^"]+)",""" +
       """"to":"([^"]+)"\}""").r
-    Option(widenDirF(ledgerDir).listFiles()).getOrElse(Array.empty)
-      .flatMap(f => f.getName match {
-        case fre(_) => new String(java.nio.file.Files.readAllBytes(f.toPath),
-          "UTF-8").trim match {
-          case jre(s, c, o, n) => Some(WidenRec(s.toLong, c, o, n))
-          case _ => None
-        }
-        case _ => None
-      }).sortBy(_.snapshot).toSeq
+    TableMeta.Widens.list(ledgerDir).flatMap(_._2.trim match {
+      case jre(s, c, o, n) => Some(WidenRec(s.toLong, c, o, n))
+      case _ => None
+    })
   }
 
   /** Is `from` → `to` a SAFE widening (the Delta type-widening
@@ -1224,7 +1206,7 @@ object Lake {
     * metadata commit (the Delta type-widening contract; the next
     * migration DDL after ADD/DROP/RENAME): record the widened schema at
     * a new snapshot (field ids unchanged — the column's identity does
-    * not move) plus one `_widen/` log entry and one inert op="schema"
+    * not move) plus one widening-log entry and one inert op="schema"
     * ledger row; ZERO data files are read or rewritten. Reads resolve
     * per epoch through the SAME branch machinery renames use
     * ([[renameEpochScan]]): files written before the widening scan with
@@ -1278,24 +1260,19 @@ object Lake {
     val next = snap + 1
     reserving(spark, ledgerDir, next) {
       recordSchema(ledgerDir, next, widened, trustIds = true)
-      widenDirF(ledgerDir).mkdirs()
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$ledgerDir/_widen/widen-$next.json"),
-        (s"""{"snapshot":$next,"col":"${fOld.name}",""" +
+      TableMeta.Widens.put(ledgerDir, next,
+        s"""{"snapshot":$next,"col":"${fOld.name}",""" +
           s""""from":"${fOld.dataType.simpleString}",""" +
-          s""""to":"${newType.simpleString}"}""").getBytes("UTF-8"))
-      val action = removeActions(spark, Seq(s"_schema/schema-$next.json"))
-        .withColumn("op", lit("schema"))
-        .withColumn("snapshot_op", lit("alter-column-type"))
-        .withColumn("stats", lit(null).cast(StatsType))
-      appendSnapshot(spark, ledgerDir, next, action, preReserved = true,
+          s""""to":"${newType.simpleString}"}""")
+      appendSnapshot(spark, ledgerDir, next,
+        schemaAction(spark, next, "alter-column-type"), preReserved = true,
         stagedSchema = true, stagedWiden = true)
       next
     }
   }
 
   /** First-rename retrofit: attach by-name-reconciled ids to every
-    * id-less `_schema` recording (in place — names unchanged, so every
+    * id-less schema recording (in place — names unchanged, so every
     * reader sees the same schema it always did), and ensure a recording
     * exists at-or-before the current head so pre-rename files have an
     * epoch to resolve through. Names are stable before the first rename
@@ -1311,56 +1288,32 @@ object Lake {
     val assign: Map[String, Long] = recordedSchemaAt(ledgerDir, head).get
       .fields.flatMap(f => fieldId(f).map(f.name.toLowerCase -> _)).toMap
     var next = (recordedIdPairs(ledgerDir).map(_._1) ++ Seq(0L)).max + 1
-    val re = """schema-(\d+)\.json""".r
-    Option(schemaDirF(ledgerDir).listFiles()).getOrElse(Array.empty)
-      .foreach { f =>
-        if (re.findFirstIn(f.getName).isDefined) {
-          val sch = DataType.fromJson(new String(
-            java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-            .asInstanceOf[StructType]
-          if (sch.fields.exists(fieldId(_).isEmpty)) {
-            val fixed = StructType(sch.fields.map { fl =>
-              if (fieldId(fl).isDefined) fl
-              else {
-                val id = assign.getOrElse(fl.name.toLowerCase,
-                  { val i = next; next += 1; i })
-                fl.copy(metadata = new MetadataBuilder()
-                  .withMetadata(fl.metadata).putLong(FieldIdKey, id).build())
-              }
-            })
-            // atomic rename-into-place (the _ckpt discipline): a
-            // truncate-then-write here races concurrent recordedSchemaAt
-            // readers into a partial JSON; the retrofit is semantically
-            // idempotent, so rename replacement is safe
-            val tmp = java.nio.file.Files.createTempFile(
-              f.toPath.getParent, ".retrofit", ".tmp") // name must never
-            // match schema-(\d+).json — listings scan this dir
-            java.nio.file.Files.write(tmp, fixed.json.getBytes("UTF-8"))
-            java.nio.file.Files.move(tmp, f.toPath,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
+    TableMeta.Schemas.list(ledgerDir).foreach { case (s, json) =>
+      val sch = parseSchema(json)
+      if (sch.fields.exists(fieldId(_).isEmpty)) {
+        val fixed = StructType(sch.fields.map { fl =>
+          if (fieldId(fl).isDefined) fl
+          else {
+            val id = assign.getOrElse(fl.name.toLowerCase,
+              { val i = next; next += 1; i })
+            fl.copy(metadata = new MetadataBuilder()
+              .withMetadata(fl.metadata).putLong(FieldIdKey, id).build())
           }
-        }
+        })
+        // replaced in place by an atomic put: a truncate-then-write here
+        // would race concurrent recordedSchemaAt readers into a partial
+        // JSON; the retrofit is semantically idempotent, so rename
+        // replacement is safe
+        TableMeta.Schemas.put(ledgerDir, s, fixed.json)
       }
+    }
   }
 
   /** Latest recorded schema at-or-before `snapshot`, None when the table
     * predates schema recording. */
   private[sources] def recordedSchemaAt(ledgerDir: String, snapshot: Long)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val re = """schema-(\d+)\.json""".r
-    Option(schemaDirF(ledgerDir).listFiles()).getOrElse(Array.empty)
-      .flatMap(f => f.getName match {
-        case re(s) if s.toLong <= snapshot => Some((s.toLong, f))
-        case _ => None
-      })
-      .sortBy(_._1).lastOption
-      .map { case (_, f) =>
-        org.apache.spark.sql.types.DataType.fromJson(new String(
-          java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-      }
-  }
+      : Option[org.apache.spark.sql.types.StructType] =
+    TableMeta.Schemas.latest(ledgerDir, snapshot).map(parseSchema)
 
   /** [[GraftShim.parquetScan]] with the table's schema resolution
     * applied: `atSnapshot >= 0` reads TABLE-shaped data and takes the
@@ -1433,13 +1386,7 @@ object Lake {
       extra: Seq[org.apache.spark.sql.types.StructField] = Nil)
       : DataFrame = {
     import org.apache.spark.sql.types._
-    val re = """schema-(\d+)\.json""".r
-    val versions: Seq[Long] =
-      Option(schemaDirF(ledgerDir).listFiles()).getOrElse(Array.empty)
-        .flatMap(_.getName match {
-          case re(s) if s.toLong <= atSnapshot => Some(s.toLong)
-          case _ => None
-        }).sorted.toSeq
+    val versions = TableMeta.Schemas.snapshots(ledgerDir, atSnapshot)
     require(versions.nonEmpty, // recorded.isDefined implies this
       s"rename-epoch scan with no schema recordings at $ledgerDir")
     def epochOf(s: Long): Long = {
@@ -1798,31 +1745,15 @@ object Lake {
   private def sweepOrphanRecordings(ledgerDir: String, committing: Long,
       stagedAtCommitting: Boolean, stagedRename: Boolean = false,
       stagedWiden: Boolean = false): Unit = {
-    val re = """schema-(\d+)\.json""".r
-    Option(schemaDirF(ledgerDir).listFiles()).getOrElse(Array.empty)
-      .foreach(f => f.getName match {
-        case re(sid) if sid.toLong > committing
-          || (sid.toLong == committing && !stagedAtCommitting) =>
-          f.delete(): Unit
-        case _ => ()
-      })
+    TableMeta.Schemas.sweepAbove(ledgerDir, committing, stagedAtCommitting)
     // rename/widen log entries are staged BEFORE their snapshot lands
     // (the schema-recording ordering) — a crashed renameColumn/
     // alterColumnType orphans a log file that a later unrelated commit
     // at the same id would otherwise turn into a phantom rename (bogus
     // DESCRIBE trail, addColumns' renamedAway guard treating the name
     // as safely re-addable) or a phantom widening epoch
-    def sweepLog(dir: java.io.File, fre: scala.util.matching.Regex,
-        staged: Boolean): Unit =
-      Option(dir.listFiles()).getOrElse(Array.empty)
-        .foreach(f => f.getName match {
-          case fre(sid) if sid.toLong > committing
-            || (sid.toLong == committing && !staged) =>
-            f.delete(): Unit
-          case _ => ()
-        })
-    sweepLog(renamesDirF(ledgerDir), """rename-(\d+)\.json""".r, stagedRename)
-    sweepLog(widenDirF(ledgerDir), """widen-(\d+)\.json""".r, stagedWiden)
+    TableMeta.Renames.sweepAbove(ledgerDir, committing, stagedRename)
+    TableMeta.Widens.sweepAbove(ledgerDir, committing, stagedWiden)
   }
 
   /** Append `rows` (KB-scale metadata, blast-radius-bounded) to a ledger
@@ -2056,7 +1987,7 @@ object Lake {
       // `evolveSchema`, NEW source columns widen the table instead — the
       // Delta autoMerge analog: this merge's carry/delta files carry the
       // union schema, untouched files keep theirs, and the persistent
-      // `_evolved` marker flips every later read of this table to
+      // evolution marker flips every later read of this table to
       // merged-footer inference so pre-evolution files surface the new
       // columns as null (see isEvolved).
       val targetSchema = target.map(_.schema)
@@ -2213,7 +2144,7 @@ object Lake {
       // reserved monotonically), and the marker merely re-enables
       // merged-footer reads for legacy tables.
       if (newCols.nonEmpty) {
-        new java.io.File(s"$ledgerDir/_evolved").createNewFile()
+        TableMeta.Evolved.set(ledgerDir)
         // record the schema AT the evolving snapshot: reads at or
         // above it see the union, time travel below keeps the old shape
         recordSchema(ledgerDir, next, org.apache.spark.sql.types.StructType(
@@ -2980,7 +2911,7 @@ object Lake {
     * the rest: reads at/above the evolution plan with the new recorded
     * schema and null-fill pre-evolution files (the `MERGE WITH SCHEMA
     * EVOLUTION` machinery); time travel below it resolves the prior
-    * recording and keeps the old shape. The `_evolved` marker keeps
+    * recording and keeps the old shape. The evolution marker keeps
     * legacy no-recording fallback paths on merged-footer inference. New
     * columns append AT THE END (the only position parquet evolution
     * serves without rewrites). Names clashing with existing columns
@@ -3020,19 +2951,13 @@ object Lake {
       org.apache.spark.sql.types.StructType(cur.fields ++ cols.fields)
     val next = snap + 1
     reserving(spark, ledgerDir, next) {
-      new java.io.File(s"$ledgerDir/_evolved").createNewFile()
+      TableMeta.Evolved.set(ledgerDir)
       // recording BEFORE the row lands (the mergeInto crash discipline:
       // an unlanded recording is swept; a landed row without its
       // recording would serve the old schema silently)
       recordSchema(ledgerDir, next, widened)
-      // one inert audit row (op neither add/remove/dv/cdc — invisible to
-      // every live-set / incremental / CDC reader, like expire rows);
-      // its path names the recording it committed
-      val action = removeActions(spark, Seq(s"_schema/schema-$next.json"))
-        .withColumn("op", lit("schema"))
-        .withColumn("snapshot_op", lit("add-columns"))
-        .withColumn("stats", lit(null).cast(StatsType))
-      appendSnapshot(spark, ledgerDir, next, action, preReserved = true,
+      appendSnapshot(spark, ledgerDir, next,
+        schemaAction(spark, next, "add-columns"), preReserved = true,
         stagedSchema = true)
       next
     }
@@ -3080,19 +3005,15 @@ object Lake {
     // name can never be re-added, so the file can never be misread)
     names.foreach { n =>
       identityColumns(ledgerDir).find(_._1.equalsIgnoreCase(n)).foreach {
-        case (cn, _) =>
-          new java.io.File(s"$ledgerDir/_identity/$cn").delete(): Unit
+        case (cn, _) => TableMeta.Identity.delete(ledgerDir, cn): Unit
       }
     }
     val next = snap + 1
     reserving(spark, ledgerDir, next) {
       recordSchema(ledgerDir, next,
         org.apache.spark.sql.types.StructType(remaining))
-      val action = removeActions(spark, Seq(s"_schema/schema-$next.json"))
-        .withColumn("op", lit("schema"))
-        .withColumn("snapshot_op", lit("drop-columns"))
-        .withColumn("stats", lit(null).cast(StatsType))
-      appendSnapshot(spark, ledgerDir, next, action, preReserved = true,
+      appendSnapshot(spark, ledgerDir, next,
+        schemaAction(spark, next, "drop-columns"), preReserved = true,
         stagedSchema = true)
       next
     }
@@ -3120,32 +3041,21 @@ object Lake {
         "declares a new table; bind or CREATE OR REPLACE the existing one")
     val next = 1L
     reserving(spark, ledgerDir, next) {
-      new java.io.File(s"$ledgerDir/_evolved").createNewFile()
+      TableMeta.Evolved.set(ledgerDir)
       recordSchema(ledgerDir, next, schema)
-      val action = removeActions(spark, Seq(s"_schema/schema-$next.json"))
-        .withColumn("op", lit("schema"))
-        .withColumn("snapshot_op", lit("create-table"))
-        .withColumn("stats", lit(null).cast(StatsType))
-      appendSnapshot(spark, ledgerDir, next, action, preReserved = true,
+      appendSnapshot(spark, ledgerDir, next,
+        schemaAction(spark, next, "create-table"), preReserved = true,
         stagedSchema = true)
       next
     }
   }
 
   /** Column names that appear in any PRIOR schema recording of this
-    * table (KB driver-side read of the `_schema` JSON recordings) —
-    * [[addColumns]]'s re-add guard input. */
-  private def everRecordedNames(ledgerDir: String): Set[String] = {
-    val re = """schema-(\d+)\.json""".r
-    Option(schemaDirF(ledgerDir).listFiles()).getOrElse(Array.empty)
-      .filter(f => re.findFirstIn(f.getName).isDefined)
-      .flatMap { f =>
-        org.apache.spark.sql.types.DataType.fromJson(new String(
-          java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-          .fieldNames
-      }.map(_.toLowerCase).toSet
-  }
+    * table (KB driver-side read of the recordings) — [[addColumns]]'s
+    * re-add guard input. */
+  private def everRecordedNames(ledgerDir: String): Set[String] =
+    allRecordedSchemas(ledgerDir).flatMap(_.fieldNames)
+      .map(_.toLowerCase).toSet
 
   /** MANIFEST-ONLY COUNT(*) — the metadata-aggregate every table format
     * serves without touching data (Iceberg answers `count(*)` from
@@ -3233,15 +3143,8 @@ object Lake {
     val statsKey: String => org.apache.spark.sql.Column =
       if (renames.isEmpty) c => lit(c)
       else {
-        val re = """schema-(\d+)\.json""".r
-        val versions: Seq[Long] =
-          Option(schemaDirF(ledgerDir).listFiles()).getOrElse(Array.empty)
-            .flatMap(_.getName match {
-              case re(v) if v.toLong <= s => Some(v.toLong)
-              case _ => None
-            }).sorted.toSeq
-        val epochSchemas = versions.map(v =>
-          v -> recordedSchemaAt(ledgerDir, v).get)
+        val epochSchemas = TableMeta.Schemas.list(ledgerDir, s)
+          .map { case (v, json) => v -> parseSchema(json) }
         c => {
           val f = schema.find(_.name == c).get
           fieldId(f) match {
@@ -3312,7 +3215,7 @@ object Lake {
           "manifest refused a fully-stats'd lifecycle — carry broke"))
         .localCheckpoint()
     }
-    deleteRecursively(new java.io.File(tmp))
+    MirrorLoop.rmrf(new java.io.File(tmp))
     out
   }
 
@@ -3676,13 +3579,8 @@ object Lake {
           col("c_acctbal").cast("double").as("acctbal"))
         .localCheckpoint() // eager: materialize before the files vanish
     }
-    deleteRecursively(new java.io.File(tmp))
+    MirrorLoop.rmrf(new java.io.File(tmp))
     out
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
-    f.delete()
   }
 
   /** Oracle-checked WRITE-AUDIT-PUBLISH round-trip: build a lake from
@@ -3726,7 +3624,7 @@ object Lake {
         col("c_acctbal").cast("double").as("acctbal"))
       .localCheckpoint() // eager: materialize before the files vanish
     }
-    deleteRecursively(new java.io.File(tmp))
+    MirrorLoop.rmrf(new java.io.File(tmp))
     out
   }
 
@@ -3764,7 +3662,7 @@ object Lake {
       .select(col("c_custkey"), col("c_name"),
         col("c_acctbal").cast("double").as("acctbal"))
       .localCheckpoint() // eager: materialize before the files vanish
-    deleteRecursively(new java.io.File(tmp))
+    MirrorLoop.rmrf(new java.io.File(tmp))
     out
   }
 
@@ -3808,7 +3706,7 @@ object Lake {
       .select(col("c_custkey"), col("c_name"),
         col("c_acctbal").cast("double").as("acctbal"))
       .localCheckpoint() // eager: materialize before the files vanish
-    deleteRecursively(new java.io.File(tmp))
+    MirrorLoop.rmrf(new java.io.File(tmp))
     out
   }
 
@@ -3925,7 +3823,7 @@ object Lake {
         .select(col("c_custkey"), col("change"))
         .localCheckpoint() // eager: materialize before the files vanish
     }
-    deleteRecursively(new java.io.File(tmp))
+    MirrorLoop.rmrf(new java.io.File(tmp))
     out
   }
 
@@ -4004,7 +3902,7 @@ object Lake {
           col("c_acctbal").cast("double").as("acctbal"))
         .localCheckpoint() // eager: materialize before the files vanish
     }
-    deleteRecursively(new java.io.File(tmp))
+    MirrorLoop.rmrf(new java.io.File(tmp))
     out
   }
 
@@ -4253,32 +4151,27 @@ object Lake {
     * version" analog: a durable human-readable pointer ("v1-training-set",
     * "pre-backfill") into the time-travel history, so downstream jobs pin
     * datasets by NAME instead of copying snapshot ids around. Pure
-    * metadata (one KB file under the underscore-hidden `_tags/`, invisible
-    * to every reader like `_commits`); re-tagging an existing name moves
+    * metadata ([[TableMeta.Tags]]), invisible to every reader like
+    * `_commits`; re-tagging an existing name moves
     * it (last write wins — the mutable-branch-head behavior; delete +
     * re-tag for immutable discipline). Rejects ids above the current
-    * snapshot (a tag must point at history that exists). */
+    * snapshot (a tag must point at history that exists), and dot-leading
+    * names (side-file listings hide them — such a tag would vanish from
+    * [[tags]]). */
   def tagSnapshot(spark: SparkSession, ledgerDir: String, name: String,
       snapshot: Long): Unit = {
-    require(name.nonEmpty && !name.contains("/") && !name.contains(".."),
+    require(name.nonEmpty && !name.contains("/") && !name.contains("..") &&
+      !name.startsWith("."),
       s"invalid tag name: $name")
     val cur = currentSnapshot(spark, ledgerDir)
     require(snapshot >= 1 && snapshot <= cur,
       s"tag $name -> $snapshot outside committed history [1, $cur]")
-    val dir = new java.io.File(s"$ledgerDir/_tags")
-    dir.mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$ledgerDir/_tags/$name"),
-      snapshot.toString.getBytes("UTF-8"))
+    TableMeta.Tags.put(ledgerDir, name, snapshot.toString)
   }
 
   /** Resolve a tag to its snapshot id (None if absent). */
-  def tagged(ledgerDir: String, name: String): Option[Long] = {
-    val f = new java.io.File(s"$ledgerDir/_tags/$name")
-    if (!f.isFile) None
-    else Some(new String(java.nio.file.Files.readAllBytes(f.toPath),
-      "UTF-8").trim.toLong)
-  }
+  def tagged(ledgerDir: String, name: String): Option[Long] =
+    TableMeta.Tags.get(ledgerDir, name).map(_.trim.toLong)
 
   /** Read the table AT a tag (time travel by name). */
   def readTag(spark: SparkSession, ledgerDir: String, name: String): DataFrame =
@@ -4287,17 +4180,12 @@ object Lake {
         throw new IllegalArgumentException(s"no such tag: $name")))
 
   /** All tags as (tag, snapshot_id) — KB-scale metadata listing. */
-  def tags(spark: SparkSession, ledgerDir: String): Seq[(String, Long)] = {
-    val dir = new java.io.File(s"$ledgerDir/_tags")
-    if (!dir.isDirectory) Seq.empty
-    else dir.listFiles().filter(_.isFile).toSeq
-      .map(f => f.getName -> tagged(ledgerDir, f.getName).get)
-      .sortBy(_._1)
-  }
+  def tags(spark: SparkSession, ledgerDir: String): Seq[(String, Long)] =
+    TableMeta.Tags.list(ledgerDir).map { case (n, s) => n -> s.trim.toLong }
 
   /** Drop a tag (idempotent). */
   def deleteTag(ledgerDir: String, name: String): Boolean =
-    new java.io.File(s"$ledgerDir/_tags/$name").delete()
+    TableMeta.Tags.delete(ledgerDir, name)
 
   // ===== CHECK CONSTRAINTS =====
 
@@ -4315,8 +4203,8 @@ object Lake {
     * [[Expectations]] on purpose: expectations are per-append SOFT gates
     * (quarantine/drop) the caller chooses each time; constraints are the
     * TABLE's standing hard contract, enforced on every writer without
-    * the caller remembering. KB metadata under the underscore-hidden
-    * `_constraints/`; enforcement is ONE aggregate pass over the rows
+    * the caller remembering. KB metadata ([[TableMeta.Constraints]]);
+    * enforcement is ONE aggregate pass over the rows
     * being written (blast-radius cost, never table-scaled). Adding a
     * constraint the CURRENT data already violates is refused (the Delta
     * semantics) — the contract must hold before it binds. */
@@ -4332,16 +4220,12 @@ object Lake {
         .filter(!coalesce(expr(expression), lit(false))).count()
       if (bad > 0) throw ConstraintViolationException(name, expression, bad)
     }
-    val dir = new java.io.File(s"$ledgerDir/_constraints")
-    dir.mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$ledgerDir/_constraints/$name"),
-      expression.getBytes("UTF-8"))
+    TableMeta.Constraints.put(ledgerDir, name, expression)
   }
 
   /** Register a GENERATED ALWAYS AS column (Delta's generated-column
     * contract, the enforce-don't-trust half): the expression records as
-    * KB metadata under `_generated/` AND an auto-constraint
+    * KB metadata ([[TableMeta.Generated]]) AND an auto-constraint
     * `gen_<col> CHECK (col <=> (expr))` binds, so EVERY write path
     * (INSERT, MERGE, UPDATE post-images, ingest) proves the rule through
     * the existing constraint gate with zero new enforcement code. The
@@ -4361,11 +4245,7 @@ object Lake {
     require(colName.matches("[A-Za-z][A-Za-z0-9_]*"),
       s"invalid generated-column name: $colName")
     org.apache.spark.sql.GraftShim.parseExpression(spark, expression)
-    val dir = new java.io.File(s"$ledgerDir/_generated")
-    dir.mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$ledgerDir/_generated/$colName"),
-      expression.getBytes("UTF-8"))
+    TableMeta.Generated.put(ledgerDir, colName, expression)
     addConstraint(spark, ledgerDir, s"gen_$colName",
       s"$colName <=> ($expression)")
   }
@@ -4374,8 +4254,8 @@ object Lake {
     * CONSTANT expression (no column references — checked here) that the
     * column-list INSERT path fills for omitted columns instead of null.
     * Fill-only — no constraint binds (a caller may still write any
-    * value), matching the SQL standard. KB metadata under
-    * `_defaults/`. */
+    * value), matching the SQL standard. KB metadata
+    * ([[TableMeta.Defaults]]). */
   def addColumnDefault(spark: SparkSession, ledgerDir: String,
       colName: String, expression: String): Unit = {
     require(colName.matches("[A-Za-z][A-Za-z0-9_]*"),
@@ -4388,11 +4268,7 @@ object Lake {
     require(refs.isEmpty, s"DEFAULT for '$colName' references column(s) " +
       s"${refs.map(_.name).mkString(", ")} — defaults must be constant " +
       "expressions (use GENERATED ALWAYS AS for computed columns)")
-    val dir = new java.io.File(s"$ledgerDir/_defaults")
-    dir.mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$ledgerDir/_defaults/$colName"),
-      expression.getBytes("UTF-8"))
+    TableMeta.Defaults.put(ledgerDir, colName, expression)
   }
 
   /** Register an IDENTITY column (the Delta `GENERATED ALWAYS AS
@@ -4402,8 +4278,8 @@ object Lake {
     * Delta semantics; the allocator is hwm + step·(1 + per-partition
     * monotonic id), one pass, no shuffle, no global ordering). ALWAYS
     * means ALWAYS: explicit writes refuse (INSERT listing the column,
-    * positional full-arity INSERT, UPDATE SET). KB metadata under
-    * `_identity/<col>`: `start step hwm`, hwm = highest RESERVED
+    * positional full-arity INSERT, UPDATE SET). KB metadata
+    * ([[TableMeta.Identity]]): `start step hwm`, hwm = highest RESERVED
     * (rewritten atomically BEFORE the allocating append commits — a
     * crash between reserve and append wastes the reserved range, which
     * the gaps-allowed contract permits; the reverse order could
@@ -4414,26 +4290,17 @@ object Lake {
       s"invalid identity-column name: $colName")
     require(step >= 1L,
       s"IDENTITY INCREMENT BY must be >= 1 (got $step)")
-    val dir = new java.io.File(s"$ledgerDir/_identity")
-    dir.mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$ledgerDir/_identity/$colName"),
-      s"$start $step ${start - step}".getBytes("UTF-8")): Unit
+    TableMeta.Identity.put(ledgerDir, colName, s"$start $step ${start - step}")
+  }
+
+  private def identityState(text: String): (Long, Long, Long) = {
+    val parts = text.trim.split("\\s+")
+    (parts(0).toLong, parts(1).toLong, parts(2).toLong)
   }
 
   /** The table's identity columns as (column, (start, step, hwm)). */
-  def identityColumns(ledgerDir: String): Seq[(String, (Long, Long, Long))] = {
-    val dir = new java.io.File(s"$ledgerDir/_identity")
-    if (!dir.isDirectory) Seq.empty
-    else Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && !f.getName.startsWith(".")) // skip tmp
-      .map { f =>
-        val parts = new String(java.nio.file.Files.readAllBytes(f.toPath),
-          "UTF-8").trim.split("\\s+")
-        f.getName -> ((parts(0).toLong, parts(1).toLong, parts(2).toLong))
-      }
-      .sortBy(_._1).toSeq
-  }
+  def identityColumns(ledgerDir: String): Seq[(String, (Long, Long, Long))] =
+    TableMeta.Identity.list(ledgerDir).map { case (c, t) => c -> identityState(t) }
 
   /** The per-table in-process allocator monitor (keyed by normalized
     * ledger path so the SQL insert path and publish's fast-forward
@@ -4458,53 +4325,27 @@ object Lake {
     * writer land last — the atomic move alone doesn't order them). */
   def bumpIdentityHwm(ledgerDir: String, colName: String,
       newHwm: Long): Unit = identityMonitor(ledgerDir).synchronized {
-    val f = java.nio.file.Paths.get(s"$ledgerDir/_identity/$colName")
-    val parts = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      .trim.split("\\s+")
-    if (newHwm > parts(2).toLong) {
-      val tmp = java.nio.file.Files.createTempFile(
-        f.getParent, ".id", ".tmp")
-      java.nio.file.Files.write(tmp,
-        s"${parts(0)} ${parts(1)} $newHwm".getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp, f,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-    }
+    val (start, step, hwm) =
+      identityState(TableMeta.Identity.get(ledgerDir, colName).get)
+    if (newHwm > hwm)
+      TableMeta.Identity.put(ledgerDir, colName, s"$start $step $newHwm")
   }
 
   /** The table's column defaults as (column, expression). */
-  def columnDefaults(ledgerDir: String): Seq[(String, String)] = {
-    val dir = new java.io.File(s"$ledgerDir/_defaults")
-    if (!dir.isDirectory) Seq.empty
-    else Option(dir.listFiles()).getOrElse(Array.empty).filter(_.isFile)
-      .map(f => f.getName -> new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-      .sortBy(_._1).toSeq
-  }
+  def columnDefaults(ledgerDir: String): Seq[(String, String)] =
+    TableMeta.Defaults.list(ledgerDir)
 
   /** The table's generated columns as (column, expression). */
-  def generatedColumns(ledgerDir: String): Seq[(String, String)] = {
-    val dir = new java.io.File(s"$ledgerDir/_generated")
-    if (!dir.isDirectory) Seq.empty
-    else Option(dir.listFiles()).getOrElse(Array.empty).filter(_.isFile)
-      .map(f => f.getName -> new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-      .sortBy(_._1).toSeq
-  }
+  def generatedColumns(ledgerDir: String): Seq[(String, String)] =
+    TableMeta.Generated.list(ledgerDir)
 
   /** The table's standing constraints as (name, expression). */
-  def constraints(ledgerDir: String): Seq[(String, String)] = {
-    val dir = new java.io.File(s"$ledgerDir/_constraints")
-    if (!dir.isDirectory) Seq.empty
-    else Option(dir.listFiles()).getOrElse(Array.empty).filter(_.isFile)
-      .map(f => f.getName -> new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-      .sortBy(_._1).toSeq
-  }
+  def constraints(ledgerDir: String): Seq[(String, String)] =
+    TableMeta.Constraints.list(ledgerDir)
 
   /** Drop a constraint (idempotent). */
   def dropConstraint(ledgerDir: String, name: String): Boolean =
-    new java.io.File(s"$ledgerDir/_constraints/$name").delete()
+    TableMeta.Constraints.delete(ledgerDir, name)
 
   /** ONE aggregate pass checking every standing constraint over the rows
     * about to land; throws on the first (alphabetically) violated one.
@@ -4535,8 +4376,36 @@ object Lake {
       s"cannot publish $branchDir: $mainDir is at snapshot $mainHead, " +
         s"branch forked at $forkSnapshot — re-branch and replay")
 
-  private def branchMeta(branchDir: String) =
-    new java.io.File(branchDir, "_branch.json")
+  /** The side-file kinds that are part of the TABLE, not of main's
+    * directory, which a branch therefore forks (snapshot-keyed logs only
+    * up to the fork): the standing CHECK constraints (a branch that
+    * dropped them could stage — and publish — rows the contract forbids;
+    * the WAP write phase must face exactly main's gates); the schema
+    * recordings and the evolution marker (a branch read must resolve the
+    * same schema main would); the rename and widening logs (a branch
+    * missing them would read pre-rename files through the wrong physical
+    * names); generated-column expressions and column defaults (missing
+    * ones would lose the fills, and the copied gen_ constraints would
+    * then refuse writes the source accepts); and the identity allocators.
+    * Tags are refs into main's history, not table metadata: they stay. */
+  private val BranchedMeta: Seq[TableMeta.Kind] = {
+    import TableMeta._
+    Seq(Constraints, Schemas, Renames, Widens, Generated, Defaults, Identity,
+      Evolved)
+  }
+
+  /** The kinds [[publish]] fast-forwards onto main, each only for the
+    * published snapshots: schema recordings, the rename log (a published
+    * rename row must never be live without its log entry), the identity
+    * high-water marks, the widening log (without it main would
+    * fast-path-scan pre-widen files under the published WIDE recorded
+    * schema — a physical type mismatch, not a silent null-fill) and the
+    * evolution marker. Branch-side constraints, generated columns and
+    * defaults do not publish. */
+  private val PublishedMeta: Seq[TableMeta.Kind] = {
+    import TableMeta._
+    Seq(Schemas, Renames, Identity, Widens, Evolved)
+  }
 
   /** BRANCH the table: a ZERO-COPY fork of `ledgerDir` at its current
     * snapshot into `branchDir` — the Iceberg-refs / Delta-shallow-clone
@@ -4547,8 +4416,8 @@ object Lake {
     * merges, deletes, MOR vectors and restores all work on it through the
     * same code paths, and its writes land in its OWN ledger — invisible
     * to every reader of main until [[publish]]. Lineage (source dir +
-    * fork snapshot) rides in an underscore-hidden `_branch.json` the
-    * parquet reader ignores.
+    * fork snapshot) rides in [[TableMeta.Lineage]], which the parquet
+    * reader ignores.
     *
     * Contracts: never `expireSnapshots` a branch (its pre-fork history
     * references files OWNED by main — a branch vacuum would delete them
@@ -4582,75 +4451,16 @@ object Lake {
     // must not ride into the branch (the fork would be torn)
     appendLedgerFile(spark, branchDir, readLedger(spark, ledgerDir).get
       .filter(col("snapshot_id") <= fork)): Unit
-    // the table's standing CHECK constraints are part of the TABLE, not
-    // of main's directory: a branch that dropped them could stage — and
-    // publish — rows the contract forbids (the WAP write phase must face
-    // exactly main's gates)
-    constraints(ledgerDir).foreach { case (n, e) =>
-      val d = new java.io.File(s"$branchDir/_constraints")
-      d.mkdirs()
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$branchDir/_constraints/$n"),
-        e.getBytes("UTF-8"))
-    }
-    // schema recordings up to the fork (and the evolution marker) are
-    // part of the TABLE, like constraints — a branch read must resolve
-    // the same schema main would
-    val schemaRe = """schema-(\d+)\.json""".r
-    Option(schemaDirF(ledgerDir).listFiles()).getOrElse(Array.empty)
-      .foreach(f => f.getName match {
-        case schemaRe(sid) if sid.toLong <= fork =>
-          schemaDirF(branchDir).mkdirs()
-          java.nio.file.Files.copy(f.toPath, java.nio.file.Paths.get(
-            s"$branchDir/_schema/${f.getName}")): Unit
-        case _ => ()
-      })
-    // the rename log, generated-column expressions, and column defaults
-    // are part of the TABLE like constraints (r15): a branch missing the
-    // rename log would read pre-rename files through the wrong physical
-    // names; missing generated/default metadata would lose the fills
-    // (the copied gen_ constraints would then refuse writes the source
-    // accepts)
-    val renRe = """rename-(\d+)\.json""".r
-    Option(renamesDirF(ledgerDir).listFiles()).getOrElse(Array.empty)
-      .foreach(f => f.getName match {
-        case renRe(sid) if sid.toLong <= fork =>
-          renamesDirF(branchDir).mkdirs()
-          java.nio.file.Files.copy(f.toPath, java.nio.file.Paths.get(
-            s"$branchDir/_renames/${f.getName}")): Unit
-        case _ => ()
-      })
-    val widRe = """widen-(\d+)\.json""".r
-    Option(widenDirF(ledgerDir).listFiles()).getOrElse(Array.empty)
-      .foreach(f => f.getName match {
-        case widRe(sid) if sid.toLong <= fork =>
-          widenDirF(branchDir).mkdirs()
-          java.nio.file.Files.copy(f.toPath, java.nio.file.Paths.get(
-            s"$branchDir/_widen/${f.getName}")): Unit
-        case _ => ()
-      })
-    Seq("_generated", "_defaults", "_identity").foreach { sub =>
-      Option(new java.io.File(s"$ledgerDir/$sub").listFiles())
-        .getOrElse(Array.empty).filter(_.isFile).foreach { f =>
-          new java.io.File(s"$branchDir/$sub").mkdirs()
-          java.nio.file.Files.copy(f.toPath, java.nio.file.Paths.get(
-            s"$branchDir/$sub/${f.getName}")): Unit
-        }
-    }
-    if (isEvolved(ledgerDir))
-      new java.io.File(s"$branchDir/_evolved").createNewFile()
-    java.nio.file.Files.write(branchMeta(branchDir).toPath,
-      s"""{"source": "$ledgerDir", "fork_snapshot": $fork}"""
-        .getBytes("UTF-8"))
+    BranchedMeta.foreach(_.copy(ledgerDir, branchDir, 0L, fork))
+    TableMeta.Lineage.put(branchDir,
+      s"""{"source": "$ledgerDir", "fork_snapshot": $fork}""")
     fork
   }
 
   /** Branch lineage: (source ledger dir, fork snapshot), None when
     * `branchDir` is not a branch. */
   def branchInfo(branchDir: String): Option[(String, Long)] = {
-    val f = branchMeta(branchDir)
-    if (!f.isFile) return None
-    val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    val txt = TableMeta.Lineage.get(branchDir).getOrElse(return None)
     val src = """"source"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(txt)
       .map(_.group(1))
     val fork = """"fork_snapshot"\s*:\s*(\d+)""".r.findFirstMatchIn(txt)
@@ -4675,7 +4485,7 @@ object Lake {
     * branch has no post-fork writes). */
   def publish(spark: SparkSession, branchDir: String): Seq[Long] = {
     val (mainDir, fork) = branchInfo(branchDir).getOrElse(
-      sys.error(s"$branchDir is not a branch (no _branch.json)"))
+      sys.error(s"$branchDir is not a branch (no lineage file)"))
     val branchHead = currentSnapshot(spark, branchDir)
     if (branchHead <= fork) return Seq.empty
     val mainHead = currentSnapshot(spark, mainDir)
@@ -4692,104 +4502,36 @@ object Lake {
           catch { case _: Throwable => () })
         throw e
     }
-    // schema evolutions staged on the branch publish with their
-    // snapshots (KB metadata, same fast-forward semantics as the rows) —
-    // copied BEFORE the rows land (the mergeInto ordering: evolved rows
-    // must never be live without their recording; a crash after the copy
-    // leaves recordings for unlanded ids, swept by the next commit)
-    val schemaRe = """schema-(\d+)\.json""".r
-    Option(schemaDirF(branchDir).listFiles()).getOrElse(Array.empty)
-      .foreach(f => f.getName match {
-        case schemaRe(sid) if sid.toLong > fork && sid.toLong <= branchHead =>
-          schemaDirF(mainDir).mkdirs()
-          java.nio.file.Files.copy(f.toPath, java.nio.file.Paths.get(
-            s"$mainDir/_schema/${f.getName}"),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-        case _ => ()
-      })
-    // renames staged on the branch fast-forward with their snapshots
-    // (KB metadata; the schema-recording ordering above — a published
-    // rename row must never be live without its log entry)
-    val renRe = """rename-(\d+)\.json""".r
-    val publishedRenames =
-      Option(renamesDirF(branchDir).listFiles()).getOrElse(Array.empty)
-        .filter(_.getName match {
-          case renRe(sid) => sid.toLong > fork && sid.toLong <= branchHead
-          case _ => false
-        })
-    if (publishedRenames.nonEmpty) {
-      // the branch's renameColumn RETROFITTED field ids into the
-      // PRE-fork recordings on the branch's own copy; main's pre-fork
-      // recordings (sid <= fork) were never touched. Landing the rename
-      // log against id-less epoch recordings makes renameEpochScan's
-      // byId map empty → every pre-fork file would silently null-fill.
-      // The branch's pre-fork recordings are main's + exact by-name ids
-      // (names are immutable below the first rename), so copying them
-      // over id-less/missing main copies is a faithful retrofit.
-      val schRe = """schema-(\d+)\.json""".r
-      Option(schemaDirF(branchDir).listFiles()).getOrElse(Array.empty)
-        .foreach(f => f.getName match {
-          case schRe(sid) if sid.toLong <= fork =>
-            val mainF = java.nio.file.Paths.get(
-              s"$mainDir/_schema/${f.getName}")
-            val needsSync = !java.nio.file.Files.exists(mainF) || {
-              val sch = org.apache.spark.sql.types.DataType.fromJson(
-                new String(java.nio.file.Files.readAllBytes(mainF), "UTF-8"))
-                .asInstanceOf[org.apache.spark.sql.types.StructType]
-              sch.fields.exists(fieldId(_).isEmpty)
-            }
-            if (needsSync) {
-              schemaDirF(mainDir).mkdirs()
-              val tmp = java.nio.file.Files.createTempFile(
-                mainF.getParent, ".retrofit", ".tmp")
-              java.nio.file.Files.copy(f.toPath, tmp,
-                java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-              java.nio.file.Files.move(tmp, mainF,
-                java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-                java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-            }
-          case _ => ()
-        })
-    }
-    publishedRenames.foreach { f =>
-      renamesDirF(mainDir).mkdirs()
-      java.nio.file.Files.copy(f.toPath, java.nio.file.Paths.get(
-        s"$mainDir/_renames/${f.getName}"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-    }
-    // identity high-water marks fast-forward: rows allocated ON the
-    // branch become main's rows at publish — main must never
-    // re-allocate at or below them (duplicate ids)
-    Option(new java.io.File(s"$branchDir/_identity").listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isFile && !f.getName.startsWith("."))
-      .foreach { f =>
-        val mainF = new java.io.File(s"$mainDir/_identity/${f.getName}")
-        if (!mainF.isFile) {
-          new java.io.File(s"$mainDir/_identity").mkdirs()
-          java.nio.file.Files.copy(f.toPath, mainF.toPath): Unit
-        } else {
-          val parts = new String(
-            java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-            .trim.split("\\s+")
-          bumpIdentityHwm(mainDir, f.getName, parts(2).toLong)
-        }
+    // the branch's renameColumn RETROFITTED field ids into the PRE-fork
+    // recordings on the branch's own copy; main's pre-fork recordings
+    // (sid <= fork) were never touched. Landing the rename log against
+    // id-less epoch recordings makes renameEpochScan's byId map empty →
+    // every pre-fork file would silently null-fill. The branch's
+    // pre-fork recordings are main's + exact by-name ids (names are
+    // immutable below the first rename), so copying them over
+    // id-less/missing main copies is a faithful retrofit.
+    if (TableMeta.Renames.snapshots(branchDir, branchHead).exists(_ > fork))
+      TableMeta.Schemas.list(branchDir, fork).foreach { case (s, json) =>
+        if (TableMeta.Schemas.get(mainDir, s).forall(m =>
+            parseSchema(m).fields.exists(fieldId(_).isEmpty)))
+          TableMeta.Schemas.put(mainDir, s, json)
       }
-    // widening log entries fast-forward like renames (without them main
-    // would fast-path-scan pre-widen files under the published WIDE
-    // recorded schema — a physical type mismatch, not a silent null-fill)
-    val widRe = """widen-(\d+)\.json""".r
-    Option(widenDirF(branchDir).listFiles()).getOrElse(Array.empty)
-      .foreach(f => f.getName match {
-        case widRe(sid) if sid.toLong > fork && sid.toLong <= branchHead =>
-          widenDirF(mainDir).mkdirs()
-          java.nio.file.Files.copy(f.toPath, java.nio.file.Paths.get(
-            s"$mainDir/_widen/${f.getName}"),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-        case _ => ()
-      })
-    if (new java.io.File(s"$branchDir/_evolved").exists())
-      new java.io.File(s"$mainDir/_evolved").createNewFile(): Unit
+    // the published snapshots' metadata lands BEFORE their rows (the
+    // mergeInto ordering: evolved rows must never be live without their
+    // recording; a crash after the copy leaves entries for unlanded ids,
+    // swept by the next commit)
+    PublishedMeta.foreach {
+      case TableMeta.Identity =>
+        // hwms fast-forward: rows allocated ON the branch become main's
+        // rows at publish — main must never re-allocate at or below them
+        // (duplicate ids)
+        TableMeta.Identity.list(branchDir).foreach { case (c, text) =>
+          if (TableMeta.Identity.get(mainDir, c).isEmpty)
+            TableMeta.Identity.put(mainDir, c, text)
+          else bumpIdentityHwm(mainDir, c, identityState(text)._3)
+        }
+      case kind => kind.copy(branchDir, mainDir, fork, branchHead)
+    }
     try appendLedgerFile(spark, mainDir, readLedger(spark, branchDir).get
       .filter(col("snapshot_id") > fork && col("snapshot_id") <= branchHead)): Unit
     catch {
@@ -4803,15 +4545,15 @@ object Lake {
   }
 
   /** Drop a branch that will NOT be published (the failed-audit exit).
-    * Refuses anything without a `_branch.json` — this deletes a
+    * Refuses anything without branch lineage — this deletes a
     * directory tree and must never point at a real table. Deleting the
     * branch deletes only ITS ledger copy; the shared pre-fork data files
     * belong to main and are untouched (gen files the branch wrote under
     * its own work dir die with it when they are inside `branchDir`). */
   def abandonBranch(branchDir: String): Unit = {
-    require(branchMeta(branchDir).isFile,
+    require(TableMeta.Lineage.exists(branchDir),
       s"$branchDir is not a branch — refusing to delete")
-    deleteRecursively(new java.io.File(branchDir))
+    MirrorLoop.rmrf(new java.io.File(branchDir))
   }
 
   /** WRITE-AUDIT-PUBLISH composed: fork main into `wapDir/ledger`, run
@@ -4832,7 +4574,7 @@ object Lake {
     write(bl, s"$wapDir/gen")
     val ok = audit(readAt(spark, bl, currentSnapshot(spark, bl)))
     if (ok) Some(publish(spark, bl))
-    else { abandonBranch(bl); deleteRecursively(new java.io.File(wapDir)); None }
+    else { abandonBranch(bl); MirrorLoop.rmrf(new java.io.File(wapDir)); None }
   }
 
   def history(spark: SparkSession, ledgerDir: String): DataFrame = {

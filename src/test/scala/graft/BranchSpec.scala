@@ -204,4 +204,24 @@ class BranchSpec extends GraftSpec {
     intercept[IllegalArgumentException] { Lake.abandonBranch(ledger) }
     assert(new java.io.File(ledger).isDirectory)
   }
+
+  test("tags are refs, not table metadata: a branch of a tagged table " +
+      "has no _tags, and main's tag survives publish") {
+    val (landing, ledger, gen) = fresh()
+    val s1 = land(landing, ledger)
+    Lake.tagSnapshot(spark, ledger, "v1", s1)
+    val branchDir = ledger.replace("/ledger", "/branch")
+    Lake.branch(spark, ledger, branchDir)
+    assert(!new java.io.File(s"$branchDir/_tags").exists(),
+      "the branch copied main's tags")
+    assert(Lake.tags(spark, branchDir).isEmpty)
+    Lake.mergeInto(spark, branchDir, gen + "_br",
+      spark.read.parquet(s"$sf/customer.parquet").limit(10)
+        .withColumn("c_acctbal", lit(0.5)), "c_custkey")
+    Lake.tagSnapshot(spark, branchDir, "staged",
+      Lake.currentSnapshot(spark, branchDir))
+    assert(Lake.publish(spark, branchDir).nonEmpty)
+    assert(Lake.tags(spark, ledger) == Seq("v1" -> s1),
+      "publish moved, dropped or added a tag on main")
+  }
 }

@@ -112,6 +112,8 @@ class HistorySpec extends GraftSpec {
     intercept[IllegalArgumentException] { tbl.readTag("v1-training-set") }
     intercept[IllegalArgumentException] { tbl.tag("nope", 99L) }
     intercept[IllegalArgumentException] { tbl.tag("../escape") }
+    intercept[IllegalArgumentException] { tbl.tag(".") }
+    intercept[IllegalArgumentException] { tbl.tag(".x") }
     // the _tags sidecar never perturbs ledger reads
     assert(Lake.currentSnapshot(spark, ledger) == 2L)
   }
