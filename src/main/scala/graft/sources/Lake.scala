@@ -1067,7 +1067,6 @@ object Lake {
     removeActions(spark, Seq(TableMeta.Schemas.relPath(snapshot)))
       .withColumn("op", lit("schema"))
       .withColumn("snapshot_op", lit(snapshotOp))
-      .withColumn("stats", lit(null).cast(StatsType))
 
   // ------------------------------------ RENAME COLUMN (r15)
 
@@ -1497,12 +1496,8 @@ object Lake {
     (statsCols, bloomCols)
   }
 
-  /** Join freshly-computed per-file stats for `dir` onto its add rows,
+  /** Join freshly-computed per-file stats for `dirs` onto their add rows,
     * per the table's contract; a contract-less table passes through. */
-  private def addsWithStats(spark: SparkSession, adds: DataFrame,
-      dir: String, statsCols: Seq[String], bloomCols: Seq[String]): DataFrame =
-    addsWithStatsPaths(spark, adds, Seq(dir), statsCols, bloomCols)
-
   private def addsWithStatsPaths(spark: SparkSession, adds: DataFrame,
       dirs: Seq[String], statsCols: Seq[String],
       bloomCols: Seq[String]): DataFrame =
@@ -1563,9 +1558,9 @@ object Lake {
         .otherwise(lit(null).cast(StatsType)))
   }
 
-  /** Multi-dir [[fileAdds]] — driver-written dirs serve their recorded
-    * (path, size, adler32) rows as a LocalRelation (no job); the rest
-    * share one binaryFile scan. */
+  /** The (path, size, adler32) rows of every parquet file under `dirs` —
+    * driver-written dirs serve their recorded rows as a LocalRelation (no
+    * job); the rest share one binaryFile scan. */
   private def fileAddsPaths(spark: SparkSession, dirs: Seq[String]): DataFrame = {
     val claimed: Map[String, Seq[(String, Long, Long)]] = dirs.flatMap { d =>
       Option(driverWrittenDirs.remove(
@@ -1591,21 +1586,12 @@ object Lake {
           "path string, size bigint, adler32 bigint")))
   }
 
-  /** The file-action rows for every parquet file under `dir` (the
-    * [[fileAddsPaths]] single-dir form — memo-served for driver-written
-    * dirs, a distributed size+adler32 scan otherwise). */
-  private def fileAdds(spark: SparkSession, dir: String): DataFrame =
-    fileAddsPaths(spark, Seq(dir))
-
   /** Null-fill a missing stats column so every writer emits the full
     * canonical ledger schema. */
   private def withLedgerStats(df: DataFrame): DataFrame =
     if (df.columns.contains("stats")) df
     else df.withColumn("stats", lit(null).cast(StatsType))
 
-  /** Append one ledger snapshot made of `adds` (path,size,adler32 + op col
-    * already set) tagged per-row with `snapshotOp`, plus removes for
-    * `removedPaths`. */
   /** Another writer reserved (or already landed) the snapshot id this
     * commit computed from the table state it read — the read-modify-write
     * is stale. Re-running the WHOLE operation against the new current
@@ -1730,12 +1716,6 @@ object Lake {
     else commitStore.delete(s"$ledgerDir/_commits", snapshot.toString)
   }
 
-  /** `preReserved`: operations that write data files NAMED by the snapshot
-    * (merge/delete gen dirs, compaction generations) reserve the id BEFORE
-    * those writes — a loser must collide before it can overwrite the
-    * winner's just-committed live files — and must not re-reserve here.
-    * Purely-relational commits (restore, restat, ingest) reserve late,
-    * after their compute, to shrink the crash window. */
   /** Sweep schema recordings no landed snapshot can own: recordings are
     * written BEFORE their snapshot's ledger rows (a crash must never
     * land evolved files without their recording), so a crashed writer
@@ -1803,11 +1783,8 @@ object Lake {
     * fixed cost per dir, and a DML commit writes 2-3 dirs — while the
     * rows are blast-radius-bounded metadata-scale almost always. 32 MB
     * of estimated input leaves ~2 orders of magnitude of driver-heap
-    * headroom. Env-overridable for constrained drivers. */
-  private val DriverWriteMaxBytes: Long =
-    sys.env.get("SPARK_GRAFT_DRIVER_WRITE_MAX")
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
-      .getOrElse(32L << 20)
+    * headroom. */
+  private val DriverWriteMaxBytes: Long = 32L << 20
 
   /** Write a commit generation dir (carry/delta/changes/dv): driver-side
     * single file when the plan's own size estimate — the exact mechanism
@@ -1876,32 +1853,293 @@ object Lake {
   private[graft] val driverWrittenDirs =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long, Long)]]()
 
+  /** Append one ledger snapshot made of `actions` (path, size, adler32,
+    * op and snapshot_op set; stats null-filled when absent) as ONE ledger
+    * file, after sweeping the schema/rename/widen recordings no landed
+    * snapshot can own ([[sweepOrphanRecordings]]; `staged*`: this writer
+    * recorded that entry at `snapshot` itself). `preReserved`: operations
+    * that write data files NAMED by the snapshot (merge/delete gen dirs,
+    * compaction generations) reserve the id BEFORE those writes — a loser
+    * must collide before it can overwrite the winner's just-committed
+    * live files — and must not re-reserve here. Purely-relational commits
+    * (restore, restat, ingest) reserve late, after their compute, to
+    * shrink the crash window. Zero action rows land NOTHING and free the
+    * reservation (a zero-row ledger file would leave the id reserved, and
+    * on an empty table make the head unreadable); returns whether the
+    * snapshot landed. */
   private def appendSnapshot(spark: SparkSession, ledgerDir: String,
       snapshot: Long, actions: DataFrame,
       preReserved: Boolean = false, stagedSchema: Boolean = false,
-      stagedRename: Boolean = false, stagedWiden: Boolean = false): Unit = {
+      stagedRename: Boolean = false, stagedWiden: Boolean = false): Boolean = {
     sweepOrphanRecordings(ledgerDir, snapshot, stagedSchema, stagedRename,
       stagedWiden)
     val rows = withLedgerStats(actions)
       .withColumn("snapshot_id", lit(snapshot))
       .withColumn("ingested_at", current_timestamp())
       .select(LedgerCols.map(col): _*)
-    if (preReserved) appendLedgerFile(spark, ledgerDir, rows): Unit
-    else reserving(spark, ledgerDir, snapshot) {
-      appendLedgerFile(spark, ledgerDir, rows): Unit
+    def land(): Boolean = {
+      val (tmp, n) = writeLedgerTemp(spark, ledgerDir, rows)
+      if (n > 0) landLedgerTemp(ledgerDir, tmp)
+      else {
+        tmp.delete()
+        commitStore.delete(s"$ledgerDir/_commits", snapshot.toString): Unit
+      }
+      n > 0
     }
+    if (preReserved) land() else reserving(spark, ledgerDir, snapshot)(land())
   }
 
-  private def removeActions(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(paths.map(org.apache.spark.sql.Row(_)),
-          1),
-        StructType(Seq(StructField("path", StringType))))
+  /** Remove rows for the files of `acts` (any frame with a `path`
+    * column, ledger-form paths), tagged `snapshotOp`. */
+  private def removeRows(acts: DataFrame, snapshotOp: String): DataFrame =
+    acts.select(col("path"))
       .withColumn("size", lit(null).cast("long"))
       .withColumn("adler32", lit(null).cast("long"))
       .withColumn("op", lit("remove"))
-      .withColumn("snapshot_op", lit("merge"))
+      .withColumn("snapshot_op", lit(snapshotOp))
+      .withColumn("stats", lit(null).cast(StatsType))
+
+  private def removeActions(spark: SparkSession, paths: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    removeRows(spark.createDataFrame(
+        spark.sparkContext.parallelize(paths.map(org.apache.spark.sql.Row(_)),
+          1),
+        StructType(Seq(StructField("path", StringType)))), "merge")
+  }
+
+  // ------------------------------------------ row-level commit skeleton
+
+  /** Writes one output of a row-level commit: `(leaf, rows)` lands `rows`
+    * at `gen-N/<leaf>` — `carry` (surviving rows of rewritten files),
+    * `delta` (new and changed rows), `changes` (change-feed rows) or `dv`
+    * (deletion-vector positions). */
+  private type GenWrite = (String, DataFrame) => Unit
+
+  /** The ROW-LEVEL COMMIT skeleton every DML writer runs through: COW
+    * [[mergeIntoKeys]], [[deleteWhere]], [[updateWhere]],
+    * [[overwriteWith]], [[overwriteWhere]], and the MOR
+    * [[mergeIntoMorKeys]] and deleteMorMatching. As in a Delta commit, the
+    * writer computes a set of actions and one atomic ledger record commits
+    * them; the writer keeps only its row logic, this owns the rest.
+    *  - Open: the snapshot, then (lazily — a writer that returns early
+    *    reads nothing more) its live actions checkpointed ONCE, the
+    *    `LedgerFileIndex` over them and the target scan.
+    *  - [[affectedFiles]]: one distinct collect of the live files holding
+    *    a matching row — the only driver-side file list, bounded by the
+    *    commit's blast radius, never the table's file count.
+    *  - [[affectedRows]]: a DV-applied scan of those files through a
+    *    SUB-INDEX of the live index (entries reused — no second collect
+    *    job). MOR-deleted rows never carry into a rewrite, count as
+    *    matched or surface as pre-images; the rewrite materializes the
+    *    files' vectors (its winning add postdates them, so they go inert).
+    *  - [[commit]]: reserve, write, stat, append. */
+  private final class RowCommit(spark: SparkSession, ledgerDir: String,
+      genRoot: String, genSuffix: Option[String] = None) {
+    val snap: Long = currentSnapshot(spark, ledgerDir)
+    val next: Long = snap + 1
+    /** `genSuffix` tags the generation DIRECTORY (e.g. a streaming sink's
+      * batch id) so the commit is PROBEABLE from the ledger's paths alone
+      * — the exactly-once replay marker UpsertLoop keys on. */
+    val genDir: String =
+      s"$genRoot/gen-$next" + genSuffix.map("-" + _).getOrElse("")
+    lazy val liveActs: Option[DataFrame] = readLedger(spark, ledgerDir)
+      .map(l => liveActionsAt(l, snap).localCheckpoint())
+    /** None for a table with no live file. */
+    lazy val index: Option[LedgerFileIndex] =
+      liveActs.map(new LedgerFileIndex(_)).filterNot(_.isEmpty)
+    lazy val target: Option[DataFrame] =
+      index.map(tableScan(spark, ledgerDir, _, snap))
+
+    /** Normalized paths of the live files holding a row of `scan` that
+      * `matching` keeps. */
+    def affectedFiles(scan: DataFrame)(
+        matching: DataFrame => DataFrame): Set[String] =
+      matching(scan.withColumn("_file",
+          regexp_replace(input_file_name(), "^file:/+", "/")))
+        .select(col("_file")).distinct()
+        .collect().map(_.getString(0)).toSet
+
+    /** [[affectedFiles]] under a row predicate, pushed straight at the
+      * manifest-pruned target scan: only files whose stats admit a match
+      * are read at all. */
+    def affectedWhere(cond: org.apache.spark.sql.Column): Set[String] =
+      affectedFiles(target.get)(_.filter(coalesce(cond, lit(false))))
+
+    def affectedRows(files: Set[String]): DataFrame =
+      dvApplied(index.get.subIndex(files))
+
+    /** Every live row, DV-applied (an overwrite's delete pre-images). */
+    def liveRows: DataFrame = dvApplied(index.get)
+
+    private def dvApplied(idx: LedgerFileIndex): DataFrame =
+      applyDvsAt(spark, ledgerDir, snap,
+        tableScan(spark, ledgerDir, idx, atSnapshot = snap, keepPos = true))
+
+    /** The action rows of `files` — what a rewrite removes, straight from
+      * the live-actions relation (never a re-collected path list). */
+    def actsOf(files: Set[String]): Option[DataFrame] = liveActs.map(
+      _.filter(regexp_replace(col("path"), "^file:/+", "/")
+        .isin(files.toSeq: _*)))
+
+    /** Reserve `next`, then run `write`: each output it names lands
+      * through [[writeGenDir]] (`changes` rows stamped with their
+      * `_commit_snapshot`, `dv` rows with their `dv_snap`). The adds of
+      * every written dir come from ONE [[addsTagged]] pass — carry adds
+      * snapshot_op "replace" (rows that merely moved files; incremental
+      * consumers skip them, like compaction), delta adds "merge" (what
+      * readSince surfaces, exactly once), cdc and dv rows `changeOp`
+      * (inert to every live-set reader — neither add nor remove — and
+      * never vacuumed) — and carry/delta re-stat against the table's skipping contract,
+      * read once, so pruning survives the rewrite. `removed`'s action
+      * rows land as removes tagged `removeOp`. A `staged` schema is
+      * recorded at `next` BEFORE the rows land: a crash between the
+      * append and a later recording would leave evolved files live with
+      * a pre-evolution recording, while a recording whose snapshot never
+      * lands is swept by the next append. A commit with no actions lands
+      * nothing, keeps no reservation and returns `snap`. Any failure
+      * releases the reservation ([[reserving]]). */
+    def commit(removed: Option[DataFrame] = None, removeOp: String = "merge",
+        changeOp: String = "merge",
+        staged: Option[org.apache.spark.sql.types.StructType] = None)(
+        write: GenWrite => Unit): Long = reserving(spark, ledgerDir, next) {
+      val dirOps = scala.collection.mutable.ArrayBuffer.empty[(String, String, String)]
+      write { (leaf, rows) =>
+        val (op, snapOp, stamped) = leaf match {
+          case "carry" => ("add", "replace", rows)
+          case "delta" => ("add", "merge", rows)
+          case "changes" => ("cdc", changeOp,
+            rows.withColumn("_commit_snapshot", lit(next)))
+          case "dv" => ("dv", changeOp, rows.withColumn("dv_snap", lit(next)))
+        }
+        writeGenDir(spark, stamped, s"$genDir/$leaf")
+        dirOps += ((s"$genDir/$leaf", op, snapOp))
+      }
+      // only table-shaped (add) outputs record stats (MOR writes none)
+      val (statsCols, bloomCols) = liveActs match {
+        case Some(acts) if dirOps.exists(_._2 == "add") =>
+          liveStatsContract(acts, renameLog(ledgerDir))
+        case _ => (Nil, Nil)
+      }
+      val adds = addsTagged(spark, dirOps.toSeq, statsCols, bloomCols)
+      staged.foreach(recordSchema(ledgerDir, next, _))
+      val landed = appendSnapshot(spark, ledgerDir, next,
+        removed.fold(adds)(r => adds.unionByName(removeRows(r, removeOp))),
+        preReserved = true, stagedSchema = staged.nonEmpty)
+      if (landed) next else snap
+    }
+  }
+
+  /** What a MERGE lands, prepared once for both write paths (COW
+    * [[mergeIntoKeys]], MOR [[mergeIntoMorKeys]]): the key and IDENTITY
+    * checks, the conform to the table schema, and — given the matched
+    * keys and where the matched rows' pre-images come from (the COW
+    * affected scan, the MOR matched rows) — the landing rows and the
+    * four-way change classification. */
+  private final class MergePrep(spark: SparkSession, ledgerDir: String,
+      c: RowCommit, source: DataFrame, keys: Seq[String],
+      deleteWhen: Option[org.apache.spark.sql.Column], evolveSchema: Boolean) {
+    require(keys.nonEmpty, "merge needs at least one key column")
+    require(keys.distinct == keys, s"duplicate merge key in $keys")
+    // IDENTITY v1 scope (documented divergence from current Delta, which
+    // only recently gained merge allocation): a merge's unmatched-insert
+    // arm would need system allocation mid-rewrite — refuse loudly,
+    // INSERT the new rows instead
+    require(identityColumns(ledgerDir).isEmpty,
+      "MERGE into a table with GENERATED ALWAYS AS IDENTITY columns is " +
+        "not supported — INSERT new rows (identity allocates there) and " +
+        "UPDATE/DELETE existing ones")
+    val srcKeys: DataFrame = source.select(keys.map(col): _*).distinct()
+    // merge into an EMPTY table = pure insert; take the schema from source.
+    // Default: source columns the target lacks are DROPPED (callers ride
+    // this for merge-control columns like deleteWhen flags). With
+    // `evolveSchema`, NEW source columns widen the table instead — the
+    // Delta autoMerge analog: this merge's carry/delta files carry the
+    // union schema, untouched files keep theirs, and the persistent
+    // evolution marker flips every later read of this table to
+    // merged-footer inference so pre-evolution files surface the new
+    // columns as null (see isEvolved).
+    private lazy val targetSchema = c.target.map(_.schema)
+    private lazy val baseCols: Seq[String] =
+      targetSchema.map(_.fieldNames.toSeq).getOrElse(source.columns.toSeq)
+    private lazy val newCols: Seq[String] =
+      if (evolveSchema) source.columns.toSeq.filterNot(baseCols.contains)
+      else Nil
+    private lazy val unionNames = baseCols ++ newCols
+    private def dtypeOf(n: String): org.apache.spark.sql.types.DataType =
+      targetSchema.flatMap(_.find(_.name == n)).map(_.dataType)
+        .getOrElse(source.schema(n).dataType)
+    private lazy val genExprs: Map[String, String] =
+      generatedColumns(ledgerDir).toMap
+
+    /** Conform a frame to the union schema: absent columns null-fill at
+      * the authoritative type (target's for old columns, source's for
+      * new); absent GENERATED columns COMPUTE from the conformed row
+      * instead (the Delta merge fill, r15 — supplied values still ride
+      * the constraint gate). */
+    def conform(df: DataFrame): DataFrame = {
+      val base = df.select(unionNames.map(n =>
+        if (df.columns.contains(n)) col(n)
+        else lit(null).cast(dtypeOf(n)).as(n)): _*)
+      val fills = unionNames.filter(n =>
+        !df.columns.contains(n) && genExprs.contains(n))
+      if (fills.isEmpty) base
+      else base.select(unionNames.map(n =>
+        if (fills.contains(n)) expr(genExprs(n)).cast(dtypeOf(n)).as(n)
+        else col(n)): _*)
+    }
+
+    /** The schema this merge records at its snapshot: the union, when new
+      * source columns widen the table — reads at or above it see the
+      * union, time travel below keeps the old shape. */
+    def evolved: Option[org.apache.spark.sql.types.StructType] =
+      if (newCols.isEmpty) None
+      else Some(org.apache.spark.sql.types.StructType(unionNames.map(n =>
+        org.apache.spark.sql.types.StructField(n, dtypeOf(n)))))
+
+    /** The merge's `delta` (and, with `changeFeed`, `changes`) outputs once
+      * `matchedKeys` are known (None: nothing matched). `deleteWhen`
+      * consumes MATCHED source rows only (SQL MERGE semantics); every
+      * surviving source row lands — whole-row replace makes updates and
+      * inserts both just the live source. The standing CHECK constraints
+      * gate those rows HERE, before any reservation (a violating merge
+      * never contends for the id). CHANGE DATA FEED (the Delta CDF /
+      * Iceberg changelog analog, opt-in like enableChangeDataFeed — the
+      * classification re-joins the blast radius, roughly doubling the
+      * merge's work): a matched key whose source row survives deleteWhen
+      * is an update (pre + post image), one consumed by deleteWhen is a
+      * delete (pre image), an unmatched source row is an insert. */
+    def outputs(matchedKeys: Option[DataFrame], pre: => DataFrame,
+        changeFeed: Boolean): GenWrite => Unit = {
+      val srcLive = (deleteWhen, matchedKeys) match {
+        case (Some(w), Some(mk)) =>
+          source.join(mk.withColumn("_matched", lit(true)), keys, "left")
+            .filter(!(coalesce(col("_matched"), lit(false))
+              && coalesce(w, lit(false))))
+            .drop("_matched")
+        case _ => source // no delete clause, or nothing matched
+      }
+      enforceConstraints(spark, ledgerDir, conform(srcLive))
+      out => {
+        def tag(df: DataFrame, t: String): DataFrame =
+          conform(df).withColumn("_change_type", lit(t))
+        if (changeFeed) out("changes", matchedKeys match {
+          case Some(mk) =>
+            val liveKeys = srcLive.select(keys.map(col): _*).distinct()
+            val updKeys = mk.join(liveKeys, keys, "left_semi")
+            val delKeys = mk.join(liveKeys, keys, "left_anti")
+            tag(pre.join(delKeys, keys, "left_semi"), "delete")
+              .unionByName(tag(pre.join(updKeys, keys, "left_semi"),
+                "update_preimage"))
+              .unionByName(tag(srcLive.join(mk, keys, "left_semi"),
+                "update_postimage"))
+              .unionByName(tag(srcLive.join(mk, keys, "left_anti"),
+                "insert"))
+          case None => tag(srcLive, "insert")
+        })
+        out("delta", conform(srcLive))
+        if (newCols.nonEmpty) TableMeta.Evolved.set(ledgerDir)
+      }
+    }
   }
 
   /** Row-level copy-on-write MERGE INTO — the defining lake-table operation
@@ -1933,7 +2171,8 @@ object Lake {
     * `LedgerFileIndex` scan) — the only driver-side list is the set of
     * files-with-matches (normalized names), bounded by the merge's blast
     * radius, never the table's file count. Returns the merge's snapshot
-    * id.
+    * id, or the current one when the merge has nothing to apply (an
+    * empty source: no snapshot, no reservation).
     *
     * Key-cardinality semantics: if several TARGET rows share a matched key
     * they all collapse to that key's single source row (replace = the
@@ -1959,201 +2198,30 @@ object Lake {
       deleteWhen: Option[org.apache.spark.sql.Column] = None,
       changeFeed: Boolean = false,
       evolveSchema: Boolean = false): Long = {
-    require(keys.nonEmpty, "merge needs at least one key column")
-    require(keys.distinct == keys, s"duplicate merge key in $keys")
-    // IDENTITY v1 scope (documented divergence from current Delta, which
-    // only recently gained merge allocation): a merge's unmatched-insert
-    // arm would need system allocation mid-rewrite — refuse loudly,
-    // INSERT the new rows instead
-    require(identityColumns(ledgerDir).isEmpty,
-      "MERGE into a table with GENERATED ALWAYS AS IDENTITY columns is " +
-        "not supported — INSERT new rows (identity allocates there) and " +
-        "UPDATE/DELETE existing ones")
-    val snap = currentSnapshot(spark, ledgerDir)
-    val next = snap + 1
-    // reserve BEFORE writing gen-$next data files: a concurrent commit must
-    // fail here, not after overwriting a winner's generation directory.
-    // `reserving` releases the id if the merge dies before its rows land —
-    // a failed job must not block the table behind an orphaned marker.
-    reserving(spark, ledgerDir, next) {
-      val genDir = s"$genRoot/gen-$next"
-      val liveActs = readLedger(spark, ledgerDir)
-      .map(l => liveActionsAt(l, snap).localCheckpoint())
-      val index = liveActs.map(new LedgerFileIndex(_)).filterNot(_.isEmpty)
-      val target = index.map(tableScan(spark, ledgerDir, _, snap))
-      // merge into an EMPTY table = pure insert; take the schema from source.
-      // Default: source columns the target lacks are DROPPED (callers ride
-      // this for merge-control columns like deleteWhen flags). With
-      // `evolveSchema`, NEW source columns widen the table instead — the
-      // Delta autoMerge analog: this merge's carry/delta files carry the
-      // union schema, untouched files keep theirs, and the persistent
-      // evolution marker flips every later read of this table to
-      // merged-footer inference so pre-evolution files surface the new
-      // columns as null (see isEvolved).
-      val targetSchema = target.map(_.schema)
-      val baseCols: Seq[String] =
-        targetSchema.map(_.fieldNames.toSeq).getOrElse(source.columns.toSeq)
-      val newCols: Seq[String] =
-        if (evolveSchema) source.columns.toSeq.filterNot(baseCols.contains)
-        else Nil
-      val unionNames = baseCols ++ newCols
-      def dtypeOf(n: String): org.apache.spark.sql.types.DataType =
-        targetSchema.flatMap(_.find(_.name == n)).map(_.dataType)
-          .getOrElse(source.schema(n).dataType)
-      // conform a frame to the union schema: absent columns null-fill at
-      // the authoritative type (target's for old columns, source's for new);
-      // absent GENERATED columns COMPUTE from the conformed row instead
-      // (the Delta merge fill, r15 — supplied values still ride the
-      // constraint gate)
-      val genExprs: Map[String, String] = generatedColumns(ledgerDir).toMap
-      def conform(df: DataFrame): DataFrame = {
-        val base = df.select(unionNames.map(n =>
-          if (df.columns.contains(n)) col(n)
-          else lit(null).cast(dtypeOf(n)).as(n)): _*)
-        val fills = unionNames.filter(n =>
-          !df.columns.contains(n) && genExprs.contains(n))
-        if (fills.isEmpty) base
-        else base.select(unionNames.map(n =>
-          if (fills.contains(n)) expr(genExprs(n)).cast(dtypeOf(n)).as(n)
-          else col(n)): _*)
-      }
-      val srcKeys = source.select(keys.map(col): _*).distinct()
-      // the rewrite set: live files containing at least one matched key —
-      // bounded by files-with-matches (the merge's blast radius), the only
-      // file list a COW merge puts on the driver
-      // discovery scan scoped to the batch's key range (sound superset;
-      // pushable — manifest stats prune it to the batch's file footprint
-      // on a key-clustered table, see keyRangeScope)
-      val affectedNorm: Set[String] = target match {
-        case Some(t) => keyRangeScope(t, srcKeys, keys)
-          .withColumn("_file", regexp_replace(input_file_name(), "^file:/+", "/"))
-          .join(srcKeys, keys, "left_semi")
-          .select(col("_file")).distinct()
-          .collect().map(_.getString(0)).toSet
-        case None => Set.empty
-      }
-      // manifest-driven scan / action rows restricted to the affected files
-      def affectedActs: DataFrame = liveActs.get.filter(
-        regexp_replace(col("path"), "^file:/+", "/")
-          .isin(affectedNorm.toSeq: _*))
-      // DV-applied: MOR-deleted rows must not carry into the rewrite, be
-      // counted matched, or surface as cdc pre-images — the merge
-      // MATERIALIZES its affected files' vectors (the rewritten files'
-      // winning add postdates them, so they go inert)
-      // affected scan plans through a SUB-INDEX of the already-
-      // materialized live index (entries reused — no second collect job)
-      def affectedScan: DataFrame = applyDvsAt(spark, ledgerDir, snap,
-        tableScan(spark, ledgerDir, index.get.subIndex(affectedNorm),
-          atSnapshot = snap, keepPos = true))
-      // matched keys live ONLY in affected files — computable without a
-      // full scan; shared by the deleteWhen filter and the change feed
-      val matchedKeys: Option[DataFrame] =
-        if (affectedNorm.nonEmpty)
-          Some(affectedScan.join(srcKeys, keys, "left_semi")
-            .select(keys.map(col): _*).distinct())
-        else None
-      // deleteWhen governs MATCHED source rows only (SQL MERGE semantics)
-      val srcLive = (deleteWhen, matchedKeys) match {
-        case (Some(c), Some(mk)) =>
-          source.join(mk.withColumn("_matched", lit(true)),
-              keys, "left")
-            .filter(!(coalesce(col("_matched"), lit(false))
-              && coalesce(c, lit(false))))
-            .drop("_matched")
-        case _ => source // no delete clause, or empty table (nothing matched)
-      }
-      // standing CHECK constraints gate every row about to land — a
-      // violation aborts here (reservation auto-releases, nothing written)
-      enforceConstraints(spark, ledgerDir, conform(srcLive))
-      // CHANGE DATA FEED (the Delta CDF / Iceberg changelog analog): when
-      // `changeFeed` is on, classify this merge's row-level effects and
-      // persist them as cdc-typed ledger files so incremental consumers
-      // replay CHANGES, not table diffs. OPT-IN like Delta's
-      // enableChangeDataFeed: the classification re-joins the blast radius
-      // (affected files + source — never a full-table pass, but roughly
-      // doubles the merge's work) and a table that no one consumes changes
-      // from shouldn't pay that write amplification. A matched key whose
-      // source row survives deleteWhen is an update (pre + post image); one
-      // whose source row was consumed by deleteWhen is a delete (pre
-      // image); an unmatched source row is an insert. cdc rows are inert to
-      // every live-set reader (op is neither add nor remove) and vacuum
-      // never deletes them (no add row).
-      if (changeFeed) {
-        def tag(df: DataFrame, t: String): DataFrame =
-          conform(df).withColumn("_change_type", lit(t))
-        val changes = matchedKeys match {
-          case Some(mk) =>
-            val liveKeys = srcLive.select(keys.map(col): _*).distinct()
-            val updKeys = mk.join(liveKeys, keys, "left_semi")
-            val delKeys = mk.join(liveKeys, keys, "left_anti")
-            tag(affectedScan.join(delKeys, keys, "left_semi"),
-                "delete")
-              .unionByName(tag(affectedScan.join(updKeys, keys,
-                "left_semi"), "update_preimage"))
-              .unionByName(tag(srcLive.join(mk, keys, "left_semi"),
-                "update_postimage"))
-              .unionByName(tag(srcLive.join(mk, keys, "left_anti"),
-                "insert"))
-          case None => tag(srcLive, "insert")
-        }
-        writeGenDir(spark,
-          changes.withColumn("_commit_snapshot", lit(next)),
-          s"$genDir/changes")
-      }
-      // whole-row replace means every surviving source row lands in the table:
-      // updates (matched) and inserts (unmatched) are both just srcLive
-      val delta = conform(srcLive)
-      if (affectedNorm.nonEmpty) {
-        // rows the merge deletes/replaces live ONLY in affected files, so the
-        // carry rewrite scans just those files
-        writeGenDir(spark,
-          conform(affectedScan.join(srcKeys, keys, "left_anti")),
-          s"$genDir/carry")
-      }
-      writeGenDir(spark, delta, s"$genDir/delta")
-      // the merge's output files inherit the table's skipping contract:
-      // re-stat carry + delta so pruning survives the rewrite (cdc files
-      // are change records, never live-set scanned — no stats there)
-      val (mStatsCols, mBloomCols) = liveActs match {
-        case Some(acts) => liveStatsContract(acts, renameLog(ledgerDir))
-        case None => (Nil, Nil)
-      }
-      val adds = addsTagged(spark,
-        (if (affectedNorm.nonEmpty)
-          Seq((s"$genDir/carry", "add", "replace")) else Nil) ++
-          Seq((s"$genDir/delta", "add", "merge")) ++
-          (if (changeFeed) Seq((s"$genDir/changes", "cdc", "merge"))
-           else Nil),
-        mStatsCols, mBloomCols)
-      val actions =
-        if (affectedNorm.nonEmpty)
-          // remove rows straight from the affected action rows (ledger-form
-          // paths) — relational, never a re-collected path list
-          adds.unionByName(affectedActs.select(col("path"))
-            .withColumn("size", lit(null).cast("long"))
-            .withColumn("adler32", lit(null).cast("long"))
-            .withColumn("op", lit("remove"))
-            .withColumn("snapshot_op", lit("merge"))
-            .withColumn("stats", lit(null).cast(StatsType)))
-        else adds
-      // BEFORE the rows land: a crash between the append and a
-      // post-append recording would leave evolved files LIVE with a
-      // pre-evolution recording — the new column silently invisible
-      // forever. Recording first is safe: a recording for a snapshot
-      // that never lands is swept by the next appendSnapshot (ids are
-      // reserved monotonically), and the marker merely re-enables
-      // merged-footer reads for legacy tables.
-      if (newCols.nonEmpty) {
-        TableMeta.Evolved.set(ledgerDir)
-        // record the schema AT the evolving snapshot: reads at or
-        // above it see the union, time travel below keeps the old shape
-        recordSchema(ledgerDir, next, org.apache.spark.sql.types.StructType(
-          unionNames.map(nm =>
-            org.apache.spark.sql.types.StructField(nm, dtypeOf(nm)))))
-      }
-      appendSnapshot(spark, ledgerDir, next, actions, preReserved = true,
-        stagedSchema = newCols.nonEmpty)
-      next
+    val c = new RowCommit(spark, ledgerDir, genRoot)
+    val m = new MergePrep(spark, ledgerDir, c, source, keys, deleteWhen,
+      evolveSchema)
+    // the rewrite set: live files containing at least one matched key,
+    // found by a discovery scan scoped to the batch's key range (sound
+    // superset; pushable — manifest stats prune it to the batch's file
+    // footprint on a key-clustered table, see keyRangeScope)
+    val affected: Set[String] = c.target.fold(Set.empty[String])(t =>
+      c.affectedFiles(keyRangeScope(t, m.srcKeys, keys))(
+        _.join(m.srcKeys, keys, "left_semi")))
+    def affectedScan: DataFrame = c.affectedRows(affected)
+    // matched keys live ONLY in affected files — computable without a
+    // full scan; shared by the deleteWhen filter and the change feed
+    val matchedKeys: Option[DataFrame] =
+      if (affected.isEmpty) None
+      else Some(affectedScan.join(m.srcKeys, keys, "left_semi")
+        .select(keys.map(col): _*).distinct())
+    val mergeOut = m.outputs(matchedKeys, affectedScan, changeFeed)
+    c.commit(c.actsOf(affected), staged = m.evolved) { out =>
+      mergeOut(out)
+      // rows the merge deletes/replaces live ONLY in affected files, so
+      // the carry rewrite scans just those files
+      if (affected.nonEmpty) out("carry",
+        m.conform(affectedScan.join(m.srcKeys, keys, "left_anti")))
     }
   }
 
@@ -2164,70 +2232,24 @@ object Lake {
     * to any prior snapshot still sees the deleted rows. */
   def deleteWhere(spark: SparkSession, ledgerDir: String, genRoot: String,
       cond: org.apache.spark.sql.Column, changeFeed: Boolean = false): Long = {
-    val snap = currentSnapshot(spark, ledgerDir)
-    val liveActs = readLedger(spark, ledgerDir)
-      .map(l => liveActionsAt(l, snap).localCheckpoint())
-    val index = liveActs.map(new LedgerFileIndex(_)).filterNot(_.isEmpty)
-    if (index.isEmpty) return snap // empty table: nothing to delete
-    val next = snap + 1
-    val target = tableScan(spark, ledgerDir, index.get, snap)
-    val cols = target.columns.map(col)
-    val affectedNorm = target
-      .withColumn("_file", regexp_replace(input_file_name(), "^file:/+", "/"))
-      .filter(coalesce(cond, lit(false)))
-      .select(col("_file")).distinct()
-      .collect().map(_.getString(0)).toSet
-    if (affectedNorm.isEmpty) return snap // nothing matches: no snapshot
-    // reserve AFTER the read-only match scan — the old order reserved
-    // first and ORPHANED the id on the nothing-matches early return —
-    // but still BEFORE writing gen-$next data files (see mergeInto)
-    reserving(spark, ledgerDir, next) {
-      val genDir = s"$genRoot/gen-$next"
-      val affectedActs = liveActs.get.filter(
-        regexp_replace(col("path"), "^file:/+", "/")
-          .isin(affectedNorm.toSeq: _*))
-      // DV-applied: rows already MOR-deleted must not resurrect into the
-      // carry rewrite (the rewrite materializes the affected files' DVs)
-      // sub-index of the live index: entries reused, no second collect
-      val affectedIdx = index.get.subIndex(affectedNorm)
-      val carry = applyDvsAt(spark, ledgerDir, snap,
-          tableScan(spark, ledgerDir, affectedIdx, atSnapshot = snap,
-            keepPos = true))
-        .filter(!coalesce(cond, lit(false)))
-        .select(cols: _*)
-      writeGenDir(spark, carry, s"$genDir/carry")
-      // opt-in CHANGE FEED (the mergeInto discipline): the deleted rows'
-      // PRE-IMAGES as _change_type='delete' cdc rows, bounded by the
-      // delete's blast radius — without it a readChanges-maintained
-      // mirror would silently keep rows this table dropped
-      if (changeFeed)
-        writeGenDir(spark,
-          applyDvsAt(spark, ledgerDir, snap,
-              tableScan(spark, ledgerDir, affectedIdx, atSnapshot = snap,
-                keepPos = true))
-            .filter(coalesce(cond, lit(false)))
-            .select(cols: _*)
-            .withColumn("_change_type", lit("delete"))
-            .withColumn("_commit_snapshot", lit(next)),
-          s"$genDir/changes")
-      // surviving-row rewrites inherit the skipping contract (see mergeInto)
-      val (dStatsCols, dBloomCols) = liveStatsContract(liveActs.get, renameLog(ledgerDir))
-      val adds = addsTagged(spark,
-        Seq((s"$genDir/carry", "add", "replace")) ++
-          (if (changeFeed) Seq((s"$genDir/changes", "cdc", "replace"))
-           else Nil),
-        dStatsCols, dBloomCols)
-      appendSnapshot(spark, ledgerDir, next,
-        preReserved = true, actions =
-        adds.unionByName(affectedActs.select(col("path"))
-          .withColumn("size", lit(null).cast("long"))
-          .withColumn("adler32", lit(null).cast("long"))
-          .withColumn("op", lit("remove"))
-          // a pure delete is a REPLACE-shaped snapshot (no reader keys on
-          // remove-row snapshot_op; history()'s op mix stays honest)
-          .withColumn("snapshot_op", lit("replace"))
-          .withColumn("stats", lit(null).cast(StatsType))))
-      next
+    val c = new RowCommit(spark, ledgerDir, genRoot)
+    if (c.index.isEmpty) return c.snap // empty table: nothing to delete
+    val cols = c.target.get.columns.map(col)
+    val affected = c.affectedWhere(cond)
+    if (affected.isEmpty) return c.snap // nothing matches: no snapshot
+    // a pure delete is a REPLACE-shaped snapshot (no reader keys on
+    // remove-row snapshot_op; history()'s op mix stays honest)
+    c.commit(c.actsOf(affected), removeOp = "replace", changeOp = "replace") {
+      out =>
+        out("carry", c.affectedRows(affected)
+          .filter(!coalesce(cond, lit(false))).select(cols: _*))
+        // opt-in CHANGE FEED (the mergeInto discipline): the deleted rows'
+        // PRE-IMAGES as _change_type='delete' cdc rows, bounded by the
+        // delete's blast radius — without it a readChanges-maintained
+        // mirror would silently keep rows this table dropped
+        if (changeFeed) out("changes", c.affectedRows(affected)
+          .filter(coalesce(cond, lit(false))).select(cols: _*)
+          .withColumn("_change_type", lit("delete")))
     }
   }
 
@@ -2253,13 +2275,9 @@ object Lake {
       sets: Seq[(String, org.apache.spark.sql.Column)],
       changeFeed: Boolean = false): Long = {
     require(sets.nonEmpty, "UPDATE with no assignments")
-    val snap = currentSnapshot(spark, ledgerDir)
-    val liveActs = readLedger(spark, ledgerDir)
-      .map(l => liveActionsAt(l, snap).localCheckpoint())
-    val index = liveActs.map(new LedgerFileIndex(_)).filterNot(_.isEmpty)
-    if (index.isEmpty) return snap // empty table: nothing to update
-    val next = snap + 1
-    val target = tableScan(spark, ledgerDir, index.get, snap)
+    val c = new RowCommit(spark, ledgerDir, genRoot)
+    if (c.index.isEmpty) return c.snap // empty table: nothing to update
+    val target = c.target.get
     val setMap = sets.toMap
     sets.foreach { case (c, _) =>
       require(target.columns.contains(c), s"UPDATE SET unknown column '$c'") }
@@ -2310,62 +2328,27 @@ object Lake {
         }: _*)
       }
     }
-    val affectedNorm = target
-      .withColumn("_file", regexp_replace(input_file_name(), "^file:/+", "/"))
-      .filter(coalesce(cond, lit(false)))
-      .select(col("_file")).distinct()
-      .collect().map(_.getString(0)).toSet
-    if (affectedNorm.isEmpty) return snap // nothing matches: no snapshot
-    val affectedActs = liveActs.get.filter(
-      regexp_replace(col("path"), "^file:/+", "/")
-        .isin(affectedNorm.toSeq: _*))
+    val affected = c.affectedWhere(cond)
+    if (affected.isEmpty) return c.snap // nothing matches: no snapshot
     // the DV-applied affected rows feed FOUR consumers (constraint
     // check, carry, delta, change feed) — materialize the blast radius
     // once instead of re-scanning the affected files per consumer
-    val affectedRows = applyDvsAt(spark, ledgerDir, snap,
-      tableScan(spark, ledgerDir, index.get.subIndex(affectedNorm),
-        atSnapshot = snap, keepPos = true))
-      .localCheckpoint()
+    val affectedRows = c.affectedRows(affected).localCheckpoint()
+    val cols = target.columns.map(col)
+    val pre = affectedRows.filter(coalesce(cond, lit(false)))
+      .select(cols: _*)
     // hard contract on the rows that land — still read-only, pre-reserve
-    enforceConstraints(spark, ledgerDir,
-      postImage(affectedRows.filter(coalesce(cond, lit(false)))))
-    reserving(spark, ledgerDir, next) {
-      val genDir = s"$genRoot/gen-$next"
-      // the mergeInto carry/delta discipline: carry = the affected files'
-      // UNCHANGED rows (snapshot_op "replace" — incremental consumers
-      // skip them), delta = the matching rows POST-image (snapshot_op
-      // "merge" — consumers see exactly the changed rows). DV-applied:
-      // MOR-deleted rows must not resurrect into the rewrite.
-      val cols = target.columns.map(col)
-      writeGenDir(spark,
-        affectedRows.filter(!coalesce(cond, lit(false))).select(cols: _*),
-        s"$genDir/carry")
-      val pre = affectedRows.filter(coalesce(cond, lit(false)))
-        .select(cols: _*)
-      writeGenDir(spark, postImage(pre), s"$genDir/delta")
-      if (changeFeed)
-        writeGenDir(spark,
-          pre.withColumn("_change_type", lit("update_preimage"))
-            .unionByName(postImage(pre)
-              .withColumn("_change_type", lit("update_postimage")))
-            .withColumn("_commit_snapshot", lit(next)),
-          s"$genDir/changes")
-      val (uStatsCols, uBloomCols) = liveStatsContract(liveActs.get, renameLog(ledgerDir))
-      val adds = addsTagged(spark,
-        Seq((s"$genDir/carry", "add", "replace"),
-          (s"$genDir/delta", "add", "merge")) ++
-          (if (changeFeed) Seq((s"$genDir/changes", "cdc", "merge"))
-           else Nil),
-        uStatsCols, uBloomCols)
-      appendSnapshot(spark, ledgerDir, next,
-        preReserved = true, actions =
-        adds.unionByName(affectedActs.select(col("path"))
-          .withColumn("size", lit(null).cast("long"))
-          .withColumn("adler32", lit(null).cast("long"))
-          .withColumn("op", lit("remove"))
-          .withColumn("snapshot_op", lit("merge"))
-          .withColumn("stats", lit(null).cast(StatsType))))
-      next
+    enforceConstraints(spark, ledgerDir, postImage(pre))
+    // the mergeInto carry/delta discipline: carry = the affected files'
+    // UNCHANGED rows, delta = the matching rows' POST-image
+    c.commit(c.actsOf(affected)) { out =>
+      out("carry",
+        affectedRows.filter(!coalesce(cond, lit(false))).select(cols: _*))
+      out("delta", postImage(pre))
+      if (changeFeed) out("changes",
+        pre.withColumn("_change_type", lit("update_preimage"))
+          .unionByName(postImage(pre)
+            .withColumn("_change_type", lit("update_postimage"))))
     }
   }
 
@@ -2441,20 +2424,16 @@ object Lake {
   private def deleteMorMatching(spark: SparkSession, ledgerDir: String,
       genRoot: String, matches: DataFrame => DataFrame,
       changeFeed: Boolean): Long = {
-    val snap = currentSnapshot(spark, ledgerDir)
-    val liveActs = readLedger(spark, ledgerDir)
-      .map(l => liveActionsAt(l, snap).localCheckpoint())
-    val index = liveActs.map(new LedgerFileIndex(_)).filterNot(_.isEmpty)
-    if (index.isEmpty) return snap // empty table: nothing to delete
-    val next = snap + 1
+    val c = new RowCommit(spark, ledgerDir, genRoot)
+    if (c.index.isEmpty) return c.snap // empty table: nothing to delete
     // already-deleted rows must not re-record their positions (the
     // anti-join would dedup them, but sidecar sizes and dvRows() counts
     // would lie) — the match scan itself is DV-applied. keepPos: the
     // (file, position) identity columns must materialize BEFORE the DV
     // anti-join — `_metadata` is unresolvable/ambiguous above a join of
     // two file scans.
-    val target = applyDvsAt(spark, ledgerDir, snap,
-      tableScan(spark, ledgerDir, index.get, snap, keepPos = true),
+    val target = applyDvsAt(spark, ledgerDir, c.snap,
+      tableScan(spark, ledgerDir, c.index.get, c.snap, keepPos = true),
       keepPos = true)
     // ONE match scan: the position set is delete-sized (exactly what the
     // sidecar will hold), so materialize it once instead of re-scanning
@@ -2462,33 +2441,14 @@ object Lake {
     val hits = matches(target)
       .select(col("__graft_fp").as("dpath"), col("__graft_pos").as("pos"))
       .localCheckpoint()
-    if (hits.isEmpty) return snap // nothing matches: no snapshot, no marker
-    reserving(spark, ledgerDir, next) {
-      val dvDir = s"$genRoot/gen-$next/dv"
-      writeGenDir(spark, hits.withColumn("dv_snap", lit(next)), dvDir)
+    if (hits.isEmpty) return c.snap // nothing matches: no snapshot, no marker
+    c.commit(changeOp = "mor-delete") { out =>
+      out("dv", hits)
       // opt-in CHANGE FEED: deleted pre-images, same rows the sidecar
       // points at (cost bounded by the delete size, like the sidecar)
-      if (changeFeed) {
-        val dataCols = target.columns
-          .filterNot(Seq("__graft_fp", "__graft_pos").contains).map(col)
-        writeGenDir(spark,
-          matches(target)
-            .select(dataCols: _*)
-            .withColumn("_change_type", lit("delete"))
-            .withColumn("_commit_snapshot", lit(next)),
-          s"$genRoot/gen-$next/changes")
-      }
-      val adds0 = fileAdds(spark, dvDir)
-        .withColumn("op", lit("dv"))
-        .withColumn("snapshot_op", lit("mor-delete"))
-      val adds =
-        if (changeFeed)
-          adds0.unionByName(fileAdds(spark, s"$genRoot/gen-$next/changes")
-            .withColumn("op", lit("cdc"))
-            .withColumn("snapshot_op", lit("mor-delete")))
-        else adds0
-      appendSnapshot(spark, ledgerDir, next, adds, preReserved = true)
-      next
+      if (changeFeed) out("changes", matches(target)
+        .drop("__graft_fp", "__graft_pos")
+        .withColumn("_change_type", lit("delete")))
     }
   }
 
@@ -2700,9 +2660,7 @@ object Lake {
     * read (except under the opt-in change feed). */
   def overwriteWith(spark: SparkSession, ledgerDir: String, genRoot: String,
       rows: DataFrame, changeFeed: Boolean = false): Long = {
-    val snap = currentSnapshot(spark, ledgerDir)
-    val liveActs = readLedger(spark, ledgerDir)
-      .map(l => liveActionsAt(l, snap)).filterNot(_.isEmpty)
+    val c = new RowCommit(spark, ledgerDir, genRoot)
     // an empty table may only delegate to the plain append when NO change
     // feed is requested: appendRows records no cdc rows, and a feed
     // consumer (MomentsDelta/TextIndexDelta maintenance) would silently
@@ -2710,67 +2668,34 @@ object Lake {
     // must land insert-images regardless of prior emptiness (the Delta
     // CDF contract). The empty+changeFeed path below commits adds + cdc
     // with no removes in the same one-snapshot shape.
-    if (liveActs.isEmpty && !changeFeed)
+    if (c.index.isEmpty && !changeFeed)
       return appendRows(spark, ledgerDir, genRoot, rows)
     enforceConstraints(spark, ledgerDir, rows)
     val newEmpty = rows.isEmpty
     // truncating an already-empty table: nothing to remove, nothing to
     // add, no change rows — a genuine no-op at the current snapshot
-    if (liveActs.isEmpty && newEmpty) return snap
-    val next = snap + 1
-    reserving(spark, ledgerDir, next) {
-      val genDir = s"$genRoot/gen-$next"
-      if (!newEmpty) writeGenDir(spark, rows, s"$genDir/delta")
+    if (c.index.isEmpty && newEmpty) return c.snap
+    // a table whose FIRST row-landing snapshot comes through this path
+    // (empty ledger + changeFeed — the appendRows delegate normally
+    // records via ingestNewFiles) must still get a schema recording,
+    // or every later plan pays footer inference and a subsequent
+    // TRUNCATE leaves the zero-file table schema-less (unreadable)
+    val needSchema = !newEmpty &&
+      recordedSchemaAt(ledgerDir, Long.MaxValue).isEmpty
+    c.commit(c.liveActs, removeOp = "overwrite",
+        staged = if (needSchema) Some(rows.schema) else None) { out =>
+      if (!newEmpty) out("delta", rows)
       if (changeFeed) {
         val inserted =
           if (newEmpty) None
-          else Some(spark.read.parquet(s"$genDir/delta")
+          else Some(spark.read.parquet(s"${c.genDir}/delta")
             .withColumn("_change_type", lit("insert")))
-        val oldRows = liveActs.map(acts =>
-          applyDvsAt(spark, ledgerDir, snap,
-              scanActions(spark, ledgerDir, acts, atSnapshot = snap,
-                keepPos = true))
-            .withColumn("_change_type", lit("delete")))
-        // liveActs.isEmpty && newEmpty returned above, so at least one side
-        // is present here
-        writeGenDir(spark,
-          (oldRows ++ inserted).reduce(_.unionByName(_))
-            .withColumn("_commit_snapshot", lit(next)),
-          s"$genDir/changes")
+        val deleted = c.index.map(_ =>
+          c.liveRows.withColumn("_change_type", lit("delete")))
+        // an empty table with empty rows returned above, so at least one
+        // side is present here
+        out("changes", (deleted ++ inserted).reduce(_.unionByName(_)))
       }
-      val (oStatsCols, oBloomCols) =
-        liveActs.map(liveStatsContract(_, renameLog(ledgerDir))).getOrElse((Nil, Nil))
-      val removes = liveActs.map(_.select(col("path"))
-        .withColumn("size", lit(null).cast("long"))
-        .withColumn("adler32", lit(null).cast("long"))
-        .withColumn("op", lit("remove"))
-        .withColumn("snapshot_op", lit("overwrite"))
-        .withColumn("stats", lit(null).cast(StatsType)))
-      val adds =
-        if (newEmpty) None
-        else Some(withLedgerStats(
-          addsWithStats(spark, fileAdds(spark, s"$genDir/delta"),
-              s"$genDir/delta", oStatsCols, oBloomCols)
-            .withColumn("op", lit("add"))
-            .withColumn("snapshot_op", lit("merge"))))
-      val withAdds = (adds ++ removes).reduce(_.unionByName(_))
-      val actions =
-        if (changeFeed) withAdds.unionByName(withLedgerStats(
-          fileAdds(spark, s"$genDir/changes")
-            .withColumn("op", lit("cdc"))
-            .withColumn("snapshot_op", lit("merge"))))
-        else withAdds
-      // a table whose FIRST row-landing snapshot comes through this path
-      // (empty ledger + changeFeed — the appendRows delegate normally
-      // records via ingestNewFiles) must still get a schema recording,
-      // or every later plan pays footer inference and a subsequent
-      // TRUNCATE leaves the zero-file table schema-less (unreadable)
-      val needSchema = !newEmpty &&
-        recordedSchemaAt(ledgerDir, Long.MaxValue).isEmpty
-      if (needSchema) recordSchema(ledgerDir, next, rows.schema)
-      appendSnapshot(spark, ledgerDir, next, preReserved = true,
-        actions = actions, stagedSchema = needSchema)
-      next
     }
   }
 
@@ -2801,7 +2726,7 @@ object Lake {
   def overwriteWhere(spark: SparkSession, ledgerDir: String, genRoot: String,
       pred: org.apache.spark.sql.Column, rows: DataFrame,
       changeFeed: Boolean = false): Long = {
-    val snap = currentSnapshot(spark, ledgerDir)
+    val c = new RowCommit(spark, ledgerDir, genRoot)
     // materialize the incoming frame ONCE (the runMergeColumnList USING
     // discipline): it is evaluated several times below (emptiness, the
     // replaceWhere contract count, constraints, the delta write) — a
@@ -2816,90 +2741,43 @@ object Lake {
         "satisfy the predicate — they lie outside the replaced region")
       enforceConstraints(spark, ledgerDir, rowsM)
     }
-    val liveActs = readLedger(spark, ledgerDir)
-      .map(l => liveActionsAt(l, snap).localCheckpoint())
-    val index = liveActs.map(new LedgerFileIndex(_)).filterNot(_.isEmpty)
-    if (index.isEmpty) {
+    if (c.index.isEmpty) {
       // empty table: the region is trivially empty — a pure insert.
       // Delegate to the whole-table overwrite (NOT appendRows): its
       // empty-table path carries the change feed's insert images, which
       // appendRows does not record (the overwriteWith lesson)
-      return if (newEmpty) snap
+      return if (newEmpty) c.snap
         else overwriteWith(spark, ledgerDir, genRoot, rowsM, changeFeed)
     }
-    val target = tableScan(spark, ledgerDir, index.get, snap)
-    val cols = target.columns.map(col)
-    // predicate pushed straight at the manifest-pruned scan: only files
-    // whose stats admit a match are read at all, only files actually
-    // holding a match enter the blast radius
-    val affectedNorm = target
-      .withColumn("_file", regexp_replace(input_file_name(), "^file:/+", "/"))
-      .filter(coalesce(pred, lit(false)))
-      .select(col("_file")).distinct()
-      .collect().map(_.getString(0)).toSet
-    if (affectedNorm.isEmpty && newEmpty) return snap
-    val next = snap + 1
-    reserving(spark, ledgerDir, next) {
-      val genDir = s"$genRoot/gen-$next"
-      val affectedActs = liveActs.get.filter(
-        regexp_replace(col("path"), "^file:/+", "/")
-          .isin(affectedNorm.toSeq: _*))
-      // DV-applied: MOR-deleted rows neither resurrect into the carry
-      // nor surface as change-feed pre-images. Plans through a SUB-INDEX
-      // of the already-materialized live index (entries reused — no
-      // second collect job); with the change feed on, the blast radius
-      // feeds TWO consumers (carry + delete pre-images), so it
-      // materializes once (the updateWhere discipline) instead of
-      // re-reading the affected files per consumer.
-      val affectedRowsOpt: Option[DataFrame] =
-        if (affectedNorm.isEmpty) None
-        else {
-          val scan = applyDvsAt(spark, ledgerDir, snap,
-            tableScan(spark, ledgerDir, index.get.subIndex(affectedNorm),
-              atSnapshot = snap, keepPos = true))
-          Some(if (changeFeed) scan.localCheckpoint() else scan)
-        }
-      affectedRowsOpt.foreach(r =>
-        writeGenDir(spark,
-          r.filter(!coalesce(pred, lit(false))).select(cols: _*),
-          s"$genDir/carry"))
-      if (!newEmpty)
-        writeGenDir(spark, rowsM, s"$genDir/delta")
+    val cols = c.target.get.columns.map(col)
+    // only files actually holding a match enter the blast radius
+    val affected = c.affectedWhere(pred)
+    if (affected.isEmpty && newEmpty) return c.snap
+    // with the change feed on, the blast radius feeds TWO consumers
+    // (carry + delete pre-images), so it materializes once (the
+    // updateWhere discipline)
+    val affectedRows: Option[DataFrame] =
+      if (affected.isEmpty) None
+      else {
+        val scan = c.affectedRows(affected)
+        Some(if (changeFeed) scan.localCheckpoint() else scan)
+      }
+    c.commit(c.actsOf(affected), removeOp = "overwrite") { out =>
+      affectedRows.foreach(r => out("carry",
+        r.filter(!coalesce(pred, lit(false))).select(cols: _*)))
+      if (!newEmpty) out("delta", rowsM)
       if (changeFeed) {
-        val deleted = affectedRowsOpt
-          .map(_.filter(coalesce(pred, lit(false)))
-            .select(cols: _*)
-            .withColumn("_change_type", lit("delete")))
-          .getOrElse(target.limit(0).select(cols: _*)
-            .withColumn("_change_type", lit("delete")))
+        val deleted = affectedRows
+          .map(_.filter(coalesce(pred, lit(false))))
+          .getOrElse(c.target.get.limit(0))
+          .select(cols: _*)
+          .withColumn("_change_type", lit("delete"))
         val inserted =
           if (newEmpty) deleted.limit(0)
-          else spark.read.parquet(s"$genDir/delta")
+          else spark.read.parquet(s"${c.genDir}/delta")
             .withColumn("_change_type", lit("insert"))
-        writeGenDir(spark,
-          deleted.unionByName(inserted)
-            .withColumn("_commit_snapshot", lit(next)),
-          s"$genDir/changes")
+        out("changes", deleted.unionByName(inserted))
       }
-      val (oStatsCols, oBloomCols) = liveStatsContract(liveActs.get, renameLog(ledgerDir))
-      val adds = addsTagged(spark,
-        (if (affectedNorm.nonEmpty)
-          Seq((s"$genDir/carry", "add", "replace")) else Nil) ++
-          (if (!newEmpty) Seq((s"$genDir/delta", "add", "merge")) else Nil) ++
-          (if (changeFeed) Seq((s"$genDir/changes", "cdc", "merge"))
-           else Nil),
-        oStatsCols, oBloomCols)
-      val actions =
-        if (affectedNorm.nonEmpty)
-          adds.unionByName(affectedActs.select(col("path"))
-            .withColumn("size", lit(null).cast("long"))
-            .withColumn("adler32", lit(null).cast("long"))
-            .withColumn("op", lit("remove"))
-            .withColumn("snapshot_op", lit("overwrite"))
-            .withColumn("stats", lit(null).cast(StatsType)))
-        else adds
-      appendSnapshot(spark, ledgerDir, next, actions, preReserved = true)
-      next
     }
   }
 
@@ -3281,43 +3159,10 @@ object Lake {
       deleteWhen: Option[org.apache.spark.sql.Column] = None,
       changeFeed: Boolean = false,
       genSuffix: Option[String] = None): Long = {
-    require(keys.nonEmpty, "merge needs at least one key column")
-    require(keys.distinct == keys, s"duplicate merge key in $keys")
-    // IDENTITY v1 scope (documented divergence from current Delta, which
-    // only recently gained merge allocation): a merge's unmatched-insert
-    // arm would need system allocation mid-rewrite — refuse loudly,
-    // INSERT the new rows instead
-    require(identityColumns(ledgerDir).isEmpty,
-      "MERGE into a table with GENERATED ALWAYS AS IDENTITY columns is " +
-        "not supported — INSERT new rows (identity allocates there) and " +
-        "UPDATE/DELETE existing ones")
-    val snap = currentSnapshot(spark, ledgerDir)
-    if (source.isEmpty) return snap // empty source: no snapshot, no marker
-    val next = snap + 1
-    val liveActs = readLedger(spark, ledgerDir)
-      .map(l => liveActionsAt(l, snap).localCheckpoint())
-    val index = liveActs.map(new LedgerFileIndex(_)).filterNot(_.isEmpty)
-    val targetSchema = index.map(tableScan(spark, ledgerDir, _, snap).schema)
-    val baseCols: Seq[String] =
-      targetSchema.map(_.fieldNames.toSeq).getOrElse(source.columns.toSeq)
-    def dtypeOf(n: String): org.apache.spark.sql.types.DataType =
-      targetSchema.flatMap(_.find(_.name == n)).map(_.dataType)
-        .getOrElse(source.schema(n).dataType)
-    // absent GENERATED columns compute from the conformed row (the Delta
-    // merge fill, r15) — the COW conform's twin
-    val genExprsMor: Map[String, String] = generatedColumns(ledgerDir).toMap
-    def conform(df: DataFrame): DataFrame = {
-      val base = df.select(baseCols.map(n =>
-        if (df.columns.contains(n)) col(n)
-        else lit(null).cast(dtypeOf(n)).as(n)): _*)
-      val fills = baseCols.filter(n =>
-        !df.columns.contains(n) && genExprsMor.contains(n))
-      if (fills.isEmpty) base
-      else base.select(baseCols.map(n =>
-        if (fills.contains(n)) expr(genExprsMor(n)).cast(dtypeOf(n)).as(n)
-        else col(n)): _*)
-    }
-    val srcKeys = source.select(keys.map(col): _*).distinct()
+    val c = new RowCommit(spark, ledgerDir, genRoot, genSuffix)
+    val m = new MergePrep(spark, ledgerDir, c, source, keys, deleteWhen,
+      evolveSchema = false)
+    if (source.isEmpty) return c.snap // empty source: no snapshot, no marker
     // DV-applied match scan WITH row identity: the (file, position) rows
     // this merge supersedes. The NARROW identity projection (key, file,
     // pos — match-sized, exactly what the sidecar holds) materializes
@@ -3329,12 +3174,12 @@ object Lake {
     // literal predicate, so on a key-clustered table manifest min/max
     // stats prune the match scan to the batch's file footprint instead
     // of the whole table (see keyRangeScope).
-    val matched: Option[DataFrame] = index.map { idx =>
-      applyDvsAt(spark, ledgerDir, snap,
-          keyRangeScope(tableScan(spark, ledgerDir, idx, snap,
-            keepPos = true), srcKeys, keys),
+    val matched: Option[DataFrame] = c.index.map { idx =>
+      applyDvsAt(spark, ledgerDir, c.snap,
+          keyRangeScope(tableScan(spark, ledgerDir, idx, c.snap,
+            keepPos = true), m.srcKeys, keys),
           keepPos = true)
-        .join(srcKeys, keys, "left_semi")
+        .join(m.srcKeys, keys, "left_semi")
     }
     val matchedIds: Option[DataFrame] = matched.map(
       _.select(keys.map(col) ++ Seq(col("__graft_fp"), col("__graft_pos")): _*)
@@ -3342,81 +3187,14 @@ object Lake {
     val anyMatches = matchedIds.exists(!_.isEmpty)
     val matchedKeys: Option[DataFrame] =
       if (anyMatches) matchedIds.map(_.select(keys.map(col): _*).distinct()) else None
-    // deleteWhen governs MATCHED source rows only (SQL MERGE semantics)
-    val srcLive = (deleteWhen, matchedKeys) match {
-      case (Some(c), Some(mk)) =>
-        source.join(mk.withColumn("_matched", lit(true)), keys, "left")
-          .filter(!(coalesce(col("_matched"), lit(false))
-            && coalesce(c, lit(false))))
-          .drop("_matched")
-      case _ => source
-    }
-    // standing CHECK constraints gate the rows about to land — checked
-    // BEFORE the reservation (read-only; a violating merge never even
-    // contends for the id)
-    enforceConstraints(spark, ledgerDir, conform(srcLive))
-    reserving(spark, ledgerDir, next) {
-      // `genSuffix` tags the generation DIRECTORY (e.g. a streaming
-      // sink's batch id) so the commit is PROBEABLE from the ledger's
-      // paths alone — the exactly-once replay marker UpsertLoop keys on
-      val genDir = s"$genRoot/gen-$next" +
-        genSuffix.map("-" + _).getOrElse("")
-      if (changeFeed) {
-        def tag(df: DataFrame, t: String): DataFrame =
-          conform(df).withColumn("_change_type", lit(t))
-        val changes = matchedKeys match {
-          case Some(mk) =>
-            val liveKeys = srcLive.select(keys.map(col): _*).distinct()
-            val updKeys = mk.join(liveKeys, keys, "left_semi")
-            val delKeys = mk.join(liveKeys, keys, "left_anti")
-            val pre = matched.get.drop("__graft_fp", "__graft_pos")
-            tag(pre.join(delKeys, keys, "left_semi"), "delete")
-              .unionByName(tag(pre.join(updKeys, keys, "left_semi"),
-                "update_preimage"))
-              .unionByName(tag(srcLive.join(mk, keys, "left_semi"),
-                "update_postimage"))
-              .unionByName(tag(srcLive.join(mk, keys, "left_anti"),
-                "insert"))
-          case None => tag(srcLive, "insert")
-        }
-        writeGenDir(spark,
-          changes.withColumn("_commit_snapshot", lit(next)),
-          s"$genDir/changes")
-      }
-      if (anyMatches)
-        writeGenDir(spark,
-          matchedIds.get
-            .select(col("__graft_fp").as("dpath"), col("__graft_pos").as("pos"))
-            .withColumn("dv_snap", lit(next)),
-          s"$genDir/dv")
-      writeGenDir(spark, conform(srcLive), s"$genDir/delta")
-      // delta files inherit the table's skipping contract (the COW
-      // merge/delete discipline); dv sidecars are positional metadata —
-      // no stats (they are never live-set scanned)
-      val (mStatsCols, mBloomCols) = liveActs match {
-        case Some(acts) => liveStatsContract(acts, renameLog(ledgerDir))
-        case None => (Nil, Nil)
-      }
-      val deltaAdds = addsWithStats(spark, fileAdds(spark, s"$genDir/delta"),
-          s"$genDir/delta", mStatsCols, mBloomCols)
-        .withColumn("op", lit("add"))
-        .withColumn("snapshot_op", lit("merge"))
-      val adds0 = withLedgerStats(deltaAdds)
-      val adds1 =
-        if (anyMatches)
-          adds0.unionByName(withLedgerStats(fileAdds(spark, s"$genDir/dv")
-            .withColumn("op", lit("dv"))
-            .withColumn("snapshot_op", lit("mor-merge"))))
-        else adds0
-      val actions =
-        if (changeFeed)
-          adds1.unionByName(withLedgerStats(
-            fileAdds(spark, s"$genDir/changes")
-              .withColumn("op", lit("cdc"))
-              .withColumn("snapshot_op", lit("mor-merge"))))
-        else adds1
-      appendSnapshot(spark, ledgerDir, next, actions, preReserved = true)
-      next
+    val mergeOut = m.outputs(matchedKeys,
+      matched.get.drop("__graft_fp", "__graft_pos"), changeFeed)
+    // dv sidecars are positional metadata — no stats (they are never
+    // live-set scanned)
+    c.commit(changeOp = "mor-merge") { out =>
+      mergeOut(out)
+      if (anyMatches) out("dv", matchedIds.get.select(
+        col("__graft_fp").as("dpath"), col("__graft_pos").as("pos")))
     }
   }
 
@@ -3490,14 +3268,9 @@ object Lake {
     val adds = adds0.unionByName(dvReAdds)
       .withColumn("op", lit("add"))
     checkHorizon(ledger, adds, s"restore($toSnapshot)")
-    val removes = now.join(target, Seq("path"), "left_anti")
-      .select(col("path"))
-      .withColumn("size", lit(null).cast("long"))
-      .withColumn("adler32", lit(null).cast("long"))
-      .withColumn("stats", lit(null).cast(StatsType))
-      .withColumn("op", lit("remove"))
-    val baseActions = adds.unionByName(removes)
-      .withColumn("snapshot_op", lit("restore"))
+    val baseActions = adds.withColumn("snapshot_op", lit("restore"))
+      .unionByName(removeRows(now.join(target, Seq("path"), "left_anti"),
+        "restore"))
     if (baseActions.isEmpty) return cur // live sets already equal
     val next = cur + 1
     // PRE-target vectors of re-added files must STAY applied (they were
@@ -3518,9 +3291,8 @@ object Lake {
         case Some(rows) =>
           val dvDir = s"$ledgerDir/_dv/gen-$next"
           writeGenDir(spark, rows.withColumn("dv_snap", lit(next)), dvDir)
-          baseActions.unionByName(withLedgerStats(fileAdds(spark, dvDir)
-            .withColumn("op", lit("dv"))
-            .withColumn("snapshot_op", lit("restore"))))
+          baseActions.unionByName(
+            addsTagged(spark, Seq((dvDir, "dv", "restore")), Nil, Nil))
         case None => baseActions
       }
       // reads at/after the restore must resolve the RESTORED state's

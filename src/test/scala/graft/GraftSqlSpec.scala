@@ -1420,4 +1420,23 @@ class GraftSqlSpec extends GraftSpec {
       "SELECT count(*) AS n FROM nnc").head().getLong(0) == 2L)
     GraftSql.unbind(spark, "nnc")
   }
+
+  test("an insert-only MERGE whose source keys all exist commits " +
+      "nothing, and the next UPDATE still lands") {
+    val (t, _) = fixture("nat_noop")
+    val head = t.snapshot
+    val sp = spark; import sp.implicits._
+    Seq((7L, "MUST_NOT_LAND", 2L, "x"))
+      .toDF("n_nationkey", "n_name", "n_regionkey", "n_comment")
+      .createOrReplaceTempView("nat_noop_src")
+    val res = t.sql("MERGE INTO nat_noop USING nat_noop_src ON " +
+      "nat_noop.n_nationkey = nat_noop_src.n_nationkey " +
+      "WHEN NOT MATCHED THEN INSERT *")
+    assert(res.head().getLong(0) == head)
+    assert(t.snapshot == head)
+    assert(Lake.orphanedCommits(spark, t.ledgerDir).isEmpty)
+    assert(t.sql("UPDATE nat_noop SET n_name = 'Y' WHERE " +
+      "n_nationkey = 7").head().getLong(0) == head + 1)
+    assert(t.read().filter(col("n_name") === "MUST_NOT_LAND").count() == 0)
+  }
 }

@@ -415,4 +415,27 @@ class MergeSpec extends GraftSpec {
     assert(folded.select("c_custkey").collect().map(_.getLong(0)).toSet
       == want)
   }
+
+  test("a merge with nothing to apply commits nothing and leaves the " +
+      "next id free, on a populated and on an empty table") {
+    val (landing, ledger, gen) = fresh()
+    val snap0 = landCustomers(landing, ledger)
+    val cust = spark.read.parquet(s"$sf/customer.parquet")
+    assert(Lake.mergeInto(spark, ledger, gen, cust.limit(0), "c_custkey")
+      == snap0)
+    assert(Lake.currentSnapshot(spark, ledger) == snap0)
+    assert(Lake.orphanedCommits(spark, ledger).isEmpty,
+      "an empty merge must not keep its reservation")
+    assert(Lake.deleteWhere(spark, ledger, gen, col("c_custkey") === 1)
+      == snap0 + 1)
+
+    val (_, ledger2, gen2) = fresh()
+    assert(Lake.mergeInto(spark, ledger2, gen2, cust.limit(0), "c_custkey")
+      == 0L)
+    assert(Lake.currentSnapshot(spark, ledger2) == 0L)
+    assert(Lake.orphanedCommits(spark, ledger2).isEmpty)
+    val snap = Lake.mergeInto(spark, ledger2, gen2, cust.limit(10),
+      "c_custkey")
+    assert(snap == 1L && Lake.readAt(spark, ledger2, snap).count() == 10)
+  }
 }

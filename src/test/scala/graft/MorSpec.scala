@@ -134,6 +134,33 @@ class MorSpec extends GraftSpec {
     assert(Lake.readAt(spark, ledger, preCompact).count() ==
       total - mach + 1 - auto - house,
       "pre-compaction snapshot reads apply the then-active vectors")
+
+    // UPDATE of a disjoint predicate over the same (compacted) file: the
+    // carry rewrite must not resurrect the MOR-deleted rows
+    val live = total - mach + 1 - auto - house
+    Lake.deleteWhereMor(spark, ledger, gen,
+      col("c_mktsegment") === "FURNITURE")
+    val furn = head.filter(col("c_mktsegment") === "FURNITURE").count()
+    val updSnap = Lake.updateWhere(spark, ledger, gen,
+      col("c_mktsegment") === "BUILDING",
+      Seq("c_acctbal" -> (col("c_acctbal") + 1)))
+    val afterUpd = Lake.readAt(spark, ledger, updSnap)
+    assert(furn > 0 && afterUpd.count() == live - furn)
+    assert(afterUpd.filter(col("c_mktsegment") === "FURNITURE").count() == 0)
+    assert(Lake.dvRows(spark, ledger) == 0)
+
+    // replaceWhere of the even keys: the carried odd rows must not
+    // resurrect the MOR-deleted row either
+    Lake.deleteWhereMor(spark, ledger, gen, col("c_custkey") === deletedKey)
+    val evens = Lake.readAt(spark, ledger, Lake.currentSnapshot(spark, ledger))
+      .filter(col("c_custkey") % 2 === 0)
+      .withColumn("c_acctbal", col("c_acctbal") + 2)
+    val owSnap = Lake.overwriteWhere(spark, ledger, gen,
+      col("c_custkey") % 2 === 0, evens)
+    val afterOw = Lake.readAt(spark, ledger, owSnap)
+    assert(afterOw.count() == live - furn - 1)
+    assert(afterOw.filter(col("c_custkey") === deletedKey).count() == 0)
+    assert(Lake.dvRows(spark, ledger) == 0)
   }
 
   test("restore revokes post-target vectors and keeps pre-target ones (compensating sidecar)") {
