@@ -2,28 +2,58 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.GraftShim
-import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression}
+import org.apache.spark.sql.catalyst.analysis._
+import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression, Literal}
+import org.apache.spark.sql.catalyst.parser.ParseException
 import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField,
+  StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
-/** SQL DML surface for the lake — the gap a reference user hits first:
+/** SQL surface for the lake — the gap a reference user hits first:
   * [[GraftTable.createOrReplaceTempView]] gives plain `spark.sql` READS
   * over a lake table, but every table format the lake emulates (Delta,
-  * Iceberg) leads with SQL DML as the primary mutation surface. This
-  * routes `MERGE INTO` / `UPDATE` / `DELETE FROM` statement TEXT to the
-  * facade's [[Lake.mergeInto]] / [[Lake.updateWhere]] /
-  * [[Lake.deleteWhere]], and rewrites `VERSION AS OF` / `TIMESTAMP AS
-  * OF` table suffixes in reads to snapshot-pinned time-travel views.
+  * Iceberg) leads with SQL DML and DDL as the primary mutation surface.
+  * This object INTERPRETS statements against the ledger instead of a
+  * catalog table.
   *
-  * Spark-first on purpose: the DML text is parsed by SPARK'S OWN parser
-  * (`sqlParser.parsePlan` — `MergeIntoTable` / `UpdateTable` /
-  * `DeleteFromTable` are the standard DSv2 logical commands), so the
-  * accepted syntax is exactly Spark SQL's; this object only INTERPRETS
-  * the parsed command against the ledger instead of a catalog table.
-  * Sources and subqueries inside a MERGE resolve through the session's
-  * temp views via the normal analyzer — arbitrary `USING (SELECT …)`
-  * sources work unmodified.
+  * Spark-first on purpose: each statement is parsed ONCE by Spark's own
+  * parser (`sqlParser.parsePlan`) and routed on the plan node it yields —
+  * `MergeIntoTable`, `UpdateTable`, `DeleteFromTable`,
+  * `InsertIntoStatement`, `AddColumns`, `RenameColumn`, `DropColumns`,
+  * `AlterColumns` (SET/DROP NOT NULL), `AddCheckConstraint`,
+  * `DropConstraint`, `TruncateTable`, `CreateTable`,
+  * `CreateTableAsSelect`/`ReplaceTableAsSelect` (with a LOCATION),
+  * `CreateView`/`DropView`, `ShowTables`, `ShowCreateTable`,
+  * `AnalyzeColumn` and `DescribeRelation` — so the accepted syntax is
+  * exactly Spark SQL's. Any other plan runs as a plain Spark query.
+  * Sources and subqueries resolve through the session's temp views via
+  * the normal analyzer. No statement text is ever rewritten.
+  *
+  * Regexes remain only for verbs Spark's grammar rejects or mis-parses,
+  * each tried before the parse: `DESCRIBE HISTORY` / `DESCRIBE DETAIL`
+  * (Spark reads both as a column DESCRIBE), `OPTIMIZE`, `VACUUM`,
+  * `RESTORE … TO VERSION|TIMESTAMP AS OF`, `CREATE TABLE … SHALLOW
+  * CLONE`, `COPY INTO`, `COPY … TO`, `INSERT OVERWRITE t WHERE` (and its
+  * Delta spelling `INSERT INTO t REPLACE WHERE`), `UPDATE … FROM`,
+  * `DELETE … USING` and `ALTER COLUMN … [SET DATA] TYPE`. A verb with any
+  * spelling Spark rejects keeps all its spellings on its regex, so each
+  * verb has exactly one route. QUALIFY (also absent from Spark's grammar)
+  * is split off at top level; its base SELECT and ORDER BY/LIMIT tail go
+  * through the parser.
+  *
+  * Reads: one substitution over the parsed plan (subquery expressions
+  * and CTE bodies included) replaces the nodes that name a BOUND table
+  * beyond its current rows with the frame they denote, aliased to the
+  * name: `t VERSION AS OF n` / `t TIMESTAMP AS OF '…'` (time travel),
+  * the metadata tables `t.files`, `t.history`, `t.tags`,
+  * `t.constraints` and the full change feed `t.changes` (the Iceberg
+  * read surface — the suffixes are reserved on bound names), and
+  * `table_changes('t', n)` (the Delta CDC function, INCLUSIVE starting
+  * version — [[Lake.readChanges]] is exclusive, hence n − 1). A plain
+  * bound name resolves through its bound temp view.
   *
   * Supported DML surface (anything else raises with this list):
   *  - `MERGE INTO t USING src ON t.k = src.k [AND t.k2 = src.k2 …]`
@@ -44,43 +74,28 @@ import org.apache.spark.sql.functions._
   *    SELECT …` → [[Lake.overwriteWith]] (ONE atomic replace snapshot —
   *    never a DELETE+INSERT window); `TRUNCATE TABLE t` → the empty
   *    overwrite (recorded schema keeps the table readable/insertable);
-  *    `INSERT OVERWRITE t WHERE p SELECT …` (also the Delta spelling
-  *    `INSERT INTO t REPLACE WHERE p SELECT …`) → [[Lake.overwriteWhere]]
+  *    `INSERT OVERWRITE t WHERE p SELECT …` → [[Lake.overwriteWhere]]
   *    (scoped replace bounded by the predicate's file footprint)
-  *  - `ALTER TABLE t ADD COLUMN[S] (c TYPE, …)` → [[Lake.addColumns]]
-  *    (explicit widening evolution: a KB-scale schema-recording commit,
-  *    zero data files touched; pre-evolution rows read null — time
-  *    travel below the evolution keeps the old shape)
-  *  - `ALTER TABLE t ADD CONSTRAINT name CHECK (expr)` /
-  *    `ALTER TABLE t DROP CONSTRAINT name` → the persisted CHECK
-  *    constraint surface ([[Lake.addConstraint]]); `DESCRIBE HISTORY t`
-  *    (the Delta verb) → [[Lake.history]]; `RESTORE [TABLE] t TO
-  *    VERSION AS OF n` → [[Lake.restore]] (rollback lands as a NEW
-  *    commit, history preserved); `DESCRIBE DETAIL t` → one KB
-  *    metadata row off the ledger (name/location/snapshot/numFiles/
-  *    sizeInBytes — zero data reads).
-  *  - METADATA TABLES (the Iceberg read surface): `t.files`,
-  *    `t.history`, `t.tags`, `t.constraints` anywhere a relation can
-  *    appear — rewritten to views over the ledger-derived frames (KB
-  *    metadata, zero data-file reads). The suffixes are reserved on
-  *    bound names (Iceberg's own shadowing caveat).
-  *  - CDC AS SQL: `table_changes('t', since)` (the Delta function) and
-  *    the full-feed relation `t.changes` → views over
-  *    [[Lake.readChanges]] — a downstream mirror folds purely in SQL.
+  *  - `ALTER TABLE t ADD COLUMN[S] …` → [[Lake.addColumns]] (a KB-scale
+  *    schema-recording commit, zero data files touched; pre-evolution
+  *    rows read null), `RENAME COLUMN`, `DROP COLUMN[S]`, `ALTER COLUMN
+  *    c TYPE t` (widening), `ALTER COLUMN c SET|DROP NOT NULL`, `ADD
+  *    CONSTRAINT name CHECK (expr)` / `DROP CONSTRAINT name`
+  *  - `DESCRIBE [HISTORY | DETAIL] t`, `SHOW TABLES`, `SHOW CREATE TABLE
+  *    t`, `ANALYZE TABLE t COMPUTE STATISTICS FOR COLUMNS …`, `RESTORE`
+  *    (rollback lands as a NEW commit, history preserved)
   *  - `OPTIMIZE t [WHERE c] [ZORDER [BY (c1, c2)]]` → scoped compaction
-  *    ([[GraftTable.compact]]; WHERE rewrites only the predicate's file
-  *    footprint, ZORDER clusters the rewrite on the Morton interleave);
-  *    `VACUUM t [RETAIN n HOURS]` → orphan gen-file GC
-  *    ([[GraftTable.removeOrphans]], default 168 h — the Delta default).
-  *  - `CREATE TABLE name LOCATION 'dir' AS SELECT …` — materialize a
-  *    query as a NEW ledger-backed lake table at `dir` (landing write →
-  *    the normal ingest gates → bound for reads and DML under `name`).
-  *    The full lifecycle is then SQL end-to-end: CREATE → INSERT/MERGE
-  *    → ALTER → OPTIMIZE → VACUUM.
+  *    ([[GraftTable.compact]]); `VACUUM t [RETAIN n HOURS] [DRY RUN]` →
+  *    orphan gen-file GC (default 168 h — the Delta default).
+  *  - `CREATE TABLE name (cols) LOCATION 'dir'` (empty declared table;
+  *    columns may be `GENERATED ALWAYS AS (expr)`, `GENERATED ALWAYS AS
+  *    IDENTITY` or carry a `DEFAULT`), `CREATE [OR REPLACE] TABLE name
+  *    [LOCATION 'dir'] AS SELECT …` — a NEW ledger-backed lake table at
+  *    `dir`, bound under `name`; the full lifecycle is then SQL
+  *    end-to-end: CREATE → INSERT/MERGE → ALTER → OPTIMIZE → VACUUM.
   *  - `COPY INTO t FROM 'dir' [FILEFORMAT = PARQUET]` — idempotent bulk
-  *    file ingest (the Delta verb): already-ledgered paths skip by file
-  *    identity, torn/garbage files quarantine, CHECK constraints gate
-  *    the batch — the retry-safe landing-zone load, as SQL.
+  *    file ingest (the Delta verb); `COPY (query) | t TO 'dir' [(FORMAT
+  *    PARQUET | CSV | JSONL)]` — the export half.
   * Qualified column references (`t.col`, `src.col`) are resolved by NAME
   * (qualifiers stripped — the lake table is a single flat relation; a
   * MERGE delete condition must reference source columns, standard MERGE
@@ -99,7 +114,7 @@ object GraftSql {
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), GraftTable]()
 
   // ---- logical views (r14): CREATE [OR REPLACE] VIEW name AS SELECT …
-  // over bound tables. A view stores its TEXT and re-registers
+  // over bound tables. A view stores its parsed QUERY and re-registers
   // (re-analyzes) after every DML re-pin, so it always reads the
   // CURRENT table state — the same discipline as the bound tables' own
   // temp-view re-pinning (a Spark temp view captures the plan at
@@ -108,10 +123,10 @@ object GraftSql {
   // dependencies-first (SQL requires a view's dependencies to exist at
   // creation, and OR REPLACE keeps the original slot).
   private val viewRegistry = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(SparkSession, String), String]())
+    new java.util.LinkedHashMap[(SparkSession, String), LogicalPlan]())
 
-  private def viewText(spark: SparkSession, name: String): Option[String] =
-    Option(viewRegistry.get((spark, name)))
+  private def isView(spark: SparkSession, name: String): Boolean =
+    viewRegistry.containsKey((spark, name))
 
   private def refreshViews(spark: SparkSession): Unit = {
     import scala.jdk.CollectionConverters._
@@ -120,8 +135,7 @@ object GraftSql {
         case ((s, n), q) if s eq spark => (n, q) }
     }
     mine.foreach { case (n, q) =>
-      try spark.sql(rewriteMetaTables(spark, rewriteTimeTravel(spark, q)))
-        .createOrReplaceTempView(n)
+      try query(spark, q).createOrReplaceTempView(n)
       catch { case _: Exception =>
         // a view broken by a later DDL (dropped dependency, dropped
         // column) must not fail UNRELATED statements' re-pins — drop its
@@ -135,7 +149,7 @@ object GraftSql {
   /** Bind `name` for both reads (a temp view over the current snapshot)
     * and DML routing in `table`'s session. Re-binding replaces. */
   def bind(name: String, table: GraftTable): Unit = {
-    require(viewText(table.spark, name).isEmpty,
+    require(!isView(table.spark, name),
       s"'$name' is a view in this session — DROP VIEW it first (the " +
         "view refresh would shadow the table binding)")
     registry.put((table.spark, name), table)
@@ -151,6 +165,13 @@ object GraftSql {
     val t = registry.get((spark, name))
     if (t != null && t.snapshot > 0) t.read().createOrReplaceTempView(name)
     refreshViews(spark)
+  }
+
+  /** Re-pin `name` after a commit; the statement's one-row result. */
+  private def repinned(spark: SparkSession, name: String,
+      snap: Long): DataFrame = {
+    refresh(spark, name)
+    snapFrame(spark, snap)
   }
 
   private def boundNames(spark: SparkSession): Seq[String] = {
@@ -200,53 +221,19 @@ object GraftSql {
     out.result().map(_.trim).filter(_.nonEmpty)
   }
 
-  private val AddConstraintRe =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+ADD\s+CONSTRAINT\s+(\w+)\s+CHECK\s*\((.+)\)\s*$""".r
-  private val DropConstraintRe =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+DROP\s+CONSTRAINT\s+(\w+)\s*$""".r
-  // NOT NULL rides the CHECK gate as the auto-constraint nn_<col> (the
-  // GENERATED discipline): SET refuses when current rows violate, every
-  // writer then proves it, DROP removes the rider
-  private val NotNullRe =
-    ("""(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+ALTER\s+COLUMN\s+(\w+)\s+""" +
-      """(SET|DROP)\s+NOT\s+NULL\s*$""").r
-  private val AddColumnsRe =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+ADD\s+COLUMNS?\s*\((.+)\)\s*$""".r
-  // the type may carry parenthesized args (DECIMAL(10,2), VARCHAR(20));
-  // commas only INSIDE those parens — a top-level comma means a list and
-  // must use the ADD COLUMNS (…) form
-  private val AddColumnBareRe =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+ADD\s+COLUMN\s+(\w+\s+[^,()]+(?:\([\w\s,]*\))?)\s*$""".r
-  // RENAME COLUMN rides Delta-style column-mapping ids (r15): the field
-  // keeps its stable id across the rename, and reads resolve pre-rename
-  // files' physical names through their epoch's schema recording
-  private val RenameColumnRe =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+RENAME\s+COLUMN\s+(\w+)\s+TO\s+(\w+)\s*$""".r
+  // ---- the verbs Spark's grammar rejects or mis-parses (tried first)
+
   // ALTER COLUMN TYPE widening (the Delta type-widening contract, r16):
-  // a KB metadata commit; pre-widen files cast up per epoch on read
+  // a KB metadata commit; pre-widen files cast up per epoch on read.
+  // Spark parses `TYPE t` but not the `SET DATA TYPE t` spelling.
   private val AlterTypeRe =
     ("""(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+ALTER\s+COLUMN\s+(\w+)\s+""" +
       """(?:SET\s+DATA\s+)?TYPE\s+([\w]+(?:\([\d\s,]*\))?)\s*$""").r
-  private val DropColumnsRe =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+DROP\s+COLUMNS?\s*\(?\s*([\w\s,]+?)\s*\)?\s*$""".r
   private val DescribeHistoryRe =
     """(?is)^\s*DESC(?:RIBE)?\s+HISTORY\s+(\w+)\s*$""".r
   private val OptimizeRe =
     ("""(?is)^\s*OPTIMIZE\s+(\w+)(?:\s+WHERE\s+(.+?))?""" +
       """(?:\s+(ZORDER)(?:\s+BY\s*\(([\w\s,]+)\))?)?\s*$""").r
-  private val CtasRe =
-    """(?is)^\s*CREATE\s+TABLE\s+(\w+)\s+LOCATION\s+'([^']+)'\s+AS\s+(SELECT\b.+)$""".r
-
-  // column-list CREATE of an EMPTY table: schema-only metadata commit
-  // (no AS SELECT — disjoint from CtasRe by construction)
-  private val CreateColsRe =
-    """(?is)^\s*CREATE\s+TABLE\s+(\w+)\s*\((.+)\)\s+LOCATION\s+'([^']+)'\s*$""".r
-  // CREATE OR REPLACE: on a bound table, ONE atomic overwrite snapshot
-  // (content replace, history preserved — time travel still sees the old
-  // rows); on an unbound name, plain CTAS (LOCATION then required)
-  private val CtasReplaceRe =
-    ("""(?is)^\s*CREATE\s+OR\s+REPLACE\s+TABLE\s+(\w+)""" +
-      """(?:\s+LOCATION\s+'([^']+)')?\s+AS\s+(SELECT\b.+)$""").r
   private val RestoreTsRe =
     ("""(?is)^\s*RESTORE\s+(?:TABLE\s+)?(\w+)\s+TO\s+TIMESTAMP\s+AS\s+OF""" +
       """\s+'([^']+)'\s*$""").r
@@ -262,17 +249,6 @@ object GraftSql {
     """(?is)^\s*RESTORE\s+(?:TABLE\s+)?(\w+)\s+TO\s+VERSION\s+AS\s+OF\s+(\d+)\s*$""".r
   private val DescribeDetailRe =
     """(?is)^\s*DESC(?:RIBE)?\s+DETAIL\s+(\w+)\s*$""".r
-  private val TruncateRe =
-    """(?is)^\s*TRUNCATE\s+TABLE\s+(\w+)\s*$""".r
-  private val DescribeBareRe =
-    """(?is)^\s*DESC(?:RIBE)?\s+(?:TABLE\s+)?(\w+)\s*$""".r
-  private val ShowTablesRe =
-    """(?is)^\s*SHOW\s+TABLES\s*$""".r
-  private val CreateViewRe =
-    ("""(?is)^\s*CREATE\s+(OR\s+REPLACE\s+)?VIEW\s+(\w+)\s+AS\s+""" +
-      """(SELECT\b[\s\S]+)$""").r
-  private val DropViewRe =
-    """(?is)^\s*DROP\s+VIEW\s+(IF\s+EXISTS\s+)?(\w+)\s*$""".r
   // idempotent bulk file ingest (the Delta verb): files already ledgered
   // are skipped by path identity, so re-running the same COPY INTO is a
   // no-op — the retry-safe landing-zone load
@@ -284,11 +260,6 @@ object GraftSql {
   private val CopyToRe =
     ("""(?is)^\s*COPY\s+(?:\((.+)\)|(\w+))\s+TO\s+'([^']+)'""" +
       """(?:\s*\(\s*FORMAT\s+(\w+)\s*\))?\s*$""").r
-  private val ShowCreateRe =
-    """(?is)^\s*SHOW\s+CREATE\s+TABLE\s+(\w+)\s*$""".r
-  private val AnalyzeRe =
-    ("""(?is)^\s*ANALYZE\s+TABLE\s+(\w+)\s+COMPUTE\s+STATISTICS""" +
-      """\s+FOR\s+COLUMNS\s+([\w\s,]+?)\s*$""").r
   // scoped overwrite, both spellings: `INSERT OVERWRITE t WHERE p SELECT…`
   // and the Delta form `INSERT INTO t REPLACE WHERE p SELECT…`; the
   // predicate runs to the first top-level SELECT (subquery predicates are
@@ -296,6 +267,20 @@ object GraftSql {
   private val ReplaceWhereRe =
     ("""(?is)^\s*INSERT\s+(?:OVERWRITE\s+(\w+)\s+WHERE""" +
       """|INTO\s+(\w+)\s+REPLACE\s+WHERE)\s+(.+?)\s*(SELECT\b.+)$""").r
+  // ---- join-sourced DML (r14): `UPDATE t SET … FROM s WHERE …` and
+  // `DELETE FROM t USING s WHERE …` — the statements a migrating
+  // warehouse user types next after MERGE. Spark's grammar has neither;
+  // both assemble a matched-arm column-list MERGE (Spark's own parser
+  // then handles the SET list, source subqueries, and aliases), and the
+  // WHERE splits into same-name key equalities (the merge keys) and a
+  // RESIDUAL that becomes the WHEN MATCHED condition — exactly
+  // equivalent for matched-only arms, and evaluated against the
+  // pre-image PAIR, so cross-name equalities (t.k = s.kk) and
+  // target-referencing predicates all work as residuals.
+  private val UpdateHeadRe =
+    """(?is)^\s*UPDATE\s+(\w+)\s+SET\s+([\s\S]+)$""".r
+  private val DeleteUsingRe =
+    """(?is)^\s*DELETE\s+FROM\s+(\w+)\s+USING\s+([\s\S]+)$""".r
 
   /** Default OPTIMIZE bin-pack target (rows per rewritten file). */
   val OptimizeTargetRows = 1000000L
@@ -309,127 +294,12 @@ object GraftSql {
   }
 
   private def one(spark: SparkSession, stmt: String): DataFrame = stmt match {
-    case AddConstraintRe(name, cname, expr) =>
-      import spark.implicits._
-      lookupName(spark, name).addConstraint(cname, expr)
-      Seq((cname, "added")).toDF("constraint", "status")
-    case NotNullRe(name, colName, verb) =>
-      import spark.implicits._
-      val t = lookupName(spark, name)
-      // resolve the user-typed name to the schema's CANONICAL field name
-      // and key the auto-constraint by LOWERCASE — SET Balance then
-      // balance DROP must hit the same nn_ constraint, and DESCRIBE's
-      // nullable display (which lowercases) must agree with both paths
-      val canon = t.read().columns.find(_.equalsIgnoreCase(colName))
-        .getOrElse(sys.error(s"no such column: $colName"))
-      if (verb.equalsIgnoreCase("SET")) {
-        t.addConstraint(s"nn_${canon.toLowerCase}", s"$canon IS NOT NULL")
-        Seq((canon, "NOT NULL")).toDF("col_name", "constraint")
-      } else {
-        // pre-normalization tables may carry nn_<AsTyped> (the key was
-        // the user's casing before the lowercase rule landed) — fall
-        // back to a case-insensitive sweep over standing nn_* riders so
-        // the old constraint doesn't become undroppable (r16 advisor)
-        val dropped =
-          Lake.dropConstraint(t.ledgerDir, s"nn_${canon.toLowerCase}") ||
-            Lake.constraints(t.ledgerDir).map(_._1)
-              .filter(_.equalsIgnoreCase(s"nn_$canon"))
-              .exists(Lake.dropConstraint(t.ledgerDir, _))
-        Seq((canon, if (dropped) "nullable" else "no nn constraint"))
-          .toDF("col_name", "constraint")
-      }
-    case DropConstraintRe(name, cname) =>
-      import spark.implicits._
-      val dropped = lookupName(spark, name).dropConstraint(cname)
-      Seq((cname, if (dropped) "dropped" else "absent"))
-        .toDF("constraint", "status")
-    case AddColumnsRe(name, colsDdl) =>
-      // explicit widening evolution: a KB-scale schema-recording commit
-      // (zero data files touched); old rows read null in the new columns
-      val t = lookupName(spark, name)
-      val s2 = t.addColumns(colsDdl)
-      refresh(spark, name)
-      snapFrame(spark, s2)
-    case AddColumnBareRe(name, colDdl) =>
-      val t = lookupName(spark, name)
-      val s2 = t.addColumns(colDdl)
-      refresh(spark, name)
-      snapFrame(spark, s2)
-    case RenameColumnRe(name, from, to) =>
-      // column-mapping ids (r15): the rename keeps the field's stable id
-      // and reads resolve pre-rename files through their epoch recording
-      // (Lake.renameColumn) — a KB metadata commit, no data file touched
-      val t = lookupName(spark, name)
-      val s2 = t.renameColumn(from, to)
-      refresh(spark, name)
-      snapFrame(spark, s2)
     case AlterTypeRe(name, colName, typeDdl) =>
       // type WIDENING (r16): a KB metadata commit; old files scan with
       // their epoch's physical type and cast up (Lake.alterColumnType;
       // narrowing/incompatible changes refuse)
-      val t = lookupName(spark, name)
-      val s2 = t.alterColumnType(colName, typeDdl)
-      refresh(spark, name)
-      snapFrame(spark, s2)
-    case DropColumnsRe(name, colList) =>
-      val t = lookupName(spark, name)
-      val s2 = t.dropColumns(
-        colList.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      refresh(spark, name)
-      snapFrame(spark, s2)
-    case DescribeBareRe(name) if registry.get((spark, name)) != null =>
-      // DESCRIBE t: the column listing off the table's resolved schema
-      // (recorded-schema path — zero data reads on recorded tables),
-      // plus the column-mapping id and the rename trail (r15): every
-      // FORMER name the field id bore, oldest first
-      import spark.implicits._
-      val t = lookupName(spark, name)
-      val renames = Lake.renameLog(t.ledgerDir)
-      val notNull = Lake.constraints(t.ledgerDir).collect {
-        case (cn, _) if cn.startsWith("nn_") =>
-          cn.stripPrefix("nn_").toLowerCase }.toSet
-      t.read().schema.fields.toSeq
-        .map { f =>
-          val id = Lake.fieldId(f)
-          val trail = id.map(i => renames.filter(_.id == i).map(_.from))
-            .getOrElse(Nil)
-          (f.name, f.dataType.simpleString,
-            if (f.nullable && !notNull(f.name.toLowerCase)) "YES" else "NO",
-            id.map(_.toString).orNull,
-            if (trail.isEmpty) null else trail.mkString(" -> "))
-        }
-        .toDF("col_name", "data_type", "nullable", "field_id",
-          "renamed_from")
-    case ShowTablesRe() =>
-      import spark.implicits._
-      import scala.jdk.CollectionConverters._
-      val views = viewRegistry.synchronized {
-        viewRegistry.asScala.keys.collect {
-          case (s, n) if s eq spark => n }.toSeq
-      }
-      (boundNames(spark).map((_, "table")) ++ views.map((_, "view")))
-        .sortBy(_._1).toDF("table_name", "kind")
-    case CreateViewRe(orRepl, name, query) =>
-      import spark.implicits._
-      require(registry.get((spark, name)) == null,
-        s"'$name' is SQL-bound to a table — a view cannot shadow it")
-      require(orRepl != null || viewText(spark, name).isEmpty,
-        s"view '$name' already exists — use CREATE OR REPLACE VIEW")
-      // validate NOW: unknown relations/columns fail at DDL time, and
-      // the registration doubles as the first refresh
-      spark.sql(rewriteMetaTables(spark, rewriteTimeTravel(spark, query)))
-        .createOrReplaceTempView(name)
-      viewRegistry.synchronized {
-        viewRegistry.put((spark, name), query): Unit }
-      Seq(name).toDF("view")
-    case DropViewRe(ifExists, name) =>
-      import spark.implicits._
-      val existed = viewRegistry.synchronized(
-        viewRegistry.remove((spark, name)) != null)
-      require(existed || ifExists != null,
-        s"view '$name' does not exist")
-      if (existed) { spark.catalog.dropTempView(name): Unit }
-      Seq(name).toDF("view")
+      repinned(spark, name,
+        lookupName(spark, name).alterColumnType(colName, typeDdl))
     case CopyIntoRe(name, path, fmt) =>
       import spark.implicits._
       if (fmt != null && !fmt.equalsIgnoreCase("PARQUET")) sys.error(
@@ -438,11 +308,10 @@ object GraftSql {
       val added = t.ingest(path)
       refresh(spark, name)
       Seq((added, t.snapshot)).toDF("files_loaded", "snapshot")
-    case CopyToRe(query, name, path, fmt0) =>
+    case CopyToRe(queryText, name, path, fmt0) =>
       import spark.implicits._
       val df =
-        if (query != null) spark.sql(
-          rewriteMetaTables(spark, rewriteTimeTravel(spark, query)))
+        if (queryText != null) query(spark, parse(spark, queryText))
         else lookupName(spark, name).read()
       val fmt = Option(fmt0).map(_.toLowerCase).getOrElse("parquet")
       val (write, readBack) = fmt match {
@@ -463,36 +332,13 @@ object GraftSql {
       // row count from the WRITTEN output — the returned number states
       // what landed on disk, not what the plan promised
       Seq((path, fmt, readBack().count())).toDF("path", "format", "rows")
-    case ShowCreateRe(name) =>
-      // re-creatable DDL off the resolved schema + standing constraints
-      // (zero data reads on recorded tables — the DESCRIBE discipline)
-      import spark.implicits._
-      val t = lookupName(spark, name)
-      val cols = t.read().schema.fields.map(f =>
-        s"  ${f.name} ${f.dataType.sql}${if (f.nullable) "" else " NOT NULL"}")
-      val ddl = s"CREATE TABLE $name (\n${cols.mkString(",\n")}\n) " +
-        s"USING graft LOCATION '${t.ledgerDir}'"
-      val cstr = Lake.constraints(t.ledgerDir).map { case (n, e) =>
-        s"ALTER TABLE $name ADD CONSTRAINT $n CHECK ($e)" }
-      (ddl +: cstr).toSeq.toDF("createtab_stmt")
-    case AnalyzeRe(name, colList) =>
-      // backfill per-file min/max stats for the named columns into the
-      // ledger (manifest data skipping picks them up on the next plan)
-      import spark.implicits._
-      val t = lookupName(spark, name)
-      val cols = colList.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      val snap = t.analyze(cols)
-      Seq((cols.mkString(","), snap)).toDF("analyzed_columns", "snapshot")
     case DescribeHistoryRe(name) => lookupName(spark, name).history()
     case RestoreRe(name, snap) =>
       // the Delta verb: roll the table back to a prior snapshot as a NEW
       // commit (history preserved; re-added files resurrect MOR-deleted
       // rows by the winning-add rule)
-      val t = lookupName(spark, name)
-      val s2 = t.restore(snap.toLong)
-      refresh(spark, name)
-      snapFrame(spark, s2)
-    case ReplaceWhereRe(n1, n2, predText, query) =>
+      repinned(spark, name, lookupName(spark, name).restore(snap.toLong))
+    case ReplaceWhereRe(n1, n2, predText, queryText) =>
       // scoped overwrite: replace exactly the predicate's region with the
       // SELECT's rows (one snapshot; footprint-bounded — see
       // Lake.overwriteWhere). Store-assignment coercion by position, the
@@ -516,8 +362,7 @@ object GraftSql {
               "SELECT); use the overwriteWhere API for subquery " +
               s"predicates (${e.getMessage})")
         }
-      val rows0 = spark.sql(
-        rewriteMetaTables(spark, rewriteTimeTravel(spark, query)))
+      val rows0 = query(spark, parse(spark, queryText))
       val tgt = t.read().schema
       require(rows0.columns.length == tgt.length,
         s"INSERT arity ${rows0.columns.length} != table arity ${tgt.length}")
@@ -525,16 +370,7 @@ object GraftSql {
         case (c, f) => bq(c).cast(f.dataType).as(f.name) }: _*)
       // Lake.overwriteWhere materializes the frame itself (r14) — no
       // second checkpoint here
-      val s2 = t.overwriteWhere(predCol, rows)
-      refresh(spark, name)
-      snapFrame(spark, s2)
-    case TruncateRe(name) =>
-      // atomic empty overwrite: one remove-everything snapshot; the
-      // recorded schema keeps the (empty) table readable and insertable
-      val t = lookupName(spark, name)
-      val s2 = t.overwrite(t.read().limit(0))
-      refresh(spark, name)
-      snapFrame(spark, s2)
+      repinned(spark, name, t.overwriteWhere(predCol, rows))
     case DescribeDetailRe(name) =>
       // the Delta verb: one KB metadata row off the ledger — zero data
       // reads (numFiles/sizeInBytes from the live file actions)
@@ -551,8 +387,7 @@ object GraftSql {
         where = Option(whereText).map(expr),
         zOrderBy = Option(zcols).toSeq.flatMap(
           _.split(",").map(_.trim).filter(_.nonEmpty)))
-      refresh(spark, name)
-      snapFrame(spark, snap)
+      repinned(spark, name, snap)
     case VacuumRe(name, hours, dry) =>
       import spark.implicits._
       val t = lookupName(spark, name)
@@ -581,125 +416,7 @@ object GraftSql {
       val t = lookupName(spark, name)
       val snap = Lake.resolveAsOf(spark, t.ledgerDir,
         java.sql.Timestamp.valueOf(ts))
-      val s2 = t.restore(snap)
-      refresh(spark, name)
-      snapFrame(spark, s2)
-    case CreateColsRe(name, colsDdl, dir) =>
-      // empty-table DDL: record the declared schema at snapshot 1 (one
-      // inert op="schema" row, zero data files — Lake.createTable); the
-      // table is immediately readable (0 rows, declared shape) and
-      // insertable. Column list parses via Spark's DDL grammar, so
-      // parameterized types (DECIMAL(10,2), ARRAY<...>) work. A column
-      // may carry `GENERATED ALWAYS AS (expr)` — recorded via
-      // Lake.addGeneratedColumn (auto-CHECK enforcement on every write;
-      // the column-list INSERT path computes omitted ones).
-      require(registry.get((spark, name)) == null,
-        s"table '$name' is already SQL-bound — CREATE declares a new table")
-      val GenRe =
-        """(?is)^\s*(\w+)\s+(.+?)\s+GENERATED\s+ALWAYS\s+AS\s*\((.+)\)\s*$""".r
-      // IDENTITY (Delta contract): system-allocated, strictly increasing,
-      // gaps allowed; ALWAYS — explicit writes refuse on every path
-      val IdRe =
-        ("""(?is)^\s*(\w+)\s+(.+?)\s+GENERATED\s+ALWAYS\s+AS\s+IDENTITY""" +
-          """(?:\s*\(\s*START\s+WITH\s+(-?\d+)\s+INCREMENT\s+BY\s+""" +
-          """(\d+)\s*\))?\s*$""").r
-      val DefRe =
-        """(?is)^\s*(\w+)\s+(.+?)\s+DEFAULT\s+(.+?)\s*$""".r
-      val (genCols, defCols, idCols, plainDdl) = {
-        val parts = splitTopLevel(colsDdl, ',')
-        val gens = Seq.newBuilder[(String, String)]
-        val defs = Seq.newBuilder[(String, String)]
-        val ids = Seq.newBuilder[(String, Long, Long)]
-        val ddl = parts.map {
-          case IdRe(n, tpe, st, inc) =>
-            // BIGINT only (r16 advisor): the allocator rides the
-            // partition-salted monotonically_increasing_id (>= 2^33 in
-            // partition 1+), so an INT identity overflows on any insert
-            // whose frame lands in 2+ partitions — refuse loudly rather
-            // than ship the untested narrow path (ANSI cast error at
-            // best, silent wraparound/duplicate ids with ANSI off)
-            require(tpe.trim.toLowerCase.matches("bigint|long"),
-              s"IDENTITY column '$n' must be BIGINT (got $tpe) — the " +
-                "partition-salted allocator exceeds Int range")
-            ids += ((n, Option(st).map(_.toLong).getOrElse(1L),
-              Option(inc).map(_.toLong).getOrElse(1L)))
-            s"$n $tpe"
-          case GenRe(n, tpe, ex) => gens += (n -> ex.trim); s"$n $tpe"
-          case DefRe(n, tpe, ex) => defs += (n -> ex.trim); s"$n $tpe"
-          case p => p
-        }
-        (gens.result(), defs.result(), ids.result(), ddl.mkString(", "))
-      }
-      val schema =
-        try org.apache.spark.sql.types.StructType.fromDDL(plainDdl)
-        catch { case e: Exception => sys.error(
-          s"CREATE TABLE column list '$colsDdl' does not parse: " +
-            e.getMessage) }
-      // the Delta rule: a generation expression may not reference
-      // another generated column (fill order would be ambiguous)
-      val genNames = genCols.map(_._1.toLowerCase).toSet
-      genCols.foreach { case (n, ex) =>
-        val refs = GraftShim.parseExpression(spark, ex).collect {
-          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-            a.nameParts.last.toLowerCase
-        }.toSet
-        val bad = refs.intersect(genNames - n.toLowerCase)
-        require(bad.isEmpty, s"generated column '$n' references generated " +
-          s"column(s) ${bad.mkString(", ")} — generation expressions may " +
-          "only use regular columns")
-        require(!refs.contains(n.toLowerCase),
-          s"generated column '$n' references itself")
-      }
-      val t = GraftTable(spark, s"$dir/ledger", s"$dir/gen")
-      val snap = Lake.createTable(spark, t.ledgerDir, schema)
-      genCols.foreach { case (n, ex) =>
-        Lake.addGeneratedColumn(spark, t.ledgerDir, n, ex) }
-      defCols.foreach { case (n, ex) =>
-        Lake.addColumnDefault(spark, t.ledgerDir, n, ex) }
-      idCols.foreach { case (n, st, inc) =>
-        Lake.addIdentityColumn(spark, t.ledgerDir, n, st, inc) }
-      bind(name, t)
-      snapFrame(spark, snap)
-    case CtasReplaceRe(name, dir, query) =>
-      registry.get((spark, name)) match {
-        case t: GraftTable =>
-          // replace changes CONTENT, never identity: a LOCATION that
-          // disagrees with the standing table refuses
-          if (dir != null) require(t.ledgerDir == s"$dir/ledger",
-            s"table '$name' is bound at '${t.ledgerDir}' — CREATE OR " +
-              s"REPLACE cannot relocate it to '$dir'")
-          val rows = spark.sql(
-            rewriteMetaTables(spark, rewriteTimeTravel(spark, query)))
-          val snap = t.overwrite(rows)
-          refresh(spark, name)
-          snapFrame(spark, snap)
-        case null =>
-          require(dir != null, s"table '$name' is not bound — CREATE OR " +
-            "REPLACE needs LOCATION 'dir' to create it")
-          one(spark, s"CREATE TABLE $name LOCATION '$dir' AS $query")
-      }
-    case CtasRe(name, dir, query) =>
-      require(registry.get((spark, name)) == null,
-        s"table '$name' is already SQL-bound — CTAS creates, not replaces")
-      val t = GraftTable(spark, s"$dir/ledger", s"$dir/gen")
-      require(t.snapshot <= 0, s"table data already exists at '$dir' — " +
-        "bind it with bindSql, or CREATE at a fresh location")
-      // a CRASHED earlier attempt may have left a landing dir with no
-      // ledger; the name was never bound and no snapshot committed, so
-      // CTAS is retryable — but only by wiping debris THIS path created
-      // (the landing dir and the uncommitted ledger/gen dirs), never the
-      // user-supplied LOCATION wholesale: 'dir' may hold unrelated data,
-      // including files the CTAS query itself is about to read
-      Seq("landing-ctas", "ledger", "gen").foreach(sub =>
-        graft.streaming.MirrorLoop.rmrf(new java.io.File(s"$dir/$sub")))
-      // the SELECT may itself use time travel / metadata tables
-      val rows = spark.sql(
-        rewriteMetaTables(spark, rewriteTimeTravel(spark, query)))
-      rows.write.parquet(s"$dir/landing-ctas")
-      val snap = Lake.ingestNewFiles(spark, s"$dir/landing-ctas",
-        t.ledgerDir)
-      bind(name, t)
-      snapFrame(spark, snap)
+      repinned(spark, name, t.restore(snap))
     case UpdateHeadRe(name, tail) if topLevelKeyword(tail, "FROM") >= 0 =>
       runJoinSourcedDml(spark, name, tail, isDelete = false)
     case DeleteUsingRe(name, tail) =>
@@ -708,17 +425,361 @@ object GraftSql {
       splitQualify(stmt) match {
         case Some((prefix, pred, tail)) =>
           runQualify(spark, prefix, pred, tail)
-        case None =>
-          val rewritten =
-            rewriteMetaTables(spark, rewriteTimeTravel(spark, stmt))
-          spark.sessionState.sqlParser.parsePlan(rewritten) match {
-            case m: MergeIntoTable => runMerge(spark, m)
-            case u: UpdateTable => runUpdate(spark, u)
-            case d: DeleteFromTable => runDelete(spark, d)
-            case i: InsertIntoStatement => runInsert(spark, i)
-            case _ => spark.sql(rewritten)
-          }
+        case None => parse(spark, stmt) match {
+          // the view keeps its UNSUBSTITUTED query: every refresh
+          // re-resolves time travel and metadata tables afresh
+          case v: CreateView => createView(spark, v)
+          case p => route(spark, resolveBound(spark, p))
+        }
       }
+  }
+
+  private def parse(spark: SparkSession, text: String): LogicalPlan =
+    try spark.sessionState.sqlParser.parsePlan(text)
+    catch {
+      // an unknown type name in a column list refuses as a parse error
+      // of the statement (the DDL error a CREATE TABLE user looks for)
+      case e: ParseException if e.getCondition == "UNSUPPORTED_DATATYPE" =>
+        sys.error(s"a data type in the statement does not parse: " +
+          e.getMessage)
+    }
+
+  /** A parsed query over the bound tables, as a frame. */
+  private def query(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    GraftShim.ofRows(spark, resolveBound(spark, plan))
+
+  /** The one substitution over a parsed plan: every node naming a BOUND
+    * table's time travel, metadata table or change feed becomes
+    * `SubqueryAlias(name, frame plan)` — KB ledger reads for the
+    * metadata frames, never data. Runs inside subquery expressions and
+    * CTE bodies too (the parser keeps `WITH` bodies outside `children`).
+    * Names that are not bound stay for Spark's analyzer to resolve. */
+  private def resolveBound(spark: SparkSession,
+      plan: LogicalPlan): LogicalPlan = {
+    import spark.implicits._
+    object Bound {
+      def unapply(name: Any): Option[GraftTable] =
+        Option(registry.get((spark, String.valueOf(name))))
+    }
+    def as(name: Seq[String], df: DataFrame) =
+      SubqueryAlias(name, GraftShim.logicalPlan(df))
+    plan.transformUpWithSubqueries {
+      case w: UnresolvedWith => w.copy(cteRelations = w.cteRelations.map {
+        case (n, q, depth) =>
+          (n, resolveBound(spark, q).asInstanceOf[SubqueryAlias], depth) })
+      case RelationTimeTravel(
+          r @ UnresolvedRelation(Seq(Bound(t)), _, _), ts, ver) =>
+        as(r.multipartIdentifier, ver match {
+          case Some(v) => t.readAt(v.toLong)
+          case None => ts match {
+            case Some(Literal(s: UTF8String, _)) =>
+              t.readAsOf(java.sql.Timestamp.valueOf(s.toString))
+            case other => sys.error("TIMESTAMP AS OF takes a " +
+              s"'yyyy-mm-dd hh:mm:ss' literal, got ${other.map(_.sql)}")
+          }
+        })
+      case r @ UnresolvedRelation(Seq(Bound(t), kind), _, _)
+          if Set("files", "history", "tags", "constraints", "changes")(
+            kind.toLowerCase) =>
+        as(r.multipartIdentifier, kind.toLowerCase match {
+          case "files" => t.files()
+          case "history" => t.history()
+          case "tags" => t.tags().toDF("tag", "snapshot_id")
+          // the FULL feed (since table creation) — the bare-relation
+          // convenience; cursor-disciplined consumers use table_changes
+          case "changes" => t.readChanges(0)
+          case _ => t.constraints().toDF("constraint", "expression")
+        })
+      case f: UnresolvedTableValuedFunction
+          if f.name.map(_.toLowerCase) == Seq("table_changes") =>
+        f.functionArgs match {
+          case Seq(Literal(Bound(t), _: StringType),
+              Literal(v, IntegerType | LongType)) =>
+            as(Seq("table_changes"), t.readChanges(v.toString.toLong - 1))
+          case _ => f
+        }
+    }
+  }
+
+  /** Route a parsed (and substituted) statement on its plan node; any
+    * node not listed runs as a plain Spark query. */
+  private def route(spark: SparkSession, plan: LogicalPlan): DataFrame = {
+    import spark.implicits._
+    plan match {
+      case m: MergeIntoTable => runMerge(spark, m)
+      case u: UpdateTable => runUpdate(spark, u)
+      case d: DeleteFromTable => runDelete(spark, d)
+      case i: InsertIntoStatement => runInsert(spark, i)
+      case a: AddCheckConstraint =>
+        val c = a.checkConstraint
+        lookup(spark, a.child).addConstraint(c.userProvidedName, c.condition)
+        Seq((c.userProvidedName, "added")).toDF("constraint", "status")
+      case DropConstraint(table, cname, _, _) =>
+        val dropped = lookup(spark, table).dropConstraint(cname)
+        Seq((cname, if (dropped) "dropped" else "absent"))
+          .toDF("constraint", "status")
+      // NOT NULL rides the CHECK gate as the auto-constraint nn_<col>
+      // (the GENERATED discipline): SET refuses when current rows
+      // violate, every writer then proves it, DROP removes the rider
+      case AlterColumns(table,
+          Seq(AlterColumnSpec(f, None, Some(nullable), None, None, None, _))) =>
+        val t = lookup(spark, table)
+        // resolve the user-typed name to the schema's CANONICAL field name
+        // and key the auto-constraint by LOWERCASE — SET Balance then
+        // balance DROP must hit the same nn_ constraint, and DESCRIBE's
+        // nullable display (which lowercases) must agree with both paths
+        val colName = fieldName(f)
+        val canon = t.read().columns.find(_.equalsIgnoreCase(colName))
+          .getOrElse(sys.error(s"no such column: $colName"))
+        if (!nullable) {
+          t.addConstraint(s"nn_${canon.toLowerCase}", s"$canon IS NOT NULL")
+          Seq((canon, "NOT NULL")).toDF("col_name", "constraint")
+        } else {
+          // pre-normalization tables may carry nn_<AsTyped> (the key was
+          // the user's casing before the lowercase rule landed) — fall
+          // back to a case-insensitive sweep over standing nn_* riders so
+          // the old constraint doesn't become undroppable (r16 advisor)
+          val dropped =
+            Lake.dropConstraint(t.ledgerDir, s"nn_${canon.toLowerCase}") ||
+              Lake.constraints(t.ledgerDir).map(_._1)
+                .filter(_.equalsIgnoreCase(s"nn_$canon"))
+                .exists(Lake.dropConstraint(t.ledgerDir, _))
+          Seq((canon, if (dropped) "nullable" else "no nn constraint"))
+            .toDF("col_name", "constraint")
+        }
+      case AlterColumns(_, _) => sys.error("ALTER COLUMN supports " +
+        "[SET DATA] TYPE t and SET/DROP NOT NULL, one column at a time")
+      case AddColumns(table, cols) =>
+        // explicit widening evolution: a KB-scale schema-recording commit
+        // (zero data files touched); old rows read null in the new columns
+        require(cols.forall(c =>
+          c.path.isEmpty && c.position.isEmpty && c.default.isEmpty),
+          "ADD COLUMNS takes top-level `name TYPE` columns — nested " +
+            "paths, FIRST/AFTER and DEFAULT are not supported")
+        val t = lookup(spark, table)
+        repinned(spark, tableName(table), Lake.addColumns(spark, t.ledgerDir,
+          StructType(cols.map(c => field(c.colName, c.dataType, c.nullable,
+            c.comment)))))
+      case RenameColumn(table, from, to) =>
+        // column-mapping ids (r15): the rename keeps the field's stable id
+        // and reads resolve pre-rename files through their epoch recording
+        // (Lake.renameColumn) — a KB metadata commit, no data file touched
+        repinned(spark, tableName(table),
+          lookup(spark, table).renameColumn(fieldName(from), to))
+      case DropColumns(table, cols, _) =>
+        repinned(spark, tableName(table),
+          lookup(spark, table).dropColumns(cols.map(fieldName)))
+      case TruncateTable(table) =>
+        // atomic empty overwrite: one remove-everything snapshot; the
+        // recorded schema keeps the (empty) table readable and insertable
+        val t = lookup(spark, table)
+        repinned(spark, tableName(table), t.overwrite(t.read().limit(0)))
+      case DescribeRelation(r @ UnresolvedTableOrView(Seq(name), _, _), _, _, _)
+          if registry.get((spark, name)) != null =>
+        // DESCRIBE t: the column listing off the table's resolved schema
+        // (recorded-schema path — zero data reads on recorded tables),
+        // plus the column-mapping id and the rename trail (r15): every
+        // FORMER name the field id bore, oldest first
+        val t = lookup(spark, r)
+        val renames = Lake.renameLog(t.ledgerDir)
+        val notNull = Lake.constraints(t.ledgerDir).collect {
+          case (cn, _) if cn.startsWith("nn_") =>
+            cn.stripPrefix("nn_").toLowerCase }.toSet
+        t.read().schema.fields.toSeq
+          .map { f =>
+            val id = Lake.fieldId(f)
+            val trail = id.map(i => renames.filter(_.id == i).map(_.from))
+              .getOrElse(Nil)
+            (f.name, f.dataType.simpleString,
+              if (f.nullable && !notNull(f.name.toLowerCase)) "YES" else "NO",
+              id.map(_.toString).orNull,
+              if (trail.isEmpty) null else trail.mkString(" -> "))
+          }
+          .toDF("col_name", "data_type", "nullable", "field_id",
+            "renamed_from")
+      case ShowTables(CurrentNamespace, None, _) =>
+        import scala.jdk.CollectionConverters._
+        val views = viewRegistry.synchronized {
+          viewRegistry.asScala.keys.collect {
+            case (s, n) if s eq spark => n }.toSeq
+        }
+        (boundNames(spark).map((_, "table")) ++ views.map((_, "view")))
+          .sortBy(_._1).toDF("table_name", "kind")
+      case DropView(UnresolvedIdentifier(Seq(name), _), ifExists) =>
+        val existed = viewRegistry.synchronized(
+          viewRegistry.remove((spark, name)) != null)
+        require(existed || ifExists, s"view '$name' does not exist")
+        if (existed) { spark.catalog.dropTempView(name): Unit }
+        Seq(name).toDF("view")
+      case ShowCreateTable(table, false, _) =>
+        // re-creatable DDL off the resolved schema + standing constraints
+        // (zero data reads on recorded tables — the DESCRIBE discipline)
+        val (name, t) = (tableName(table), lookup(spark, table))
+        val cols = t.read().schema.fields.map(f =>
+          s"  ${f.name} ${f.dataType.sql}${if (f.nullable) "" else " NOT NULL"}")
+        val ddl = s"CREATE TABLE $name (\n${cols.mkString(",\n")}\n) " +
+          s"USING graft LOCATION '${t.ledgerDir}'"
+        val cstr = Lake.constraints(t.ledgerDir).map { case (n, e) =>
+          s"ALTER TABLE $name ADD CONSTRAINT $n CHECK ($e)" }
+        (ddl +: cstr).toSeq.toDF("createtab_stmt")
+      case AnalyzeColumn(table, Some(cols), false) =>
+        // backfill per-file min/max stats for the named columns into the
+        // ledger (manifest data skipping picks them up on the next plan)
+        val snap = lookup(spark, table).analyze(cols)
+        Seq((cols.mkString(","), snap)).toDF("analyzed_columns", "snapshot")
+      case CreateTable(id, cols, parts, spec: UnresolvedTableSpec, _)
+          if spec.location.isDefined =>
+        createTable(spark, declaredName(id, parts), spec.location.get, cols)
+      case CreateTableAsSelect(id, parts, q, spec: UnresolvedTableSpec, _, _, _)
+          if spec.location.isDefined =>
+        ctas(spark, declaredName(id, parts), spec.location.get, q)
+      // CREATE OR REPLACE: on a bound table, ONE atomic overwrite snapshot
+      // (content replace, history preserved — time travel still sees the
+      // old rows); on an unbound name, plain CTAS (LOCATION then required)
+      case ReplaceTableAsSelect(id, parts, q, spec: UnresolvedTableSpec, _, _, _) =>
+        val name = declaredName(id, parts)
+        registry.get((spark, name)) match {
+          case t: GraftTable =>
+            // replace changes CONTENT, never identity: a LOCATION that
+            // disagrees with the standing table refuses
+            spec.location.foreach(dir => require(t.ledgerDir == s"$dir/ledger",
+              s"table '$name' is bound at '${t.ledgerDir}' — CREATE OR " +
+                s"REPLACE cannot relocate it to '$dir'"))
+            repinned(spark, name, t.overwrite(GraftShim.ofRows(spark, q)))
+          case null =>
+            ctas(spark, name, spec.location.getOrElse(sys.error(
+              s"table '$name' is not bound — CREATE OR REPLACE needs " +
+                "LOCATION 'dir' to create it")), q)
+        }
+      case p => GraftShim.ofRows(spark, p)
+    }
+  }
+
+  /** The single-part name a CREATE declares: bound names have no
+    * namespace, and lake tables no partition transforms. */
+  private def declaredName(id: LogicalPlan, parts: Seq[Transform]): String = {
+    require(parts.isEmpty, "PARTITIONED BY is not supported on lake tables")
+    id match {
+      case UnresolvedIdentifier(Seq(name), _) => name
+      case other => sys.error(
+        s"CREATE TABLE takes a single-part name, got ${tableName(other)}")
+    }
+  }
+
+  private def fieldName(f: FieldName): String = f.name match {
+    case Seq(n) => n
+    case path => sys.error(
+      s"nested column ${path.mkString(".")} — lake tables are flat")
+  }
+
+  private def field(name: String, tpe: org.apache.spark.sql.types.DataType,
+      nullable: Boolean, comment: Option[String]): StructField = {
+    val f = StructField(name, tpe, nullable)
+    comment.fold(f)(f.withComment)
+  }
+
+  /** `CREATE VIEW name AS SELECT …` over bound tables: the query is
+    * validated now (unknown relations/columns fail at DDL time — the
+    * registration doubles as the first refresh) and re-registers after
+    * every DML re-pin. */
+  private def createView(spark: SparkSession, v: CreateView): DataFrame = {
+    import spark.implicits._
+    val name = v.child match {
+      case UnresolvedIdentifier(Seq(n), _) => n
+      case other => sys.error(
+        s"CREATE VIEW takes a single-part name, got ${tableName(other)}")
+    }
+    require(v.userSpecifiedColumns.isEmpty,
+      "CREATE VIEW column lists are not supported — alias in the SELECT")
+    require(registry.get((spark, name)) == null,
+      s"'$name' is SQL-bound to a table — a view cannot shadow it")
+    require(v.replace || !isView(spark, name),
+      s"view '$name' already exists — use CREATE OR REPLACE VIEW")
+    query(spark, v.query).createOrReplaceTempView(name)
+    viewRegistry.synchronized {
+      viewRegistry.put((spark, name), v.query): Unit }
+    Seq(name).toDF("view")
+  }
+
+  /** Empty-table DDL: record the declared schema at snapshot 1 (one
+    * inert op="schema" row, zero data files — Lake.createTable); the
+    * table is immediately readable (0 rows, declared shape) and
+    * insertable. A column may carry `GENERATED ALWAYS AS (expr)`
+    * (Lake.addGeneratedColumn: auto-CHECK enforcement on every write;
+    * the column-list INSERT path computes omitted ones), a constant
+    * `DEFAULT`, or `GENERATED ALWAYS AS IDENTITY`. */
+  private def createTable(spark: SparkSession, name: String, dir: String,
+      cols: Seq[ColumnDefinition]): DataFrame = {
+    require(registry.get((spark, name)) == null,
+      s"table '$name' is already SQL-bound — CREATE declares a new table")
+    // IDENTITY (Delta contract): system-allocated, strictly increasing,
+    // gaps allowed; ALWAYS — explicit writes refuse on every path
+    cols.foreach(c => c.identityColumnSpec.foreach { id =>
+      require(!id.isAllowExplicitInsert, s"IDENTITY column '${c.name}' " +
+        "must be GENERATED ALWAYS — BY DEFAULT identities are not supported")
+      // BIGINT only (r16 advisor): the allocator rides the
+      // partition-salted monotonically_increasing_id (>= 2^33 in
+      // partition 1+), so an INT identity overflows on any insert
+      // whose frame lands in 2+ partitions — refuse loudly rather
+      // than ship the untested narrow path (ANSI cast error at
+      // best, silent wraparound/duplicate ids with ANSI off)
+      require(c.dataType == LongType,
+        s"IDENTITY column '${c.name}' must be BIGINT (got " +
+          s"${c.dataType.sql}) — the partition-salted allocator exceeds " +
+          "Int range")
+    })
+    val genCols = cols.flatMap(c => c.generationExpression.map(c.name -> _))
+    // the Delta rule: a generation expression may not reference
+    // another generated column (fill order would be ambiguous)
+    val genNames = genCols.map(_._1.toLowerCase).toSet
+    genCols.foreach { case (n, ex) =>
+      val refs = GraftShim.parseExpression(spark, ex).collect {
+        case a: UnresolvedAttribute => a.nameParts.last.toLowerCase
+      }.toSet
+      val bad = refs.intersect(genNames - n.toLowerCase)
+      require(bad.isEmpty, s"generated column '$n' references generated " +
+        s"column(s) ${bad.mkString(", ")} — generation expressions may " +
+        "only use regular columns")
+      require(!refs.contains(n.toLowerCase),
+        s"generated column '$n' references itself")
+    }
+    val t = GraftTable(spark, s"$dir/ledger", s"$dir/gen")
+    val snap = Lake.createTable(spark, t.ledgerDir, StructType(cols.map(c =>
+      field(c.name, c.dataType, c.nullable, c.comment))))
+    genCols.foreach { case (n, ex) =>
+      Lake.addGeneratedColumn(spark, t.ledgerDir, n, ex) }
+    cols.foreach(c => c.defaultValue.foreach(d =>
+      Lake.addColumnDefault(spark, t.ledgerDir, c.name, d.originalSQL)))
+    cols.foreach(c => c.identityColumnSpec.foreach(id =>
+      Lake.addIdentityColumn(spark, t.ledgerDir, c.name, id.getStart,
+        id.getStep)))
+    bind(name, t)
+    snapFrame(spark, snap)
+  }
+
+  /** `CREATE TABLE name LOCATION 'dir' AS SELECT …`: materialize the
+    * query as a NEW ledger-backed lake table at `dir` (landing write →
+    * the normal ingest gates → bound for reads and DML under `name`). */
+  private def ctas(spark: SparkSession, name: String, dir: String,
+      q: LogicalPlan): DataFrame = {
+    require(registry.get((spark, name)) == null,
+      s"table '$name' is already SQL-bound — CTAS creates, not replaces")
+    val t = GraftTable(spark, s"$dir/ledger", s"$dir/gen")
+    require(t.snapshot <= 0, s"table data already exists at '$dir' — " +
+      "bind it with bindSql, or CREATE at a fresh location")
+    // a CRASHED earlier attempt may have left a landing dir with no
+    // ledger; the name was never bound and no snapshot committed, so
+    // CTAS is retryable — but only by wiping debris THIS path created
+    // (the landing dir and the uncommitted ledger/gen dirs), never the
+    // user-supplied LOCATION wholesale: 'dir' may hold unrelated data,
+    // including files the CTAS query itself is about to read
+    Seq("landing-ctas", "ledger", "gen").foreach(sub =>
+      graft.streaming.MirrorLoop.rmrf(new java.io.File(s"$dir/$sub")))
+    GraftShim.ofRows(spark, q).write.parquet(s"$dir/landing-ctas")
+    val snap = Lake.ingestNewFiles(spark, s"$dir/landing-ctas",
+      t.ledgerDir)
+    bind(name, t)
+    snapFrame(spark, snap)
   }
 
   /** QUALIFY (the Snowflake/BigQuery/Databricks post-window filter
@@ -780,118 +841,31 @@ object GraftSql {
   /** Evaluate QUALIFY semantics: the predicate's window functions run
     * over the base SELECT's result rows (a hidden boolean projection —
     * window calls are legal there, never in WHERE), then filter and
-    * drop. A tail ORDER BY/LIMIT applies above the filter through a
-    * uniquely-named session temp view (kept registered — the returned
-    * frame is lazy). */
+    * drop. A tail ORDER BY/LIMIT parses over a placeholder relation that
+    * the filtered plan then replaces. */
   private def runQualify(spark: SparkSession, prefix: String,
       pred: String, tail: String): DataFrame = {
+    val basePlan = parse(spark, prefix)
     // v1 scope refusal (r16 advisor): this implementation filters the
     // fully-evaluated base SELECT, i.e. AFTER DISTINCT collapses rows —
     // Snowflake/DuckDB evaluate QUALIFY BEFORE DISTINCT, so the two
     // orders diverge whenever the window predicate keeps a different
     // subset of the pre-DISTINCT rows. Refuse loudly rather than
     // silently emulate the wrong engine.
-    require(!prefix.matches("(?is)^\\s*SELECT\\s+DISTINCT\\b.*"),
+    require(!basePlan.isInstanceOf[Distinct],
       "QUALIFY on SELECT DISTINCT is refused (v1): QUALIFY here runs " +
         "AFTER DISTINCT, but Snowflake/DuckDB evaluate it BEFORE — " +
         "rewrite as a window subquery with an explicit DISTINCT above")
-    val base = spark.sql(
-      rewriteMetaTables(spark, rewriteTimeTravel(spark, prefix)))
-    val filtered = base
+    val filtered = query(spark, basePlan)
       .withColumn("__qualify", expr(pred))
       .filter(col("__qualify"))
       .drop("__qualify")
     if (tail.trim.isEmpty) filtered
-    else {
-      val v = s"__graft_qualify_${java.util.UUID.randomUUID()
-        .toString.replace("-", "")}"
-      filtered.createOrReplaceTempView(v)
-      spark.sql(s"SELECT * FROM $v ${tail.trim}")
-    }
-  }
-
-  /** Apply `f` to the UNQUOTED segments of `stmt` only — textual
-    * rewrites must never touch string LITERALS ('see nat.history' is
-    * data, not a relation reference; the splitStatements scanner's
-    * quote rule, reused for rewriting). Identifiers can't straddle a
-    * quote boundary, so segment-wise rewriting is complete. */
-  private def outsideQuotes(stmt: String)(f: String => String): String = {
-    val out = new StringBuilder
-    val seg = new StringBuilder
-    var quote: Char = 0
-    var i = 0
-    def flush(): Unit = { out ++= f(seg.toString); seg.clear() }
-    while (i < stmt.length) {
-      val c = stmt.charAt(i)
-      if (quote != 0) {
-        out += c
-        if (c == '\\' && i + 1 < stmt.length) { // escaped char in literal
-          out += stmt.charAt(i + 1); i += 1
-        }
-        else if (c == quote) quote = 0
-      }
-      else if (c == '\'' || c == '"') { flush(); quote = c; out += c }
-      else seg += c
-      i += 1
-    }
-    flush()
-    out.toString
-  }
-
-  /** `t.files` / `t.history` / `t.tags` / `t.constraints` over a bound
-    * table → a view over the ledger-derived frame (Iceberg's metadata
-    * tables; textual rewrite like time travel — the suffixes are
-    * reserved on bound names). KB-scale ledger reads, never data. */
-  /** CDC as SQL — `table_changes('t', starting_version)` (the Delta
-    * function form, INCLUSIVE starting version exactly like Delta's:
-    * the changes committed AT `starting_version` are part of the
-    * result) anywhere a relation can appear, rewritten to a view over
-    * [[GraftTable.readChanges]] (typed `_change_type` +
-    * `_commit_snapshot` rows; KB metadata resolves the file set, the
-    * cdc files themselves are blast-radius-sized). readChanges is
-    * EXCLUSIVE ("after snapshot s"), hence the −1. Runs over the RAW
-    * statement because the table name sits INSIDE a string literal —
-    * matches STARTING inside a quoted run are data and left alone (the
-    * TIMESTAMP AS OF discipline). */
-  private def rewriteTableChanges(spark: SparkSession, stmt: String): String = {
-    val re = """(?i)\btable_changes\s*\(\s*'(\w+)'\s*,\s*(\d+)\s*\)""".r
-    re.replaceAllIn(stmt, m => {
-      val name = m.group(1)
-      val t = registry.get((spark, name))
-      if (t == null || insideQuote(stmt, m.start))
-        java.util.regex.Matcher.quoteReplacement(m.matched)
-      else {
-        val from = m.group(2).toLong
-        val view = s"${name}__ch$from"
-        t.readChanges(from - 1).createOrReplaceTempView(view)
-        view
-      }
-    })
-  }
-
-  private def rewriteMetaTables(spark: SparkSession, stmt: String): String =
-    outsideQuotes(rewriteTableChanges(spark, stmt)) { seg =>
-    val meta = """(?i)\b(\w+)\.(files|history|tags|constraints|changes)\b""".r
-    meta.replaceAllIn(seg, m => {
-      val (name, kind) = (m.group(1), m.group(2).toLowerCase)
-      val t = registry.get((spark, name))
-      if (t == null) m.matched
-      else {
-        import spark.implicits._
-        val view = s"${name}__$kind"
-        val df = kind match {
-          case "files" => t.files()
-          case "history" => t.history()
-          case "tags" => t.tags().toDF("tag", "snapshot_id")
-          // the FULL feed (since table creation) — the bare-relation
-          // convenience; cursor-disciplined consumers use table_changes
-          case "changes" => t.readChanges(0)
-          case _ => t.constraints().toDF("constraint", "expression")
-        }
-        df.createOrReplaceTempView(view)
-        view
-      }
-    })
+    else GraftShim.ofRows(spark,
+      parse(spark, s"SELECT * FROM __graft_qualify ${tail.trim}").transform {
+        case UnresolvedRelation(Seq("__graft_qualify"), _, _) =>
+          GraftShim.logicalPlan(filtered)
+      })
   }
 
   private def runInsert(spark: SparkSession,
@@ -1025,90 +999,30 @@ object GraftSql {
       if (idents.isEmpty) commitInsert()
       else Lake.identityMonitor(t.ledgerDir)
         .synchronized { commitInsert() }
-    refresh(spark, tableName(i.table))
-    snapFrame(spark, snap)
-  }
-
-  /** `name VERSION AS OF <n>` / `name TIMESTAMP AS OF '<ts>'` over a
-    * bound table → a snapshot-pinned view (`name__v<n>`), textual
-    * rewrite before the parse (Spark's TimeTravelRelation only resolves
-    * for catalog tables). */
-  private def rewriteTimeTravel(spark: SparkSession, stmt: String): String = {
-    val version =
-      """(?i)\b(\w+)\s+VERSION\s+AS\s+OF\s+(\d+)""".r
-    // the TIMESTAMP form carries its own quoted literal, so it rewrites
-    // over the RAW statement with segment-level care below; the VERSION
-    // form is literal-free and must never fire inside a string literal
-    // ('see nat VERSION AS OF 3' is data) — outsideQuotes guards it,
-    // same as rewriteMetaTables
-    val tstamp =
-      """(?i)\b(\w+)\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)'""".r
-    val afterV = outsideQuotes(stmt)(seg => version.replaceAllIn(seg, m => {
-      val (name, snap) = (m.group(1), m.group(2).toLong)
-      val t = registry.get((spark, name))
-      if (t == null) m.matched
-      else {
-        val view = s"${name}__v$snap"
-        t.readAt(snap).createOrReplaceTempView(view)
-        view
-      }
-    }))
-    // matches STARTING inside a quoted run are data, not time travel
-    // (a literal can still contain the full pattern via escaped quotes)
-    tstamp.replaceAllIn(afterV, m => {
-      val name = m.group(1)
-      val t = registry.get((spark, name))
-      if (t == null || insideQuote(afterV, m.start))
-        java.util.regex.Matcher.quoteReplacement(m.matched)
-      else {
-        val ts = java.sql.Timestamp.valueOf(m.group(2))
-        val view = s"${name}__t${ts.getTime}"
-        t.readAsOf(ts).createOrReplaceTempView(view)
-        view
-      }
-    })
-  }
-
-  /** Is position `pos` inside a quoted literal/identifier? Same scanner
-    * rules as [[splitStatements]] (incl. backslash escapes). */
-  private def insideQuote(s: String, pos: Int): Boolean = {
-    var quote: Char = 0
-    var i = 0
-    while (i < pos) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == '\\') i += 1 // escaped char inside a literal
-        else if (c == quote) quote = 0
-      }
-      else if (c == '\'' || c == '"') quote = c
-      i += 1
-    }
-    quote != 0
+    repinned(spark, tableName(i.table), snap)
   }
 
   // ---------------------------------------------------------- routing
 
   private def tableName(p: LogicalPlan): String = p match {
     case SubqueryAlias(_, child) => tableName(child)
+    // ADD CONSTRAINT's target comes wrapped in its validation filter
+    case Filter(_, child) => tableName(child)
     case r: UnresolvedRelation => r.multipartIdentifier.mkString(".")
+    case r: UnresolvedTable => r.multipartIdentifier.mkString(".")
+    case r: UnresolvedTableOrView => r.multipartIdentifier.mkString(".")
+    case r: UnresolvedIdentifier => r.nameParts.mkString(".")
     case other => sys.error(
       s"unsupported DML target ${other.getClass.getSimpleName} — " +
         "target must be a bound table name")
   }
 
-  private def lookup(spark: SparkSession, p: LogicalPlan): GraftTable = {
-    val name = tableName(p)
-    val t = registry.get((spark, name))
-    if (t == null) sys.error(
-      s"table '$name' is not SQL-bound — call GraftTable.bindSql(name) " +
-        s"first (bound: ${boundNames(spark).sorted.mkString(", ")})")
-    t
-  }
+  private def lookup(spark: SparkSession, p: LogicalPlan): GraftTable =
+    lookupName(spark, tableName(p))
 
   /** Qualifiers resolve by NAME against the routed relation (flat
     * schemas; `t.c` and `src.c` both mean column `c`). */
   private def toColumn(e: Expression): Column = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     GraftShim.column(e.transform {
       case a: UnresolvedAttribute if a.nameParts.size > 1 =>
         UnresolvedAttribute(Seq(a.nameParts.last))
@@ -1124,7 +1038,6 @@ object GraftSql {
     * path, which resolves them there. */
   private def requireSourceScoped(cond: Expression, target: LogicalPlan,
       sourceCols: Set[String]): Unit = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     val targetNames: Set[String] = (target match {
       case SubqueryAlias(ident, child) =>
         Set(ident.name, tableName(child))
@@ -1145,7 +1058,7 @@ object GraftSql {
   }
 
   private def attrName(e: Expression): String = e match {
-    case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
+    case a: UnresolvedAttribute =>
       a.nameParts.last
     case other => sys.error(s"unsupported assignment target: $other")
   }
@@ -1162,52 +1075,14 @@ object GraftSql {
 
   private def runDelete(spark: SparkSession, d: DeleteFromTable): DataFrame = {
     val t = lookup(spark, d.table)
-    val snap = t.delete(toColumn(d.condition))
-    refresh(spark, tableName(d.table))
-    snapFrame(spark, snap)
+    repinned(spark, tableName(d.table), t.delete(toColumn(d.condition)))
   }
 
   private def runUpdate(spark: SparkSession, u: UpdateTable): DataFrame = {
     val t = lookup(spark, u.table)
     val sets = u.assignments.map(a => attrName(a.key) -> toColumn(a.value))
     val cond = u.condition.map(toColumn).getOrElse(lit(true))
-    val snap = t.update(cond, sets)
-    refresh(spark, tableName(u.table))
-    snapFrame(spark, snap)
-  }
-
-  // ---- join-sourced DML (r14): `UPDATE t SET … FROM s WHERE …` and
-  // `DELETE FROM t USING s WHERE …` — the statements a migrating
-  // warehouse user types next after MERGE. Spark's grammar has neither;
-  // both rewrite TEXTUALLY to a matched-arm column-list MERGE (Spark's
-  // own parser then handles the SET list, source subqueries, and
-  // aliases), and the WHERE splits into same-name key equalities (the
-  // merge keys) and a RESIDUAL that becomes the WHEN MATCHED condition —
-  // exactly equivalent for matched-only arms, and evaluated against the
-  // pre-image PAIR, so cross-name equalities (t.k = s.kk) and
-  // target-referencing predicates all work as residuals.
-  private val UpdateHeadRe =
-    """(?is)^\s*UPDATE\s+(\w+)\s+SET\s+([\s\S]+)$""".r
-  private val DeleteUsingRe =
-    """(?is)^\s*DELETE\s+FROM\s+(\w+)\s+USING\s+([\s\S]+)$""".r
-
-  /** Split at `sep` occurrences at paren depth 0 outside string
-    * literals — the CREATE column-list scanner (a DECIMAL(10,2) comma or
-    * a GENERATED expression comma must not split the list). */
-  private def splitTopLevel(s: String, sep: Char): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0; var quote: Char = 0
-    s.foreach { c =>
-      if (quote != 0) { if (c == quote) quote = 0; cur += c }
-      else if (c == '\'' || c == '"') { quote = c; cur += c }
-      else if (c == '(') { depth += 1; cur += c }
-      else if (c == ')') { depth -= 1; cur += c }
-      else if (c == sep && depth == 0) { out += cur.toString; cur.clear() }
-      else cur += c
-    }
-    out += cur.toString
-    out.result().map(_.trim).filter(_.nonEmpty)
+    repinned(spark, tableName(u.table), t.update(cond, sets))
   }
 
   /** Start index of the first occurrence of the word `kw` at paren depth
@@ -1239,7 +1114,6 @@ object GraftSql {
     * folds into the matched-arm condition. */
   private def splitJoinCond(cond: Expression)
       : (Expression, Option[Expression]) = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     def leaves(e: Expression): Seq[Expression] = e match {
       case And(l, r) => leaves(l) ++ leaves(r)
       case x => Seq(x)
@@ -1274,8 +1148,7 @@ object GraftSql {
     val arm = if (isDelete) "DELETE" else s"UPDATE SET $setsText"
     val mergeText = s"MERGE INTO $name USING $srcText ON $condText " +
       s"WHEN MATCHED THEN $arm"
-    val m = spark.sessionState.sqlParser.parsePlan(
-      rewriteMetaTables(spark, rewriteTimeTravel(spark, mergeText))) match {
+    val m = resolveBound(spark, parse(spark, mergeText)) match {
       case mi: MergeIntoTable => mi
       case other => sys.error(s"$verb did not rewrite to a MERGE: $other")
     }
@@ -1314,7 +1187,7 @@ object GraftSql {
         // refuse with the ON-clause rule, not attrName's misleading
         // "unsupported assignment target"
         def name(e: Expression): String = e match {
-          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
+          case a: UnresolvedAttribute =>
             a.nameParts.last
           case other => unsupported(
             "ON must be an equality or AND of equalities over columns " +
@@ -1422,8 +1295,7 @@ object GraftSql {
       val src = source.join(
         t.read().select(keys.map(col): _*).distinct(), keys, "left_anti")
       val snap = t.mergeKeys(src, keys, evolveSchema = m.withSchemaEvolution)
-      refresh(spark, name)
-      return snapFrame(spark, snap)
+      return repinned(spark, name, snap)
     }
     if (!updates && deleteWhen.isDefined && !deleteUncond)
       unsupported("WHEN MATCHED AND c THEN DELETE without an UPDATE SET * " +
@@ -1436,8 +1308,7 @@ object GraftSql {
         "left_semi")
     val snap = t.mergeKeys(src, keys, deleteWhen = deleteWhen,
       evolveSchema = m.withSchemaEvolution)
-    refresh(spark, name)
-    snapFrame(spark, snap)
+    repinned(spark, name, snap)
   }
 
   /** COLUMN-LIST MERGE arms — the form Delta/Iceberg users write daily
@@ -1478,7 +1349,6 @@ object GraftSql {
     * Caller contract unchanged from merge: source keys unique. */
   private def runMergeColumnList(spark: SparkSession,
       m: MergeIntoTable): DataFrame = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     val t = lookup(spark, m.targetTable)
     val name = tableName(m.targetTable)
     require(t.snapshot > 0, "column-list MERGE into an empty table — " +
@@ -1672,8 +1542,7 @@ object GraftSql {
     val assembled = frames.reduce(_ unionByName _).localCheckpoint()
     val snap = t.mergeKeys(assembled, keys,
       deleteWhen = Some(col("__graft_merge_drop")))
-    refresh(spark, name)
-    snapFrame(spark, snap)
+    repinned(spark, name, snap)
   }
 
   /** Oracle-checked SQL DML round-trip — the statement TEXT a reference

@@ -550,7 +550,7 @@ object Lake {
     else {
       val liveIdx = readLedger(spark, ledgerDir)
         .map(l => new LedgerFileIndex(liveActionsAt(l, Long.MaxValue)))
-      liveIdx.filterNot(_.isEmpty)
+      val empty = liveIdx.filterNot(_.isEmpty)
         .map(i => tableScan(spark, ledgerDir, i, atSnapshot).limit(0))
         // zero live files anywhere (e.g. a truncated table): the
         // RECORDED schema still carries a schema-shaped empty frame —
@@ -560,6 +560,13 @@ object Lake {
           else None).map(sch => spark.createDataFrame(
             new java.util.ArrayList[org.apache.spark.sql.Row](), sch)))
         .getOrElse(spark.emptyDataFrame)
+      // zero files carry no `_metadata` row identity, and zero rows need
+      // none: typed nulls make the DV anti-join a no-op (a TRUNCATEd
+      // table that had deletion vectors stays readable)
+      if (keepPos) empty
+        .withColumn("__graft_fp", lit(null).cast("string"))
+        .withColumn("__graft_pos", lit(null).cast("long"))
+      else empty
     }
   }
 
@@ -1778,7 +1785,7 @@ object Lake {
   /** Max estimated bytes for which a commit's gen-dir output is
     * DRIVER-written (one collect + one ParquetWriteSupport file — the
     * ledger path's r17 machinery) instead of a FileFormatWriter job.
-    * CommitProfile r18: a KB-scale frame's distributed write costs a
+    * Profiled in r18: a KB-scale frame's distributed write costs a
     * job + the output-committer temp/rename protocol ≈ 0.1-0.3 s of
     * fixed cost per dir, and a DML commit writes 2-3 dirs — while the
     * rows are blast-radius-bounded metadata-scale almost always. 32 MB
@@ -1847,7 +1854,7 @@ object Lake {
   /** Per-dir file metadata recorded by [[writeGenDir]]'s driver path,
     * keyed by normalized dir: the commit's adds builder consumes these
     * instead of re-scanning freshly-written KB files (one binaryFile
-    * job per commit — CommitProfile r18). Entries are claimed
+    * job per commit, as profiled in r18). Entries are claimed
     * (removed) by the reader; a crashed commit's residue is bounded by
     * in-flight writes and re-keyed dirs overwrite on retry. */
   private[graft] val driverWrittenDirs =

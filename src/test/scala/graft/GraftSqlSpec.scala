@@ -1439,4 +1439,66 @@ class GraftSqlSpec extends GraftSpec {
       "n_nationkey = 7").head().getLong(0) == head + 1)
     assert(t.read().filter(col("n_name") === "MUST_NOT_LAND").count() == 0)
   }
+
+  test("bound-table reads substitute on the parsed plan: columns named " +
+      "like metadata tables, quoted names, CTEs; no temp view is left") {
+    val sp = spark; import sp.implicits._
+    val tmp = Files.createTempDirectory("graft_sql_subst").toString
+    val tbl = GraftTable(spark, s"$tmp/ledger", s"$tmp/gen")
+    Seq((1L, "a,b,c", "h1")).toDF("k", "tags", "history")
+      .write.parquet(s"$tmp/landing")
+    tbl.ingest(s"$tmp/landing")
+    tbl.bindSql("zp")
+    tbl.sql("INSERT INTO zp SELECT 2, 'd', 'h2'")
+    tbl.tag("t2")
+    // a user's own view named like a derived frame of zp: no read may touch it
+    Seq(42L).toDF("x").createOrReplaceTempView("zp__v1")
+    def views = spark.catalog.listTables().collect().map(_.name).toSet
+    val before = views
+    // `zp.tags` / `zp.history` in a select list are COLUMNS, not tables
+    assert(tbl.sql("SELECT zp.tags FROM zp WHERE k = 1").head()
+      .getString(0) == "a,b,c")
+    assert(tbl.sql("SELECT zp.history FROM zp WHERE k = 1").head()
+      .getString(0) == "h1")
+    // time travel on a quoted name, and the alias keeps its qualifier
+    assert(tbl.sql("SELECT count(*) FROM `zp` VERSION AS OF 1").head()
+      .getLong(0) == 1)
+    assert(tbl.sql("SELECT max(zp.k) FROM zp VERSION AS OF 1").head()
+      .getLong(0) == 1)
+    // metadata tables and the change feed, inside a CTE and a subquery
+    assert(tbl.sql("SELECT snapshot_id FROM zp.tags WHERE tag = 't2'")
+      .head().getLong(0) == tbl.snapshot)
+    assert(tbl.sql(
+      """WITH old AS (SELECT * FROM zp VERSION AS OF 1)
+        |SELECT count(*) FROM zp WHERE k NOT IN (SELECT k FROM old)
+        |  AND EXISTS (SELECT 1 FROM zp.history)""".stripMargin)
+      .head().getLong(0) == 1)
+    tbl.sql("SELECT count(*) FROM table_changes('zp', 1)").head()
+    assert(views == before, s"leftover views: ${views -- before}")
+    assert(spark.sql("SELECT x FROM zp__v1").collect().map(_.getLong(0))
+      .toSeq == Seq(42L), "a user's temp view was replaced")
+    spark.catalog.dropTempView("zp__v1")
+    GraftSql.unbind(spark, "zp")
+  }
+
+  test("TRUNCATE on a table with deletion vectors: read(), readAt(head) " +
+      "and the bound name read empty, and the next INSERT lands") {
+    val tmp = Files.createTempDirectory("graft_sql_truncdv").toString
+    val t = GraftTable(spark, s"$tmp/ledger", s"$tmp/gen")
+    spark.read.parquet(s"$sf/nation.parquet").repartition(2)
+      .write.parquet(s"$tmp/landing")
+    t.ingest(s"$tmp/landing")
+    t.bindSql("nat_tdv")
+    t.deleteMor(col("n_regionkey") === 1)
+    val preTruncate = t.snapshot
+    assert(t.read().count() == 20)
+    t.sql("TRUNCATE TABLE nat_tdv")
+    assert(t.read().count() == 0)
+    assert(t.readAt(t.snapshot).count() == 0)
+    assert(spark.sql("SELECT count(*) FROM nat_tdv").head().getLong(0) == 0)
+    t.sql("INSERT INTO nat_tdv SELECT 99, 'NEWLAND', 0")
+    assert(spark.sql("SELECT count(*) FROM nat_tdv").head().getLong(0) == 1)
+    assert(t.readAt(preTruncate).count() == 20)
+    GraftSql.unbind(spark, "nat_tdv")
+  }
 }
