@@ -103,35 +103,38 @@ object Lake {
     // construction, so the PAR1 quarantine scan has nothing to catch
     val memoRows = Option(driverWrittenDirs.remove(
       normPath(new java.io.File(landingDir).getAbsolutePath)))
-    val current0 = memoRows match {
-      case Some(rows) => spark.createDataFrame(rows)
-        .toDF("path", "size", "adler32")
-      case None => spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.parquet")
-        .load(landingDir)
-        // QUARANTINE torn/garbage uploads: a parquet file starts AND ends
-        // with the "PAR1" magic — anything else (truncated upload, junk
-        // named *.parquet) must never enter the ledger, or every read of
-        // the table would die on it. Checked distributed on the bytes
-        // already in hand for the checksum; an invalid file is simply not
-        // ingested, so a later re-upload + re-ingest picks it up (the path
-        // only becomes ledgered once valid).
-        .filter(expr("substring(content, 1, 4) = X'50415231'")
-          && expr("substring(content, length(content) - 3, 4) = X'50415231'"))
-        .select(col("path"), col("length").as("size"),
-          graft.functions.GraftFunctions.adler32(col("content")).as("adler32"))
+    val st = LedgerState.open(spark, ledgerDir)
+    val nextSnapshot = st.head + 1
+    // only files the ledger has never named are new: the anti-join runs
+    // on the driver for recorded rows, and against a scanned landing dir
+    // as a join with the ledgered paths' local relation
+    val (cand, candPaths) = memoRows match {
+      case Some(rows) =>
+        val fresh = rows.filterNot(r => st.paths(r._1))
+        (spark.createDataFrame(fresh).toDF("path", "size", "adler32"),
+          fresh.map(_._1).toArray)
+      case None =>
+        val scanned = spark.read.format("binaryFile")
+          .option("pathGlobFilter", "*.parquet")
+          .load(landingDir)
+          // QUARANTINE torn/garbage uploads: a parquet file starts AND
+          // ends with the "PAR1" magic — anything else (truncated upload,
+          // junk named *.parquet) must never enter the ledger, or every
+          // read of the table would die on it. Checked distributed on the
+          // bytes already in hand for the checksum; an invalid file is
+          // simply not ingested, so a later re-upload + re-ingest picks it
+          // up (the path only becomes ledgered once valid).
+          .filter(expr("substring(content, 1, 4) = X'50415231'")
+            && expr("substring(content, length(content) - 3, 4) = X'50415231'"))
+          .select(col("path"), col("length").as("size"),
+            graft.functions.GraftFunctions.adler32(col("content")).as("adler32"))
+          .join(spark.createDataFrame(st.paths.toSeq.map(Tuple1(_)))
+            .toDF("path"), Seq("path"), "left_anti")
+          // materialize BEFORE the ledger append below AND before the
+          // driver-side schema checks
+          .localCheckpoint()
+        (scanned, scanned.select(col("path")).collect().map(_.getString(0)))
     }
-    val (newFiles0, nextSnapshot) = readLedger(spark, ledgerDir) match {
-      case Some(ledger) =>
-        val next = ledger.agg(max(col("snapshot_id"))).head().getLong(0) + 1
-        (current0.join(ledger.select(col("path")).distinct(),
-          Seq("path"), "left_anti"), next)
-      case None => (current0, 1L)
-    }
-    // materialize BEFORE the ledger append below AND before the
-    // driver-side schema checks (ledger-derived frame, read-own-write)
-    val cand = newFiles0.localCheckpoint()
-    val candPaths = cand.select(col("path")).collect().map(_.getString(0))
     if (candPaths.isEmpty) return 0L
     // SCHEMA quarantine — the PAR1 check one level up: a file whose
     // columns TYPE-CONFLICT with the table's current schema must never
@@ -146,10 +149,9 @@ object Lake {
     def conflicts(f: org.apache.spark.sql.types.StructType,
         t: org.apache.spark.sql.types.StructType): Boolean =
       f.exists(a => t.find(_.name == a.name).exists(_.dataType != a.dataType))
-    val tableSchema = readLedger(spark, ledgerDir)
-      .map(l => liveActionsAt(l, nextSnapshot - 1))
-      .map(new LedgerFileIndex(_)).filterNot(_.isEmpty)
-      .map(tableScan(spark, ledgerDir, _, nextSnapshot - 1).schema)
+    val tableSchema = Some(LedgerState.index(st.liveAt(st.head)))
+      .filterNot(_.isEmpty)
+      .map(tableScan(spark, ledgerDir, _, st.head).schema)
     val merged =
       try Some(spark.read.option("mergeSchema", "true")
         .parquet(candPaths.map(normPath): _*).schema)
@@ -177,9 +179,13 @@ object Lake {
     // untouched; fix and re-ingest). A constraint referencing a column
     // the batch lacks entirely fails the ingest at analysis (it cannot
     // prove itself).
+    // the batch's union schema: the conflict check's merged footers when
+    // no file was quarantined
+    lazy val goodSchema = merged.filter(_ => badPaths.isEmpty).getOrElse(
+      spark.read.option("mergeSchema", "true").parquet(goodPaths: _*).schema)
     if (enforceChecks && constraints(ledgerDir).nonEmpty)
       enforceConstraints(spark, ledgerDir,
-        spark.read.option("mergeSchema", "true").parquet(goodPaths: _*))
+        spark.read.schema(goodSchema).parquet(goodPaths: _*))
     // per-file, per-column stats for manifest data skipping, computed
     // over ONLY the new batch's good files (fileStatsPaths — an ingest's
     // stats cost scales with the batch, never with how much history the
@@ -187,7 +193,8 @@ object Lake {
     // readAt's LedgerFileIndex can prune files without opening them —
     // Iceberg/Delta-style skipping)
     val current = fileStatsPaths(spark, goodPaths, statsCols,
-        tolerant = true, bloomCols = bloomCols) match {
+        tolerant = true, bloomCols = bloomCols,
+        schema = Some(goodSchema)) match {
       case Some(stats) => good
         .withColumn("_np", regexp_replace(col("path"), "^file:/+", "/"))
         .join(stats, Seq("_np"), "left")
@@ -215,13 +222,8 @@ object Lake {
     // schema (the union of the batch's footers — already computed for
     // the conflict check above), so every later plan skips footer
     // inference entirely; evolving merges re-record (see mergeInto)
-    if (n > 0 && recordedSchemaAt(ledgerDir, Long.MaxValue).isEmpty) {
-      val sch =
-        if (badPaths.isEmpty && merged.isDefined) merged.get
-        else spark.read.option("mergeSchema", "true")
-          .parquet(goodPaths: _*).schema
-      recordSchema(ledgerDir, nextSnapshot, sch)
-    }
+    if (n > 0 && recordedSchemaAt(ledgerDir, Long.MaxValue).isEmpty)
+      recordSchema(ledgerDir, nextSnapshot, goodSchema)
     n
   }
 
@@ -239,21 +241,20 @@ object Lake {
   private val StatsType = "map<string,struct<lo:bigint,hi:bigint," +
     "slo:string,shi:string,nulls:bigint,nrows:bigint,bloom:binary>>"
 
-  /** The ledger's CANONICAL read schema — pinned so every `readLedger`
-    * plans with ZERO footer-inference work (profiling showed ~8 ledger
-    * re-reads per DML commit, each paying a schema-inference job; the
-    * schema is fixed by construction — this code is the only writer).
-    * Narrower historical rows (a pre-bloom stats struct, a pre-dv
-    * ledger) null-fill by name exactly as the old mergeSchema read did,
-    * via parquet's requested-schema clipping. */
+  /** The ledger's CANONICAL row schema — the requested schema of every
+    * [[LedgerState]] read (fixed by construction — this code is the only
+    * writer). Narrower historical rows (a pre-bloom stats struct, a
+    * pre-dv ledger) null-fill by name via parquet's requested-schema
+    * clipping. */
   private[graft] lazy val LedgerSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType.fromDDL(
       "path string, size bigint, adler32 bigint, snapshot_id bigint, " +
         "ingested_at timestamp, op string, snapshot_op string, " +
         s"stats $StatsType")
 
-  /** Per-file stats map for `cols` over the parquet files of `dir`, keyed
-    * by normalized path; None when no stats columns are requested.
+  /** Per-file stats map for `cols` over the parquet files of `paths`
+    * (directories or individual files), keyed by normalized path; None
+    * when no stats columns are requested.
     * NUMERIC columns store `[floor(min), ceil(max)]` — floor/ceil (not a
     * truncating cast) make the stored long bounds conservative OUTER
     * bounds for non-integral values (a DOUBLE max of 5.9 stores hi=6; a
@@ -266,26 +267,21 @@ object Lake {
     * index can still prune IS-NOT-NULL and value probes against it. One
     * distributed aggregation keyed by source file; only
     * the KB-scale per-file stats touch the driver via the ledger. */
-  private def fileStats(spark: SparkSession, dir: String,
-      cols: Seq[String], tolerant: Boolean = false,
-      bloomCols: Seq[String] = Nil): Option[DataFrame] =
-    fileStatsPaths(spark, Seq(dir), cols, tolerant, bloomCols)
-
-  /** As [[fileStats]] but over an explicit path set (directories or
-    * individual files) — the backfill path re-stats scattered live files
-    * that were never part of one landing directory. */
   private def fileStatsPaths(spark: SparkSession, paths: Seq[String],
       cols: Seq[String], tolerant: Boolean = false,
-      bloomCols: Seq[String] = Nil): Option[DataFrame] =
+      bloomCols: Seq[String] = Nil,
+      schema: Option[org.apache.spark.sql.types.StructType] = None)
+      : Option[DataFrame] =
     if (cols.isEmpty && bloomCols.isEmpty) None
     else {
       // `tolerant` for the LANDING dir: a quarantined garbage file (see
       // the ingest magic check) must not kill the stats pass either; its
       // zero rows simply produce no stats entry. Compaction reads its own
-      // freshly-written generation and stays strict.
-      val df = (if (tolerant)
-        spark.read.option("ignoreCorruptFiles", "true") else spark.read)
-        .parquet(paths: _*)
+      // freshly-written generation and stays strict. `schema`: the one
+      // the files' writer held, so the read infers nothing from footers
+      val reader = if (tolerant)
+        spark.read.option("ignoreCorruptFiles", "true") else spark.read
+      val df = schema.fold(reader)(reader.schema).parquet(paths: _*)
       val all = (cols ++ bloomCols).distinct
       val kinds: Map[String, String] = all.map { c =>
         c -> (df.schema(c).dataType match {
@@ -369,51 +365,6 @@ object Lake {
           map_from_entries(array(entries: _*)).as("stats")))
     }
 
-  /** The ledger if it holds any data — decided from the presence of ledger
-    * DATA files, not _SUCCESS: after a partially failed append the marker
-    * may be missing while committed rows exist, and restarting snapshot
-    * ids at 1 would re-ingest every path (breaking exactly-once). */
-  /** Latest ledger CHECKPOINT under `_ckpt/` as (path, covered snapshot),
-    * None when the ledger has never been compacted. */
-  private def latestCkpt(ledgerDir: String): Option[(String, Long)] = {
-    val d = new java.io.File(s"$ledgerDir/_ckpt")
-    if (!d.isDirectory) return None
-    Option(d.listFiles()).getOrElse(Array.empty).toSeq
-      .filter(f => f.isDirectory && f.getName.startsWith("ckpt-"))
-      .flatMap(f => f.getName.stripPrefix("ckpt-").toLongOption
-        .map(n => (f.getPath, n)))
-      .sortBy(-_._2).headOption
-  }
-
-  private def readLedger(spark: SparkSession, ledgerDir: String): Option[DataFrame] = {
-    val dir = new java.io.File(ledgerDir)
-    val hasData = dir.isDirectory &&
-      dir.listFiles().exists(f => f.getName.endsWith(".parquet") && f.length() > 0)
-    // the PINNED canonical schema (LedgerSchema) replaces the old
-    // mergeSchema footer scan: generations with a narrower stats struct
-    // (pre-bloom rows) null-fill by name via requested-schema clipping,
-    // and the read plans with zero inference jobs (profiled at ~8 ledger
-    // re-reads per DML commit)
-    latestCkpt(ledgerDir) match {
-      case None =>
-        if (hasData)
-          Some(spark.read.schema(LedgerSchema).parquet(ledgerDir))
-        else None
-      case Some((ckptPath, n)) =>
-        // checkpointed ledger = checkpoint rows (everything <= n, exactly
-        // once) + post-checkpoint appends, as ONE multi-path read;
-        // rows a data file duplicates with the checkpoint (a compaction
-        // that crashed before its prune, or one whose prune is simply
-        // pending) filter out by provenance — correctness never depends
-        // on the prune having happened. `_ckpt/` itself is underscore-
-        // hidden, so the ledger-dir side of the read can't recurse into it.
-        val paths = if (hasData) Seq(ckptPath, ledgerDir) else Seq(ckptPath)
-        Some(spark.read.schema(LedgerSchema).parquet(paths: _*)
-          .filter(col("_metadata.file_path").contains("/_ckpt/")
-            || col("snapshot_id") > n))
-    }
-  }
-
   /** LEDGER CHECKPOINT — the Delta `checkpoint.parquet` / Iceberg
     * manifest-list analog, for the METADATA scale axis: every commit
     * appends small parquet files to the ledger dir, so a table with 10^5
@@ -428,35 +379,31 @@ object Lake {
     * compacts the METADATA's file count, never its content, exactly like
     * data-file compaction below it. Crash-safe at every point: before
     * the rename nothing changed; after it, covered rows deduplicate by
-    * provenance in [[readLedger]] whether or not the prune ran. */
+    * provenance in [[LedgerState]] whether or not the prune ran. */
   def compactLedger(spark: SparkSession, ledgerDir: String): Long = {
-    val ledger = readLedger(spark, ledgerDir).getOrElse(return 0L)
-    val head = currentSnapshot(spark, ledgerDir)
+    val st = LedgerState.open(spark, ledgerDir)
+    if (st.isEmpty) return 0L
+    val head = st.head
     // idempotent: a checkpoint already covering the current snapshot
     // makes this a no-op (a second call with no intervening commits must
     // not die renaming onto the existing ckpt-<head> directory)
-    latestCkpt(ledgerDir).foreach { case (_, at) =>
-      if (at >= head) return at
-    }
-    val rows = ledger.filter(col("snapshot_id") <= head).localCheckpoint()
+    st.checkpointed.foreach(at => if (at >= head) return at)
     val tmp = new java.io.File(s"$ledgerDir/_ckpt/.tmp-$head")
-    // coalesce(1) rides into the distributed fallback unchanged — the
-    // checkpoint contract is ONE consolidated file either way
-    writeGenDir(spark, rows.coalesce(1), tmp.getPath, commitInput = false)
+    MirrorLoop.rmrf(tmp)
+    tmp.mkdirs()
+    // ONE consolidated file, written on the driver from the rows in hand
+    org.apache.spark.sql.execution.datasources.parquet.GraftParquetShim
+      .writeSingleFile(spark, st.frame(spark, st.rows.filter(_.snapshot <= head)),
+        s"${tmp.getPath}/part-00000.parquet"): Unit
     val fin = new java.io.File(s"$ledgerDir/_ckpt/ckpt-$head")
     if (!tmp.renameTo(fin)) {
       MirrorLoop.rmrf(tmp)
       sys.error(s"checkpoint ckpt-$head already exists under $ledgerDir/_ckpt")
     }
     // prune the superseded per-commit files: only files ALL of whose rows
-    // the checkpoint covers (per-file max snapshot_id <= head) — a file
-    // carrying a concurrent later append stays
-    val covered = spark.read.option("mergeSchema", "true").parquet(ledgerDir)
-      .select(col("_metadata.file_path").as("f"), col("snapshot_id"))
-      .groupBy(col("f")).agg(max(col("snapshot_id")).as("mx"))
-      .filter(col("mx") <= head)
-      .collect().map(_.getString(0))
-    covered.foreach(f => new java.io.File(normPath(f)).delete())
+    // the checkpoint covers — a file carrying a concurrent later append
+    // stays
+    st.filesCoveredBy(head).foreach(f => new java.io.File(f).delete())
     // earlier checkpoints are strict subsets of this one
     Option(new java.io.File(s"$ledgerDir/_ckpt").listFiles())
       .getOrElse(Array.empty)
@@ -466,91 +413,34 @@ object Lake {
     head
   }
 
-  /** Driver-side memo of the ledger head, keyed by the probed
-    * DataFrame's own file listing (the [[dvPresence]] discipline: ledger
-    * files are immutable once visible, so a matching listing proves the
-    * row set — and therefore max(snapshot_id) — unchanged). Every lake
-    * op asks for the head at least once and view re-pins ask again;
-    * each miss is a full ledger aggregation JOB, profiled as one of the
-    * fixed per-commit metadata jobs. The memo makes all but the first
-    * ask per listing zero-job. */
-  private val headMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-
   /** Highest snapshot id in the ledger (0 = empty ledger). */
   def currentSnapshot(spark: SparkSession, ledgerDir: String): Long =
-    readLedger(spark, ledgerDir).map { ledger =>
-      val fp = ledgerFingerprint(ledger)
-      val cached = headMemo.get(ledgerDir)
-      if (cached != null && cached._1 == fp) cached._2
-      else {
-        val h = ledger.agg(max(col("snapshot_id"))).head().getLong(0)
-        headMemo.put(ledgerDir, (fp, h))
-        h
-      }
-    }.getOrElse(0L)
+    LedgerState.open(spark, ledgerDir).head
 
-  /** The live file actions AT `snapshot` as a RELATION (path, size):
-    * added in some snapshot ≤ it and not removed by any snapshot ≤ it.
-    * Stays a DataFrame — the manifest-driven scan consumes it directly. */
-  private def liveActionsAt(ledger: DataFrame, snapshot: Long): DataFrame =
-    withLedgerStats(ledger).filter(col("snapshot_id") <= snapshot)
-      .groupBy(col("path"))
-      .agg(max(when(col("op") === "remove", col("snapshot_id"))).as("rm"),
-        max(when(col("op") === "add", col("snapshot_id"))).as("ad"),
-        // size/stats must come from the WINNING add row (max_by on its
-        // snapshot id), never independent max() across generations — a
-        // re-added path would otherwise get a FileStatus length and stats
-        // mixed from different file generations. Both value AND ordering
-        // are null for non-add rows so a remove row can never win.
-        max_by(when(col("op") === "add", struct(col("size"), col("stats"))),
-          when(col("op") === "add", col("snapshot_id"))).as("w"))
-      .filter(col("ad").isNotNull && (col("rm").isNull || col("rm") < col("ad")))
-      // `snap` = the winning-add snapshot: LedgerFileIndex materializes it
-      // for rename-epoch resolution (tableScan); every other consumer
-      // selects its columns explicitly and ignores it
-      .select(col("path"), col("w.size").as("size"), col("w.stats").as("stats"),
-        col("ad").as("snap"))
+  /** The live actions at `snapshot` as a relation (path, size, stats,
+    * snap = winning-add snapshot): a local relation off the state. */
+  private def liveFrame(spark: SparkSession, st: LedgerState,
+      snapshot: Long): DataFrame =
+    st.frame(spark, st.liveAt(snapshot)).select(col("path"), col("size"),
+      col("stats"), col("snapshot_id").as("snap"))
 
-  /** Paths live AT `snapshot` — the driver-list form, used ONLY where the
-    * path set feeds driver-side bookkeeping (expiry accounting). Every
-    * QUERY path goes through an actions relation + LedgerFileIndex
-    * instead (no driver path list). */
-  private def liveFilesAt(spark: SparkSession, ledgerDir: String,
-      snapshot: Long): Seq[String] =
-    readLedger(spark, ledgerDir).map { ledger =>
-      liveActionsAt(ledger, snapshot)
-        .select(col("path")).collect().map(_.getString(0)).toSeq
-    }.getOrElse(Seq.empty)
-
-  /** Read the files of `paths`, or a zero-row frame CARRYING the schema of
-    * `schemaFrom` paths when empty (an empty incremental batch must still
-    * project the table's columns — callers select event columns and would
-    * otherwise crash only in the empty case). */
-  private def readPaths(spark: SparkSession, paths: Seq[String],
-      schemaFrom: Seq[String]): DataFrame =
-    if (paths.nonEmpty) spark.read.parquet(paths: _*)
-    else if (schemaFrom.nonEmpty) spark.read.parquet(schemaFrom: _*).limit(0)
-    else spark.emptyDataFrame
-
-  /** Manifest-driven scan of the file-action rows in `actions` (path,
-    * size, stats): the file set plans through a `LedgerFileIndex` — no
-    * path list is collected, no filesystem listing/stat calls are issued
-    * (at 100 TB the listing RPCs are the planning cost this kills), and
-    * per-file stats prune against pushed filters. When `actions` is empty
-    * the result is a zero-row frame still CARRYING the table schema,
-    * resolved from the current live set (callers project columns and
-    * would otherwise crash only in the empty case). */
-  private def scanActions(spark: SparkSession, ledgerDir: String,
-      actions: DataFrame, atSnapshot: Long = -1L,
+  /** Manifest-driven scan of the file actions `acts`: the file set plans
+    * through a `LedgerFileIndex` — no filesystem listing/stat calls are
+    * issued (at 100 TB the listing RPCs are the planning cost this
+    * kills), and per-file stats prune against pushed filters. When `acts`
+    * is empty the result is a zero-row frame still CARRYING the table
+    * schema, resolved from the current live set (callers project columns
+    * and would otherwise crash only in the empty case). */
+  private def scanActions(spark: SparkSession, st: LedgerState,
+      acts: Seq[LedgerState.Act], atSnapshot: Long = -1L,
       keepPos: Boolean = false): DataFrame = {
-    val index = new LedgerFileIndex(actions)
+    val ledgerDir = st.dir
+    val index = LedgerState.index(acts)
     if (!index.isEmpty)
       tableScan(spark, ledgerDir, index, atSnapshot, keepPos)
     else {
-      val liveIdx = readLedger(spark, ledgerDir)
-        .map(l => new LedgerFileIndex(liveActionsAt(l, Long.MaxValue)))
-      val empty = liveIdx.filterNot(_.isEmpty)
+      val liveIdx = LedgerState.index(st.liveAt(Long.MaxValue))
+      val empty = Some(liveIdx).filterNot(_.isEmpty)
         .map(i => tableScan(spark, ledgerDir, i, atSnapshot).limit(0))
         // zero live files anywhere (e.g. a truncated table): the
         // RECORDED schema still carries a schema-shaped empty frame —
@@ -576,28 +466,25 @@ object Lake {
     * time travel, as in any table format). MANIFEST-DRIVEN via
     * `scanActions` (SURVEY §3.9 — closed). */
   def readAt(spark: SparkSession, ledgerDir: String, snapshot: Long): DataFrame = {
-    val ledger = readLedger(spark, ledgerDir).getOrElse(return spark.emptyDataFrame)
+    val st = LedgerState.open(spark, ledgerDir)
+    if (st.isEmpty) return spark.emptyDataFrame
     // merge-on-read: deletion vectors active at this snapshot anti-join
     // out their rows (no-op scan pass-through when the table has none)
-    applyDvsAt(spark, ledgerDir, snapshot,
-      scanActions(spark, ledgerDir, liveActionsAt(ledger, snapshot),
+    applyDvsAt(spark, st, snapshot,
+      scanActions(spark, st, st.liveAt(snapshot),
         atSnapshot = snapshot, keepPos = true))
   }
 
-  /** The add-file action rows of row-changing snapshots matching `pred` —
-    * the relation incremental reads scan through (size/stats ride on the
-    * add rows themselves; a file later removed by a rewrite still feeds
-    * its original add exactly once). */
-  private def rowChangingAdds(ledger: DataFrame,
-      pred: org.apache.spark.sql.Column): DataFrame =
-    withLedgerStats(ledger)
-      .filter(col("op") === "add"
-        && col("snapshot_op").isin("append", "merge", "restore") && pred)
-      // `snap` = the add's own snapshot: incremental consumers of a
-      // RENAMED table must resolve each file's physical names through
-      // the schema recording current when it was added
-      .select(col("path"), col("size"), col("stats"),
-        col("snapshot_id").as("snap"))
+  /** The add-file actions of row-changing snapshots whose id satisfies
+    * `pred` — what incremental reads scan (a file later removed by a
+    * rewrite still feeds its original add exactly once). Each index
+    * entry keeps the add's own snapshot: incremental consumers of a
+    * RENAMED table resolve each file's physical names through the schema
+    * recording current when it was added. */
+  private def rowChangingAdds(st: LedgerState,
+      pred: Long => Boolean): Seq[LedgerState.Act] =
+    st.rows.filter(a => a.op == "add" &&
+      Set("append", "merge", "restore")(a.snapshotOp) && pred(a.snapshot))
 
   /** Manifest-based incremental read: the rows of every file ADDED by a
     * row-changing snapshot AFTER `sinceSnapshot` — the "what's new since my
@@ -610,10 +497,11 @@ object Lake {
     * table schema when nothing is new. */
   def readSince(spark: SparkSession, ledgerDir: String,
       sinceSnapshot: Long): DataFrame = {
-    val ledger = readLedger(spark, ledgerDir).getOrElse(return spark.emptyDataFrame)
-    val adds = rowChangingAdds(ledger, col("snapshot_id") > sinceSnapshot)
-    checkHorizon(ledger, adds, s"readSince($sinceSnapshot)")
-    scanActions(spark, ledgerDir, adds, atSnapshot = Long.MaxValue)
+    val st = LedgerState.open(spark, ledgerDir)
+    if (st.isEmpty) return spark.emptyDataFrame
+    val adds = rowChangingAdds(st, _ > sinceSnapshot)
+    checkHorizon(st, adds, s"readSince($sinceSnapshot)")
+    scanActions(spark, st, adds, atSnapshot = Long.MaxValue)
   }
 
   /** CHANGE DATA FEED read — the Delta `table_changes` / Iceberg changelog
@@ -631,27 +519,21 @@ object Lake {
     * SCHEMA-CARRYING whenever any cdc file exists (a consumer may project
     * or filter on `_change_type` before checking emptiness, like
     * readSince's zero-row frames); only a table that never wrote a change
-    * feed at all yields the schema-less `emptyDataFrame`. */
+    * feed at all yields the schema-less `emptyDataFrame`. cdc files keep
+    * their commit snapshot in their index entries: across a rename/widen
+    * boundary each file resolves through the recording current at ITS
+    * commit (cdcScan), not a merged footer. */
   def readChanges(spark: SparkSession, ledgerDir: String,
       sinceSnapshot: Long): DataFrame = {
-    val ledger = readLedger(spark, ledgerDir).getOrElse(return spark.emptyDataFrame)
-    val cdcAll = withLedgerStats(ledger).filter(col("op") === "cdc")
-    // cdc files must keep their commit snapshot visible to the scan:
-    // across a rename/widen boundary each file resolves through the
-    // recording current at ITS commit (cdcScan), not a merged footer
-    def asIndex(df: DataFrame) = new LedgerFileIndex(
-      df.select(col("path"), col("size"), col("stats"),
-        col("snapshot_id").as("snap")))
-    val index = asIndex(cdcAll.filter(col("snapshot_id") > sinceSnapshot))
+    val st = LedgerState.open(spark, ledgerDir)
+    val cdcAll = st.rows.filter(_.op == "cdc")
+    val index = LedgerState.index(cdcAll.filter(_.snapshot > sinceSnapshot))
     if (!index.isEmpty)
-      cdcScan(spark, ledgerDir, index)
-    else {
-      // nothing after the cursor: carry the cdc schema from ANY cdc file
-      // (limit 0 folds to an empty relation — no data is read)
-      val all = asIndex(cdcAll)
-      if (all.isEmpty) spark.emptyDataFrame
-      else cdcScan(spark, ledgerDir, all).limit(0)
-    }
+      cdcScan(spark, st, index)
+    else if (cdcAll.isEmpty) spark.emptyDataFrame
+    // nothing after the cursor: carry the cdc schema from ANY cdc file
+    // (limit 0 folds to an empty relation — no data is read)
+    else cdcScan(spark, st, LedgerState.index(cdcAll)).limit(0)
   }
 
   /** Change-file scan with schema resolution (r16): cdc sidecars are
@@ -664,10 +546,10 @@ object Lake {
     * each branch aligns to the CURRENT logical shape (id-resolved
     * names, up-cast types) before the union. Tables without rename/
     * widen history keep the footer-inference fast path untouched. */
-  private def cdcScan(spark: SparkSession, ledgerDir: String,
+  private def cdcScan(spark: SparkSession, st: LedgerState,
       index: LedgerFileIndex): DataFrame = {
     import org.apache.spark.sql.types._
-    val head = currentSnapshot(spark, ledgerDir)
+    val (ledgerDir, head) = (st.dir, st.head)
     val renames = renameLog(ledgerDir)
     val widens = widenLog(ledgerDir)
     val recorded =
@@ -712,21 +594,15 @@ object Lake {
     * retained horizon): silently dropping those rows would violate
     * exactly-once, and letting the scan hit a missing path would fail with
     * an opaque FileNotFound mid-job. The caller must re-bootstrap from a
-    * current snapshot (full read) instead. Relational (anti-join style
-    * semi-join against the expire rows); only example offenders are
-    * collected. */
-  private def checkHorizon(ledger: DataFrame, adds: DataFrame,
-      what: String): Unit = {
-    val gone = adds.select(col("path"))
-      .join(ledger.filter(col("op") === "expire").select(col("path")).distinct(),
-        Seq("path"), "left_semi")
-      .limit(3).collect().map(_.getString(0))
-    if (gone.nonEmpty) throw new IllegalStateException(
-      s"incremental horizon passed: $what references file(s) " +
-        s"physically deleted by expireSnapshots (e.g. ${gone.head}); the " +
-        "checkpoint predates the retained horizon — re-bootstrap from a " +
-        "current snapshot")
-  }
+    * current snapshot (full read) instead. */
+  private def checkHorizon(st: LedgerState, adds: Seq[LedgerState.Act],
+      what: String): Unit =
+    adds.find(a => st.expired(a.path)).foreach(gone =>
+      throw new IllegalStateException(
+        s"incremental horizon passed: $what references file(s) " +
+          s"physically deleted by expireSnapshots (e.g. ${gone.path}); the " +
+          "checkpoint predates the retained horizon — re-bootstrap from a " +
+          "current snapshot"))
 
   /** Ledger-aware compaction: rewrite the CURRENT live file set into
     * ~targetRowsPerFile chunks under `compactDir/gen-<snapshot>`, recording
@@ -758,50 +634,26 @@ object Lake {
       statsCols: Seq[String], bloomCols: Seq[String] = Nil): Long = {
     require(statsCols.nonEmpty || bloomCols.nonEmpty,
       "backfillStats needs at least one stats or bloom column")
-    val ledger = readLedger(spark, ledgerDir).getOrElse(return 0L)
-    val snap = currentSnapshot(spark, ledgerDir)
-    // winning add row per live path, WITH adler32 (liveActionsAt projects
-    // it away): the re-add must carry the original checksum forward
-    val live = withLedgerStats(ledger).filter(col("snapshot_id") <= snap)
-      .groupBy(col("path"))
-      .agg(max(when(col("op") === "remove", col("snapshot_id"))).as("rm"),
-        max(when(col("op") === "add", col("snapshot_id"))).as("ad"),
-        max_by(when(col("op") === "add",
-            struct(col("size"), col("adler32"), col("stats"))),
-          when(col("op") === "add", col("snapshot_id"))).as("w"))
-      .filter(col("ad").isNotNull && (col("rm").isNull || col("rm") < col("ad")))
-      .select(col("path"), col("w.size").as("size"),
-        col("w.adler32").as("adler32"), col("w.stats").as("stats"))
+    val st = LedgerState.open(spark, ledgerDir)
+    if (st.isEmpty) return 0L
+    val snap = st.head
     val want = (statsCols ++ bloomCols).distinct
-    val deficientActs = live.filter(col("stats").isNull ||
-      want.map(c => not(map_contains_key(col("stats"), lit(c))))
-        .reduce(_ || _))
-      .localCheckpoint() // two driver reads below; ledger-scale, tiny
-    val deficient = deficientActs
-      .select(col("path"), col("size"), col("adler32"))
-      .collect()
+    val deficient = st.liveAt(snap).filter(a =>
+      a.stats.forall(m => want.exists(c => !m.contains(c))))
     if (deficient.isEmpty) return 0L
     // a deficient file may already record OTHER columns — the fresh map
     // replaces the whole entry, so re-stat the union or skipping on the
     // old columns would silently vanish (same column derivation as
     // compactIngested: bounds vs bloom-only from the struct shape)
-    val oldEntries = deficientActs.filter(col("stats").isNotNull)
-      .select(explode(col("stats")).as(Seq("c", "v")))
-    val oldBounds = oldEntries
-      .filter(col("v.lo").isNotNull || col("v.slo").isNotNull
-        || col("v.bloom").isNull)
-      .select(col("c")).distinct().collect().map(_.getString(0)).toSeq
-    val oldBlooms = oldEntries.filter(col("v.bloom").isNotNull)
-      .select(col("c")).distinct().collect().map(_.getString(0)).toSeq
-    val paths = deficient.map(r => normPath(r.getString(0))).toSeq
+    val (oldBounds, oldBlooms) = LedgerState.contract(deficient)
+    val paths = deficient.map(_.normPath)
     val schemaCols = spark.read.parquet(paths: _*).schema.fieldNames.toSet
     val fresh = fileStatsPaths(spark, paths,
       (statsCols ++ oldBounds).distinct.filter(schemaCols),
       bloomCols = (bloomCols ++ oldBlooms).distinct.filter(schemaCols))
       .getOrElse(return 0L)
     import spark.implicits._
-    val adds = deficient.toSeq
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    val adds = deficient.map(a => (a.path, a.size, a.row.getLong(2)))
       .toDF("path", "size", "adler32")
       .withColumn("_np", regexp_replace(col("path"), "^file:/+", "/"))
       .join(fresh, Seq("_np"))
@@ -817,10 +669,10 @@ object Lake {
       zOrder: Boolean = false,
       where: Option[org.apache.spark.sql.Column] = None,
       zOrderBy: Seq[String] = Nil): Long = {
-    val ledger = readLedger(spark, ledgerDir).getOrElse(return 0L)
-    val snap = currentSnapshot(spark, ledgerDir)
-    val liveActs = liveActionsAt(ledger, snap)
-    val index = new LedgerFileIndex(liveActs)
+    val st = LedgerState.open(spark, ledgerDir)
+    val snap = st.head
+    val liveActs = st.liveAt(snap)
+    val index = LedgerState.index(liveActs)
     if (index.isEmpty) return 0L
     // SCOPED compaction (OPTIMIZE WHERE): `where` selects FILES, never
     // rows — every file that MAY hold a matching row is rewritten WHOLE
@@ -839,19 +691,18 @@ object Lake {
     }
     if (scopeNorm.exists(_.isEmpty)) return 0L
     val compactActs = scopeNorm match {
-      case Some(ps) => liveActs.filter(
-        regexp_replace(col("path"), "^file:/+", "/").isin(ps.toSeq: _*))
+      case Some(ps) => liveActs.filter(a => ps(a.normPath))
       case None => liveActs
     }
     val compactIndex = scopeNorm.map(_ =>
-      new LedgerFileIndex(compactActs)).getOrElse(index)
+      LedgerState.index(compactActs)).getOrElse(index)
     // carry the data-skipping capability through the rewrite: recompute
     // stats for every column the live ledger rows record stats for
     // (column-NAME list only — KB-scale, never a path list). Bloom-ONLY
     // columns (null bounds, non-null bloom) rejoin as bloom recomputes,
     // not as range-clustering keys — hash-scattered point-lookup columns
     // must not hijack the rewrite's sort order.
-    val (statsCols, bloomColsLive) = liveStatsContract(liveActs, renameLog(ledgerDir))
+    val (statsCols, bloomColsLive) = liveStatsContract(st, snap, renameLog(ledgerDir))
     val next = snap + 1
     // reserve BEFORE writing gen-$next data files: a concurrent commit must
     // fail here, not after overwriting a winner's generation directory;
@@ -861,7 +712,7 @@ object Lake {
       // DV-applied: compaction MATERIALIZES every live deletion vector —
       // the rewrite drops the deleted rows and replaces every file, so
       // all prior vectors go inert (dvRows() returns 0 afterwards)
-      val df = applyDvsAt(spark, ledgerDir, snap,
+      val df = applyDvsAt(spark, st, snap,
         tableScan(spark, ledgerDir, compactIndex, snap, keepPos = true))
       val n = df.count()
       val files = math.max(1, math.ceil(n.toDouble / targetRowsPerFile).toInt)
@@ -932,21 +783,17 @@ object Lake {
         .select(col("path"), col("length").as("size"),
           graft.functions.GraftFunctions.adler32(col("content")).as("adler32"))
         .withColumn("op", lit("add"))
-      val added = fileStats(spark, genDir, statsCols,
-          bloomCols = bloomColsLive) match {
+      val added = fileStatsPaths(spark, Seq(genDir), statsCols,
+          bloomCols = bloomColsLive, schema = Some(df.schema)) match {
         case Some(stats) => added0
           .withColumn("_np", regexp_replace(col("path"), "^file:/+", "/"))
           .join(stats, Seq("_np"), "left")
           .drop("_np")
         case None => added0
       }
-      // remove rows straight from the scoped actions RELATION — the full
-      // live path set never touches the driver even for the bookkeeping
-      val removed = compactActs.select(col("path"))
-        .withColumn("size", lit(null).cast("long"))
-        .withColumn("adler32", lit(null).cast("long"))
-        .withColumn("op", lit("remove"))
-      val replaceRows = withLedgerStats(added).unionByName(withLedgerStats(removed))
+      val removed = removeActions(spark, compactActs.map(_.path))
+        .drop("snapshot_op")
+      val replaceRows = withLedgerStats(added).unionByName(removed)
         .withColumn("snapshot_id", lit(next))
         .withColumn("ingested_at", current_timestamp())
         .withColumn("snapshot_op", lit("replace"))
@@ -963,7 +810,7 @@ object Lake {
   /** Normalize a path/URI to a plain filesystem path: `file:///x`,
     * `file:/x` and `/x` all compare equal. input_file_name() and the
     * binaryFile source disagree on the URI prefix form, and a remove row
-    * whose path string differs from its add row would break liveFilesAt. */
+    * whose path string differs from its add row would break the live set. */
   private[sources] def normPath(p: String): String =
     p.replaceFirst("^file:/+", "/")
 
@@ -1480,59 +1327,27 @@ object Lake {
     renames.foldLeft(n)((cur, r) =>
       if (r.from.equalsIgnoreCase(cur)) r.to else cur)
 
-  private def liveStatsContract(liveActs: DataFrame,
-      renames: Seq[RenameRec] = Nil): (Seq[String], Seq[String]) = {
-    val (s0, b0) = liveStatsContractRaw(liveActs)
+  private def liveStatsContract(st: LedgerState, snapshot: Long,
+      renames: Seq[RenameRec]): (Seq[String], Seq[String]) = {
+    val (s0, b0) = st.statsContract(snapshot)
     if (renames.isEmpty) (s0, b0)
     else (s0.map(contractName(renames, _)).distinct.sorted,
       b0.map(contractName(renames, _)).distinct.sorted)
   }
-
-  private def liveStatsContractRaw(liveActs: DataFrame): (Seq[String], Seq[String]) = {
-    val statEntries = liveActs.filter(col("stats").isNotNull)
-      .select(explode(col("stats")).as(Seq("c", "v")))
-    val statsCols: Seq[String] = statEntries
-      .filter(col("v.lo").isNotNull || col("v.slo").isNotNull
-        || col("v.bloom").isNull)
-      .select(col("c")).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
-    val bloomCols: Seq[String] = statEntries
-      .filter(col("v.bloom").isNotNull)
-      .select(col("c")).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
-    (statsCols, bloomCols)
-  }
-
-  /** Join freshly-computed per-file stats for `dirs` onto their add rows,
-    * per the table's contract; a contract-less table passes through. */
-  private def addsWithStatsPaths(spark: SparkSession, adds: DataFrame,
-      dirs: Seq[String], statsCols: Seq[String],
-      bloomCols: Seq[String]): DataFrame =
-    if (statsCols.isEmpty && bloomCols.isEmpty) adds
-    else {
-      val schemaCols = spark.read.parquet(dirs: _*).schema.fieldNames.toSet
-      fileStatsPaths(spark, dirs, statsCols.filter(schemaCols),
-          bloomCols = bloomCols.filter(schemaCols)) match {
-        case Some(st) => adds
-          .withColumn("_np", regexp_replace(col("path"), "^file:/+", "/"))
-          .join(st, Seq("_np"), "left")
-          .drop("_np")
-        case None => adds
-      }
-    }
 
   /** One combined adler32 + stats pass over a commit's freshly-written
     * generation dirs, tagging each file's `snapshot_op` by its dir NAME
     * (carry/delta/changes are fixed leaf names under gen-N): the per-dir
     * form pays a binaryFile scan + a parquet stats scan PER dir, and a
     * COW commit writes 2-3 dirs — per-commit fixed job count, halved.
-    * `statDirs` limits the stats scan to the table-shaped dirs (cdc
-    * files carry change-typed columns and record no stats). Dirs with no
+    * Only the table-shaped (add) dirs record stats, per the table's
+    * contract (cdc files carry change-typed columns), read with the
+    * schema their writer held — no footer inference. Dirs with no
     * parquet output (an all-matched carry) contribute no rows. */
   private def addsTagged(spark: SparkSession,
-      dirOps: Seq[(String, String, String)], // (dir, opCol, snapshotOp)
+      dirOps: Seq[(String, String, String, org.apache.spark.sql.types.StructType)],
       statsCols: Seq[String], bloomCols: Seq[String]): DataFrame = {
-    val present = dirOps.filter { case (d, _, _) =>
+    val present = dirOps.filter { case (d, _, _, _) =>
       val f = new java.io.File(d)
       f.isDirectory && Option(f.listFiles()).getOrElse(Array.empty)
         .exists(x => x.getName.endsWith(".parquet") && x.length > 0)
@@ -1544,18 +1359,23 @@ object Lake {
           "path string, size bigint, adler32 bigint, op string, " +
             s"snapshot_op string, stats $StatsType"))
     val raw = fileAddsPaths(spark, present.map(_._1))
-    val statDirs = present.collect { case (d, "add", _) => d }
-    val adds =
-      if (statDirs.isEmpty) withLedgerStats(raw)
-      else withLedgerStats(
-        addsWithStatsPaths(spark, raw, statDirs, statsCols, bloomCols))
+    val statDirs = present.collect { case (d, "add", _, sch) => (d, sch) }
+    val stats = statDirs.headOption.flatMap { case (_, sch) =>
+      val has = sch.fieldNames.toSet
+      fileStatsPaths(spark, statDirs.map(_._1), statsCols.filter(has),
+        bloomCols = bloomCols.filter(has), schema = Some(sch))
+    }
+    val adds = withLedgerStats(stats.fold(raw)(st => raw
+      .withColumn("_np", regexp_replace(col("path"), "^file:/+", "/"))
+      .join(st, Seq("_np"), "left")
+      .drop("_np")))
     val leaf = element_at(split(col("path"), "/"), -2)
     val opFor = present.foldLeft(lit(null).cast("string")) {
-      case (acc, (d, o, _)) =>
+      case (acc, (d, o, _, _)) =>
         when(leaf === new java.io.File(d).getName, lit(o)).otherwise(acc)
     }
     val snapOpFor = present.foldLeft(lit(null).cast("string")) {
-      case (acc, (d, _, so)) =>
+      case (acc, (d, _, so, _)) =>
         when(leaf === new java.io.File(d).getName, lit(so)).otherwise(acc)
     }
     // stats recorded only for table-shaped add rows (cdc rows stay null,
@@ -1705,11 +1525,7 @@ object Lake {
     val reserved = commitStore.list(s"$ledgerDir/_commits")
       .flatMap(_.toLongOption).toSet
     if (reserved.isEmpty) return Seq.empty
-    val landed = readLedger(spark, ledgerDir)
-      .map(_.select(col("snapshot_id")).distinct()
-        .collect().map(_.getLong(0)).toSet)
-      .getOrElse(Set.empty)
-    (reserved -- landed).toSeq.sorted
+    (reserved -- LedgerState.open(spark, ledgerDir).snapshots).toSeq.sorted
   }
 
   /** Release an orphaned reservation so the id becomes writable again.
@@ -1717,9 +1533,7 @@ object Lake {
     * live snapshot's marker would re-open it to a second writer. */
   def releaseCommit(spark: SparkSession, ledgerDir: String,
       snapshot: Long): Boolean = {
-    val landed = readLedger(spark, ledgerDir).exists(
-      !_.filter(col("snapshot_id") === snapshot).isEmpty)
-    if (landed) false
+    if (LedgerState.open(spark, ledgerDir).snapshots(snapshot)) false
     else commitStore.delete(s"$ledgerDir/_commits", snapshot.toString)
   }
 
@@ -1896,22 +1710,16 @@ object Lake {
     if (preReserved) land() else reserving(spark, ledgerDir, snapshot)(land())
   }
 
-  /** Remove rows for the files of `acts` (any frame with a `path`
-    * column, ledger-form paths), tagged `snapshotOp`. */
-  private def removeRows(acts: DataFrame, snapshotOp: String): DataFrame =
-    acts.select(col("path"))
+  /** Remove rows for `paths` (ledger form), tagged `snapshotOp`. */
+  private def removeActions(spark: SparkSession, paths: Seq[String],
+      snapshotOp: String = "merge"): DataFrame = {
+    import spark.implicits._
+    paths.toDF("path")
       .withColumn("size", lit(null).cast("long"))
       .withColumn("adler32", lit(null).cast("long"))
       .withColumn("op", lit("remove"))
       .withColumn("snapshot_op", lit(snapshotOp))
       .withColumn("stats", lit(null).cast(StatsType))
-
-  private def removeActions(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    removeRows(spark.createDataFrame(
-        spark.sparkContext.parallelize(paths.map(org.apache.spark.sql.Row(_)),
-          1),
-        StructType(Seq(StructField("path", StringType)))), "merge")
   }
 
   // ------------------------------------------ row-level commit skeleton
@@ -1928,43 +1736,51 @@ object Lake {
     * [[mergeIntoMorKeys]] and deleteMorMatching. As in a Delta commit, the
     * writer computes a set of actions and one atomic ledger record commits
     * them; the writer keeps only its row logic, this owns the rest.
-    *  - Open: the snapshot, then (lazily — a writer that returns early
-    *    reads nothing more) its live actions checkpointed ONCE, the
-    *    `LedgerFileIndex` over them and the target scan.
+    *  - Open: the snapshot and its live actions from the table's
+    *    [[LedgerState]], the `LedgerFileIndex` over them and (lazily)
+    *    the target scan.
     *  - [[affectedFiles]]: one distinct collect of the live files holding
     *    a matching row — the only driver-side file list, bounded by the
     *    commit's blast radius, never the table's file count.
     *  - [[affectedRows]]: a DV-applied scan of those files through a
-    *    SUB-INDEX of the live index (entries reused — no second collect
-    *    job). MOR-deleted rows never carry into a rewrite, count as
-    *    matched or surface as pre-images; the rewrite materializes the
-    *    files' vectors (its winning add postdates them, so they go inert).
-    *  - [[commit]]: reserve, write, stat, append. */
+    *    SUB-INDEX of the live index. MOR-deleted rows never carry into a
+    *    rewrite, count as matched or surface as pre-images; the rewrite
+    *    materializes the files' vectors (its winning add postdates them,
+    *    so they go inert).
+    *  - [[commit]]: reserve, write, stat, append.
+    * Every job a step launches carries the description
+    * `Lake.commit <kind>: <step>` ([[step]]). */
   private final class RowCommit(spark: SparkSession, ledgerDir: String,
-      genRoot: String, genSuffix: Option[String] = None) {
-    val snap: Long = currentSnapshot(spark, ledgerDir)
+      genRoot: String, kind: String, genSuffix: Option[String]) {
+    val st: LedgerState = LedgerState.open(spark, ledgerDir)
+    val snap: Long = st.head
     val next: Long = snap + 1
     /** `genSuffix` tags the generation DIRECTORY (e.g. a streaming sink's
       * batch id) so the commit is PROBEABLE from the ledger's paths alone
       * — the exactly-once replay marker UpsertLoop keys on. */
     val genDir: String =
       s"$genRoot/gen-$next" + genSuffix.map("-" + _).getOrElse("")
-    lazy val liveActs: Option[DataFrame] = readLedger(spark, ledgerDir)
-      .map(l => liveActionsAt(l, snap).localCheckpoint())
+    val liveActs: Seq[LedgerState.Act] = st.liveAt(snap)
     /** None for a table with no live file. */
-    lazy val index: Option[LedgerFileIndex] =
-      liveActs.map(new LedgerFileIndex(_)).filterNot(_.isEmpty)
+    val index: Option[LedgerFileIndex] =
+      Some(LedgerState.index(liveActs)).filterNot(_.isEmpty)
     lazy val target: Option[DataFrame] =
       index.map(tableScan(spark, ledgerDir, _, snap))
+
+    /** Run `body` with its jobs described as this commit's step `name`. */
+    def step[T](name: String)(body: => T): T =
+      described(spark, s"Lake.commit $kind: $name")(body)
 
     /** Normalized paths of the live files holding a row of `scan` that
       * `matching` keeps. */
     def affectedFiles(scan: DataFrame)(
         matching: DataFrame => DataFrame): Set[String] =
-      matching(scan.withColumn("_file",
-          regexp_replace(input_file_name(), "^file:/+", "/")))
-        .select(col("_file")).distinct()
-        .collect().map(_.getString(0)).toSet
+      step("affected-files") {
+        matching(scan.withColumn("_file",
+            regexp_replace(input_file_name(), "^file:/+", "/")))
+          .select(col("_file")).distinct()
+          .collect().map(_.getString(0)).toSet
+      }
 
     /** [[affectedFiles]] under a row predicate, pushed straight at the
       * manifest-pruned target scan: only files whose stats admit a match
@@ -1979,14 +1795,12 @@ object Lake {
     def liveRows: DataFrame = dvApplied(index.get)
 
     private def dvApplied(idx: LedgerFileIndex): DataFrame =
-      applyDvsAt(spark, ledgerDir, snap,
+      applyDvsAt(spark, st, snap,
         tableScan(spark, ledgerDir, idx, atSnapshot = snap, keepPos = true))
 
-    /** The action rows of `files` — what a rewrite removes, straight from
-      * the live-actions relation (never a re-collected path list). */
-    def actsOf(files: Set[String]): Option[DataFrame] = liveActs.map(
-      _.filter(regexp_replace(col("path"), "^file:/+", "/")
-        .isin(files.toSeq: _*)))
+    /** The ledger paths of the live `files` — what a rewrite removes. */
+    def actsOf(files: Set[String]): Seq[String] =
+      liveActs.filter(a => files(a.normPath)).map(_.path)
 
     /** Reserve `next`, then run `write`: each output it names lands
       * through [[writeGenDir]] (`changes` rows stamped with their
@@ -1997,19 +1811,20 @@ object Lake {
       * readSince surfaces, exactly once), cdc and dv rows `changeOp`
       * (inert to every live-set reader — neither add nor remove — and
       * never vacuumed) — and carry/delta re-stat against the table's skipping contract,
-      * read once, so pruning survives the rewrite. `removed`'s action
-      * rows land as removes tagged `removeOp`. A `staged` schema is
+      * read once, so pruning survives the rewrite. The `removed` paths
+      * land as removes tagged `removeOp`. A `staged` schema is
       * recorded at `next` BEFORE the rows land: a crash between the
       * append and a later recording would leave evolved files live with
       * a pre-evolution recording, while a recording whose snapshot never
       * lands is swept by the next append. A commit with no actions lands
       * nothing, keeps no reservation and returns `snap`. Any failure
       * releases the reservation ([[reserving]]). */
-    def commit(removed: Option[DataFrame] = None, removeOp: String = "merge",
+    def commit(removed: Seq[String] = Nil, removeOp: String = "merge",
         changeOp: String = "merge",
         staged: Option[org.apache.spark.sql.types.StructType] = None)(
         write: GenWrite => Unit): Long = reserving(spark, ledgerDir, next) {
-      val dirOps = scala.collection.mutable.ArrayBuffer.empty[(String, String, String)]
+      val dirOps = scala.collection.mutable.ArrayBuffer.empty[
+        (String, String, String, org.apache.spark.sql.types.StructType)]
       write { (leaf, rows) =>
         val (op, snapOp, stamped) = leaf match {
           case "carry" => ("add", "replace", rows)
@@ -2018,22 +1833,42 @@ object Lake {
             rows.withColumn("_commit_snapshot", lit(next)))
           case "dv" => ("dv", changeOp, rows.withColumn("dv_snap", lit(next)))
         }
-        writeGenDir(spark, stamped, s"$genDir/$leaf")
-        dirOps += ((s"$genDir/$leaf", op, snapOp))
+        step(s"write $leaf")(writeGenDir(spark, stamped, s"$genDir/$leaf"))
+        dirOps += ((s"$genDir/$leaf", op, snapOp, stamped.schema))
       }
       // only table-shaped (add) outputs record stats (MOR writes none)
-      val (statsCols, bloomCols) = liveActs match {
-        case Some(acts) if dirOps.exists(_._2 == "add") =>
-          liveStatsContract(acts, renameLog(ledgerDir))
-        case _ => (Nil, Nil)
-      }
+      val (statsCols, bloomCols) =
+        if (dirOps.exists(_._2 == "add"))
+          liveStatsContract(st, snap, renameLog(ledgerDir))
+        else (Nil, Nil)
       val adds = addsTagged(spark, dirOps.toSeq, statsCols, bloomCols)
       staged.foreach(recordSchema(ledgerDir, next, _))
-      val landed = appendSnapshot(spark, ledgerDir, next,
-        removed.fold(adds)(r => adds.unionByName(removeRows(r, removeOp))),
-        preReserved = true, stagedSchema = staged.nonEmpty)
+      val landed = step("stats and ledger")(appendSnapshot(spark, ledgerDir,
+        next, if (removed.isEmpty) adds
+          else adds.unionByName(removeActions(spark, removed, removeOp)),
+        preReserved = true, stagedSchema = staged.nonEmpty))
       if (landed) next else snap
     }
+  }
+
+  /** Open a [[RowCommit]] of `kind` and run `body` over it, every job it
+    * launches described `Lake.commit <kind>` at least. */
+  private def rowCommit[T](spark: SparkSession, ledgerDir: String,
+      genRoot: String, kind: String, genSuffix: Option[String] = None)(
+      body: RowCommit => T): T =
+    described(spark, s"Lake.commit $kind")(
+      body(new RowCommit(spark, ledgerDir, genRoot, kind, genSuffix)))
+
+  /** Run `body` with Spark job description `desc` — what job listeners
+    * and the UI show for every job it launches, AQE stage jobs included
+    * (they inherit the caller's local properties) — restoring the
+    * caller's description afterwards. */
+  private def described[T](spark: SparkSession, desc: String)(
+      body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(prev)
   }
 
   /** What a MERGE lands, prepared once for both write paths (COW
@@ -2204,8 +2039,8 @@ object Lake {
       source: DataFrame, keys: Seq[String],
       deleteWhen: Option[org.apache.spark.sql.Column] = None,
       changeFeed: Boolean = false,
-      evolveSchema: Boolean = false): Long = {
-    val c = new RowCommit(spark, ledgerDir, genRoot)
+      evolveSchema: Boolean = false): Long =
+    rowCommit(spark, ledgerDir, genRoot, "merge") { c =>
     val m = new MergePrep(spark, ledgerDir, c, source, keys, deleteWhen,
       evolveSchema)
     // the rewrite set: live files containing at least one matched key,
@@ -2238,8 +2073,8 @@ object Lake {
     * incremental consumers see nothing — COW delete semantics). Time travel
     * to any prior snapshot still sees the deleted rows. */
   def deleteWhere(spark: SparkSession, ledgerDir: String, genRoot: String,
-      cond: org.apache.spark.sql.Column, changeFeed: Boolean = false): Long = {
-    val c = new RowCommit(spark, ledgerDir, genRoot)
+      cond: org.apache.spark.sql.Column, changeFeed: Boolean = false): Long =
+    rowCommit(spark, ledgerDir, genRoot, "delete") { c =>
     if (c.index.isEmpty) return c.snap // empty table: nothing to delete
     val cols = c.target.get.columns.map(col)
     val affected = c.affectedWhere(cond)
@@ -2280,9 +2115,9 @@ object Lake {
   def updateWhere(spark: SparkSession, ledgerDir: String, genRoot: String,
       cond: org.apache.spark.sql.Column,
       sets: Seq[(String, org.apache.spark.sql.Column)],
-      changeFeed: Boolean = false): Long = {
+      changeFeed: Boolean = false): Long =
+    rowCommit(spark, ledgerDir, genRoot, "update") { c =>
     require(sets.nonEmpty, "UPDATE with no assignments")
-    val c = new RowCommit(spark, ledgerDir, genRoot)
     if (c.index.isEmpty) return c.snap // empty table: nothing to update
     val target = c.target.get
     val setMap = sets.toMap
@@ -2340,7 +2175,7 @@ object Lake {
     // the DV-applied affected rows feed FOUR consumers (constraint
     // check, carry, delta, change feed) — materialize the blast radius
     // once instead of re-scanning the affected files per consumer
-    val affectedRows = c.affectedRows(affected).localCheckpoint()
+    val affectedRows = c.step("rewrite")(c.affectedRows(affected).localCheckpoint())
     val cols = target.columns.map(col)
     val pre = affectedRows.filter(coalesce(cond, lit(false)))
       .select(cols: _*)
@@ -2430,8 +2265,8 @@ object Lake {
 
   private def deleteMorMatching(spark: SparkSession, ledgerDir: String,
       genRoot: String, matches: DataFrame => DataFrame,
-      changeFeed: Boolean): Long = {
-    val c = new RowCommit(spark, ledgerDir, genRoot)
+      changeFeed: Boolean): Long =
+    rowCommit(spark, ledgerDir, genRoot, "delete") { c =>
     if (c.index.isEmpty) return c.snap // empty table: nothing to delete
     // already-deleted rows must not re-record their positions (the
     // anti-join would dedup them, but sidecar sizes and dvRows() counts
@@ -2439,15 +2274,15 @@ object Lake {
     // (file, position) identity columns must materialize BEFORE the DV
     // anti-join — `_metadata` is unresolvable/ambiguous above a join of
     // two file scans.
-    val target = applyDvsAt(spark, ledgerDir, c.snap,
+    val target = applyDvsAt(spark, c.st, c.snap,
       tableScan(spark, ledgerDir, c.index.get, c.snap, keepPos = true),
       keepPos = true)
     // ONE match scan: the position set is delete-sized (exactly what the
     // sidecar will hold), so materialize it once instead of re-scanning
     // the table for the emptiness check and again for the sidecar write
-    val hits = matches(target)
+    val hits = c.step("match")(matches(target)
       .select(col("__graft_fp").as("dpath"), col("__graft_pos").as("pos"))
-      .localCheckpoint()
+      .localCheckpoint())
     if (hits.isEmpty) return c.snap // nothing matches: no snapshot, no marker
     c.commit(changeOp = "mor-delete") { out =>
       out("dv", hits)
@@ -2484,15 +2319,6 @@ object Lake {
     else scan.filter(preds.reduce(_ && _))
   }
 
-  /** The dv-typed ledger action rows committed at or before `snapshot`
-    * (path/size/stats of the SIDECAR files — sizes are real file lengths,
-    * so the sidecar scan plans through [[LedgerFileIndex]] like every
-    * other read). */
-  private def dvActionsAt(ledger: DataFrame, snapshot: Long): DataFrame =
-    withLedgerStats(ledger)
-      .filter(col("op") === "dv" && col("snapshot_id") <= snapshot)
-      .select(col("path"), col("size"), col("stats"))
-
   /** Apply the deletion vectors active at `snapshot` to a table scan:
     * anti-join on (normalized file path, row position) against the
     * sidecar rows that pass the activity rule (see [[deleteWhereMor]] —
@@ -2505,7 +2331,7 @@ object Lake {
     * identity columns for callers that need row positions downstream
     * ([[deleteWhereMor]]) — they must materialize BEFORE the anti-join,
     * since `_metadata` is unresolvable above a join of two file scans. */
-  private def applyDvsAt(spark: SparkSession, ledgerDir: String,
+  private def applyDvsAt(spark: SparkSession, st: LedgerState,
       snapshot: Long, scan: DataFrame, keepPos: Boolean = false): DataFrame = {
     // row identity: already materialized when the scan was built with
     // tableScan(keepPos = true) — REQUIRED for renamed tables, where
@@ -2515,9 +2341,7 @@ object Lake {
       if (df.columns.contains("__graft_fp")) df else withRowIdentity(df)
     def dropPos(df: DataFrame): DataFrame =
       df.drop("__graft_fp", "__graft_pos")
-    val activeOpt = readLedger(spark, ledgerDir)
-      .flatMap(l => activeDvRows(spark, ledgerDir, l, snapshot))
-    activeOpt match {
+    activeDvRows(spark, st, snapshot) match {
       case None => if (keepPos) withPos(scan) else dropPos(scan)
       case Some(active) =>
         val joined = withPos(scan)
@@ -2531,65 +2355,23 @@ object Lake {
     }
   }
 
-  /** Driver-side memo of "does this ledger contain ANY dv action row",
-    * keyed by an append-only directory fingerprint: the ledger only ever
-    * gains immutable files (per-commit parquet appends; checkpoints land
-    * by atomic rename), so a matching (name:length) listing proves the
-    * row set is unchanged and the cached answer still holds — any new
-    * commit changes the listing and forces a re-probe, in this process
-    * or another. Profiling showed 4 DV-presence probes per DML statement
-    * (each a ledger-scan job) on tables that never had a vector — the
-    * memo makes the common no-MOR path zero-job after the first probe. */
-  private val dvPresence =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Boolean)]()
-
-  /** Fingerprint of the file listing a ledger DataFrame ACTUALLY reads
-    * (`inputFiles`, normalized + sorted) — NOT a fresh directory listing.
-    * Sampling the directory independently is a TOCTOU hazard: a
-    * concurrent commit landing between the caller's [[readLedger]] and
-    * the probe would cache the PRE-commit probe answer under the
-    * POST-commit directory state. Ledger files are immutable once
-    * visible (per-commit appends get unique names; checkpoints rename
-    * atomically into `_ckpt/` under new names), so the name set the scan
-    * resolved identifies its row set exactly. */
-  private def ledgerFingerprint(ledger: DataFrame): String =
-    ledger.inputFiles.map(normPath).sorted.mkString(",")
-
   /** The (dpath, pos) rows of every vector ACTIVE at `snapshot`:
     * committed by it (`dv_snap <= snapshot`) and not superseded by a
     * later rewrite/re-add of their file (`dv_snap >=` the file's
-    * winning-add snapshot at `snapshot`). None when the table carries no
-    * vectors at all (the common-path zero-cost check, memoized per
-    * ledger fingerprint — see [[dvPresence]]). */
-  private def activeDvRows(spark: SparkSession, ledgerDir: String,
-      ledger: DataFrame, snapshot: Long): Option[DataFrame] = {
-    val cached = dvPresence.get(ledgerDir)
-    // MONOTONE shortcut: a dv action row never leaves an append-only
-    // ledger (per-commit files are immutable; checkpoints carry every
-    // row verbatim), so a cached TRUE stays true under ANY later listing
-    // — no fingerprint check, no probe job. Only a cached FALSE needs
-    // the listing match (a commit since could have added the first dv).
-    val hasAnyDv =
-      if (cached != null && cached._2) true
-      else {
-        val fp = ledgerFingerprint(ledger)
-        if (cached != null && cached._1 == fp) cached._2
-        else {
-          val h = !ledger.filter(col("op") === "dv").isEmpty
-          dvPresence.put(ledgerDir, (fp, h))
-          h
-        }
-      }
-    if (!hasAnyDv) return None
-    val dvActs = dvActionsAt(ledger, snapshot)
+    * winning-add snapshot at `snapshot`). The sidecars plan through
+    * [[LedgerFileIndex]] like every other read; the add snapshots come
+    * from the state as a local relation. None when no vector is
+    * committed by `snapshot` — decided on the driver, no job. */
+  private def activeDvRows(spark: SparkSession, st: LedgerState,
+      snapshot: Long): Option[DataFrame] = {
+    if (!st.hasDv) return None
+    val dvActs = st.rows.filter(a => a.op == "dv" && a.snapshot <= snapshot)
     if (dvActs.isEmpty) None
     else {
+      import spark.implicits._
       val dvs = org.apache.spark.sql.GraftShim.parquetScan(spark,
-        new LedgerFileIndex(dvActs))
-      val ads = ledger
-        .filter(col("op") === "add" && col("snapshot_id") <= snapshot)
-        .groupBy(regexp_replace(col("path"), "^file:/+", "/").as("dpath"))
-        .agg(max(col("snapshot_id")).as("ad"))
+        LedgerState.index(dvActs))
+      val ads = st.addSnapshots(snapshot).toSeq.toDF("dpath", "ad")
       Some(dvs.join(ads, Seq("dpath"))
         .filter(col("dv_snap") >= col("ad"))
         .select(col("dpath"), col("pos")))
@@ -2602,15 +2384,14 @@ object Lake {
     * compaction materializes everything. KB-scale: sidecars + ledger. */
   def dvRows(spark: SparkSession, ledgerDir: String,
       snapshot: Long = Long.MaxValue): Long = {
-    val ledger = readLedger(spark, ledgerDir).getOrElse(return 0L)
-    val s = if (snapshot == Long.MaxValue) currentSnapshot(spark, ledgerDir)
-      else snapshot
-    activeDvRows(spark, ledgerDir, ledger, s) match {
+    import spark.implicits._
+    val st = LedgerState.open(spark, ledgerDir)
+    val s = snapshot min st.head
+    activeDvRows(spark, st, s) match {
       case None => 0L
       case Some(active) =>
-        val live = liveActionsAt(ledger, s)
-          .select(regexp_replace(col("path"), "^file:/+", "/").as("dpath"))
-        active.join(live, Seq("dpath"), "left_semi").count()
+        active.join(st.liveAt(s).map(_.normPath).toDF("dpath"), Seq("dpath"),
+          "left_semi").count()
     }
   }
 
@@ -2622,7 +2403,8 @@ object Lake {
     * automatically, so appends never erode manifest pruning. Returns the
     * new snapshot (the current one when `rows` is empty). */
   def appendRows(spark: SparkSession, ledgerDir: String, genRoot: String,
-      rows: DataFrame): Long = {
+      rows: DataFrame): Long =
+    described(spark, "Lake.commit insert") {
     if (rows.isEmpty) return currentSnapshot(spark, ledgerDir)
     // constraints enforce BEFORE the generation write (read-only pass on
     // the input), so a refused append leaves ZERO generation debris —
@@ -2630,15 +2412,14 @@ object Lake {
     // its redundant re-check (provably the same rows)
     enforceConstraints(spark, ledgerDir, rows)
     val dir = s"$genRoot/append-${java.util.UUID.randomUUID()}"
-    writeGenDir(spark, rows, dir)
-    val (statsCols, bloomCols) = readLedger(spark, ledgerDir) match {
-      case Some(l) => liveStatsContract(
-        liveActionsAt(l, currentSnapshot(spark, ledgerDir)),
-        renameLog(ledgerDir))
-      case None => (Nil, Nil)
-    }
-    ingestNewFiles(spark, dir, ledgerDir, statsCols, bloomCols,
-      enforceChecks = false)
+    described(spark, "Lake.commit insert: write delta")(
+      writeGenDir(spark, rows, dir))
+    val st = LedgerState.open(spark, ledgerDir)
+    val (statsCols, bloomCols) =
+      liveStatsContract(st, st.head, renameLog(ledgerDir))
+    described(spark, "Lake.commit insert: ingest")(
+      ingestNewFiles(spark, dir, ledgerDir, statsCols, bloomCols,
+        enforceChecks = false))
     currentSnapshot(spark, ledgerDir)
   }
 
@@ -2666,8 +2447,8 @@ object Lake {
     * old FILE COUNT) — the removes are ledger rows, old data is never
     * read (except under the opt-in change feed). */
   def overwriteWith(spark: SparkSession, ledgerDir: String, genRoot: String,
-      rows: DataFrame, changeFeed: Boolean = false): Long = {
-    val c = new RowCommit(spark, ledgerDir, genRoot)
+      rows: DataFrame, changeFeed: Boolean = false): Long =
+    rowCommit(spark, ledgerDir, genRoot, "overwrite") { c =>
     // an empty table may only delegate to the plain append when NO change
     // feed is requested: appendRows records no cdc rows, and a feed
     // consumer (MomentsDelta/TextIndexDelta maintenance) would silently
@@ -2689,7 +2470,7 @@ object Lake {
     // TRUNCATE leaves the zero-file table schema-less (unreadable)
     val needSchema = !newEmpty &&
       recordedSchemaAt(ledgerDir, Long.MaxValue).isEmpty
-    c.commit(c.liveActs, removeOp = "overwrite",
+    c.commit(c.liveActs.map(_.path), removeOp = "overwrite",
         staged = if (needSchema) Some(rows.schema) else None) { out =>
       if (!newEmpty) out("delta", rows)
       if (changeFeed) {
@@ -2732,8 +2513,8 @@ object Lake {
     * the region is empty and `rows` is too). */
   def overwriteWhere(spark: SparkSession, ledgerDir: String, genRoot: String,
       pred: org.apache.spark.sql.Column, rows: DataFrame,
-      changeFeed: Boolean = false): Long = {
-    val c = new RowCommit(spark, ledgerDir, genRoot)
+      changeFeed: Boolean = false): Long =
+    rowCommit(spark, ledgerDir, genRoot, "overwrite") { c =>
     // materialize the incoming frame ONCE (the runMergeColumnList USING
     // discipline): it is evaluated several times below (emptiness, the
     // replaceWhere contract count, constraints, the delta write) — a
@@ -2956,10 +2737,10 @@ object Lake {
     * table. */
   def statsCount(spark: SparkSession, ledgerDir: String,
       snapshot: Long = Long.MaxValue): Option[Long] = {
-    val ledger = readLedger(spark, ledgerDir).getOrElse(return Some(0L))
-    val s = if (snapshot == Long.MaxValue) currentSnapshot(spark, ledgerDir)
-      else snapshot
-    val agg = liveActionsAt(ledger, s)
+    val st = LedgerState.open(spark, ledgerDir)
+    if (st.isEmpty) return Some(0L)
+    val s = snapshot min st.head
+    val agg = liveFrame(spark, st, s)
       .select(try_element_at(map_values(col("stats")), lit(1))
         .getField("nrows").as("nr"))
       .agg(sum(col("nr")).as("tot"),
@@ -3011,11 +2792,12 @@ object Lake {
     val total = statsCount(spark, ledgerDir, s).getOrElse(return None)
     def out(vals: Seq[org.apache.spark.sql.Column]) =
       Some(spark.range(1).select(vals: _*))
-    val ledger = readLedger(spark, ledgerDir).getOrElse(
+    val st = LedgerState.open(spark, ledgerDir)
+    if (st.isEmpty)
       return out(kinds.flatMap { case (c, dt, _) =>
         Seq(lit(null).cast(dt).as(s"min_$c"),
           lit(null).cast(dt).as(s"max_$c"))
-      } :+ lit(0L).as("cnt")))
+      } :+ lit(0L).as("cnt"))
     if (dvRows(spark, ledgerDir, s) > 0) return None
     // epoch-aware stats keys (r16): a file keys its stats map by the
     // PHYSICAL column names current when it was written, so after a
@@ -3063,7 +2845,7 @@ object Lake {
       Seq(min(lo).as(s"__mn_$c"), max(hi).as(s"__mx_$c"),
         count(when(unservable, 1)).as(s"__miss_$c"))
     }
-    val row = liveActionsAt(ledger, s).agg(aggs.head, aggs.tail: _*).head()
+    val row = liveFrame(spark, st, s).agg(aggs.head, aggs.tail: _*).head()
     kinds.indices.foreach { i =>
       if (row.getLong(i * 3 + 2) > 0) return None
     }
@@ -3165,8 +2947,8 @@ object Lake {
       genRoot: String, source: DataFrame, keys: Seq[String],
       deleteWhen: Option[org.apache.spark.sql.Column] = None,
       changeFeed: Boolean = false,
-      genSuffix: Option[String] = None): Long = {
-    val c = new RowCommit(spark, ledgerDir, genRoot, genSuffix)
+      genSuffix: Option[String] = None): Long =
+    rowCommit(spark, ledgerDir, genRoot, "merge", genSuffix = genSuffix) { c =>
     val m = new MergePrep(spark, ledgerDir, c, source, keys, deleteWhen,
       evolveSchema = false)
     if (source.isEmpty) return c.snap // empty source: no snapshot, no marker
@@ -3182,15 +2964,15 @@ object Lake {
     // stats prune the match scan to the batch's file footprint instead
     // of the whole table (see keyRangeScope).
     val matched: Option[DataFrame] = c.index.map { idx =>
-      applyDvsAt(spark, ledgerDir, c.snap,
+      applyDvsAt(spark, c.st, c.snap,
           keyRangeScope(tableScan(spark, ledgerDir, idx, c.snap,
             keepPos = true), m.srcKeys, keys),
           keepPos = true)
         .join(m.srcKeys, keys, "left_semi")
     }
-    val matchedIds: Option[DataFrame] = matched.map(
-      _.select(keys.map(col) ++ Seq(col("__graft_fp"), col("__graft_pos")): _*)
-        .localCheckpoint())
+    val matchedIds: Option[DataFrame] = matched.map(df => c.step("match")(
+      df.select(keys.map(col) ++ Seq(col("__graft_fp"), col("__graft_pos")): _*)
+        .localCheckpoint()))
     val anyMatches = matchedIds.exists(!_.isEmpty)
     val matchedKeys: Option[DataFrame] =
       if (anyMatches) matchedIds.map(_.select(keys.map(col): _*).distinct()) else None
@@ -3227,58 +3009,41 @@ object Lake {
     * format's bound). No-op (current snapshot returned) when restoring to
     * the present or when the live sets already match. */
   def restore(spark: SparkSession, ledgerDir: String, toSnapshot: Long): Long = {
-    val ledger = readLedger(spark, ledgerDir).getOrElse(return 0L)
-    val cur = currentSnapshot(spark, ledgerDir)
+    import spark.implicits._
+    val st = LedgerState.open(spark, ledgerDir)
+    if (st.isEmpty) return 0L
+    val cur = st.head
     if (toSnapshot >= cur) return cur
-    // live sets WITH the winning add row's adler32 (liveActionsAt drops it)
-    def liveFull(snap: Long): DataFrame =
-      withLedgerStats(ledger).filter(col("snapshot_id") <= snap)
-        .groupBy(col("path"))
-        .agg(max(when(col("op") === "remove", col("snapshot_id"))).as("rm"),
-          max(when(col("op") === "add", col("snapshot_id"))).as("ad"),
-          max_by(when(col("op") === "add",
-              struct(col("size"), col("adler32"), col("stats"))),
-            when(col("op") === "add", col("snapshot_id"))).as("w"))
-        .filter(col("ad").isNotNull && (col("rm").isNull || col("rm") < col("ad")))
-        .select(col("path"), col("w.size").as("size"),
-          col("w.adler32").as("adler32"), col("w.stats").as("stats"))
-    // the live sets and the re-add delta are KB-scale and each feeds
-    // several consumers below (semi/anti joins, the emptiness check, the
-    // final union) — materialize once instead of re-aggregating the
-    // ledger per consumer (restore is a metadata op; its cost should be
-    // a handful of jobs, not a recomputation tree)
-    val target = liveFull(toSnapshot).localCheckpoint()
-    val now = liveFull(cur).localCheckpoint()
-    val adds0 = target.join(now, Seq("path"), "left_anti").localCheckpoint()
+    // the live sets at both ends, each action its winning add row (size,
+    // adler32 and stats ride along) — driver-side, from the state
+    val target = st.liveAt(toSnapshot)
+    val now = st.liveAt(cur)
+    val (targetPaths, nowPaths) =
+      (target.map(_.path).toSet, now.map(_.path).toSet)
+    val adds0 = target.filterNot(a => nowPaths(a.path))
     // POST-TARGET deletion vectors must not survive the rollback: a MOR
     // delete references its file instead of rewriting it, so restoring
     // the live set alone would leave post-target deletions applied.
     // Re-ADD every target-live path carrying a post-target vector — the
     // bumped winning-add snapshot revokes those vectors (activity rule:
     // a vector applies only from its file's winning add onward).
-    val postDvActs = withLedgerStats(ledger)
-      .filter(col("op") === "dv"
-        && col("snapshot_id") > toSnapshot && col("snapshot_id") <= cur)
-      .select(col("path"), col("size"), col("stats"))
-    val dvReAdds =
-      if (postDvActs.isEmpty) adds0.limit(0)
-      else {
-        val touched = org.apache.spark.sql.GraftShim
-          .parquetScan(spark, new LedgerFileIndex(postDvActs))
-          .select(col("dpath")).distinct()
-        target
-          .withColumn("_np", regexp_replace(col("path"), "^file:/+", "/"))
-          .join(touched, col("_np") === col("dpath"), "left_semi")
-          .drop("_np")
-          .join(adds0, Seq("path"), "left_anti")
-      }
-    val adds = adds0.unionByName(dvReAdds)
+    val postDvActs = st.rows.filter(a =>
+      a.op == "dv" && a.snapshot > toSnapshot && a.snapshot <= cur)
+    val touched: Set[String] =
+      if (postDvActs.isEmpty) Set.empty
+      else org.apache.spark.sql.GraftShim
+        .parquetScan(spark, LedgerState.index(postDvActs))
+        .select(col("dpath")).distinct().collect().map(_.getString(0)).toSet
+    val adds = adds0 ++ target.filter(a =>
+      touched(a.normPath) && !adds0.exists(_.path == a.path))
+    checkHorizon(st, adds, s"restore($toSnapshot)")
+    val removes = now.filterNot(a => targetPaths(a.path)).map(_.path)
+    if (adds.isEmpty && removes.isEmpty) return cur // live sets already equal
+    val baseActions = st.frame(spark, adds)
+      .select(col("path"), col("size"), col("adler32"), col("stats"))
       .withColumn("op", lit("add"))
-    checkHorizon(ledger, adds, s"restore($toSnapshot)")
-    val baseActions = adds.withColumn("snapshot_op", lit("restore"))
-      .unionByName(removeRows(now.join(target, Seq("path"), "left_anti"),
-        "restore"))
-    if (baseActions.isEmpty) return cur // live sets already equal
+      .withColumn("snapshot_op", lit("restore"))
+      .unionByName(removeActions(spark, removes, "restore"))
     val next = cur + 1
     // PRE-target vectors of re-added files must STAY applied (they were
     // part of the target state), but the re-add revokes EVERY vector on
@@ -3288,18 +3053,17 @@ object Lake {
     // activity rule holds with equality). KB-scale: bounded by the
     // deletions on re-added files, never the table.
     val compRows: Option[DataFrame] =
-      activeDvRows(spark, ledgerDir, ledger, toSnapshot).map { act =>
-        act.join(adds.select(
-            regexp_replace(col("path"), "^file:/+", "/").as("dpath")),
-          Seq("dpath"), "left_semi")
-      }.filterNot(_.isEmpty)
+      activeDvRows(spark, st, toSnapshot).map(
+        _.join(adds.map(_.normPath).toDF("dpath"), Seq("dpath"), "left_semi"))
+        .filterNot(_.isEmpty)
     reserving(spark, ledgerDir, next) {
       val actions = compRows match {
         case Some(rows) =>
           val dvDir = s"$ledgerDir/_dv/gen-$next"
-          writeGenDir(spark, rows.withColumn("dv_snap", lit(next)), dvDir)
-          baseActions.unionByName(
-            addsTagged(spark, Seq((dvDir, "dv", "restore")), Nil, Nil))
+          val stamped = rows.withColumn("dv_snap", lit(next))
+          writeGenDir(spark, stamped, dvDir)
+          baseActions.unionByName(addsTagged(spark,
+            Seq((dvDir, "dv", "restore", stamped.schema)), Nil, Nil))
         case None => baseActions
       }
       // reads at/after the restore must resolve the RESTORED state's
@@ -3315,8 +3079,7 @@ object Lake {
       val staged = cur2.nonEmpty && tgtSchema != cur2
       if (staged) {
         val sch = tgtSchema.getOrElse {
-          val idx = new LedgerFileIndex(liveActionsAt(
-            readLedger(spark, ledgerDir).get, toSnapshot))
+          val idx = LedgerState.index(target)
           org.apache.spark.sql.GraftShim.parquetScan(spark, idx,
             mergeSchemas = true).schema
         }
@@ -3539,30 +3302,28 @@ object Lake {
   def tableDiff(spark: SparkSession, ledgerDir: String, fromSnap: Long,
       toSnap: Long, key: String): DataFrame = {
     require(fromSnap <= toSnap, s"tableDiff: from $fromSnap > to $toSnap")
-    val ledger = readLedger(spark, ledgerDir).getOrElse(return spark.emptyDataFrame)
-    val liveF = liveActionsAt(ledger, fromSnap)
-    val liveT = liveActionsAt(ledger, toSnap)
+    val st = LedgerState.open(spark, ledgerDir)
+    if (st.isEmpty) return spark.emptyDataFrame
+    val liveF = st.liveAt(fromSnap)
+    val liveT = st.liveAt(toSnap)
     // data files whose deletion-vector state changed inside the window:
     // read the window's dv SIDECARS (KB-scale) for their target paths
-    val dvWindow = withLedgerStats(ledger)
-      .filter(col("op") === "dv" && col("snapshot_id") > fromSnap
-        && col("snapshot_id") <= toSnap)
-      .select(col("path"), col("size"), col("stats"))
-    val dvTouched: DataFrame =
-      if (dvWindow.isEmpty) spark.emptyDataFrame.select(lit("").as("npath")).limit(0)
+    val dvWindow = st.rows.filter(a =>
+      a.op == "dv" && a.snapshot > fromSnap && a.snapshot <= toSnap)
+    val dvTouched: Set[String] =
+      if (dvWindow.isEmpty) Set.empty
       else org.apache.spark.sql.GraftShim.parquetScan(spark,
-        new LedgerFileIndex(dvWindow)).select(col("dpath").as("npath")).distinct()
-    val stable = liveF.select(col("path"))
-      .join(liveT.select(col("path")), Seq("path"), "left_semi")
-      .withColumn("npath", regexp_replace(col("path"), "^file:/+", "/"))
-      .join(dvTouched, Seq("npath"), "left_anti")
-      .select(col("path"))
-    val pre = applyDvsAt(spark, ledgerDir, fromSnap, scanActions(spark,
-      ledgerDir, liveF.join(stable, Seq("path"), "left_anti"),
-      atSnapshot = fromSnap, keepPos = true))
-    val post = applyDvsAt(spark, ledgerDir, toSnap, scanActions(spark,
-      ledgerDir, liveT.join(stable, Seq("path"), "left_anti"),
-      atSnapshot = toSnap, keepPos = true))
+          LedgerState.index(dvWindow)).select(col("dpath")).distinct()
+        .collect().map(_.getString(0)).toSet
+    val livePathsT = liveT.map(_.path).toSet
+    val stable = liveF.map(_.path).filter(p =>
+      livePathsT(p) && !dvTouched(normPath(p))).toSet
+    val pre = applyDvsAt(spark, st, fromSnap, scanActions(spark, st,
+      liveF.filterNot(a => stable(a.path)), atSnapshot = fromSnap,
+      keepPos = true))
+    val post = applyDvsAt(spark, st, toSnap, scanActions(spark, st,
+      liveT.filterNot(a => stable(a.path)), atSnapshot = toSnap,
+      keepPos = true))
     val preS = pre.select(col(key).as("__k"), struct(pre.columns.map(col): _*).as("pre"))
     val postS = post.select(col(key).as("__k"), struct(post.columns.map(col): _*).as("post"))
     preS.join(postS, Seq("__k"), "full_outer")
@@ -3713,10 +3474,8 @@ object Lake {
     * accounting, never data-scaled. */
   def orphanFiles(spark: SparkSession, ledgerDir: String, genRoot: String,
       olderThanMs: Long = 0L): Seq[String] = {
-    val referenced: Set[String] = readLedger(spark, ledgerDir)
-      .map(_.select(col("path")).distinct()
-        .collect().map(r => normPath(r.getString(0))).toSet)
-      .getOrElse(Set.empty)
+    val referenced: Set[String] =
+      LedgerState.open(spark, ledgerDir).paths.map(normPath)
     val cutoff = System.currentTimeMillis() - olderThanMs
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory)
@@ -3753,22 +3512,19 @@ object Lake {
     * snapshot) — the units an incremental consumer must process exactly
     * once, in order. */
   def rowChangingSnapshots(spark: SparkSession, ledgerDir: String): Seq[Long] =
-    readLedger(spark, ledgerDir).map { ledger =>
-      ledger.filter(col("op") === "add"
-          && col("snapshot_op").isin("append", "merge", "restore"))
-        .select(col("snapshot_id")).distinct()
-        .collect().map(_.getLong(0)).toSeq.sorted
-    }.getOrElse(Seq.empty)
+    rowChangingAdds(LedgerState.open(spark, ledgerDir), _ => true)
+      .map(_.snapshot).distinct.sorted
 
   /** The rows ADDED by exactly snapshot `snapshot` (row-changing adds
     * only) — readSince's per-snapshot unit, for consumers that process
     * snapshot-by-snapshot. Empty schema-carrying frame if none. */
   def readSnapshot(spark: SparkSession, ledgerDir: String,
       snapshot: Long): DataFrame = {
-    val ledger = readLedger(spark, ledgerDir).getOrElse(return spark.emptyDataFrame)
-    val adds = rowChangingAdds(ledger, col("snapshot_id") === snapshot)
-    checkHorizon(ledger, adds, s"readSnapshot($snapshot)")
-    scanActions(spark, ledgerDir, adds, atSnapshot = snapshot)
+    val st = LedgerState.open(spark, ledgerDir)
+    if (st.isEmpty) return spark.emptyDataFrame
+    val adds = rowChangingAdds(st, _ == snapshot)
+    checkHorizon(st, adds, s"readSnapshot($snapshot)")
+    scanActions(spark, st, adds, atSnapshot = snapshot)
   }
 
   /** Expire snapshots older than `retainFrom` (VACUUM): physically delete
@@ -3790,26 +3546,23 @@ object Lake {
     * files deleted. */
   def expireSnapshots(spark: SparkSession, ledgerDir: String,
       retainFrom: Long): Long = {
-    val ledger = readLedger(spark, ledgerDir).getOrElse(return 0L)
-    val current = currentSnapshot(spark, ledgerDir)
+    val st = LedgerState.open(spark, ledgerDir)
+    if (st.isEmpty) return 0L
+    val current = st.head
     val rf = retainFrom min current
     // CLOSED FORM of "live at no retained snapshot": a file's live spans
     // are [add_i, remove_i) with the LAST span ending latest, so the file
     // intersects [rf, current] iff it is currently live (last add > last
     // remove) or its last remove lands after rf. Expendable = the
     // complement: last remove exists, covers the last add, and is ≤ rf.
-    // ONE ledger aggregation instead of one live-set walk per retained
-    // snapshot (deep retention windows made the old loop O(R) scans);
-    // already-expired paths are excluded for idempotent re-runs. Only the
-    // to-delete path list reaches the driver (vacuum deletes one by one
-    // anyway).
-    val expire = ledger.groupBy(col("path")).agg(
-        max(when(col("op") === "add", col("snapshot_id"))).as("la"),
-        max(when(col("op") === "remove", col("snapshot_id"))).as("lr"),
-        max(when(col("op") === "expire", lit(1))).as("ex"))
-      .filter(col("la").isNotNull && col("ex").isNull
-        && col("lr").isNotNull && col("lr") > col("la") && col("lr") <= rf)
-      .select(col("path")).collect().map(_.getString(0))
+    // ONE pass over the ledger rows instead of one live-set walk per
+    // retained snapshot (deep retention windows made that O(R) passes);
+    // already-expired paths are excluded for idempotent re-runs.
+    def last(op: String): Map[String, Long] = st.rows.filter(_.op == op)
+      .groupMapReduce(_.path)(_.snapshot)(_ max _)
+    val (la, lr) = (last("add"), last("remove"))
+    val expire = la.keys.filter(p => !st.expired(p) &&
+      lr.get(p).exists(r => r > la(p) && r <= rf)).toSeq.sorted
     if (expire.isEmpty) return 0L
     // reserve BEFORE the physical deletions — the mergeInto discipline
     // (reserve before irreversible writes) applies doubly here: a
@@ -3870,25 +3623,23 @@ object Lake {
     * last (compaction creates the expendable generation). */
   def maintain(spark: SparkSession, ledgerDir: String, compactDir: String,
       policy: MaintenancePolicy = MaintenancePolicy()): MaintenanceReport = {
-    val snap0 = currentSnapshot(spark, ledgerDir)
+    val st = LedgerState.open(spark, ledgerDir)
+    val snap0 = st.head
     if (snap0 == 0)
       return MaintenanceReport(0, compacted = false, 0, 0, 0)
-    val ledger = readLedger(spark, ledgerDir).get
-    val liveActs = liveActionsAt(ledger, snap0)
-    val (statsCols, bloomCols) = liveStatsContract(liveActs, renameLog(ledgerDir))
+    val liveActs = st.liveAt(snap0)
+    val (statsCols, bloomCols) = liveStatsContract(st, snap0, renameLog(ledgerDir))
     // 1. stats: any live file whose map lacks a contract column
     val restatted =
-      if (policy.analyzeMissing && (statsCols ++ bloomCols).nonEmpty) {
-        val deficient = liveActs.filter((statsCols ++ bloomCols).map(c =>
-          col("stats").isNull || !map_contains_key(col("stats"), lit(c)))
-          .reduce(_ || _)).count()
-        if (deficient > 0) backfillStats(spark, ledgerDir, statsCols, bloomCols)
-        else 0L
-      } else 0L
+      if (policy.analyzeMissing && (statsCols ++ bloomCols).nonEmpty &&
+          liveActs.exists(a => a.stats.forall(m =>
+            (statsCols ++ bloomCols).exists(c => !m.contains(c)))))
+        backfillStats(spark, ledgerDir, statsCols, bloomCols)
+      else 0L
     // 2. compaction: threshold on the manifest's own size column, OR the
     // table's merge-on-read delete debt over the policy's bound (the
     // rewrite materializes every vector — dvRows() is 0 afterwards)
-    val small = liveActs.filter(col("size") < policy.smallFileBytes).count()
+    val small = liveActs.count(_.size < policy.smallFileBytes).toLong
     val dvDebt =
       if (policy.maxDvRows > 0) dvRows(spark, ledgerDir, snap0) else 0L
     val compacted = small >= policy.compactMinSmallFiles ||
@@ -4228,8 +3979,9 @@ object Lake {
       s"branch target $branchDir is not empty")
     // pin the fork: a row appended between the head read and the copy
     // must not ride into the branch (the fork would be torn)
-    appendLedgerFile(spark, branchDir, readLedger(spark, ledgerDir).get
-      .filter(col("snapshot_id") <= fork)): Unit
+    val st = LedgerState.open(spark, ledgerDir)
+    appendLedgerFile(spark, branchDir,
+      st.frame(spark, st.rows.filter(_.snapshot <= fork))): Unit
     BranchedMeta.foreach(_.copy(ledgerDir, branchDir, 0L, fork))
     TableMeta.Lineage.put(branchDir,
       s"""{"source": "$ledgerDir", "fork_snapshot": $fork}""")
@@ -4311,8 +4063,9 @@ object Lake {
         }
       case kind => kind.copy(branchDir, mainDir, fork, branchHead)
     }
-    try appendLedgerFile(spark, mainDir, readLedger(spark, branchDir).get
-      .filter(col("snapshot_id") > fork && col("snapshot_id") <= branchHead)): Unit
+    val bst = LedgerState.open(spark, branchDir)
+    try appendLedgerFile(spark, mainDir, bst.frame(spark, bst.rows.filter(a =>
+      a.snapshot > fork && a.snapshot <= branchHead))): Unit
     catch {
       case e: Throwable =>
         acquired.foreach(id =>
@@ -4357,8 +4110,9 @@ object Lake {
   }
 
   def history(spark: SparkSession, ledgerDir: String): DataFrame = {
-    val ledger = readLedger(spark, ledgerDir).getOrElse(return spark.emptyDataFrame)
-    ledger.groupBy(col("snapshot_id"))
+    val st = LedgerState.open(spark, ledgerDir)
+    if (st.isEmpty) return spark.emptyDataFrame
+    st.frame(spark).groupBy(col("snapshot_id"))
       .agg(max(col("ingested_at")).as("committed_at"),
         sort_array(collect_set(col("snapshot_op"))).as("ops"),
         count(when(col("op") === "add", 1)).as("n_added"),
@@ -4376,8 +4130,9 @@ object Lake {
     * aggregation; nothing is opened. */
   def filesAt(spark: SparkSession, ledgerDir: String,
       snapshot: Long): DataFrame = {
-    val ledger = readLedger(spark, ledgerDir).getOrElse(return spark.emptyDataFrame)
-    liveActionsAt(ledger, snapshot)
+    val st = LedgerState.open(spark, ledgerDir)
+    if (st.isEmpty) return spark.emptyDataFrame
+    liveFrame(spark, st, snapshot)
       .select(col("path"), col("size"), col("stats"))
       .orderBy(col("path"))
   }
@@ -4388,9 +4143,10 @@ object Lake {
     * detail). Throws if `ts` precedes the first commit. */
   def resolveAsOf(spark: SparkSession, ledgerDir: String,
       ts: java.sql.Timestamp): Long = {
-    val ledger = readLedger(spark, ledgerDir).getOrElse(
-      throw new IllegalArgumentException(s"empty ledger at $ledgerDir"))
-    val row = ledger.groupBy(col("snapshot_id"))
+    val st = LedgerState.open(spark, ledgerDir)
+    if (st.isEmpty)
+      throw new IllegalArgumentException(s"empty ledger at $ledgerDir")
+    val row = st.frame(spark).groupBy(col("snapshot_id"))
       .agg(max(col("ingested_at")).as("committed_at"))
       .filter(col("committed_at") <= lit(ts))
       .agg(max(col("snapshot_id"))).head()

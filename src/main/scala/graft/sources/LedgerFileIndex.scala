@@ -1,21 +1,20 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
-import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.StructType
 
 /** Manifest-driven `FileIndex` — the production form of the ledger reads
   * (SURVEY §3.9): the scan's file list and sizes come from the LEDGER
   * relation, not from a filesystem walk, exactly how table formats
-  * (Iceberg/Delta) integrate with Spark. File metadata materializes ONCE,
-  * lazily, inside the index when Spark plans the scan — `Lake.readAt` no
-  * longer collects a path list itself, and no per-file stat/list RPCs are
-  * issued (at 100 TB against object storage, the listing round-trips are
-  * the dominant planning cost this kills). Driver memory still holds the
+  * (Iceberg/Delta) integrate with Spark. The index takes its entries
+  * ready-made from the table's driver-side [[LedgerState]], so building
+  * and planning one runs no Spark job, and no per-file stat/list RPCs
+  * are issued (at 100 TB against object storage, the listing round-trips
+  * are the dominant planning cost this kills). Driver memory holds the
   * file metadata during planning — that is Spark's `FileIndex` contract
   * itself and every format shares it; the bound is manifest size, not
   * data size.
@@ -36,7 +35,7 @@ import org.apache.spark.sql.types.StructType
   * opens ONE file, not the table.
   *
   * SOUNDNESS: stored bounds are floor(min)/ceil(max) (see
-  * `Lake.fileStats`), so they are conservative OUTER bounds even for
+  * `Lake.fileStatsPaths`), so they are conservative OUTER bounds even for
   * non-integral columns; literals are compared EXACTLY via BigDecimal
   * (never truncated toward zero — `c < 4.5` must not skip a file whose
   * min is 4), and binary-float literals carry a half-ulp uncertainty
@@ -66,79 +65,67 @@ object LedgerFileIndex {
     nulls: Option[Long], rows: Option[Long], bloom: Option[Array[Byte]]) {
     def allNull: Boolean = rows.exists(r => r > 0 && nulls.contains(r))
   }
+
+  /** One file of an index: its status (path and size from the ledger, so
+    * Spark can split scan tasks without statting it), its per-column
+    * stats, and the snapshot of the action that added it. */
+  private[sources] final case class Entry(status: FileStatus,
+    stats: Map[String, ColStats], snap: Long)
+
+  /** The entry of one ledger action; `stats` is its ledger stats map
+    * (null when none was recorded). */
+  private[sources] def entry(path: String, size: Long,
+      stats: scala.collection.Map[String, Row], snap: Long): Entry = {
+    val st = new FileStatus(size, false, 1, 128L * 1024 * 1024, 0L,
+      new Path(path))
+    val parsed: Map[String, ColStats] =
+      if (stats == null) Map.empty
+      else stats.toMap.collect {
+        case (c, b) if b != null =>
+          val bounds: Option[Bounds] =
+            if (!b.isNullAt(0) && !b.isNullAt(1))
+              Some(NumBounds(b.getLong(0), b.getLong(1)))
+            else if (b.size > 3 && !b.isNullAt(2) && !b.isNullAt(3))
+              Some(StrBounds(
+                org.apache.spark.unsafe.types.UTF8String.fromString(b.getString(2)),
+                org.apache.spark.unsafe.types.UTF8String.fromString(b.getString(3))))
+            else None
+          // older ledger rows may carry narrower structs: size-guard
+          val nulls = if (b.size > 4 && !b.isNullAt(4)) Some(b.getLong(4)) else None
+          val rows = if (b.size > 5 && !b.isNullAt(5)) Some(b.getLong(5)) else None
+          val bloom = if (b.size > 6 && !b.isNullAt(6))
+            Some(b.getAs[Array[Byte]](6)) else None
+          c -> ColStats(bounds, nulls, rows, bloom)
+      }.filter { case (_, cs) =>
+        cs.bounds.isDefined || cs.nulls.isDefined || cs.bloom.isDefined
+      }
+    Entry(st, parsed, snap)
+  }
 }
 
-final class LedgerFileIndex private (liveActions: DataFrame,
-    pre: Option[Seq[(FileStatus, Map[String, LedgerFileIndex.ColStats], Long)]])
+final class LedgerFileIndex private[sources] (entries: Seq[LedgerFileIndex.Entry])
   extends FileIndex {
   import LedgerFileIndex._
 
-  def this(liveActions: DataFrame) = this(liveActions, None)
-
   /** Sub-index over the files whose NORMALIZED path is in `keepNorm` —
-    * reuses the already-materialized entries, so the affected-file scan
-    * of a blast-radius write (update/delete/merge/replaceWhere) costs
-    * ZERO extra collect jobs on top of the live index it derived its
-    * file set from (profiled: the second `entries` job was one of the
-    * fixed per-commit metadata jobs). */
+    * the affected-file scan of a blast-radius write
+    * (update/delete/merge/replaceWhere) and each rename-epoch branch. */
   def subIndex(keepNorm: Set[String]): LedgerFileIndex =
-    new LedgerFileIndex(liveActions,
-      Some(entries.filter(e =>
-        keepNorm(Lake.normPath(e._1.getPath.toString)))))
+    new LedgerFileIndex(entries.filter(e =>
+      keepNorm(Lake.normPath(e.status.getPath.toString))))
 
-  /** Normalized path → winning-add snapshot of each live file (-1 when
-    * the backing relation carries no `snap` column — sidecar scans).
-    * Rename-epoch resolution input (Lake.tableScan); reads the SAME
-    * materialized entries, zero extra jobs. */
+  /** Normalized path → add snapshot of each file: the rename-epoch
+    * resolution input (Lake.tableScan). */
   def pathAddSnapshots: Map[String, Long] =
-    entries.map(e => Lake.normPath(e._1.getPath.toString) -> e._3).toMap
-
-  /** (path, size, per-column stats, winning-add snapshot) of the live
-    * file set, materialized once at first scan planning. Sizes/stats
-    * ride along from the ledger (recorded at ingest), so Spark can split
-    * scan tasks and skip files without statting or opening any of them. */
-  private lazy val entries: Seq[(FileStatus, Map[String, ColStats], Long)] =
-    pre.getOrElse {
-      val hasSnap = liveActions.columns.contains("snap")
-      val snapCol = if (hasSnap) col("snap") else lit(-1L).as("snap")
-      liveActions
-      .select(col("path"), col("size"), col("stats"), snapCol)
-      .collect()
-      .map { r =>
-        val st = new FileStatus(r.getLong(1), false, 1, 128L * 1024 * 1024, 0L,
-          new Path(r.getString(0)))
-        val stats: Map[String, ColStats] =
-          if (r.isNullAt(2)) Map.empty
-          else r.getMap[String, org.apache.spark.sql.Row](2).toMap.collect {
-            case (c, b) if b != null =>
-              val bounds: Option[Bounds] =
-                if (!b.isNullAt(0) && !b.isNullAt(1))
-                  Some(NumBounds(b.getLong(0), b.getLong(1)))
-                else if (b.size > 3 && !b.isNullAt(2) && !b.isNullAt(3))
-                  Some(StrBounds(
-                    org.apache.spark.unsafe.types.UTF8String.fromString(b.getString(2)),
-                    org.apache.spark.unsafe.types.UTF8String.fromString(b.getString(3))))
-                else None
-              // older ledger rows may carry narrower structs: size-guard
-              val nulls = if (b.size > 4 && !b.isNullAt(4)) Some(b.getLong(4)) else None
-              val rows = if (b.size > 5 && !b.isNullAt(5)) Some(b.getLong(5)) else None
-              val bloom = if (b.size > 6 && !b.isNullAt(6))
-                Some(b.getAs[Array[Byte]](6)) else None
-              c -> ColStats(bounds, nulls, rows, bloom)
-          }.filter { case (_, cs) =>
-            cs.bounds.isDefined || cs.nulls.isDefined || cs.bloom.isDefined
-          }
-        (st, stats, if (r.isNullAt(3)) -1L else r.getLong(3))
-      }.toSeq
-    }
+    entries.map(e => Lake.normPath(e.status.getPath.toString) -> e.snap).toMap
 
   def isEmpty: Boolean = entries.isEmpty
 
-  override def rootPaths: Seq[Path] = entries.map(_._1.getPath)
+  override def rootPaths: Seq[Path] = entries.map(_.status.getPath)
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val kept = entries.filter { case (_, stats, _) =>
+    val kept = entries.filter { case Entry(_, stats, _) =>
       stats.isEmpty || dataFilters.forall { f =>
         f.references.map(_.name).toSeq.distinct match {
           // a filter prunes only against the stats of the ONE column it
@@ -160,7 +147,7 @@ final class LedgerFileIndex private (liveActions: DataFrame,
         }
       }
     }
-    Seq(PartitionDirectory(InternalRow.empty, kept.map(_._1).toArray))
+    Seq(PartitionDirectory(InternalRow.empty, kept.map(_.status).toArray))
   }
 
   /** Conservative filter evaluation against a file's [lo, hi] value range:
@@ -349,11 +336,11 @@ final class LedgerFileIndex private (liveActions: DataFrame,
   }
 
   override def inputFiles: Array[String] =
-    entries.map(_._1.getPath.toString).toArray
+    entries.map(_.status.getPath.toString).toArray
 
   override def refresh(): Unit = ()
 
-  override def sizeInBytes: Long = entries.map(_._1.getLen).sum
+  override def sizeInBytes: Long = entries.map(_.status.getLen).sum
 
   override def partitionSchema: StructType = StructType(Nil)
 }

@@ -3,9 +3,12 @@ package org.apache.spark.sql.execution.datasources.parquet
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Driver-side SINGLE-FILE parquet writer for KB-scale metadata commits
   * (ledger rows). A metadata commit's rows are bounded by the operation's
@@ -67,4 +70,29 @@ object GraftParquetShim {
     finally writer.close()
     rows.length.toLong
   }
+
+  /** The inverse of [[writeSingleFile]]: read whole parquet files on the
+    * driver, no Spark job, through the same reader a scan task runs
+    * (`ParquetFileFormat.buildReaderWithPartitionValues`). `schema` is
+    * the requested schema, so a file written with a narrower one
+    * null-fills the missing fields by name, exactly as a scan with that
+    * schema does. `files` are (path, length) as listed; returns each
+    * file's rows as external [[Row]]s, in file order. */
+  def readFiles(spark: SparkSession, files: Seq[(String, Long)],
+      schema: StructType): Seq[Seq[Row]] =
+    if (files.isEmpty) Nil
+    else {
+      val read = new ParquetFileFormat().buildReaderWithPartitionValues(
+        spark, schema, StructType(Nil), schema, Nil,
+        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConf())
+      // the reader reuses its row objects: convert each before the next
+      val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+      files.map { case (path, len) =>
+        read(PartitionedFile(InternalRow.empty,
+            SparkPath.fromPath(new Path(path)), 0L, len, Array.empty[String],
+            0L, len, Map.empty))
+          .map(r => toRow(r).asInstanceOf[Row]).toVector
+      }
+    }
 }
