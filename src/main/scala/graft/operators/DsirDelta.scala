@@ -92,7 +92,7 @@ object DsirDelta {
   /** Fit the state from the source lake's current snapshot; no-op when
     * already bootstrapped. */
   def bootstrap(spark: SparkSession, srcLedger: String, root: String): Long =
-    ChangeFold.additiveBootstrap(spark, srcLedger, root, State)(sums)
+    ChangeFold.additiveBootstrap(spark, srcLedger, root, "DsirDelta", State)(sums)
 
   /** Fold every source change past the cursor into the counts: one
     * batch-sized featurize pass + one KB state write. Returns the new
@@ -100,7 +100,7 @@ object DsirDelta {
     * ROWS directly (both update images ride the feed) — the per-row
     * additive identity, like the moment fold. */
   def applyRound(spark: SparkSession, srcLedger: String, root: String): Long =
-    ChangeFold.additiveRound(spark, srcLedger, root, "dsir state")(sums)
+    ChangeFold.additiveRound(spark, srcLedger, root, "DsirDelta", "dsir state")(sums)
 
   /** Score a documents frame against the MAINTAINED model — the
     * [[Sampling.qDocDsir]] estimator over the hashed bucketing: every

@@ -112,7 +112,7 @@ object IvfDelta {
     * bootstrapped. */
   def bootstrap(spark: SparkSession, srcLedger: String,
       indexRoot: String, maxIter: Int = 5): Long =
-    ChangeFold.bootstrap(spark, srcLedger, indexRoot) { snap =>
+    ChangeFold.bootstrap(spark, srcLedger, indexRoot, "IvfDelta") { snap =>
       val (corpus, centroids, quant) =
         fitRouter(spark, srcLedger, snap, indexRoot, maxIter)
       assign(corpus, centroids, quant)
@@ -129,7 +129,7 @@ object IvfDelta {
     * Returns the new cursor (unchanged when nothing landed). */
   def applyRound(spark: SparkSession, srcLedger: String,
       indexRoot: String): Long =
-    ChangeFold.round(spark, srcLedger, indexRoot,
+    ChangeFold.round(spark, srcLedger, indexRoot, "IvfDelta",
         ChangeFold.cursor(spark, indexRoot, "index")) { (_, changes) =>
       // latest image per id across the whole window: a delete-then-
       // reinsert lands the new assignment

@@ -73,7 +73,7 @@ object MomentsDelta {
     * when already bootstrapped. */
   def bootstrap(spark: SparkSession, srcLedger: String, root: String,
       embCol: String = "embedding"): Long =
-    ChangeFold.additiveBootstrap(spark, srcLedger, root, State)(sums(embCol))
+    ChangeFold.additiveBootstrap(spark, srcLedger, root, "MomentsDelta", State)(sums(embCol))
 
   /** Fold every source change past the cursor into the state: one
     * batch-sized partial pass + one KB state write. Returns the new
@@ -84,7 +84,7 @@ object MomentsDelta {
     * replacement). */
   def applyRound(spark: SparkSession, srcLedger: String, root: String,
       embCol: String = "embedding"): Long =
-    ChangeFold.additiveRound(spark, srcLedger, root, "moments")(sums(embCol))
+    ChangeFold.additiveRound(spark, srcLedger, root, "MomentsDelta", "moments")(sums(embCol))
 
   /** Continuous maintenance: a file stream on the source LEDGER fires
     * one fold per micro-batch; cursor-replay-safe (the IvfDelta /

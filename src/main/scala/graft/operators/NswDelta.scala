@@ -55,7 +55,7 @@ object NswDelta {
     * bootstrapped. */
   def bootstrap(spark: SparkSession, srcLedger: String,
       indexRoot: String, maxIter: Int = 5): Long =
-    ChangeFold.bootstrap(spark, srcLedger, indexRoot) { snap =>
+    ChangeFold.bootstrap(spark, srcLedger, indexRoot, "NswDelta") { snap =>
       import spark.implicits._
       val (corpus, centroids, quant) =
         IvfDelta.fitRouter(spark, srcLedger, snap, indexRoot, maxIter)
@@ -81,7 +81,7 @@ object NswDelta {
     * one blast-radius COW merge. Returns the new cursor. */
   def applyRound(spark: SparkSession, srcLedger: String,
       indexRoot: String): Long =
-    ChangeFold.round(spark, srcLedger, indexRoot,
+    ChangeFold.round(spark, srcLedger, indexRoot, "NswDelta",
         ChangeFold.cursor(spark, indexRoot, "graph index")) { (_, changes) =>
       fold(spark, indexRoot, changes)
     }

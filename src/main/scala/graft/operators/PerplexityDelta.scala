@@ -80,12 +80,12 @@ object PerplexityDelta {
   /** Fit the state from the source lake's current snapshot; no-op when
     * already bootstrapped. */
   def bootstrap(spark: SparkSession, srcLedger: String, root: String): Long =
-    ChangeFold.additiveBootstrap(spark, srcLedger, root, State)(sums)
+    ChangeFold.additiveBootstrap(spark, srcLedger, root, "PerplexityDelta", State)(sums)
 
   /** Fold every source change past the cursor into the counts. Returns
     * the new cursor (unchanged when no commit landed). */
   def applyRound(spark: SparkSession, srcLedger: String, root: String): Long =
-    ChangeFold.additiveRound(spark, srcLedger, root, "ppl state")(sums)
+    ChangeFold.additiveRound(spark, srcLedger, root, "PerplexityDelta", "ppl state")(sums)
 
   /** Score a documents frame against the MAINTAINED model — the
     * [[TextOps.qDocPerplexity]] NLL over the hashed bucketing: per

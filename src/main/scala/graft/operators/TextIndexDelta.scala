@@ -63,7 +63,7 @@ object TextIndexDelta {
     * re-run's overwrite would delete. */
   def bootstrap(spark: SparkSession, srcLedger: String,
       indexRoot: String): Long =
-    ChangeFold.bootstrap(spark, srcLedger, indexRoot) { snap =>
+    ChangeFold.bootstrap(spark, srcLedger, indexRoot, "TextIndexDelta") { snap =>
       val posts = postingsOf(Lake.readAt(spark, srcLedger, snap))
         .localCheckpoint()
       posts
@@ -84,7 +84,7 @@ object TextIndexDelta {
     * append + one doc-keyed doclens merge. Returns the new cursor. */
   def applyRound(spark: SparkSession, srcLedger: String,
       indexRoot: String): Long =
-    ChangeFold.round(spark, srcLedger, indexRoot,
+    ChangeFold.round(spark, srcLedger, indexRoot, "TextIndexDelta",
         ChangeFold.cursor(spark, indexRoot, "index")) { (_, changes) =>
       // latest image per doc across the window
       val latest = ChangeFold.latest(changes, "doc_id", "text")

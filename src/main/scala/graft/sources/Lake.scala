@@ -99,20 +99,23 @@ object Lake {
       landingDir: String, ledgerDir: String, statsCols: Seq[String],
       bloomCols: Seq[String], enforceChecks: Boolean): Long = {
     // a driver-written landing dir (appendRows' small-frame path) serves
-    // its recorded file rows — the files are valid parquet by
-    // construction, so the PAR1 quarantine scan has nothing to catch
-    val memoRows = Option(driverWrittenDirs.remove(
+    // its recorded file: the file is valid parquet by construction (the
+    // PAR1 quarantine scan has nothing to catch), its writer's schema is
+    // known (no footer read) and, written under this contract, so is its
+    // stats map (no stats pass)
+    val written = Option(driverWrittenDirs.remove(
       normPath(new java.io.File(landingDir).getAbsolutePath)))
     val st = LedgerState.open(spark, ledgerDir)
     val nextSnapshot = st.head + 1
+    val known = written.filter(_.stats == ((statsCols, bloomCols)))
     // only files the ledger has never named are new: the anti-join runs
     // on the driver for recorded rows, and against a scanned landing dir
     // as a join with the ledgered paths' local relation
-    val (cand, candPaths) = memoRows match {
-      case Some(rows) =>
-        val fresh = rows.filterNot(r => st.paths(r._1))
-        (spark.createDataFrame(fresh).toDF("path", "size", "adler32"),
-          fresh.map(_._1).toArray)
+    val (cand, candPaths) = written match {
+      case Some(w) =>
+        val fresh = Seq(w).filterNot(r => st.paths(r.path))
+        (spark.createDataFrame(fresh.map(r => (r.path, r.size, r.adler32)))
+          .toDF("path", "size", "adler32"), fresh.map(_.path).toArray)
       case None =>
         val scanned = spark.read.format("binaryFile")
           .option("pathGlobFilter", "*.parquet")
@@ -142,20 +145,25 @@ object Lake {
     // table at runtime, long after ingest). Missing columns (read as
     // null) and new columns (schema evolution, see readEvolved) stay
     // ingestable. Happy path costs ONE footer-only merged-schema job
-    // over just the NEW batch; only a detected conflict falls back to
-    // per-file isolation (bounded by the bad batch — the same driver
-    // list class as the merge blast radius). A quarantined path is not
-    // ledgered, so a fixed re-upload re-ingests on the next run.
+    // over just the NEW batch (none for a driver-written file: its
+    // writer's schema, as a read of the file sees it); only a detected
+    // conflict falls back to per-file isolation (bounded by the bad
+    // batch — the same driver list class as the merge blast radius). A
+    // quarantined path is not ledgered, so a fixed re-upload re-ingests
+    // on the next run.
     def conflicts(f: org.apache.spark.sql.types.StructType,
         t: org.apache.spark.sql.types.StructType): Boolean =
       f.exists(a => t.find(_.name == a.name).exists(_.dataType != a.dataType))
     val tableSchema = Some(LedgerState.index(st.liveAt(st.head)))
       .filterNot(_.isEmpty)
       .map(tableScan(spark, ledgerDir, _, st.head).schema)
-    val merged =
-      try Some(spark.read.option("mergeSchema", "true")
-        .parquet(candPaths.map(normPath): _*).schema)
-      catch { case scala.util.control.NonFatal(_) => None }
+    val merged = written match {
+      case Some(w) => Some(org.apache.spark.sql.GraftShim.asNullable(w.schema))
+      case None =>
+        try Some(spark.read.option("mergeSchema", "true")
+          .parquet(candPaths.map(normPath): _*).schema)
+        catch { case scala.util.control.NonFatal(_) => None }
+    }
     val badPaths: Set[String] = merged match {
       case Some(m) if tableSchema.forall(t => !conflicts(m, t)) => Set.empty
       case _ => tableSchema match {
@@ -191,15 +199,25 @@ object Lake {
     // stats cost scales with the batch, never with how much history the
     // landing dir accumulates; the stats map rides in the ledger row so
     // readAt's LedgerFileIndex can prune files without opening them —
-    // Iceberg/Delta-style skipping)
-    val current = fileStatsPaths(spark, goodPaths, statsCols,
-        tolerant = true, bloomCols = bloomCols,
-        schema = Some(goodSchema)) match {
-      case Some(stats) => good
-        .withColumn("_np", regexp_replace(col("path"), "^file:/+", "/"))
-        .join(stats, Seq("_np"), "left")
-        .drop("_np")
-      case None => good.withColumn("stats", lit(null).cast(StatsType))
+    // Iceberg/Delta-style skipping); a driver-written file's stats come
+    // from its writer, as a local relation
+    val current = known match {
+      case Some(w) =>
+        import org.apache.spark.unsafe.types.UTF8String
+        org.apache.spark.sql.GraftLocal.frame(spark,
+          org.apache.spark.sql.types.StructType.fromDDL(
+            s"path string, size bigint, adler32 bigint, stats $StatsType"),
+          Seq(org.apache.spark.sql.catalyst.InternalRow(
+            UTF8String.fromString(w.path), w.size, w.adler32, w.statsMap)))
+      case None => fileStatsPaths(spark, goodPaths, statsCols,
+          tolerant = true, bloomCols = bloomCols,
+          schema = Some(goodSchema)) match {
+        case Some(stats) => good
+          .withColumn("_np", regexp_replace(col("path"), "^file:/+", "/"))
+          .join(stats, Seq("_np"), "left")
+          .drop("_np")
+        case None => good.withColumn("stats", lit(null).cast(StatsType))
+      }
     }
     val delta = current
       .withColumn("snapshot_id", lit(nextSnapshot))
@@ -240,6 +258,8 @@ object Lake {
     * value comparisons against entirely-null columns. */
   private val StatsType = "map<string,struct<lo:bigint,hi:bigint," +
     "slo:string,shi:string,nulls:bigint,nrows:bigint,bloom:binary>>"
+  private lazy val StatsDataType =
+    org.apache.spark.sql.types.DataType.fromDDL(StatsType)
 
   /** The ledger's CANONICAL row schema — the requested schema of every
     * [[LedgerState]] read (fixed by construction — this code is the only
@@ -254,20 +274,10 @@ object Lake {
 
   /** Per-file stats map for `cols` over the parquet files of `paths`
     * (directories or individual files), keyed by normalized path; None
-    * when no stats columns are requested.
-    * NUMERIC columns store `[floor(min), ceil(max)]` — floor/ceil (not a
-    * truncating cast) make the stored long bounds conservative OUTER
-    * bounds for non-integral values (a DOUBLE max of 5.9 stores hi=6; a
-    * truncating cast would store 5 and silently skip files containing
-    * matching rows). STRING columns store the exact min/max values
-    * (Spark's string min/max is binary UTF8 order — the index compares
-    * literals with the same ordering). Columns of any other type are
-    * omitted from that file's map (absent key = never skip); an all-null
-    * column KEEPS its entry with null bounds + a full null count, so the
-    * index can still prune IS-NOT-NULL and value probes against it. One
-    * distributed aggregation keyed by source file; only
-    * the KB-scale per-file stats touch the driver via the ledger. */
-  private def fileStatsPaths(spark: SparkSession, paths: Seq[String],
+    * when no stats columns are requested. One distributed aggregation
+    * ([[statsAggs]]) keyed by source file; only the KB-scale per-file
+    * stats touch the driver via the ledger. */
+  private[graft] def fileStatsPaths(spark: SparkSession, paths: Seq[String],
       cols: Seq[String], tolerant: Boolean = false,
       bloomCols: Seq[String] = Nil,
       schema: Option[org.apache.spark.sql.types.StructType] = None)
@@ -282,88 +292,125 @@ object Lake {
       val reader = if (tolerant)
         spark.read.option("ignoreCorruptFiles", "true") else spark.read
       val df = schema.fold(reader)(reader.schema).parquet(paths: _*)
-      val all = (cols ++ bloomCols).distinct
-      val kinds: Map[String, String] = all.map { c =>
-        c -> (df.schema(c).dataType match {
-          case _: org.apache.spark.sql.types.NumericType => "num"
-          case org.apache.spark.sql.types.StringType => "str"
-          case _ => "none"
-        })
-      }.toMap
-      // bloom eligibility: string + INTEGRAL columns only — both
-      // canonicalize to a stable string form the probe side reproduces
-      // from a literal (a float's string form would not round-trip)
-      def bloomable(c: String): Boolean = bloomCols.contains(c) &&
-        (df.schema(c).dataType match {
-          case org.apache.spark.sql.types.StringType => true
-          case org.apache.spark.sql.types.ByteType
-             | org.apache.spark.sql.types.ShortType
-             | org.apache.spark.sql.types.IntegerType
-             | org.apache.spark.sql.types.LongType => true
-          case _ => false
-        })
-      val bounded: Set[String] = cols.toSet
-      val aggs = all.flatMap { c =>
-        val base = kinds(c) match {
-          case "num" if bounded(c) =>
-            Seq(floor(min(col(c))).cast("long").as(s"__lo_$c"),
-              ceil(max(col(c))).cast("long").as(s"__hi_$c"),
-              count(when(col(c).isNull, 1)).as(s"__nl_$c"))
-          case "str" if bounded(c) => Seq(min(col(c)).as(s"__lo_$c"),
-            max(col(c)).as(s"__hi_$c"),
-            count(when(col(c).isNull, 1)).as(s"__nl_$c"))
-          case _ if bloomable(c) => // bloom-only: still record null counts
-            Seq(count(when(col(c).isNull, 1)).as(s"__nl_$c"))
-          case _ => Seq.empty
-        }
-        val bl = if (bloomable(c))
-          Seq(graft.functions.GraftFunctions
-            .bloomAgg(col(c).cast("string")).as(s"__bl_$c"))
-        else Seq.empty
-        base ++ bl
-      } :+ count(lit(1)).as("__nr")
-      if (aggs.size == 1) return None // only the row count: no stats cols
-      val nullL = lit(null).cast("long")
-      val nullS = lit(null).cast("string")
-      val nullB = lit(null).cast("binary")
-      def bloomRef(c: String) =
-        if (bloomable(c)) col(s"__bl_$c") else nullB
-      // entries exist even for all-null columns (null bounds + full null
-      // count): the index can then prune IS NOT NULL and value probes
-      val entries = all.flatMap { c =>
-        kinds(c) match {
-          case "num" if bounded(c) => Some(
-            struct(lit(c).as("key"),
-              struct(col(s"__lo_$c").as("lo"), col(s"__hi_$c").as("hi"),
-                nullS.as("slo"), nullS.as("shi"),
-                col(s"__nl_$c").as("nulls"), col("__nr").as("nrows"),
-                bloomRef(c).as("bloom"))
-                .as("value")))
-          case "str" if bounded(c) => Some(
-            struct(lit(c).as("key"),
-              struct(nullL.as("lo"), nullL.as("hi"),
-                col(s"__lo_$c").as("slo"), col(s"__hi_$c").as("shi"),
-                col(s"__nl_$c").as("nulls"), col("__nr").as("nrows"),
-                bloomRef(c).as("bloom"))
-                .as("value")))
-          case _ if bloomable(c) => Some(
-            struct(lit(c).as("key"),
-              struct(nullL.as("lo"), nullL.as("hi"),
-                nullS.as("slo"), nullS.as("shi"),
-                col(s"__nl_$c").as("nulls"), col("__nr").as("nrows"),
-                col(s"__bl_$c").as("bloom"))
-                .as("value")))
-          case _ => None
-        }
+      statsAggs(df.schema, cols, bloomCols).map { case (all, aggs, stats) =>
+        df.select(regexp_replace(input_file_name(), "^file:/+", "/").as("_np")
+            +: all.map(col): _*)
+          .groupBy(col("_np"))
+          .agg(aggs.head, aggs.tail: _*)
+          .select(col("_np"), stats.as("stats"))
       }
-      Some(df
-        .select(regexp_replace(input_file_name(), "^file:/+", "/").as("_np")
-          +: all.map(col): _*)
-        .groupBy(col("_np"))
-        .agg(aggs.head, aggs.tail: _*)
-        .select(col("_np"),
-          map_from_entries(array(entries: _*)).as("stats")))
     }
+
+  /** The stats map of ONE file's `rows` (of `schema`), as the ledger's
+    * catalyst value — [[fileStatsPaths]]' aggregate evaluated on the
+    * driver over the rows its writer holds ([[GraftLocal]]: the same
+    * expressions, interpreted, no job). None when no column of the
+    * contract records stats. */
+  private def rowStats(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow], cols: Seq[String],
+      bloomCols: Seq[String]): Option[Any] =
+    if (cols.isEmpty && bloomCols.isEmpty) None
+    else statsAggs(schema, cols, bloomCols).map { case (_, aggs, stats) =>
+      org.apache.spark.sql.GraftLocal.collect(
+        org.apache.spark.sql.GraftLocal.frame(spark, schema, rows)
+          .agg(aggs.head, aggs.tail: _*).select(stats))
+        .head.get(0, StatsDataType)
+    }
+
+  /** The per-file stats aggregate over a frame of `schema`: the columns
+    * it reads, its aggregates, and the stats-map column over their
+    * results; None when no column of `cols`/`bloomCols` records stats.
+    * NUMERIC columns store `[floor(min), ceil(max)]` — floor/ceil (not a
+    * truncating cast) make the stored long bounds conservative OUTER
+    * bounds for non-integral values (a DOUBLE max of 5.9 stores hi=6; a
+    * truncating cast would store 5 and silently skip files containing
+    * matching rows). STRING columns store the exact min/max values
+    * (Spark's string min/max is binary UTF8 order — the index compares
+    * literals with the same ordering). Columns of any other type are
+    * omitted from the map (absent key = never skip); an all-null
+    * column KEEPS its entry with null bounds + a full null count, so the
+    * index can still prune IS-NOT-NULL and value probes against it. */
+  private def statsAggs(schema: org.apache.spark.sql.types.StructType,
+      cols: Seq[String], bloomCols: Seq[String])
+      : Option[(Seq[String], Seq[org.apache.spark.sql.Column],
+        org.apache.spark.sql.Column)] = {
+    val all = (cols ++ bloomCols).distinct
+    val kinds: Map[String, String] = all.map { c =>
+      c -> (schema(c).dataType match {
+        case _: org.apache.spark.sql.types.NumericType => "num"
+        case org.apache.spark.sql.types.StringType => "str"
+        case _ => "none"
+      })
+    }.toMap
+    // bloom eligibility: string + INTEGRAL columns only — both
+    // canonicalize to a stable string form the probe side reproduces
+    // from a literal (a float's string form would not round-trip)
+    def bloomable(c: String): Boolean = bloomCols.contains(c) &&
+      (schema(c).dataType match {
+        case org.apache.spark.sql.types.StringType => true
+        case org.apache.spark.sql.types.ByteType
+           | org.apache.spark.sql.types.ShortType
+           | org.apache.spark.sql.types.IntegerType
+           | org.apache.spark.sql.types.LongType => true
+        case _ => false
+      })
+    val bounded: Set[String] = cols.toSet
+    val aggs = all.flatMap { c =>
+      val base = kinds(c) match {
+        case "num" if bounded(c) =>
+          Seq(floor(min(col(c))).cast("long").as(s"__lo_$c"),
+            ceil(max(col(c))).cast("long").as(s"__hi_$c"),
+            count(when(col(c).isNull, 1)).as(s"__nl_$c"))
+        case "str" if bounded(c) => Seq(min(col(c)).as(s"__lo_$c"),
+          max(col(c)).as(s"__hi_$c"),
+          count(when(col(c).isNull, 1)).as(s"__nl_$c"))
+        case _ if bloomable(c) => // bloom-only: still record null counts
+          Seq(count(when(col(c).isNull, 1)).as(s"__nl_$c"))
+        case _ => Seq.empty
+      }
+      val bl = if (bloomable(c))
+        Seq(graft.functions.GraftFunctions
+          .bloomAgg(col(c).cast("string")).as(s"__bl_$c"))
+      else Seq.empty
+      base ++ bl
+    } :+ count(lit(1)).as("__nr")
+    if (aggs.size == 1) return None // only the row count: no stats cols
+    val nullL = lit(null).cast("long")
+    val nullS = lit(null).cast("string")
+    val nullB = lit(null).cast("binary")
+    def bloomRef(c: String) =
+      if (bloomable(c)) col(s"__bl_$c") else nullB
+    // entries exist even for all-null columns (null bounds + full null
+    // count): the index can then prune IS NOT NULL and value probes
+    val entries = all.flatMap { c =>
+      kinds(c) match {
+        case "num" if bounded(c) => Some(
+          struct(lit(c).as("key"),
+            struct(col(s"__lo_$c").as("lo"), col(s"__hi_$c").as("hi"),
+              nullS.as("slo"), nullS.as("shi"),
+              col(s"__nl_$c").as("nulls"), col("__nr").as("nrows"),
+              bloomRef(c).as("bloom"))
+              .as("value")))
+        case "str" if bounded(c) => Some(
+          struct(lit(c).as("key"),
+            struct(nullL.as("lo"), nullL.as("hi"),
+              col(s"__lo_$c").as("slo"), col(s"__hi_$c").as("shi"),
+              col(s"__nl_$c").as("nulls"), col("__nr").as("nrows"),
+              bloomRef(c).as("bloom"))
+              .as("value")))
+        case _ if bloomable(c) => Some(
+          struct(lit(c).as("key"),
+            struct(nullL.as("lo"), nullL.as("hi"),
+              nullS.as("slo"), nullS.as("shi"),
+              col(s"__nl_$c").as("nulls"), col("__nr").as("nrows"),
+              col(s"__bl_$c").as("bloom"))
+              .as("value")))
+        case _ => None
+      }
+    }
+    Some((all, aggs, map_from_entries(array(entries: _*))))
+  }
 
   /** LEDGER CHECKPOINT — the Delta `checkpoint.parquet` / Iceberg
     * manifest-list analog, for the METADATA scale axis: every commit
@@ -1335,15 +1382,17 @@ object Lake {
       b0.map(contractName(renames, _)).distinct.sorted)
   }
 
-  /** One combined adler32 + stats pass over a commit's freshly-written
-    * generation dirs, tagging each file's `snapshot_op` by its dir NAME
-    * (carry/delta/changes are fixed leaf names under gen-N): the per-dir
-    * form pays a binaryFile scan + a parquet stats scan PER dir, and a
-    * COW commit writes 2-3 dirs — per-commit fixed job count, halved.
-    * Only the table-shaped (add) dirs record stats, per the table's
-    * contract (cdc files carry change-typed columns), read with the
-    * schema their writer held — no footer inference. Dirs with no
-    * parquet output (an all-matched carry) contribute no rows. */
+  /** The add rows (path, size, adler32, op, snapshot_op, stats) of a
+    * commit's freshly-written generation dirs, tagging each file's
+    * `snapshot_op` by its dir NAME (carry/delta/changes are fixed leaf
+    * names under gen-N). Only the table-shaped (add) dirs record stats,
+    * per the table's contract (cdc files carry change-typed columns).
+    * Dirs with no parquet output (an all-matched carry) contribute no
+    * rows. When [[writeGenDir]]'s driver path wrote every dir, the rows
+    * come from its records — size, adler32 and stats computed from the
+    * bytes and rows in hand — as a local relation: no job. Otherwise one
+    * combined adler32 + stats pass over the dirs, read with the schema
+    * their writer held (no footer inference). */
   private def addsTagged(spark: SparkSession,
       dirOps: Seq[(String, String, String, org.apache.spark.sql.types.StructType)],
       statsCols: Seq[String], bloomCols: Seq[String]): DataFrame = {
@@ -1352,18 +1401,32 @@ object Lake {
       f.isDirectory && Option(f.listFiles()).getOrElse(Array.empty)
         .exists(x => x.getName.endsWith(".parquet") && x.length > 0)
     }
-    if (present.isEmpty) // e.g. a delete that empties its affected files
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "path string, size bigint, adler32 bigint, op string, " +
-            s"snapshot_op string, stats $StatsType"))
-    val raw = fileAddsPaths(spark, present.map(_._1))
     val statDirs = present.collect { case (d, "add", _, sch) => (d, sch) }
-    val stats = statDirs.headOption.flatMap { case (_, sch) =>
+    // the contract each stat dir is statted under: the table's, minus
+    // columns the (first) written schema lacks
+    val contract = statDirs.headOption.map { case (_, sch) =>
       val has = sch.fieldNames.toSet
-      fileStatsPaths(spark, statDirs.map(_._1), statsCols.filter(has),
-        bloomCols = bloomCols.filter(has), schema = Some(sch))
+      (statsCols.filter(has), bloomCols.filter(has))
+    }.getOrElse((Nil, Nil))
+    def key(d: String) = normPath(new java.io.File(d).getAbsolutePath)
+    val written = present.map(p => p -> Option(driverWrittenDirs.get(key(p._1))))
+    if (written.forall { case ((_, op, _, _), w) =>
+        w.exists(op != "add" || _.stats == contract) }) {
+      import org.apache.spark.unsafe.types.UTF8String
+      val rows = written.map { case ((d, op, snapOp, _), w) =>
+        driverWrittenDirs.remove(key(d))
+        val f = w.get
+        org.apache.spark.sql.catalyst.InternalRow(
+          UTF8String.fromString(f.path), f.size, f.adler32,
+          UTF8String.fromString(op), UTF8String.fromString(snapOp),
+          if (op == "add") f.statsMap else null)
+      }
+      return org.apache.spark.sql.GraftLocal.frame(spark, AddsSchema, rows)
+    }
+    val raw = fileAddsPaths(spark, present.map(_._1))
+    val stats = statDirs.headOption.flatMap { case (_, sch) =>
+      fileStatsPaths(spark, statDirs.map(_._1), contract._1,
+        bloomCols = contract._2, schema = Some(sch))
     }
     val adds = withLedgerStats(stats.fold(raw)(st => raw
       .withColumn("_np", regexp_replace(col("path"), "^file:/+", "/"))
@@ -1385,32 +1448,21 @@ object Lake {
         .otherwise(lit(null).cast(StatsType)))
   }
 
-  /** The (path, size, adler32) rows of every parquet file under `dirs` —
-    * driver-written dirs serve their recorded rows as a LocalRelation (no
-    * job); the rest share one binaryFile scan. */
+  private lazy val AddsSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    s"path string, size bigint, adler32 bigint, op string, " +
+      s"snapshot_op string, stats $StatsType")
+
+  /** The (path, size, adler32) rows of every parquet file under `dirs`,
+    * from one binaryFile scan; any driver-written record of the dirs is
+    * dropped (claimed). */
   private def fileAddsPaths(spark: SparkSession, dirs: Seq[String]): DataFrame = {
-    val claimed: Map[String, Seq[(String, Long, Long)]] = dirs.flatMap { d =>
-      Option(driverWrittenDirs.remove(
-        normPath(new java.io.File(d).getAbsolutePath))).map(d -> _)
-    }.toMap
-    val scan = dirs.filterNot(claimed.contains)
-    val knownRows = dirs.flatMap(d => claimed.getOrElse(d, Nil))
-    val knownDf =
-      if (knownRows.isEmpty) None
-      else Some(spark.createDataFrame(knownRows)
-        .toDF("path", "size", "adler32"))
-    val scanDf =
-      if (scan.isEmpty) None
-      else Some(spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.parquet")
-        .load(scan: _*)
-        .select(col("path"), col("length").as("size"),
-          graft.functions.GraftFunctions.adler32(col("content")).as("adler32")))
-    (knownDf.toSeq ++ scanDf.toSeq).reduceOption(_.unionByName(_))
-      .getOrElse(spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "path string, size bigint, adler32 bigint")))
+    dirs.foreach(d =>
+      driverWrittenDirs.remove(normPath(new java.io.File(d).getAbsolutePath)))
+    spark.read.format("binaryFile")
+      .option("pathGlobFilter", "*.parquet")
+      .load(dirs: _*)
+      .select(col("path"), col("length").as("size"),
+        graft.functions.GraftFunctions.adler32(col("content")).as("adler32"))
   }
 
   /** Null-fill a missing stats column so every writer emits the full
@@ -1608,29 +1660,33 @@ object Lake {
   private val DriverWriteMaxBytes: Long = 32L << 20
 
   /** Write a commit generation dir (carry/delta/changes/dv): driver-side
-    * single file when the plan's own size estimate — the exact mechanism
-    * the broadcast-join gate trusts (guide §3.1) — says the rows are
-    * driver-bounded; the distributed writer otherwise. Estimates can lie
-    * low post-aggregation, so the collect additionally rides Spark's
-    * driver.maxResultSize guard and FALLS BACK to the distributed writer
-    * on any collect failure: a mis-estimate costs a retried write, never
-    * a wrong commit or a driver OOM. Overwrite semantics match
-    * mode("overwrite"): pre-existing debris in the dir (a crashed prior
-    * attempt at the same reserved id) is cleared first. A 0-row frame
-    * leaves no parquet file — exactly the FileFormatWriter behavior the
-    * addsTagged empty-dir arm documents. NOT for layout-bearing rewrites
-    * (compaction sizes its output files deliberately). Only a dir a
-    * commit will ingest (`commitInput`) records its file rows: the
-    * commit claims them, and nothing would claim any other dir's. */
+    * single file when the rows are driver-bounded — a frame over rows
+    * already on the driver ([[org.apache.spark.sql.GraftLocal]]: a
+    * commit's collected blast radius and everything derived from it),
+    * or one whose plan size estimate (the exact mechanism the
+    * broadcast-join gate trusts, guide §3.1) says so; the distributed
+    * writer otherwise. Estimates can lie low post-aggregation, so the
+    * collect additionally rides Spark's driver.maxResultSize guard and
+    * FALLS BACK to the distributed writer on any collect failure: a
+    * mis-estimate costs a retried write, never a wrong commit or a
+    * driver OOM. Every path taken is counted ([[writePaths]]).
+    * Overwrite semantics match mode("overwrite"): pre-existing debris in
+    * the dir (a crashed prior attempt at the same reserved id) is
+    * cleared first. A 0-row frame leaves no parquet file — exactly the
+    * FileFormatWriter behavior the addsTagged empty-dir arm documents.
+    * NOT for layout-bearing rewrites (compaction sizes its output files
+    * deliberately). Only a dir a commit will ingest (`commitInput`)
+    * records its file: the commit claims it, and nothing would claim
+    * any other dir's. `stats` (stats columns, bloom columns): the
+    * contract the recorded file's stats map is computed under, from the
+    * rows in hand ([[rowStats]]). */
   private[graft] def writeGenDir(spark: SparkSession, df: DataFrame,
       dir: String, knownBytes: Option[Long] = None,
-      commitInput: Boolean = true): Unit = {
-    val est: BigInt = knownBytes.map(BigInt(_)).getOrElse {
-      try df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-        .queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case _: Throwable => BigInt(Long.MaxValue) }
-    }
-    if (est > BigInt(DriverWriteMaxBytes)) {
+      commitInput: Boolean = true,
+      stats: (Seq[String], Seq[String]) = (Nil, Nil)): Unit = {
+    val local = org.apache.spark.sql.GraftLocal.rows(df)
+    if (local.isEmpty && estimatedBytes(df, knownBytes) > DriverWriteMaxBytes) {
+      countWrite("write.distributed")
       df.write.mode("overwrite").parquet(dir)
       return
     }
@@ -1640,39 +1696,95 @@ object Lake {
     d.mkdirs()
     driverWrittenDirs.remove(normPath(d.getAbsolutePath))
     val out = new java.io.File(d, "part-00000.parquet")
-    try {
-      val n = org.apache.spark.sql.execution.datasources.parquet
-        .GraftParquetShim.writeSingleFile(spark, df, out.getPath)
-      if (n == 0) { out.delete(): Unit }
-      else if (commitInput) {
-        // record (path, size, adler32) at write time so the commit's
-        // post-write file scan skips the binaryFile job for this dir.
-        // java.util.zip.Adler32 IS zlib adler32 — the same checksum the
-        // codegen expression records on scanned files. Path in the
-        // Hadoop URI form the binaryFile source emits (consumers
-        // normalize via ^file:/+ anyway).
-        val bytes = java.nio.file.Files.readAllBytes(out.toPath)
-        val ad = new java.util.zip.Adler32()
-        ad.update(bytes, 0, bytes.length)
-        driverWrittenDirs.put(normPath(d.getAbsolutePath),
-          Seq((new org.apache.hadoop.fs.Path(out.toURI).toString,
-            bytes.length.toLong, ad.getValue)))
-      }
-    } catch {
+    val rows = try local.getOrElse(org.apache.spark.sql.GraftLocal.collect(df))
+    catch {
       case _: org.apache.spark.SparkException =>
-        out.delete()
+        countWrite("write.fallback")
         df.write.mode("overwrite").parquet(dir)
+        return
+    }
+    countWrite("write.driver")
+    val n = org.apache.spark.sql.execution.datasources.parquet
+      .GraftParquetShim.writeRows(spark, df.schema, rows, out.getPath)
+    if (n == 0) { out.delete(): Unit }
+    else if (commitInput) {
+      // record the file at write time so the commit's adds need no
+      // post-write scan: size, adler32 (java.util.zip.Adler32 IS zlib
+      // adler32 — the checksum the codegen expression records on scanned
+      // files) and the stats map, all from the bytes and rows in hand.
+      // Path in the Hadoop URI form the binaryFile source emits
+      // (consumers normalize via ^file:/+ anyway).
+      val bytes = java.nio.file.Files.readAllBytes(out.toPath)
+      val ad = new java.util.zip.Adler32()
+      ad.update(bytes, 0, bytes.length)
+      driverWrittenDirs.put(normPath(d.getAbsolutePath),
+        Written(new org.apache.hadoop.fs.Path(out.toURI).toString,
+          bytes.length.toLong, ad.getValue, df.schema, stats,
+          rowStats(spark, df.schema, rows, stats._1, stats._2).orNull))
     }
   }
 
-  /** Per-dir file metadata recorded by [[writeGenDir]]'s driver path,
-    * keyed by normalized dir: the commit's adds builder consumes these
-    * instead of re-scanning freshly-written KB files (one binaryFile
-    * job per commit, as profiled in r18). Entries are claimed
-    * (removed) by the reader; a crashed commit's residue is bounded by
-    * in-flight writes and re-keyed dirs overwrite on retry. */
+  /** A plan's own size estimate (`known` when the caller has one);
+    * unknowable = unbounded. */
+  private def estimatedBytes(df: DataFrame,
+      known: Option[Long] = None): BigInt =
+    known.map(BigInt(_)).getOrElse {
+      try df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+        .queryExecution.optimizedPlan.stats.sizeInBytes
+      catch { case _: Throwable => BigInt(Long.MaxValue) }
+    }
+
+  /** `df` as rows on the driver when it is driver-bounded by its size
+    * estimate (collected once: one job, or none for rows already in
+    * hand); `df` itself otherwise, or when the collect fails (counted as
+    * `write.fallback`). What a writer does before consuming an incoming
+    * frame several times (emptiness, constraints, the write). */
+  private def inHand(df: DataFrame): DataFrame =
+    if (org.apache.spark.sql.GraftLocal.isLocal(df)
+      || estimatedBytes(df) > DriverWriteMaxBytes) df
+    else try org.apache.spark.sql.GraftLocal.materialize(df) catch {
+      // an estimate that lied low: the result-size guard refused the
+      // collect, and `df` stays relational
+      case _: org.apache.spark.SparkException =>
+        countWrite("write.fallback")
+        df
+    }
+
+  /** One file [[writeGenDir]]'s driver path wrote, as recorded for the
+    * commit that ingests it: its ledger (path, size, adler32), the
+    * schema its writer held, and its stats map (a catalyst map value,
+    * null when the contract records none) under the contract `stats`. */
+  private[graft] final case class Written(path: String, size: Long,
+      adler32: Long, schema: org.apache.spark.sql.types.StructType,
+      stats: (Seq[String], Seq[String]), statsMap: Any)
+
+  /** Per-dir file records of [[writeGenDir]]'s driver path, keyed by
+    * normalized dir: the commit's adds builder and ingest consume these
+    * instead of re-scanning freshly-written KB files. Entries are
+    * claimed (removed) by the reader; a crashed commit's residue is
+    * bounded by in-flight writes and re-keyed dirs overwrite on retry. */
   private[graft] val driverWrittenDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long, Long)]]()
+    new java.util.concurrent.ConcurrentHashMap[String, Written]()
+
+  private val writePathCounts = new java.util.concurrent
+    .ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
+
+  private def countWrite(what: String): Unit =
+    writePathCounts.computeIfAbsent(what,
+      _ => new java.util.concurrent.atomic.AtomicLong()).incrementAndGet(): Unit
+
+  /** Driver-side counts, since process start, of the write path taken:
+    * `commit.driver` / `commit.distributed` — a row-level commit or
+    * append materialized its blast radius on the driver, or ran
+    * relationally (decided once per commit from its input's size);
+    * `write.driver` / `write.distributed` — a gen-dir write's path;
+    * `write.fallback` — a driver collect that failed (the result-size
+    * guard): a gen-dir write re-ran on the distributed writer, or a
+    * commit's input stayed relational. */
+  def writePaths: Map[String, Long] = {
+    import scala.jdk.CollectionConverters._
+    writePathCounts.asScala.map { case (k, v) => k -> v.get }.toMap
+  }
 
   /** Append one ledger snapshot made of `actions` (path, size, adler32,
     * op and snapshot_op set; stats null-filled when absent) as ONE ledger
@@ -1739,14 +1851,23 @@ object Lake {
     *  - Open: the snapshot and its live actions from the table's
     *    [[LedgerState]], the `LedgerFileIndex` over them and (lazily)
     *    the target scan.
-    *  - [[affectedFiles]]: one distinct collect of the live files holding
-    *    a matching row — the only driver-side file list, bounded by the
+    *  - [[affectedFiles]]: one collect of the live files holding a
+    *    matching row — the only driver-side file list, bounded by the
     *    commit's blast radius, never the table's file count.
+    *  - [[onDriver]]: the commit's ONE driver/distributed choice, from
+    *    the ledger sizes of the files it reads (plus any other input it
+    *    holds) against [[DriverWriteMaxBytes]], counted in
+    *    [[writePaths]].
     *  - [[affectedRows]]: a DV-applied scan of those files through a
     *    SUB-INDEX of the live index. MOR-deleted rows never carry into a
     *    rewrite, count as matched or surface as pre-images; the rewrite
     *    materializes the files' vectors (its winning add postdates them,
-    *    so they go inert).
+    *    so they go inert). On the driver path it is COLLECTED once — the
+    *    commit's one data pass — and every output (carry, delta, change
+    *    feed, vectors), each file's stats and the ledger rows derive from
+    *    the rows in hand with no further job
+    *    ([[org.apache.spark.sql.GraftLocal]]); key membership is then an
+    *    InSet over collected keys ([[KeySet]]), never a join.
     *  - [[commit]]: reserve, write, stat, append.
     * Every job a step launches carries the description
     * `Lake.commit <kind>: <step>` ([[step]]). */
@@ -1772,14 +1893,18 @@ object Lake {
       described(spark, s"Lake.commit $kind: $name")(body)
 
     /** Normalized paths of the live files holding a row of `scan` that
-      * `matching` keeps. */
+      * `matching` keeps: one job, each task returning its partition's
+      * distinct names (no shuffle stage for a global distinct). */
     def affectedFiles(scan: DataFrame)(
         matching: DataFrame => DataFrame): Set[String] =
       step("affected-files") {
         matching(scan.withColumn("_file",
             regexp_replace(input_file_name(), "^file:/+", "/")))
-          .select(col("_file")).distinct()
-          .collect().map(_.getString(0)).toSet
+          .select(col("_file"))
+          .as(org.apache.spark.sql.Encoders.STRING)
+          .mapPartitions((it: Iterator[String]) => it.toSet.iterator)(
+            org.apache.spark.sql.Encoders.STRING)
+          .collect().toSet
       }
 
     /** [[affectedFiles]] under a row predicate, pushed straight at the
@@ -1788,11 +1913,58 @@ object Lake {
     def affectedWhere(cond: org.apache.spark.sql.Column): Set[String] =
       affectedFiles(target.get)(_.filter(coalesce(cond, lit(false))))
 
-    def affectedRows(files: Set[String]): DataFrame =
-      dvApplied(index.get.subIndex(files))
+    /** Ledger bytes of the live `files`. */
+    def bytesOf(files: Set[String]): Long =
+      liveActs.iterator.filter(a => files(a.normPath)).map(_.size).sum
 
-    /** Every live row, DV-applied (an overwrite's delete pre-images). */
-    def liveRows: DataFrame = dvApplied(index.get)
+    /** Ledger bytes of every live file — what a scan of the whole table
+      * (a MOR match) reads at most. */
+    def liveBytes: Long = liveActs.iterator.map(_.size).sum
+
+    private var onDriverPath = false
+
+    /** Whether this commit runs on the driver path: set by [[onDriver]],
+      * cleared by a failed [[hold]]. */
+    def driver: Boolean = onDriverPath
+
+    /** Whether this commit materializes its input on the driver: `bytes`
+      * (the ledger sizes of the files it reads, plus any other input it
+      * holds) within [[DriverWriteMaxBytes]]. Decided once per commit,
+      * and counted. */
+    def onDriver(bytes: Long): Boolean = {
+      onDriverPath = bytes <= DriverWriteMaxBytes
+      countWrite(if (driver) "commit.driver" else "commit.distributed")
+      driver
+    }
+
+    /** `df` collected, on the driver path; `df` itself otherwise. The
+      * bound reads compressed ledger bytes while the collect holds
+      * decoded rows, so a collect may still fail (Spark's result-size
+      * guard): that failure is counted as `write.fallback`, and the rest
+      * of the commit runs relationally, from `df` itself. */
+    def hold(df: DataFrame): DataFrame =
+      if (!driver) df
+      else try org.apache.spark.sql.GraftLocal.materialize(df) catch {
+        case _: org.apache.spark.SparkException =>
+          countWrite("write.fallback")
+          onDriverPath = false
+          df
+      }
+
+    /** The DV-applied rows of the live `files`: collected once on the
+      * driver path ([[onDriver]], [[hold]]); otherwise the relational
+      * scan, checkpointed when `reuse`d by several consumers. */
+    def affectedRows(files: Set[String], reuse: Boolean = false): DataFrame = {
+      val scan = dvApplied(index.get.subIndex(files))
+      step("rewrite") {
+        val held = hold(scan)
+        if (driver) held else if (reuse) scan.localCheckpoint() else scan
+      }
+    }
+
+    /** Every live row, DV-applied (an overwrite's delete pre-images);
+      * collected on the driver path. */
+    def liveRows: DataFrame = affectedRows(liveActs.map(_.normPath).toSet)
 
     private def dvApplied(idx: LedgerFileIndex): DataFrame =
       applyDvsAt(spark, st, snap,
@@ -1805,13 +1977,14 @@ object Lake {
     /** Reserve `next`, then run `write`: each output it names lands
       * through [[writeGenDir]] (`changes` rows stamped with their
       * `_commit_snapshot`, `dv` rows with their `dv_snap`). The adds of
-      * every written dir come from ONE [[addsTagged]] pass — carry adds
+      * every written dir come from ONE [[addsTagged]] call — carry adds
       * snapshot_op "replace" (rows that merely moved files; incremental
       * consumers skip them, like compaction), delta adds "merge" (what
       * readSince surfaces, exactly once), cdc and dv rows `changeOp`
       * (inert to every live-set reader — neither add nor remove — and
-      * never vacuumed) — and carry/delta re-stat against the table's skipping contract,
-      * read once, so pruning survives the rewrite. The `removed` paths
+      * never vacuumed) — and carry/delta stat against the table's
+      * skipping contract (in the writer, from the rows in hand, on the
+      * driver path), so pruning survives the rewrite. The `removed` paths
       * land as removes tagged `removeOp`. A `staged` schema is
       * recorded at `next` BEFORE the rows land: a crash between the
       * append and a later recording would leave evolved files live with
@@ -1823,6 +1996,7 @@ object Lake {
         changeOp: String = "merge",
         staged: Option[org.apache.spark.sql.types.StructType] = None)(
         write: GenWrite => Unit): Long = reserving(spark, ledgerDir, next) {
+      lazy val contract = liveStatsContract(st, snap, renameLog(ledgerDir))
       val dirOps = scala.collection.mutable.ArrayBuffer.empty[
         (String, String, String, org.apache.spark.sql.types.StructType)]
       write { (leaf, rows) =>
@@ -1833,15 +2007,19 @@ object Lake {
             rows.withColumn("_commit_snapshot", lit(next)))
           case "dv" => ("dv", changeOp, rows.withColumn("dv_snap", lit(next)))
         }
-        step(s"write $leaf")(writeGenDir(spark, stamped, s"$genDir/$leaf"))
+        // only table-shaped (add) outputs record stats (MOR writes none)
+        val stats = if (op != "add") (Nil, Nil) else {
+          val has = stamped.schema.fieldNames.toSet
+          (contract._1.filter(has), contract._2.filter(has))
+        }
+        step(s"write $leaf")(
+          writeGenDir(spark, stamped, s"$genDir/$leaf", stats = stats))
         dirOps += ((s"$genDir/$leaf", op, snapOp, stamped.schema))
       }
-      // only table-shaped (add) outputs record stats (MOR writes none)
       val (statsCols, bloomCols) =
-        if (dirOps.exists(_._2 == "add"))
-          liveStatsContract(st, snap, renameLog(ledgerDir))
-        else (Nil, Nil)
-      val adds = addsTagged(spark, dirOps.toSeq, statsCols, bloomCols)
+        if (dirOps.exists(_._2 == "add")) contract else (Nil, Nil)
+      val adds = step("stats and ledger")(
+        addsTagged(spark, dirOps.toSeq, statsCols, bloomCols))
       staged.foreach(recordSchema(ledgerDir, next, _))
       val landed = step("stats and ledger")(appendSnapshot(spark, ledgerDir,
         next, if (removed.isEmpty) adds
@@ -1863,7 +2041,7 @@ object Lake {
     * and the UI show for every job it launches, AQE stage jobs included
     * (they inherit the caller's local properties) — restoring the
     * caller's description afterwards. */
-  private def described[T](spark: SparkSession, desc: String)(
+  private[graft] def described[T](spark: SparkSession, desc: String)(
       body: => T): T = {
     val sc = spark.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
@@ -1871,14 +2049,90 @@ object Lake {
     try body finally sc.setJobDescription(prev)
   }
 
+  /** A set of key tuples a row-level writer filters rows by: the matched
+    * keys of a MERGE, the keys its source keeps, and so on. Rows whose
+    * key has a null are never members (a join's equality never holds on
+    * null), so [[anti]] keeps them, as `left_anti` does. */
+  private sealed trait KeySet {
+    /** Rows of `df` whose key is a member. */
+    def semi(df: DataFrame): DataFrame
+    /** Rows of `df` whose key is not. */
+    def anti(df: DataFrame): DataFrame
+    /** The distinct keys of `df`, in this set's form. */
+    def keysOf(df: DataFrame): KeySet
+    /** `source` minus its rows that are members AND satisfy `w` (a MERGE's
+      * deleteWhen consumes matched source rows only). */
+    def unless(source: DataFrame, w: org.apache.spark.sql.Column): DataFrame
+  }
+
+  /** A relational key set: a frame of distinct keys, joined. */
+  private final case class KeyFrame(keys: Seq[String], frame: DataFrame)
+      extends KeySet {
+    def semi(df: DataFrame): DataFrame = df.join(frame, keys, "left_semi")
+    def anti(df: DataFrame): DataFrame = df.join(frame, keys, "left_anti")
+    def keysOf(df: DataFrame): KeySet =
+      KeyFrame(keys, df.select(keys.map(col): _*).distinct())
+    def unless(source: DataFrame, w: org.apache.spark.sql.Column): DataFrame =
+      source.join(frame.withColumn("_matched", lit(true)), keys, "left")
+        .filter(!(coalesce(col("_matched"), lit(false))
+          && coalesce(w, lit(false))))
+        .drop("_matched")
+  }
+
+  /** A key set collected on the driver: membership is an InSet over the
+    * key column (a struct of the key columns for a composite key or a
+    * floating/complex one, compared by Spark's ordering, as a join
+    * compares them) — no join, no job over rows already in hand, and a
+    * literal-free predicate in a scan. */
+  private final case class KeyValues(keys: Seq[String], types: Seq[
+      org.apache.spark.sql.types.DataType], set: Set[Any]) extends KeySet {
+    private def byStruct: Boolean = keys.size > 1 || (types.head match {
+      case org.apache.spark.sql.types.ByteType
+         | org.apache.spark.sql.types.ShortType
+         | org.apache.spark.sql.types.IntegerType
+         | org.apache.spark.sql.types.LongType
+         | _: org.apache.spark.sql.types.DecimalType
+         | org.apache.spark.sql.types.StringType
+         | org.apache.spark.sql.types.DateType
+         | org.apache.spark.sql.types.TimestampType
+         | org.apache.spark.sql.types.BooleanType => false
+      case _ => true
+    })
+    private def keyCol: org.apache.spark.sql.Column =
+      if (byStruct) struct(keys.map(col): _*) else col(keys.head)
+    private def member: org.apache.spark.sql.Column =
+      coalesce(org.apache.spark.sql.GraftShim.column(
+        org.apache.spark.sql.catalyst.expressions.InSet(
+          org.apache.spark.sql.GraftShim.expression(keyCol), set)), lit(false))
+    def semi(df: DataFrame): DataFrame = df.filter(member)
+    def anti(df: DataFrame): DataFrame = df.filter(!member)
+    def keysOf(df: DataFrame): KeyValues = copy(set = {
+      val kc = df.select(keyCol)
+      val dt = kc.schema.head.dataType
+      org.apache.spark.sql.GraftLocal.collect(kc).iterator
+        .map(_.get(0, dt)).filter {
+          case null => false
+          case r: org.apache.spark.sql.catalyst.InternalRow =>
+            (0 until r.numFields).forall(!r.isNullAt(_))
+          case _ => true
+        }.toSet
+    })
+    def unless(source: DataFrame, w: org.apache.spark.sql.Column): DataFrame =
+      source.filter(!(member && coalesce(w, lit(false))))
+  }
+
   /** What a MERGE lands, prepared once for both write paths (COW
     * [[mergeIntoKeys]], MOR [[mergeIntoMorKeys]]): the key and IDENTITY
-    * checks, the conform to the table schema, and — given the matched
-    * keys and where the matched rows' pre-images come from (the COW
-    * affected scan, the MOR matched rows) — the landing rows and the
-    * four-way change classification. */
+    * checks, the conform to the table schema, the source and its keys —
+    * ON THE DRIVER when the source is already local or small by its size
+    * estimate (collected once; its keys then scope the match scan as an
+    * InSet, and the commit may take the driver path) — and, given
+    * the matched keys and where the matched rows' pre-images come from
+    * (the COW affected scan, the MOR matched rows), the landing rows and
+    * the four-way change classification. Each commit's key sets are all
+    * of one form: collected on the driver path, relational otherwise. */
   private final class MergePrep(spark: SparkSession, ledgerDir: String,
-      c: RowCommit, source: DataFrame, keys: Seq[String],
+      c: RowCommit, source0: DataFrame, keys: Seq[String],
       deleteWhen: Option[org.apache.spark.sql.Column], evolveSchema: Boolean) {
     require(keys.nonEmpty, "merge needs at least one key column")
     require(keys.distinct == keys, s"duplicate merge key in $keys")
@@ -1890,7 +2144,6 @@ object Lake {
       "MERGE into a table with GENERATED ALWAYS AS IDENTITY columns is " +
         "not supported — INSERT new rows (identity allocates there) and " +
         "UPDATE/DELETE existing ones")
-    val srcKeys: DataFrame = source.select(keys.map(col): _*).distinct()
     // merge into an EMPTY table = pure insert; take the schema from source.
     // Default: source columns the target lacks are DROPPED (callers ride
     // this for merge-control columns like deleteWhen flags). With
@@ -1901,6 +2154,54 @@ object Lake {
     // merged-footer inference so pre-evolution files surface the new
     // columns as null (see isEvolved).
     private lazy val targetSchema = c.target.map(_.schema)
+    private def keyTypes(sch: org.apache.spark.sql.types.StructType) =
+      keys.map(k => sch(k).dataType)
+    /** Whether the source's keys compare like the target's (same
+      * types): an InSet compares values as they are, with none of the
+      * type coercion a join applies, so only then may the source's keys
+      * become a collected key set. */
+    private val sameKeyTypes: Boolean = targetSchema.forall(t =>
+      keys.forall(t.fieldNames.contains) &&
+        keyTypes(t) == keyTypes(source0.schema))
+    /** The source, collected when its keys compare like the target's and
+      * it is local already or small by its estimate: within
+      * [[DriverWriteMaxBytes]] and within the session's broadcast
+      * threshold. The threshold is a selection by a session setting: a
+      * session that floors `spark.sql.autoBroadcastJoinThreshold` keeps
+      * its merge sources relational, so its merges run their key sets as
+      * the shuffle joins it asked for (`MergeSpec` proves a merge there
+      * plans sort-merge joins and no broadcast). */
+    val source: DataFrame =
+      if (!sameKeyTypes || org.apache.spark.sql.GraftLocal.isLocal(source0))
+        source0
+      else {
+        val bcast = spark.sessionState.conf.autoBroadcastJoinThreshold
+        if (bcast < 0 || estimatedBytes(source0) > BigInt(bcast)) source0
+        else inHand(source0)
+      }
+    /** The source's keys collected, when the source is in hand and its
+      * keys compare like the target's. */
+    private val srcSet: Option[KeyValues] =
+      if (!sameKeyTypes || !org.apache.spark.sql.GraftLocal.isLocal(source))
+        None
+      else Some(KeyValues(keys, keyTypes(source.schema), Set.empty)
+        .keysOf(source))
+    /** The bytes the commit's one driver/distributed choice weighs
+      * ([[RowCommit.onDriver]]): its blast radius `radius` plus the
+      * source in hand. A source that stays relational keeps the whole
+      * commit relational. */
+    def commitBytes(radius: Long): Long = srcSet.fold(Long.MaxValue)(_ =>
+      (BigInt(radius) + estimatedBytes(source)).min(BigInt(Long.MaxValue))
+        .toLong)
+    /** The source's distinct keys, relationally. */
+    lazy val srcKeys: DataFrame = source.select(keys.map(col): _*).distinct()
+    /** The source's keys as the match scan filters by them, before the
+      * commit's choice: an InSet when they are collected. */
+    def scanKeySet: KeySet = srcSet.getOrElse(KeyFrame(keys, srcKeys))
+    /** The source's keys in the form of the commit's path: collected on
+      * the driver path, a key frame on the relational one. */
+    def srcKeySet: KeySet =
+      srcSet.filter(_ => c.driver).getOrElse(KeyFrame(keys, srcKeys))
     private lazy val baseCols: Seq[String] =
       targetSchema.map(_.fieldNames.toSeq).getOrElse(source.columns.toSeq)
     private lazy val newCols: Seq[String] =
@@ -1912,6 +2213,17 @@ object Lake {
         .getOrElse(source.schema(n).dataType)
     private lazy val genExprs: Map[String, String] =
       generatedColumns(ledgerDir).toMap
+
+    /** Scope a target scan to the source's key range ([[keyRangeScope]]). */
+    def scoped(scan: DataFrame): DataFrame =
+      keyRangeScope(scan, source.select(keys.map(col): _*), keys)
+
+    /** The keys of `rows` (target rows) the source also holds, in the
+      * form of [[srcKeySet]]. */
+    def matchedIn(rows: DataFrame): KeySet = {
+      val s = srcKeySet
+      s.keysOf(s.semi(rows))
+    }
 
     /** Conform a frame to the union schema: absent columns null-fill at
       * the authoritative type (target's for old columns, source's for
@@ -1939,43 +2251,35 @@ object Lake {
         org.apache.spark.sql.types.StructField(n, dtypeOf(n)))))
 
     /** The merge's `delta` (and, with `changeFeed`, `changes`) outputs once
-      * `matchedKeys` are known (None: nothing matched). `deleteWhen`
+      * `matched` keys are known (None: nothing matched). `deleteWhen`
       * consumes MATCHED source rows only (SQL MERGE semantics); every
       * surviving source row lands — whole-row replace makes updates and
       * inserts both just the live source. The standing CHECK constraints
       * gate those rows HERE, before any reservation (a violating merge
       * never contends for the id). CHANGE DATA FEED (the Delta CDF /
       * Iceberg changelog analog, opt-in like enableChangeDataFeed — the
-      * classification re-joins the blast radius, roughly doubling the
-      * merge's work): a matched key whose source row survives deleteWhen
-      * is an update (pre + post image), one consumed by deleteWhen is a
-      * delete (pre image), an unmatched source row is an insert. */
-    def outputs(matchedKeys: Option[DataFrame], pre: => DataFrame,
+      * classification re-reads the blast radius): a matched key whose
+      * source row survives deleteWhen is an update (pre + post image),
+      * one consumed by deleteWhen is a delete (pre image), an unmatched
+      * source row is an insert. */
+    def outputs(matched: Option[KeySet], pre: => DataFrame,
         changeFeed: Boolean): GenWrite => Unit = {
-      val srcLive = (deleteWhen, matchedKeys) match {
-        case (Some(w), Some(mk)) =>
-          source.join(mk.withColumn("_matched", lit(true)), keys, "left")
-            .filter(!(coalesce(col("_matched"), lit(false))
-              && coalesce(w, lit(false))))
-            .drop("_matched")
+      val srcLive = (deleteWhen, matched) match {
+        case (Some(w), Some(mk)) => mk.unless(source, w)
         case _ => source // no delete clause, or nothing matched
       }
       enforceConstraints(spark, ledgerDir, conform(srcLive))
       out => {
         def tag(df: DataFrame, t: String): DataFrame =
           conform(df).withColumn("_change_type", lit(t))
-        if (changeFeed) out("changes", matchedKeys match {
+        if (changeFeed) out("changes", matched match {
           case Some(mk) =>
-            val liveKeys = srcLive.select(keys.map(col): _*).distinct()
-            val updKeys = mk.join(liveKeys, keys, "left_semi")
-            val delKeys = mk.join(liveKeys, keys, "left_anti")
-            tag(pre.join(delKeys, keys, "left_semi"), "delete")
-              .unionByName(tag(pre.join(updKeys, keys, "left_semi"),
-                "update_preimage"))
-              .unionByName(tag(srcLive.join(mk, keys, "left_semi"),
-                "update_postimage"))
-              .unionByName(tag(srcLive.join(mk, keys, "left_anti"),
-                "insert"))
+            val liveKeys = mk.keysOf(srcLive)
+            val matchedPre = mk.semi(pre)
+            tag(liveKeys.anti(matchedPre), "delete")
+              .unionByName(tag(liveKeys.semi(matchedPre), "update_preimage"))
+              .unionByName(tag(mk.semi(srcLive), "update_postimage"))
+              .unionByName(tag(mk.anti(srcLive), "insert"))
           case None => tag(srcLive, "insert")
         })
         out("delta", conform(srcLive))
@@ -2048,22 +2352,19 @@ object Lake {
     // superset; pushable — manifest stats prune it to the batch's file
     // footprint on a key-clustered table, see keyRangeScope)
     val affected: Set[String] = c.target.fold(Set.empty[String])(t =>
-      c.affectedFiles(keyRangeScope(t, m.srcKeys, keys))(
-        _.join(m.srcKeys, keys, "left_semi")))
-    def affectedScan: DataFrame = c.affectedRows(affected)
-    // matched keys live ONLY in affected files — computable without a
-    // full scan; shared by the deleteWhen filter and the change feed
-    val matchedKeys: Option[DataFrame] =
-      if (affected.isEmpty) None
-      else Some(affectedScan.join(m.srcKeys, keys, "left_semi")
-        .select(keys.map(col): _*).distinct())
-    val mergeOut = m.outputs(matchedKeys, affectedScan, changeFeed)
+      c.affectedFiles(m.scoped(t))(m.scanKeySet.semi))
+    c.onDriver(m.commitBytes(c.bytesOf(affected)))
+    // the blast radius: matched keys live ONLY in affected files, so the
+    // deleteWhen filter, the change feed and the carry all read just
+    // those files' rows
+    val affectedScan: Option[DataFrame] =
+      if (affected.isEmpty) None else Some(c.affectedRows(affected))
+    val matched: Option[KeySet] = affectedScan.map(m.matchedIn)
+    val mergeOut = m.outputs(matched, affectedScan.get, changeFeed)
     c.commit(c.actsOf(affected), staged = m.evolved) { out =>
       mergeOut(out)
-      // rows the merge deletes/replaces live ONLY in affected files, so
-      // the carry rewrite scans just those files
-      if (affected.nonEmpty) out("carry",
-        m.conform(affectedScan.join(m.srcKeys, keys, "left_anti")))
+      affectedScan.foreach(rows =>
+        out("carry", m.conform(m.srcKeySet.anti(rows))))
     }
   }
 
@@ -2079,17 +2380,18 @@ object Lake {
     val cols = c.target.get.columns.map(col)
     val affected = c.affectedWhere(cond)
     if (affected.isEmpty) return c.snap // nothing matches: no snapshot
+    c.onDriver(c.bytesOf(affected))
+    val rows = c.affectedRows(affected)
     // a pure delete is a REPLACE-shaped snapshot (no reader keys on
     // remove-row snapshot_op; history()'s op mix stays honest)
     c.commit(c.actsOf(affected), removeOp = "replace", changeOp = "replace") {
       out =>
-        out("carry", c.affectedRows(affected)
-          .filter(!coalesce(cond, lit(false))).select(cols: _*))
+        out("carry", rows.filter(!coalesce(cond, lit(false))).select(cols: _*))
         // opt-in CHANGE FEED (the mergeInto discipline): the deleted rows'
         // PRE-IMAGES as _change_type='delete' cdc rows, bounded by the
         // delete's blast radius — without it a readChanges-maintained
         // mirror would silently keep rows this table dropped
-        if (changeFeed) out("changes", c.affectedRows(affected)
+        if (changeFeed) out("changes", rows
           .filter(coalesce(cond, lit(false))).select(cols: _*)
           .withColumn("_change_type", lit("delete")))
     }
@@ -2172,10 +2474,11 @@ object Lake {
     }
     val affected = c.affectedWhere(cond)
     if (affected.isEmpty) return c.snap // nothing matches: no snapshot
+    c.onDriver(c.bytesOf(affected))
     // the DV-applied affected rows feed FOUR consumers (constraint
     // check, carry, delta, change feed) — materialize the blast radius
     // once instead of re-scanning the affected files per consumer
-    val affectedRows = c.step("rewrite")(c.affectedRows(affected).localCheckpoint())
+    val affectedRows = c.affectedRows(affected, reuse = true)
     val cols = target.columns.map(col)
     val pre = affectedRows.filter(coalesce(cond, lit(false)))
       .select(cols: _*)
@@ -2279,16 +2582,24 @@ object Lake {
       keepPos = true)
     // ONE match scan: the position set is delete-sized (exactly what the
     // sidecar will hold), so materialize it once instead of re-scanning
-    // the table for the emptiness check and again for the sidecar write
-    val hits = c.step("match")(matches(target)
+    // the table for the emptiness check and again for the sidecar write.
+    // On the driver path (the scanned table within the driver bound) it
+    // is collected — whole rows under the change feed, so its pre-images
+    // come from the same rows in hand
+    val ids = Seq(col("__graft_fp"), col("__graft_pos"))
+    c.onDriver(c.liveBytes)
+    val held = c.step("match")(c.hold(
+      if (changeFeed) matches(target) else matches(target).select(ids: _*)))
+    val hitRows: Option[DataFrame] = if (c.driver) Some(held) else None
+    val hits = hitRows.getOrElse(c.step("match")(
+        matches(target).select(ids: _*).localCheckpoint()))
       .select(col("__graft_fp").as("dpath"), col("__graft_pos").as("pos"))
-      .localCheckpoint())
     if (hits.isEmpty) return c.snap // nothing matches: no snapshot, no marker
     c.commit(changeOp = "mor-delete") { out =>
       out("dv", hits)
       // opt-in CHANGE FEED: deleted pre-images, same rows the sidecar
       // points at (cost bounded by the delete size, like the sidecar)
-      if (changeFeed) out("changes", matches(target)
+      if (changeFeed) out("changes", hitRows.getOrElse(matches(target))
         .drop("__graft_fp", "__graft_pos")
         .withColumn("_change_type", lit("delete")))
     }
@@ -2302,7 +2613,8 @@ object Lake {
     * batch's file footprint instead of the whole table (the
     * file-targeted-merge property; a hash-scattered table degrades
     * gracefully to the full scan it needed anyway). One tiny driver
-    * action on the already-distinct key set. */
+    * action on the batch's key columns — none when the batch is in hand
+    * ([[headRow]]). */
   private def keyRangeScope(scan: DataFrame, srcKeys: DataFrame,
       keys: Seq[String]): DataFrame = {
     // ONE driver action carries every column's bounds; composite keys AND
@@ -2310,7 +2622,7 @@ object Lake {
     // ANY column's range cannot equal a batch row on ALL columns, and
     // each stays a bare-column pushable predicate)
     val aggs = keys.flatMap(k => Seq(min(col(k)), max(col(k))))
-    val b = srcKeys.agg(aggs.head, aggs.tail: _*).head()
+    val b = headRow(srcKeys.agg(aggs.head, aggs.tail: _*))
     val preds = keys.zipWithIndex.flatMap { case (k, i) =>
       if (b.isNullAt(2 * i)) None // all-null column: no sound bound
       else Some(col(k).between(lit(b.get(2 * i)), lit(b.get(2 * i + 1))))
@@ -2405,18 +2717,24 @@ object Lake {
   def appendRows(spark: SparkSession, ledgerDir: String, genRoot: String,
       rows: DataFrame): Long =
     described(spark, "Lake.commit insert") {
-    if (rows.isEmpty) return currentSnapshot(spark, ledgerDir)
+    // a driver-bounded frame is collected once (its one data pass):
+    // emptiness, constraints, the write and the new file's stats all
+    // read the rows in hand
+    val rowsL = described(spark, "Lake.commit insert: write delta")(inHand(rows))
+    countWrite(if (org.apache.spark.sql.GraftLocal.isLocal(rowsL))
+      "commit.driver" else "commit.distributed")
+    if (rowsL.isEmpty) return currentSnapshot(spark, ledgerDir)
     // constraints enforce BEFORE the generation write (read-only pass on
     // the input), so a refused append leaves ZERO generation debris —
     // the appendExpect atomicity discipline; the promotion ingest skips
     // its redundant re-check (provably the same rows)
-    enforceConstraints(spark, ledgerDir, rows)
+    enforceConstraints(spark, ledgerDir, rowsL)
     val dir = s"$genRoot/append-${java.util.UUID.randomUUID()}"
-    described(spark, "Lake.commit insert: write delta")(
-      writeGenDir(spark, rows, dir))
     val st = LedgerState.open(spark, ledgerDir)
     val (statsCols, bloomCols) =
       liveStatsContract(st, st.head, renameLog(ledgerDir))
+    described(spark, "Lake.commit insert: write delta")(
+      writeGenDir(spark, rowsL, dir, stats = (statsCols, bloomCols)))
     described(spark, "Lake.commit insert: ingest")(
       ingestNewFiles(spark, dir, ledgerDir, statsCols, bloomCols,
         enforceChecks = false))
@@ -2458,8 +2776,14 @@ object Lake {
     // with no removes in the same one-snapshot shape.
     if (c.index.isEmpty && !changeFeed)
       return appendRows(spark, ledgerDir, genRoot, rows)
-    enforceConstraints(spark, ledgerDir, rows)
-    val newEmpty = rows.isEmpty
+    // the incoming rows, and the old rows a change feed deletes, on the
+    // driver when they are driver-bounded (collected once: emptiness,
+    // constraints, the write and the insert images read them in hand)
+    c.onDriver((estimatedBytes(rows) + (if (changeFeed) c.liveBytes else 0L))
+      .min(BigInt(Long.MaxValue)).toLong)
+    val rowsL = c.hold(rows)
+    enforceConstraints(spark, ledgerDir, rowsL)
+    val newEmpty = rowsL.isEmpty
     // truncating an already-empty table: nothing to remove, nothing to
     // add, no change rows — a genuine no-op at the current snapshot
     if (c.index.isEmpty && newEmpty) return c.snap
@@ -2472,11 +2796,11 @@ object Lake {
       recordedSchemaAt(ledgerDir, Long.MaxValue).isEmpty
     c.commit(c.liveActs.map(_.path), removeOp = "overwrite",
         staged = if (needSchema) Some(rows.schema) else None) { out =>
-      if (!newEmpty) out("delta", rows)
+      if (!newEmpty) out("delta", rowsL)
       if (changeFeed) {
         val inserted =
           if (newEmpty) None
-          else Some(spark.read.parquet(s"${c.genDir}/delta")
+          else Some(landed(spark, rowsL, s"${c.genDir}/delta")
             .withColumn("_change_type", lit("insert")))
         val deleted = c.index.map(_ =>
           c.liveRows.withColumn("_change_type", lit("delete")))
@@ -2486,6 +2810,20 @@ object Lake {
       }
     }
   }
+
+  /** The rows an overwrite's delta landed at `dir`, as its change feed's
+    * insert images: `rows` themselves when they are in hand (the exact
+    * rows written, with the nullable schema a read of the file has), a
+    * re-read of the landed files otherwise — so cdc rows match the
+    * committed bytes even for a nondeterministic `rows` plan. */
+  private def landed(spark: SparkSession, rows: DataFrame,
+      dir: String): DataFrame =
+    org.apache.spark.sql.GraftLocal.rows(rows) match {
+      case Some(rs) =>
+        org.apache.spark.sql.GraftLocal.frame(spark,
+          org.apache.spark.sql.GraftShim.asNullable(rows.schema), rs)
+      case None => spark.read.parquet(dir)
+    }
 
   /** SCOPED OVERWRITE — the Delta `replaceWhere` / `INSERT OVERWRITE …
     * WHERE` verb, the most common production overwrite (reload one day of
@@ -2520,11 +2858,15 @@ object Lake {
     // replaceWhere contract count, constraints, the delta write) — a
     // non-deterministic source could pass the out-of-region check yet
     // write rows violating the predicate
-    val rowsM = rows.localCheckpoint()
+    val rowsH = inHand(rows)
+    val rowsM =
+      if (org.apache.spark.sql.GraftLocal.isLocal(rowsH)) rowsH
+      else rows.localCheckpoint()
     val newEmpty = rowsM.isEmpty
     // the replaceWhere contract, checked read-only before anything lands
     if (!newEmpty) {
-      val astray = rowsM.filter(!coalesce(pred, lit(false))).count()
+      val astray = headRow(rowsM.filter(!coalesce(pred, lit(false)))
+        .agg(count(lit(1)))).getLong(0)
       require(astray == 0, s"replaceWhere: $astray incoming rows do not " +
         "satisfy the predicate — they lie outside the replaced region")
       enforceConstraints(spark, ledgerDir, rowsM)
@@ -2541,15 +2883,13 @@ object Lake {
     // only files actually holding a match enter the blast radius
     val affected = c.affectedWhere(pred)
     if (affected.isEmpty && newEmpty) return c.snap
+    c.onDriver(c.bytesOf(affected))
     // with the change feed on, the blast radius feeds TWO consumers
     // (carry + delete pre-images), so it materializes once (the
     // updateWhere discipline)
     val affectedRows: Option[DataFrame] =
       if (affected.isEmpty) None
-      else {
-        val scan = c.affectedRows(affected)
-        Some(if (changeFeed) scan.localCheckpoint() else scan)
-      }
+      else Some(c.affectedRows(affected, reuse = changeFeed))
     c.commit(c.actsOf(affected), removeOp = "overwrite") { out =>
       affectedRows.foreach(r => out("carry",
         r.filter(!coalesce(pred, lit(false))).select(cols: _*)))
@@ -2562,7 +2902,7 @@ object Lake {
           .withColumn("_change_type", lit("delete"))
         val inserted =
           if (newEmpty) deleted.limit(0)
-          else spark.read.parquet(s"${c.genDir}/delta")
+          else landed(spark, rowsM, s"${c.genDir}/delta")
             .withColumn("_change_type", lit("insert"))
         out("changes", deleted.unionByName(inserted))
       }
@@ -2951,33 +3291,41 @@ object Lake {
     rowCommit(spark, ledgerDir, genRoot, "merge", genSuffix = genSuffix) { c =>
     val m = new MergePrep(spark, ledgerDir, c, source, keys, deleteWhen,
       evolveSchema = false)
-    if (source.isEmpty) return c.snap // empty source: no snapshot, no marker
+    if (m.source.isEmpty) return c.snap // empty source: no snapshot, no marker
     // DV-applied match scan WITH row identity: the (file, position) rows
-    // this merge supersedes. The NARROW identity projection (key, file,
-    // pos — match-sized, exactly what the sidecar holds) materializes
-    // ONCE and feeds the emptiness check, the matched-key set, and the
-    // sidecar write; only the change feed's pre-images re-scan (they
-    // need full rows, key-filter pushed — the COW affectedScan shape).
-    // The scan is SCOPED to the batch's key range (a sound superset of
-    // the matches — equality can never hold outside it), a pushable
-    // literal predicate, so on a key-clustered table manifest min/max
-    // stats prune the match scan to the batch's file footprint instead
-    // of the whole table (see keyRangeScope).
+    // this merge supersedes. The scan is SCOPED to the batch's key range
+    // (a sound superset of the matches — equality can never hold outside
+    // it), a pushable literal predicate, so on a key-clustered table
+    // manifest min/max stats prune the match scan to the batch's file
+    // footprint instead of the whole table (see keyRangeScope).
     val matched: Option[DataFrame] = c.index.map { idx =>
-      applyDvsAt(spark, c.st, c.snap,
-          keyRangeScope(tableScan(spark, ledgerDir, idx, c.snap,
-            keepPos = true), m.srcKeys, keys),
-          keepPos = true)
-        .join(m.srcKeys, keys, "left_semi")
+      m.scanKeySet.semi(applyDvsAt(spark, c.st, c.snap,
+        m.scoped(tableScan(spark, ledgerDir, idx, c.snap, keepPos = true)),
+        keepPos = true))
     }
-    val matchedIds: Option[DataFrame] = matched.map(df => c.step("match")(
-      df.select(keys.map(col) ++ Seq(col("__graft_fp"), col("__graft_pos")): _*)
-        .localCheckpoint()))
+    // ONE materialization of the matched rows feeds the emptiness check,
+    // the matched-key set and the sidecar: the NARROW identity projection
+    // (key, file, pos — match-sized, exactly what the sidecar holds).
+    // The change feed's pre-images re-scan (the COW affectedScan shape),
+    // except on the driver path (the scanned table within the driver
+    // bound), which collects whole rows under the feed instead
+    c.onDriver(m.commitBytes(c.liveBytes))
+    val matchedIds: Option[DataFrame] = matched.map { df =>
+      val narrow = df.select(keys.map(col) ++
+        Seq(col("__graft_fp"), col("__graft_pos")): _*)
+      c.step("match") {
+        val held = c.hold(if (changeFeed) df else narrow)
+        if (c.driver) held else narrow.localCheckpoint()
+      }
+    }
     val anyMatches = matchedIds.exists(!_.isEmpty)
-    val matchedKeys: Option[DataFrame] =
-      if (anyMatches) matchedIds.map(_.select(keys.map(col): _*).distinct()) else None
+    // the matched rows hold only source keys (the scan is filtered by
+    // them): their keys are the matched keys
+    val matchedKeys: Option[KeySet] =
+      if (!anyMatches) None else matchedIds.map(m.srcKeySet.keysOf)
     val mergeOut = m.outputs(matchedKeys,
-      matched.get.drop("__graft_fp", "__graft_pos"), changeFeed)
+      (if (c.driver) matchedIds else matched).get
+        .drop("__graft_fp", "__graft_pos"), changeFeed)
     // dv sidecars are positional metadata — no stats (they are never
     // live-set scanned)
     c.commit(changeOp = "mor-merge") { out =>
@@ -3887,12 +4235,23 @@ object Lake {
     val aggs = cs.map { case (n, e) =>
       sum(when(!coalesce(expr(e), lit(false)), 1L).otherwise(0L)).as(n)
     }
-    val row = rows.agg(aggs.head, aggs.drop(1): _*).head()
+    val row = headRow(rows.agg(aggs.head, aggs.drop(1): _*))
     cs.zipWithIndex.foreach { case ((n, e), i) =>
       val bad = if (row.isNullAt(i)) 0L else row.getLong(i)
       if (bad > 0) throw ConstraintViolationException(n, e, bad)
     }
   }
+
+  /** The first row of `df` — evaluated on the driver over rows in hand
+    * ([[org.apache.spark.sql.GraftLocal]]: no job), by a job otherwise. */
+  private def headRow(df: DataFrame): org.apache.spark.sql.Row =
+    org.apache.spark.sql.GraftLocal.rows(df) match {
+      case Some(rows) =>
+        org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToScalaConverter(df.schema)(rows.head)
+          .asInstanceOf[org.apache.spark.sql.Row]
+      case None => df.head()
+    }
 
   // ===== BRANCHES / WRITE-AUDIT-PUBLISH =====
 

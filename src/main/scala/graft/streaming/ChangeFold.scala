@@ -77,34 +77,47 @@ object ChangeFold {
       .filter(_.getName.stripPrefix("gen-").toLongOption.exists(_ < below))
       .foreach(MirrorLoop.rmrf)
 
+  /** Run `body` with its jobs described `<op>.<phase>: <step>` (e.g.
+    * `DsirDelta.round: changes`); a commit inside it describes its own. */
+  private def step[T](spark: SparkSession, op: String, phase: String,
+      name: String)(body: => T): T =
+    Lake.described(spark, s"$op.$phase: $name")(body)
+
   /** Build the state at the source's current snapshot (`build(snap)` —
     * the one full read, paid once) and mark it live; a no-op returning
-    * the existing cursor when already bootstrapped. */
-  def bootstrap(spark: SparkSession, srcLedger: String, root: String)(
-      build: Long => Unit): Long =
-    cursorOf(spark, root).getOrElse {
+    * the existing cursor when already bootstrapped. `op` names the
+    * operator in its jobs' descriptions (`<op>.bootstrap: <step>`). */
+  def bootstrap(spark: SparkSession, srcLedger: String, root: String,
+      op: String)(build: Long => Unit): Long = {
+    def phase[T](name: String)(body: => T) =
+      step(spark, op, "bootstrap", name)(body)
+    phase("cursor")(cursorOf(spark, root)).getOrElse {
       MirrorLoop.rmrf(new java.io.File(root)) // wipe partial crash state
       val snap = Lake.currentSnapshot(spark, srcLedger)
-      build(snap)
-      markCursor(spark, root, snap)
+      phase("build")(build(snap))
+      phase("mark")(markCursor(spark, root, snap))
       snap
     }
+  }
 
-  /** One maintenance round from cursor `cur` (just read by the caller):
-    * `fold(target, changes)` folds every change past `cur` into the state
-    * at the target snapshot. Returns the new cursor — unchanged when no
-    * commit landed (the fold never sees an empty batch). */
-  def round(spark: SparkSession, srcLedger: String, root: String, cur: Long)(
-      fold: (Long, DataFrame) => Unit): Long = {
-    val changes = Lake.readChanges(spark, srcLedger, cur)
+  /** One maintenance round from the cursor `from` reads (evaluated
+    * first, inside the round): `fold(target, changes)` folds every change
+    * past it into the state at the target snapshot. Returns the new cursor —
+    * unchanged when no commit landed (the fold never sees an empty
+    * batch). Its jobs are described `<op>.round: <step>`. */
+  def round(spark: SparkSession, srcLedger: String, root: String,
+      op: String, from: => Long)(fold: (Long, DataFrame) => Unit): Long = {
+    def phase[T](name: String)(body: => T) = step(spark, op, "round", name)(body)
+    val cur = phase("cursor")(from)
+    val changes = phase("changes")(Lake.readChanges(spark, srcLedger, cur))
     // a feed-less table reads schema-less; otherwise the max IS the
     // emptiness check (null over zero rows) — one job, not two
     if (changes.columns.isEmpty) return cur
-    val top = changes.agg(max(col("_commit_snapshot"))).head()
+    val top = phase("changes")(changes.agg(max(col("_commit_snapshot"))).head())
     if (top.isNullAt(0)) return cur
     val target = top.getLong(0)
-    fold(target, changes)
-    markCursor(spark, root, target)
+    phase("fold")(fold(target, changes))
+    phase("mark")(markCursor(spark, root, target))
     pruneGens(root, cur)
     target
   }
@@ -146,9 +159,9 @@ object ChangeFold {
   /** Additive bootstrap: `sums` over the snapshot's rows at weight 1,
     * written as one row of `schema`. */
   def additiveBootstrap(spark: SparkSession, srcLedger: String,
-      root: String, schema: StructType)(
+      root: String, op: String, schema: StructType)(
       sums: (DataFrame, Column) => Row): Long =
-    bootstrap(spark, srcLedger, root) { snap =>
+    bootstrap(spark, srcLedger, root, op) { snap =>
       writeGen(spark, spark.createDataFrame(java.util.List.of(
         sums(Lake.readAt(spark, srcLedger, snap), lit(1L))), schema),
         root, snap)
@@ -157,9 +170,9 @@ object ChangeFold {
   /** Additive round: state += `sums` over the change rows at [[sign]] —
     * one batch-sized aggregate pass and one KB state write. */
   def additiveRound(spark: SparkSession, srcLedger: String, root: String,
-      what: String)(sums: (DataFrame, Column) => Row): Long = {
-    val cur = cursor(spark, root, what)
-    round(spark, srcLedger, root, cur) { (target, changes) =>
+      op: String, what: String)(sums: (DataFrame, Column) => Row): Long = {
+    lazy val cur = cursor(spark, root, what)
+    round(spark, srcLedger, root, op, cur) { (target, changes) =>
       val state = spark.read.parquet(genDir(root, cur)).head()
       val next = Row.fromSeq(
         state.toSeq.lazyZip(sums(changes, sign).toSeq).map(plus))

@@ -145,7 +145,7 @@ object MatView {
     // spec, or the caller walks away believing their definition is live
     ChangeFold.cursorOf(spark, viewDir).foreach(cur => requireSpecMatches(
       spark.read.parquet(ChangeFold.genDir(viewDir, cur)), spec, viewDir))
-    ChangeFold.bootstrap(spark, ledgerDir, viewDir) { snap =>
+    ChangeFold.bootstrap(spark, ledgerDir, viewDir, "MatView") { snap =>
       ChangeFold.writeGen(spark,
         aggregate(Lake.readAt(spark, ledgerDir, snap), spec), viewDir, snap)
     }
@@ -172,7 +172,7 @@ object MatView {
     val cur = ChangeFold.cursor(spark, viewDir, "view")
     val v = spark.read.parquet(ChangeFold.genDir(viewDir, cur))
     requireSpecMatches(v, spec, viewDir)
-    ChangeFold.round(spark, ledgerDir, viewDir, cur) { (target, changes) =>
+    ChangeFold.round(spark, ledgerDir, viewDir, "MatView", cur) { (target, changes) =>
       ChangeFold.writeGen(spark,
         applyDelta(v, changes, spec, Lake.readAt(spark, ledgerDir, target)),
         viewDir, target)

@@ -45,7 +45,7 @@ object MirrorLoop {
     * read — paid once); a no-op returning the existing cursor if the
     * mirror is already bootstrapped. Changes are consumed from here on. */
   def bootstrap(spark: SparkSession, ledgerDir: String, mirrorDir: String): Long =
-    ChangeFold.bootstrap(spark, ledgerDir, mirrorDir) { snap =>
+    ChangeFold.bootstrap(spark, ledgerDir, mirrorDir, "MirrorLoop") { snap =>
       ChangeFold.writeGen(spark, Lake.readAt(spark, ledgerDir, snap),
         mirrorDir, snap)
     }
@@ -60,11 +60,12 @@ object MirrorLoop {
     * marker. Returns the new cursor (unchanged when no merge landed). */
   def applyRound(spark: SparkSession, ledgerDir: String, mirrorDir: String,
       key: String): Long = {
-    val cur = ChangeFold.cursor(spark, mirrorDir, "mirror")
-    ChangeFold.round(spark, ledgerDir, mirrorDir, cur) { (target, changes) =>
-      val m = spark.read.parquet(ChangeFold.genDir(mirrorDir, cur))
-      ChangeFold.writeGen(spark, Lake.applyChanges(m, changes, key),
-        mirrorDir, target)
+    lazy val cur = ChangeFold.cursor(spark, mirrorDir, "mirror")
+    ChangeFold.round(spark, ledgerDir, mirrorDir, "MirrorLoop", cur) {
+      (target, changes) =>
+        val m = spark.read.parquet(ChangeFold.genDir(mirrorDir, cur))
+        ChangeFold.writeGen(spark, Lake.applyChanges(m, changes, key),
+          mirrorDir, target)
     }
   }
 

@@ -14,6 +14,11 @@ object GraftShim {
   def parseExpression(spark: SparkSession, sql: String): Expression =
     spark.sessionState.sqlParser.parseExpression(sql)
 
+  /** `schema` with every field (nested ones too) nullable — the schema a
+    * parquet read of a file written with `schema` reports. */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   def logicalPlan(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].logicalPlan

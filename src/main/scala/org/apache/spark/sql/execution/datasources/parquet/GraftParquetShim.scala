@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftLocal, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.internal.SQLConf
@@ -25,16 +25,18 @@ import org.apache.spark.sql.types.StructType
   * `private[parquet]` in some Spark lines. */
 object GraftParquetShim {
 
-  /** Collect `df` (caller guarantees bounded rows) and write ONE parquet
-    * file at `outPath` with the session's parquet write configuration.
-    * Returns the row count. The write is NOT atomic — callers rename the
-    * finished file into its visible name. */
+  /** Collect `df` (caller guarantees bounded rows; a frame over rows
+    * already on the driver collects with no job, see [[GraftLocal]]) and
+    * write ONE parquet file at `outPath` with the session's parquet
+    * write configuration. Returns the row count. The write is NOT
+    * atomic — callers rename the finished file into its visible name. */
   def writeSingleFile(spark: SparkSession, df: DataFrame,
-      outPath: String): Long = {
-    val schema = df.schema
-    val rows: Array[InternalRow] =
-      df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-        .queryExecution.executedPlan.executeCollect()
+      outPath: String): Long =
+    writeRows(spark, df.schema, GraftLocal.collect(df), outPath)
+
+  /** [[writeSingleFile]] of rows already in hand. */
+  def writeRows(spark: SparkSession, schema: StructType,
+      rows: Seq[InternalRow], outPath: String): Long = {
     val sqlConf = spark.sessionState.conf
     val conf = spark.sessionState.newHadoopConf()
     ParquetWriteSupport.setSchema(schema, conf)

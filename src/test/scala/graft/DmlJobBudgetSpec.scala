@@ -1,14 +1,17 @@
 package graft
 
 import graft.sources.{GraftTable, Lake}
+import org.apache.spark.sql.functions.{col, lit}
 import java.nio.file.Files
 
 /** Spark-job budget of single-row SQL DML on a ledger table: each of
-  * UPDATE, DELETE, INSERT and MERGE (one matched and one new key) runs
-  * under a job listener and must stay inside its budget, so a change to
-  * the commit path cannot add jobs silently. Reads of a bound table
-  * launch only their data-scan job once its ledger state is warm, and
-  * every job of a commit is described as a `Lake.` step. */
+  * UPDATE, DELETE, INSERT and MERGE (one matched and one new key), and a
+  * change-feed MERGE delete and UPDATE, runs under a job listener and
+  * must stay inside its budget, so a change to the commit path cannot
+  * add jobs silently; the write path each commit takes is counted.
+  * Reads of a bound table launch only their data-scan job once its
+  * ledger state is warm, and every job of a commit or a maintained
+  * state's round carries a description. */
 class DmlJobBudgetSpec extends GraftSpec {
 
   private def jobsOf(body: => Unit): Int = jobDescriptions(body).size
@@ -55,25 +58,108 @@ class DmlJobBudgetSpec extends GraftSpec {
         "c_nationkey, c_acctbal, c_mktsegment)) src ON " +
         "budget_cust.c_custkey = src.c_custkey WHEN MATCHED THEN UPDATE " +
         "SET * WHEN NOT MATCHED THEN INSERT *"))
+    val paths0 = Lake.writePaths
     val used = stmts.map { case (kind, sql) =>
       val head = t.snapshot
       val jobs = jobsOf { assert(t.sql(sql).head().getLong(0) == head + 1) }
       kind -> jobs
     }.toMap
-    info(s"jobs per statement: $used")
+    val paths = Lake.writePaths
+    def delta(k: String) = paths.getOrElse(k, 0L) - paths0.getOrElse(k, 0L)
+    info(s"jobs per statement: $used; write paths: " +
+      Seq("commit.driver", "commit.distributed", "write.fallback")
+        .map(k => s"$k +${delta(k)}").mkString(", "))
+    // an INSERT of literal rows launches no job; every other statement
+    // scans, so a listener that saw none of its jobs is broken
     used.foreach { case (kind, jobs) =>
-      assert(jobs > 0 && jobs <= JobBudget(kind),
+      assert((kind == "insert" || jobs > 0) && jobs <= JobBudget(kind),
         s"single-row $kind launched $jobs jobs (budget ${JobBudget(kind)}); " +
           s"all: $used")
     }
+    // each statement decided its write path once, on the driver, and no
+    // driver write fell back to the distributed writer
+    assert(delta("commit.driver") == 4 && delta("commit.distributed") == 0)
+    assert(delta("write.fallback") == 0)
     assert(t.read().count() == 150 - 1 + 2)
     graft.streaming.MirrorLoop.rmrf(new java.io.File(tmp))
   }
 
-  /** Measured at sf0.001 on 4 local cores: UPDATE 8, DELETE 6, INSERT 4
-    * and MERGE 12 jobs; each budget adds two of headroom. */
-  private val JobBudget = Map("update" -> 10, "delete" -> 8,
-    "insert" -> 6, "merge" -> 14)
+  /** Measured at sf0.001 on 4 local cores: UPDATE 2, DELETE 2, INSERT 0
+    * and MERGE 2 jobs (the affected-files scan and the one collect of the
+    * blast radius; an INSERT of literal rows runs none), and 2 each for a
+    * change-feed MERGE delete and UPDATE; each budget adds two of
+    * headroom. */
+  private val JobBudget = Map("update" -> 4, "delete" -> 4,
+    "insert" -> 2, "merge" -> 4, "feed-merge-delete" -> 4,
+    "feed-update" -> 4)
+
+  test("change-feed MERGE with a delete arm and change-feed UPDATE stay " +
+      "inside their Spark-job budgets") {
+    val sp = spark; import sp.implicits._
+    val tmp = Files.createTempDirectory("graft_dml_feed_budget").toString
+    val t = GraftTable(spark, s"$tmp/ledger", s"$tmp/gen")
+    spark.read.parquet(s"$sf/customer.parquet")
+      .repartition(8).write.parquet(s"$tmp/landing")
+    t.ingest(s"$tmp/landing", statsCols = Seq("c_custkey"))
+    val start = t.snapshot
+    val used = Map(
+      // the documents wave's delete merge: matched keys, all deleted
+      "feed-merge-delete" -> jobsOf {
+        t.merge(Seq((21L, "gone"), (22L, "gone")).toDF("c_custkey", "c_name"),
+          "c_custkey", deleteWhen = Some(lit(true)), changeFeed = true)
+      },
+      "feed-update" -> jobsOf {
+        t.update(col("c_custkey") === 23L, Seq("c_acctbal" -> lit(4.5)),
+          changeFeed = true)
+      })
+    info(s"jobs per change-feed statement: $used")
+    used.foreach { case (kind, jobs) =>
+      assert(jobs > 0 && jobs <= JobBudget(kind),
+        s"$kind launched $jobs jobs (budget ${JobBudget(kind)}); all: $used")
+    }
+    assert(t.snapshot == start + 2)
+    val changes = t.readChanges(start).select("c_custkey", "_change_type")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(changes == Set((21L, "delete"), (22L, "delete"),
+      (23L, "update_preimage"), (23L, "update_postimage")))
+    graft.streaming.MirrorLoop.rmrf(new java.io.File(tmp))
+  }
+
+  test("a gen-dir frame estimated above the driver bound takes the " +
+      "distributed writer, and the choice is counted") {
+    val dir = Files.createTempDirectory("graft_dml_distributed").toString
+    val before = Lake.writePaths
+    // a range's estimate is 8 bytes per id (40 MB here), and a filter
+    // keeps its input's estimate
+    Lake.writeGenDir(spark, spark.range(0, 5000000L).toDF().filter(col("id") < 3),
+      s"$dir/gen")
+    val after = Lake.writePaths
+    def delta(k: String) = after.getOrElse(k, 0L) - before.getOrElse(k, 0L)
+    assert(delta("write.distributed") == 1 && delta("write.driver") == 0)
+    assert(spark.read.parquet(s"$dir/gen").count() == 3)
+    graft.streaming.MirrorLoop.rmrf(new java.io.File(dir))
+  }
+
+  test("every job of a DsirDelta round carries a description") {
+    val sp = spark; import sp.implicits._
+    val tmp = Files.createTempDirectory("graft_dml_dsir_desc").toString
+    val src = GraftTable(spark, s"$tmp/ledger", s"$tmp/gen")
+    spark.read.parquet(s"$sf/documents.parquet")
+      .select("doc_id", "text", "lang")
+      .repartition(2).write.parquet(s"$tmp/landing")
+    src.ingest(s"$tmp/landing")
+    val root = s"$tmp/dsir"
+    graft.operators.DsirDelta.bootstrap(spark, src.ledgerDir, root)
+    src.merge(Seq((990001L, "a fresh document about graft lakes", "en"))
+      .toDF("doc_id", "text", "lang"), "doc_id", changeFeed = true)
+    val descs = jobDescriptions {
+      graft.operators.DsirDelta.applyRound(spark, src.ledgerDir, root)
+    }
+    info(s"job descriptions: ${descs.distinct.mkString(" | ")}")
+    assert(descs.nonEmpty && descs.forall(_.nonEmpty),
+      s"${descs.count(_.isEmpty)} of ${descs.size} jobs undescribed")
+    graft.streaming.MirrorLoop.rmrf(new java.io.File(tmp))
+  }
 
   private lazy val boundRoot = Files.createTempDirectory("graft_dml_reads").toString
 
