@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.streaming.ChangeFold
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftLocal, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -72,17 +72,17 @@ object DsirDelta {
   private def isTarget: Column = col("lang") === "en"
 
   /** Per-bucket (raw, tgt) counts of the rows at weight `w` — one
-    * exploded aggregate and a ≤B-row collect. Counts are EXACTLY
-    * additive, so the signed sums over a change batch are the state's
-    * delta. */
+    * exploded aggregate and a ≤B-row collect (evaluated on the driver,
+    * no job, over a held change batch). Counts are EXACTLY additive, so
+    * the signed sums over a change batch are the state's delta. */
   private def sums(docs: DataFrame, w: Column): Row = {
     val rawC = new Array[Long](Buckets)
     val tgtC = new Array[Long](Buckets)
-    bucketArrays(docs, isTarget, w)
+    GraftLocal.collect(bucketArrays(docs, isTarget, w)
       .select(col("__tgt"), col("__w"), explode(col("bs")).as("b"))
       .groupBy(col("b"))
-      .agg(sum(col("__w")), sum(when(col("__tgt"), col("__w")).otherwise(0L)))
-      .collect().foreach { r =>
+      .agg(sum(col("__w")), sum(when(col("__tgt"), col("__w")).otherwise(0L))))
+      .foreach { r =>
         rawC(r.getInt(0)) = r.getLong(1)
         tgtC(r.getInt(0)) = r.getLong(2)
       }

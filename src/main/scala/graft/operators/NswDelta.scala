@@ -90,8 +90,8 @@ object NswDelta {
       changes: DataFrame): Unit = {
     import spark.implicits._
     // latest image per id across the window (the IvfDelta rule)
-    val latest = ChangeFold.latest(changes, "vec_id", "embedding")
-      .localCheckpoint() // feeds routing + the delete restriction
+    // (feeds routing + the delete restriction)
+    val latest = ChangeFold.held(ChangeFold.latest(changes, "vec_id", "embedding"))
     val centroids = spark.read.parquet(s"$indexRoot/centroids")
     val quant = spark.read.parquet(s"$indexRoot/quant")
     val (gmin, gmax) = quantOf(spark, indexRoot)

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.streaming.ChangeFold
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftLocal, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -69,11 +69,11 @@ object PerplexityDelta {
     * context buckets), so each bigram adds its weight to two slots. */
   private def sums(docs: DataFrame, w: Column): Row = {
     val c = new Array[Long](CtxBuckets + BigBuckets)
-    bucketed(docs, w)
+    GraftLocal.collect(bucketed(docs, w)
       .select(col("__w"),
         explode(array(col("b1"), col("b2") + CtxBuckets)).as("i"))
-      .groupBy(col("i")).agg(sum(col("__w")))
-      .collect().foreach(r => c(r.getInt(0)) = r.getLong(1))
+      .groupBy(col("i")).agg(sum(col("__w"))))
+      .foreach(r => c(r.getInt(0)) = r.getLong(1))
     Row(c.take(CtxBuckets).toSeq, c.drop(CtxBuckets).toSeq)
   }
 

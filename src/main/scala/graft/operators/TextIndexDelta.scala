@@ -2,8 +2,11 @@ package graft.operators
 
 import graft.sources.{GraftTable, Lake}
 import graft.streaming.ChangeFold
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftLocal, GraftShim, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** §2.C — INCREMENTALLY-MAINTAINED inverted text index off the change
   * feed: the [[IvfDelta]] discipline applied to search. A 100 TB corpus
@@ -17,9 +20,10 @@ import org.apache.spark.sql.functions._
   *
   *  - changed/deleted docs' old postings drop as MOR DELETION VECTORS
   *    (KB sidecars; no token-clustered file ever rewrites),
-  *  - new/updated docs' postings APPEND as a fresh token-clustered
-  *    segment (the table's stats/bloom contract carries on — appends
-  *    never erode pruning),
+  *  - new/updated docs' postings land as a fresh token-clustered
+  *    segment IN THE SAME SNAPSHOT as those tombstones
+  *    ([[graft.sources.Lake.replaceWhereMor]]; the table's stats/bloom
+  *    contract carries on — segments never erode pruning),
   *  - `maintain()`'s maxDvRows policy re-clusters via compaction once
   *    MOR debt accumulates — the standard segment-merge.
   *
@@ -28,17 +32,18 @@ import org.apache.spark.sql.functions._
   * with a delete arm. Per-id resolution over a multi-snapshot window
   * picks the latest image (max_by on commit snapshot, post-images over
   * pre-images — the IvfDelta rule), so insert-then-delete nets to
-  * absent and re-inserts win. The maintenance round's only driver list
-  * is the changed doc-id batch, and ONLY while it is small (`IdListCap`
-  * — the JoinView PruneKeyCap discipline, `limit(cap+1)` BEFORE the
-  * collect): a backfill-sized wave tombstones and probes RELATIONALLY
-  * (semi-joins), with nothing on the driver. The round's one
+  * absent and re-inserts win. A change batch within the driver bound is
+  * HELD on the driver ([[ChangeFold.round]]) and the fold's own frames
+  * evaluate there; the changed doc ids become InSet key lists ONLY while
+  * the wave is small (`IdListCap` — the JoinView PruneKeyCap
+  * discipline, `limit(cap+1)` BEFORE the collect): a backfill-sized
+  * wave tombstones and probes RELATIONALLY (semi-joins). The round's one
   * index-sized cost is the MOR match scan, column-pruned to doc_id.
   */
 object TextIndexDelta {
 
-  /** Max changed-doc ids materialized on the driver per round (the
-    * JoinView PruneKeyCap discipline); larger waves stay relational.
+  /** Max changed-doc ids a round filters by as a driver-side key list
+    * (the JoinView PruneKeyCap discipline); larger waves go relational.
     * Overridable for tests (the backfill-wave spec exercises the
     * relational path without building a 10k-doc fixture). */
   @volatile private[graft] var IdListCap = 10000
@@ -80,60 +85,70 @@ object TextIndexDelta {
     }
 
   /** Fold every source change past the cursor into the index: one
-    * change-batch tokenize + one MOR tombstone wave + one fresh segment
-    * append + one doc-keyed doclens merge. Returns the new cursor. */
+    * change-batch tokenize, ONE postings snapshot (the changed docs'
+    * tombstones and their fresh token-sorted segment together — a reader
+    * never sees one without the other) and one doc-keyed doclens merge.
+    * A held change batch folds on the driver: the latest images, the
+    * postings and the doclens source run no job. Returns the new
+    * cursor. */
   def applyRound(spark: SparkSession, srcLedger: String,
       indexRoot: String): Long =
     ChangeFold.round(spark, srcLedger, indexRoot, "TextIndexDelta",
         ChangeFold.cursor(spark, indexRoot, "index")) { (_, changes) =>
-      // latest image per doc across the window
-      val latest = ChangeFold.latest(changes, "doc_id", "text")
-        .localCheckpoint() // feeds tombstones, new postings, and doclens
-      // driver list ONLY while change-batch-sized (the JoinView
-      // PruneKeyCap discipline — `limit(cap+1)` BEFORE the collect): a
-      // daily increment's In list prunes posting files at the manifest; a
-      // BACKFILL wave (a corpus slice re-ingested through the change feed)
-      // must never materialize millions of ids on the driver — past the
-      // cap the tombstone and the doclens probe go relational instead
-      val changedIds = latest.select(col("doc_id"))
-        .limit(IdListCap + 1).collect().map(_.getLong(0)).toSeq
+      // latest image per doc across the window; it feeds the tombstones,
+      // the new postings and the doclens
+      val latest = ChangeFold.held(ChangeFold.latest(changes, "doc_id", "text"))
+      val newPosts = ChangeFold.held(postingsOf(latest.filter(ChangeFold.isUpsert)))
+      val segment =
+        if (GraftLocal.isLocal(newPosts)) newPosts.sort(col("token"))
+        else newPosts.repartitionByRange(2, col("token"))
+          .sortWithinPartitions(col("token"))
+      // key sets ONLY while change-batch-sized (the JoinView PruneKeyCap
+      // discipline — `limit(cap+1)` BEFORE the collect; no job over a
+      // held batch): an InSet prunes the tombstone's match scan and the
+      // doclens probe. A BACKFILL wave (a corpus slice re-ingested
+      // through the change feed) never lists its ids on the driver: past
+      // the cap both go relational (semi/anti joins)
+      val changedIds = GraftLocal.collect(
+        latest.select(col("doc_id")).limit(IdListCap + 1)).map(_.getLong(0))
       val smallWave = changedIds.length <= IdListCap
-      val t = table(spark, indexRoot)
-      // 1. tombstone EVERY changed doc's old postings (update = replace
-      //    whole posting set; delete = drop it) — KB sidecars, no rewrite
-      if (smallWave) t.deleteMor(col("doc_id").isin(changedIds: _*))
-      else t.deleteMorKeys(latest.select(col("doc_id")), "doc_id")
-      // 2. fresh token-clustered segment for the surviving docs
-      val live = latest.filter(ChangeFold.isUpsert)
-      val newPosts = postingsOf(live).localCheckpoint()
-      if (!newPosts.isEmpty)
-        t.append(newPosts
-          .repartitionByRange(2, col("token"))
-          .sortWithinPartitions(col("token")))
-      // 3. doclens: file-targeted COW merge with a delete arm. EVERY
-      //    changed doc that ends the round with no postings loses its dl
-      //    row — explicit deletes AND updates to token-less text (a
-      //    from-scratch bootstrap has no dl row for either). The
-      //    had-a-row guard keeps never-indexed deletes out of the merge
-      //    source, and its isin filter keeps the probe file-pruned
-      //    (change-batch-sized) instead of a full doclens scan.
       val dl = dlTable(spark, indexRoot)
-      val dlUpserts = newPosts.groupBy(col("doc_id"))
-        .agg(sum(col("tf")).as("dl"))
-        .withColumn("_drop", lit(false))
-      val dlHad = // had-a-row probe: file-pruned In under the cap, a
-        // relational semi-join for a backfill wave (same guard as above)
-        if (smallWave) dl.read().filter(col("doc_id").isin(changedIds: _*))
-        else dl.read().join(latest.select(col("doc_id")), Seq("doc_id"),
-          "left_semi")
-      val deleted = latest.select(col("doc_id"))
-        .join(dlUpserts.select(col("doc_id")), Seq("doc_id"), "left_anti")
-        .join(dlHad.select(col("doc_id")), Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), lit(null).cast("long").as("dl"),
-          lit(true).as("_drop"))
-      dl.merge(dlUpserts.unionByName(deleted), "doc_id",
-        deleteWhen = Some(col("_drop"))): Unit
+      val dlUpserts = ChangeFold.held(newPosts.groupBy(col("doc_id"))
+        .agg(sum(col("tf")).as("dl")))
+      // 1+2. tombstone EVERY changed doc's old postings (update = replace
+      //    the whole posting set; delete = drop it) as KB sidecars, and
+      //    land the surviving docs' segment, in one snapshot
+      // 3. doclens: EVERY changed doc that ends the round with no postings
+      //    loses its dl row — explicit deletes AND updates to token-less
+      //    text (a from-scratch bootstrap has no dl row for either). The
+      //    had-a-row probe keeps never-indexed deletes out of the merge
+      //    source (an unmatched source row would insert).
+      val deleted =
+        if (smallWave) {
+          table(spark, indexRoot).replaceMor(inSet(changedIds), segment)
+          val had = GraftLocal.collect(dl.read()
+            .filter(inSet(changedIds)).select(col("doc_id")))
+            .map(_.getLong(0))
+          val posted = GraftLocal.collect(dlUpserts.select(col("doc_id")))
+            .map(_.getLong(0)).toSet
+          GraftLocal.frame(spark, StructType.fromDDL("doc_id bigint"),
+            had.filterNot(posted).map(InternalRow(_)))
+        } else {
+          val ids = latest.select(col("doc_id"))
+          table(spark, indexRoot).replaceMorKeys(ids, "doc_id", segment)
+          ids.join(dlUpserts.select(col("doc_id")), Seq("doc_id"), "left_anti")
+            .join(dl.read().select(col("doc_id")), Seq("doc_id"), "left_semi")
+        }
+      dl.merge(dlUpserts.withColumn("_drop", lit(false)).unionByName(
+        deleted.select(col("doc_id"), lit(null).cast("long").as("dl"),
+          lit(true).as("_drop"))),
+        "doc_id", deleteWhen = Some(col("_drop"))): Unit
     }
+
+  /** Membership of `doc_id` in `ids`: an InSet over the collected keys
+    * (evaluated on the rows in hand, pushed into a scan). */
+  private def inSet(ids: Seq[Long]): Column =
+    GraftShim.column(InSet(GraftShim.expression(col("doc_id")), ids.toSet))
 
   /** Driver-gate entry ([rows]): lake the documents table, bootstrap,
     * fold one mixed wave (inserts + updates + a delete) through the

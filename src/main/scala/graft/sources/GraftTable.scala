@@ -247,6 +247,17 @@ final case class GraftTable(spark: SparkSession, ledgerDir: String,
     Lake.deleteWhereMorKeys(spark, ledgerDir, genRoot, keys, keyCol,
       changeFeed)
 
+  /** MOR replacement in ONE snapshot: rows matching `cond` drop as
+    * deletion vectors and `rows` land beside them (see
+    * Lake.replaceWhereMor). */
+  def replaceMor(cond: Column, rows: DataFrame): Long =
+    Lake.replaceWhereMor(spark, ledgerDir, genRoot, cond, rows)
+
+  /** [[replaceMor]] keyed by a RELATION (a semi-join on `keyCol`; see
+    * Lake.replaceWhereMorKeys). */
+  def replaceMorKeys(keys: DataFrame, keyCol: String, rows: DataFrame): Long =
+    Lake.replaceWhereMorKeys(spark, ledgerDir, genRoot, keys, keyCol, rows)
+
   /** [[deleteMorKeys]] on a COMPOSITE key (see
     * Lake.deleteWhereMorKeysCols). */
   def deleteMorKeysCols(keys: DataFrame, keyCols: Seq[String],

@@ -571,8 +571,11 @@ object Lake {
     * boundary each file resolves through the recording current at ITS
     * commit (cdcScan), not a merged footer. */
   def readChanges(spark: SparkSession, ledgerDir: String,
+      sinceSnapshot: Long): DataFrame =
+    changesOf(spark, LedgerState.open(spark, ledgerDir), sinceSnapshot)
+
+  private def changesOf(spark: SparkSession, st: LedgerState,
       sinceSnapshot: Long): DataFrame = {
-    val st = LedgerState.open(spark, ledgerDir)
     val cdcAll = st.rows.filter(_.op == "cdc")
     val index = LedgerState.index(cdcAll.filter(_.snapshot > sinceSnapshot))
     if (!index.isEmpty)
@@ -581,6 +584,22 @@ object Lake {
     // nothing after the cursor: carry the cdc schema from ANY cdc file
     // (limit 0 folds to an empty relation — no data is read)
     else cdcScan(spark, st, LedgerState.index(cdcAll)).limit(0)
+  }
+
+  /** [[readChanges]] HELD on the driver when its change files' ledger
+    * sizes fit [[DriverWriteMaxBytes]]: collected once (the batch's one
+    * data pass), so every frame a consumer derives from it with plans
+    * [[org.apache.spark.sql.GraftLocal]] evaluates — a maintained
+    * state's fold — runs with no job. Above the bound, or when the
+    * collect fails ([[collected]]), the relational frame. */
+  def readChangesHeld(spark: SparkSession, ledgerDir: String,
+      sinceSnapshot: Long): DataFrame = {
+    val st = LedgerState.open(spark, ledgerDir)
+    val changes = changesOf(spark, st, sinceSnapshot)
+    val bytes = st.rows.iterator
+      .filter(a => a.op == "cdc" && a.snapshot > sinceSnapshot).map(_.size).sum
+    if (changes.columns.isEmpty || bytes > DriverWriteMaxBytes) changes
+    else collected(changes).getOrElse(changes)
   }
 
   /** Change-file scan with schema resolution (r16): cdc sidecars are
@@ -1742,12 +1761,17 @@ object Lake {
   private def inHand(df: DataFrame): DataFrame =
     if (org.apache.spark.sql.GraftLocal.isLocal(df)
       || estimatedBytes(df) > DriverWriteMaxBytes) df
-    else try org.apache.spark.sql.GraftLocal.materialize(df) catch {
-      // an estimate that lied low: the result-size guard refused the
-      // collect, and `df` stays relational
+    else collected(df).getOrElse(df)
+
+  /** `df` as a frame over its collected rows, or None when the collect
+    * fails: a bound that read compressed bytes or an estimate that lied
+    * low, and Spark's result-size guard refused the rows. The failure is
+    * counted as `write.fallback`; the caller goes on relationally. */
+  private def collected(df: DataFrame): Option[DataFrame] =
+    try Some(org.apache.spark.sql.GraftLocal.materialize(df)) catch {
       case _: org.apache.spark.SparkException =>
         countWrite("write.fallback")
-        df
+        None
     }
 
   /** One file [[writeGenDir]]'s driver path wrote, as recorded for the
@@ -1944,12 +1968,7 @@ object Lake {
       * of the commit runs relationally, from `df` itself. */
     def hold(df: DataFrame): DataFrame =
       if (!driver) df
-      else try org.apache.spark.sql.GraftLocal.materialize(df) catch {
-        case _: org.apache.spark.SparkException =>
-          countWrite("write.fallback")
-          onDriverPath = false
-          df
-      }
+      else collected(df).getOrElse { onDriverPath = false; df }
 
     /** The DV-applied rows of the live `files`: collected once on the
       * driver path ([[onDriver]], [[hold]]); otherwise the relational
@@ -2566,11 +2585,58 @@ object Lake {
       df => df.join(k, keyCols, "left_semi"), changeFeed)
   }
 
+  /** MOR KEY REPLACEMENT — every live row that `cond` matches drops as a
+    * deletion vector, and `rows` land as a fresh delta, in ONE snapshot:
+    * a reader sees the table before the replacement or after it, never
+    * the tombstones without the new rows. The maintained text index's
+    * round shape (a changed document's whole posting set replaced; its
+    * token-sorted segment keeps the table's stats/bloom contract). Ledger
+    * shape: op="dv" rows tagged snapshot_op "mor-merge" plus the delta's
+    * adds tagged "merge" — what a [[mergeIntoMor]] records. `rows` are
+    * conformed to the table's columns by name and gated by its CHECK
+    * constraints before any reservation. Neither a match nor a row: no
+    * snapshot. Returns the replacement's snapshot id (or the current
+    * one). */
+  def replaceWhereMor(spark: SparkSession, ledgerDir: String,
+      genRoot: String, cond: org.apache.spark.sql.Column,
+      rows: DataFrame): Long =
+    deleteMorMatching(spark, ledgerDir, genRoot,
+      df => df.filter(coalesce(cond, lit(false))), changeFeed = false,
+      Some(rows))
+
+  /** [[replaceWhereMor]] with a RELATIONAL key predicate: the rows whose
+    * `keyCol` appears in `keys` (a semi-join — the [[deleteWhereMorKeys]]
+    * form for a wave too large for a driver-side key list). */
+  def replaceWhereMorKeys(spark: SparkSession, ledgerDir: String,
+      genRoot: String, keys: DataFrame, keyCol: String,
+      rows: DataFrame): Long = {
+    val k = keys.select(col(keyCol)).distinct()
+    deleteMorMatching(spark, ledgerDir, genRoot,
+      df => df.join(k, Seq(keyCol), "left_semi"), changeFeed = false,
+      Some(rows))
+  }
+
+  /** The MOR delete skeleton: the DV-applied rows `matches` keeps drop
+    * as deletion vectors; `rows`, when given, land as a delta in the
+    * same snapshot ([[replaceWhereMor]]). */
   private def deleteMorMatching(spark: SparkSession, ledgerDir: String,
       genRoot: String, matches: DataFrame => DataFrame,
-      changeFeed: Boolean): Long =
-    rowCommit(spark, ledgerDir, genRoot, "delete") { c =>
-    if (c.index.isEmpty) return c.snap // empty table: nothing to delete
+      changeFeed: Boolean, rows: Option[DataFrame] = None): Long =
+    rowCommit(spark, ledgerDir, genRoot,
+        if (rows.isEmpty) "delete" else "replace") { c =>
+    // the incoming rows: conformed, in hand when driver-bounded, gated
+    // by the constraints before the reservation
+    val fresh = rows.map { r =>
+      val named = inHand(c.target.fold(r)(t =>
+        r.select(t.columns.toSeq.map(col): _*)))
+      enforceConstraints(spark, ledgerDir, named)
+      named
+    }.filter(nonEmpty)
+    // an empty table: nothing to delete
+    if (c.index.isEmpty) {
+      if (fresh.isEmpty) return c.snap
+      return c.commit(changeOp = "mor-merge")(out => out("delta", fresh.get))
+    }
     // already-deleted rows must not re-record their positions (the
     // anti-join would dedup them, but sidecar sizes and dvRows() counts
     // would lie) — the match scan itself is DV-applied. keepPos: the
@@ -2594,16 +2660,27 @@ object Lake {
     val hits = hitRows.getOrElse(c.step("match")(
         matches(target).select(ids: _*).localCheckpoint()))
       .select(col("__graft_fp").as("dpath"), col("__graft_pos").as("pos"))
-    if (hits.isEmpty) return c.snap // nothing matches: no snapshot, no marker
-    c.commit(changeOp = "mor-delete") { out =>
-      out("dv", hits)
+    val anyHits = nonEmpty(hits)
+    // nothing matches and nothing lands: no snapshot, no marker
+    if (!anyHits && fresh.isEmpty) return c.snap
+    c.commit(changeOp = if (rows.isEmpty) "mor-delete" else "mor-merge") {
+        out =>
+      if (anyHits) out("dv", hits)
       // opt-in CHANGE FEED: deleted pre-images, same rows the sidecar
       // points at (cost bounded by the delete size, like the sidecar)
-      if (changeFeed) out("changes", hitRows.getOrElse(matches(target))
-        .drop("__graft_fp", "__graft_pos")
-        .withColumn("_change_type", lit("delete")))
+      if (anyHits && changeFeed) out("changes",
+        hitRows.getOrElse(matches(target))
+          .drop("__graft_fp", "__graft_pos")
+          .withColumn("_change_type", lit("delete")))
+      fresh.foreach(out("delta", _))
     }
   }
+
+  /** Whether `df` has a row: read off the rows in hand when
+    * [[org.apache.spark.sql.GraftLocal]] evaluates it, no job. */
+  private def nonEmpty(df: DataFrame): Boolean =
+    org.apache.spark.sql.GraftLocal.rows(df).map(_.nonEmpty)
+      .getOrElse(!df.isEmpty)
 
   /** Scope a table scan to the key range of a merge batch: a SOUND
     * superset of the equality matches (a key outside [min, max] of the

@@ -1,7 +1,9 @@
 package graft.streaming
 
 import graft.sources.{GraftTable, Lake}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftLocal, GraftShim, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShim
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
@@ -13,14 +15,17 @@ import org.apache.spark.sql.types.StructType
   * [[MirrorLoop]]'s cursor discipline:
   *
   *  - `_cursor` is a tiny sidecar of applied source snapshot ids,
-  *    written LAST: a missing cursor means the state never went live;
+  *    written LAST: a missing cursor means the state never went live.
+  *    It and the additive states are read and appended on the driver
+  *    ([[sidecarRows]], [[appendSidecar]]) with no Spark job;
   *  - [[bootstrap]] builds the state at the source's current snapshot
   *    after WIPING the root — partial state of a crashed earlier
   *    bootstrap (ledgered rows pointing at landing files a re-run's write
   *    would delete or collide with) never survives into the rebuild;
   *    once a cursor exists it is a no-op returning it;
-  *  - [[round]] reads the changes past the cursor ONCE, takes the target
-  *    snapshot from them (no change rows = a no-op), folds, marks the
+  *  - [[round]] reads the changes past the cursor ONCE (held on the
+  *    driver when small), takes the target snapshot from them (no change
+  *    rows = a no-op), folds, marks the
   *    cursor, then prunes every `gen-<snap>` dir older than the PRE-round
   *    generation — the crash-window fallback for a torn marker append
   *    (the marker for the target is durable; the pre-round generation is
@@ -42,23 +47,60 @@ import org.apache.spark.sql.types.StructType
 object ChangeFold {
 
   /** The last APPLIED source snapshot, from the `_cursor` sidecar; None
-    * before bootstrap. */
-  def cursorOf(spark: SparkSession, root: String): Option[Long] = {
-    val dir = new java.io.File(s"$root/_cursor")
-    if (!dir.isDirectory) None
-    else Some(spark.read.parquet(dir.getPath)
-      .agg(max(col("snapshot_id"))).head().getLong(0))
-  }
+    * before bootstrap. Read on the driver ([[sidecarRows]]): no job. */
+  def cursorOf(spark: SparkSession, root: String): Option[Long] =
+    sidecarRows(spark, s"$root/_cursor")
+      .flatMap(_.map(_.getAs[Long]("snapshot_id")).maxOption)
 
   /** The cursor of a bootstrapped state; `what` names it in the error. */
   def cursor(spark: SparkSession, root: String, what: String): Long =
     cursorOf(spark, root).getOrElse(
       throw new IllegalStateException(s"$what at $root not bootstrapped"))
 
-  private def markCursor(spark: SparkSession, root: String, snap: Long): Unit = {
-    import spark.implicits._
-    Seq(snap).toDF("snapshot_id")
-      .write.mode("append").parquet(s"$root/_cursor")
+  private val CursorSchema = StructType.fromDDL("snapshot_id bigint")
+
+  private def markCursor(spark: SparkSession, root: String, snap: Long): Unit =
+    appendSidecar(spark, s"$root/_cursor", CursorSchema, InternalRow(snap))
+
+  /** Every row of a sidecar dir (a cursor, a state generation): its
+    * visible files — the names a Spark read lists, so `_`- and `.`-named
+    * ones (a writer's `_SUCCESS` and checksums, a crashed append's temp)
+    * are hidden — read on the driver with no Spark job, under the
+    * schema of the first one's footer. None when the dir holds no
+    * visible file. */
+  private[graft] def sidecarRows(spark: SparkSession,
+      dir: String): Option[Seq[Row]] = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    val files = (if (fs.isDirectory(path)) fs.listStatus(path).toSeq else Nil)
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.toString)
+    files.headOption.map { first =>
+      GraftParquetShim.readFiles(spark,
+        files.map(f => f.getPath.toString -> f.getLen),
+        GraftShim.asNullable(GraftParquetShim.footerSchema(spark, first)))
+        .flatten
+    }
+  }
+
+  /** Append `row` to a sidecar dir as one driver-written parquet file:
+    * written under a dot-named temp, then atomically renamed into a
+    * visible name, so a crash leaves either the whole row or a hidden
+    * temp that [[sidecarRows]] skips. */
+  private[graft] def appendSidecar(spark: SparkSession, dir: String,
+      schema: StructType, row: InternalRow): Unit = {
+    val d = new java.io.File(dir)
+    d.mkdirs()
+    val id = java.util.UUID.randomUUID()
+    val tmp = new java.io.File(d, s".tmp-$id")
+    try GraftParquetShim.writeRows(spark, schema, Seq(row), tmp.getPath)
+    catch { case e: Throwable => tmp.delete(); throw e }
+    java.nio.file.Files.move(tmp.toPath, new java.io.File(d,
+      s"part-$id.parquet").toPath,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    // the local filesystem's checksum of the temp names no file now
+    new java.io.File(d, s".${tmp.getName}.crc").delete(): Unit
   }
 
   def genDir(root: String, snap: Long): String = s"$root/gen-$snap"
@@ -102,18 +144,22 @@ object ChangeFold {
 
   /** One maintenance round from the cursor `from` reads (evaluated
     * first, inside the round): `fold(target, changes)` folds every change
-    * past it into the state at the target snapshot. Returns the new cursor —
+    * past it into the state at the target snapshot. The change batch is
+    * HELD on the driver when it is small ([[Lake.readChangesHeld]]): the
+    * target snapshot and every fold plan [[GraftLocal]] evaluates come
+    * from the rows in hand, with no job. Returns the new cursor —
     * unchanged when no commit landed (the fold never sees an empty
     * batch). Its jobs are described `<op>.round: <step>`. */
   def round(spark: SparkSession, srcLedger: String, root: String,
       op: String, from: => Long)(fold: (Long, DataFrame) => Unit): Long = {
     def phase[T](name: String)(body: => T) = step(spark, op, "round", name)(body)
     val cur = phase("cursor")(from)
-    val changes = phase("changes")(Lake.readChanges(spark, srcLedger, cur))
+    val changes = phase("changes")(Lake.readChangesHeld(spark, srcLedger, cur))
     // a feed-less table reads schema-less; otherwise the max IS the
-    // emptiness check (null over zero rows) — one job, not two
+    // emptiness check (null over zero rows)
     if (changes.columns.isEmpty) return cur
-    val top = phase("changes")(changes.agg(max(col("_commit_snapshot"))).head())
+    val top = phase("changes")(GraftLocal.collect(
+      changes.agg(max(col("_commit_snapshot")))).head)
     if (top.isNullAt(0)) return cur
     val target = top.getLong(0)
     phase("fold")(fold(target, changes))
@@ -121,6 +167,13 @@ object ChangeFold {
     pruneGens(root, cur)
     target
   }
+
+  /** `df` materialized once for several consumers: on the driver when
+    * [[GraftLocal]] evaluates it (a fold over a held change batch), no
+    * job; checkpointed otherwise. */
+  def held(df: DataFrame): DataFrame =
+    if (GraftLocal.isLocal(df)) GraftLocal.materialize(df)
+    else df.localCheckpoint()
 
   /** The streaming form: a file stream on the source LEDGER fires one
     * `round` per micro-batch (cursor-replay-safe — see
@@ -173,7 +226,7 @@ object ChangeFold {
       op: String, what: String)(sums: (DataFrame, Column) => Row): Long = {
     lazy val cur = cursor(spark, root, what)
     round(spark, srcLedger, root, op, cur) { (target, changes) =>
-      val state = spark.read.parquet(genDir(root, cur)).head()
+      val state = genState(spark, genDir(root, cur))
       val next = Row.fromSeq(
         state.toSeq.lazyZip(sums(changes, sign).toSeq).map(plus))
       writeGen(spark,
@@ -182,9 +235,13 @@ object ChangeFold {
     }
   }
 
-  /** The additive state at the cursor. */
+  /** The additive state at the cursor, read on the driver: no job. */
   def state(spark: SparkSession, root: String, what: String): Row =
-    spark.read.parquet(genDir(root, cursor(spark, root, what))).head()
+    genState(spark, genDir(root, cursor(spark, root, what)))
+
+  private def genState(spark: SparkSession, dir: String): Row =
+    sidecarRows(spark, dir).flatMap(_.headOption).getOrElse(
+      throw new IllegalStateException(s"no state row in $dir"))
 
   /** The driver-gate scaffold of a maintained state: in a temp dir, lake
     * `rows` as the source (4 files), bootstrap the state at `root`

@@ -2,7 +2,9 @@ package graft.streaming
 
 import graft.sources.Lake
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Incrementally-maintained JOIN-AGGREGATE view over TWO lake tables —
@@ -67,22 +69,17 @@ object JoinView {
     MatView.aggregate(joined(a, b, spec), aggSpec(spec))
 
   private def cursorOf(spark: SparkSession, viewDir: String)
-      : Option[(Long, Long)] = {
-    val dir = new java.io.File(s"$viewDir/_cursor2")
-    if (!dir.isDirectory) None
-    else {
-      val r = spark.read.parquet(dir.getPath)
-        .agg(max(col("snap_a")), max(col("snap_b"))).head()
-      Some((r.getLong(0), r.getLong(1)))
-    }
-  }
+      : Option[(Long, Long)] =
+    ChangeFold.sidecarRows(spark, s"$viewDir/_cursor2").filter(_.nonEmpty)
+      .map(rs => (rs.map(_.getAs[Long]("snap_a")).max,
+        rs.map(_.getAs[Long]("snap_b")).max))
+
+  private val CursorSchema = StructType.fromDDL("snap_a bigint, snap_b bigint")
 
   private def markCursor(spark: SparkSession, viewDir: String,
-      a: Long, b: Long): Unit = {
-    import spark.implicits._
-    Seq((a, b)).toDF("snap_a", "snap_b")
-      .write.mode("append").parquet(s"$viewDir/_cursor2")
-  }
+      a: Long, b: Long): Unit =
+    ChangeFold.appendSidecar(spark, s"$viewDir/_cursor2", CursorSchema,
+      InternalRow(a, b))
 
   private def genDir(viewDir: String, a: Long, b: Long) =
     s"$viewDir/gen-$a-$b"

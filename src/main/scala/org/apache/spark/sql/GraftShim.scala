@@ -29,7 +29,7 @@ object GraftShim {
     * the file list comes from a table's own metadata, never a filesystem
     * walk) — the `HadoopFsRelation`/`LogicalRelation` constructors are
     * `private[sql]`-adjacent internals, hence this shim. Schema is inferred
-    * from the indexed files' footers via the parquet format itself. */
+    * from the indexed files' footers, as the parquet format infers it. */
   def parquetScan(spark: SparkSession,
       index: org.apache.spark.sql.execution.datasources.FileIndex,
       mergeSchemas: Boolean = false,
@@ -46,14 +46,19 @@ object GraftShim {
     // mergeSchemas unions the per-file footers (schema-EVOLVED tables:
     // files written before a column existed must surface it as null) —
     // costs a footer pass per file at plan time, so callers only set it
-    // for tables marked as evolved
+    // for tables marked as evolved. Without merging, inference reads ONE
+    // footer — the first file by path, as Spark's inference picks it —
+    // and reads it here on the driver: Spark's inference runs a job
     lazy val statuses = index.listFiles(Nil, Nil).flatMap(_.files.map(_.fileStatus))
-    val opts =
-      if (mergeSchemas) Map("mergeSchema" -> "true")
-      else Map.empty[String, String]
-    val schema = dataSchema.getOrElse(fmt.inferSchema(cs, opts, statuses)
-      .getOrElse(throw new IllegalStateException(
-        s"cannot infer schema from ${statuses.size} indexed parquet file(s)")))
+    def none = throw new IllegalStateException(
+      s"cannot infer schema from ${statuses.size} indexed parquet file(s)")
+    val schema = dataSchema.getOrElse(
+      if (mergeSchemas)
+        fmt.inferSchema(cs, Map("mergeSchema" -> "true"), statuses)
+          .getOrElse(none)
+      else statuses.minByOption(_.getPath.toString).map(
+          org.apache.spark.sql.execution.datasources.parquet.GraftParquetShim
+            .footerSchema(spark, _)).getOrElse(none))
     val rel = HadoopFsRelation(index, partitionSchema = index.partitionSchema,
       dataSchema = schema, bucketSpec = None, fileFormat = fmt,
       options = Map.empty)(cs)

@@ -1,7 +1,9 @@
 package org.apache.spark.sql.execution.datasources.parquet
 
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, GraftLocal, Row, SparkSession}
@@ -97,4 +99,15 @@ object GraftParquetShim {
           .map(r => toRow(r).asInstanceOf[Row]).toVector
       }
     }
+
+  /** The schema Spark's parquet inference takes from one file — its
+    * footer's Spark schema, else its parquet schema converted under the
+    * session's settings — read on the driver: no Spark job (inference
+    * over a file list runs one). */
+  def footerSchema(spark: SparkSession, file: FileStatus): StructType =
+    ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file.getPath, ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(file, spark.sessionState.newHadoopConf()),
+        ParquetMetadataConverter.NO_FILTER)),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
 }

@@ -161,10 +161,77 @@ class DmlJobBudgetSpec extends GraftSpec {
     graft.streaming.MirrorLoop.rmrf(new java.io.File(tmp))
   }
 
+  /** A documents lake with both maintained states bootstrapped and one
+    * documents wave landed (a merge of new and rewritten docs, then a
+    * delete merge, both with the change feed): (source, tmp). */
+  private lazy val docsRoot = Files.createTempDirectory("graft_dml_docs").toString
+
+  private lazy val docsWave: (GraftTable, String) = {
+    val sp = spark; import sp.implicits._
+    val tmp = docsRoot
+    val src = GraftTable(spark, s"$tmp/ledger", s"$tmp/gen")
+    spark.read.parquet(s"$sf/documents.parquet")
+      .select("doc_id", "text", "lang")
+      .repartition(2).write.parquet(s"$tmp/landing")
+    src.ingest(s"$tmp/landing")
+    graft.operators.DsirDelta.bootstrap(spark, src.ledgerDir, s"$tmp/dsir")
+    graft.operators.TextIndexDelta.bootstrap(spark, src.ledgerDir, s"$tmp/tidx")
+    val ids = src.read().select("doc_id").orderBy("doc_id").limit(3)
+      .collect().map(_.getLong(0))
+    src.merge(Seq((990101L, "a fresh document about graft lakes", "en"),
+      (ids(0), "a rewritten document about spark", "en"))
+      .toDF("doc_id", "text", "lang"), "doc_id", changeFeed = true)
+    src.merge(Seq((ids(1), "", "")).toDF("doc_id", "text", "lang"), "doc_id",
+      deleteWhen = Some(lit(true)), changeFeed = true)
+    (src, tmp)
+  }
+
+  test("a TextIndexDelta round stays inside its Spark-job budget and " +
+      "every one of its jobs carries a description") {
+    val (src, tmp) = docsWave
+    val descs = jobDescriptions {
+      graft.operators.TextIndexDelta.applyRound(spark, src.ledgerDir,
+        s"$tmp/tidx")
+    }
+    info(s"${descs.size} jobs: ${descs.mkString(" | ")}")
+    assert(descs.nonEmpty && descs.size <= TextIndexRoundBudget,
+      s"TextIndexDelta.applyRound launched ${descs.size} jobs " +
+        s"(budget $TextIndexRoundBudget)")
+    assert(descs.forall(_.nonEmpty),
+      s"${descs.count(_.isEmpty)} of ${descs.size} jobs undescribed")
+  }
+
+  /** Measured at sf0.001 on 4 local cores: 5 jobs — the change read,
+    * the tombstones' match scan, the doclens probe and the doclens
+    * merge's affected-files scan and blast-radius collect; two of
+    * headroom. */
+  private val TextIndexRoundBudget = 7
+
+  test("a maintained state's cursor read and a DsirDelta score of rows " +
+      "in hand launch no job") {
+    val sp = spark; import sp.implicits._
+    val (src, tmp) = docsWave
+    val root = s"$tmp/dsir"
+    graft.operators.DsirDelta.applyRound(spark, src.ledgerDir, root)
+    val docs = Seq((1L, "graft lakes fold on the driver", "en"))
+      .toDF("doc_id", "text", "lang")
+    var cur = Option.empty[Long]
+    val cursorJobs = jobsOf { cur = graft.streaming.ChangeFold.cursorOf(spark, root) }
+    var scored = 0
+    val scoreJobs = jobsOf {
+      scored = graft.operators.DsirDelta.score(spark, root, docs).collect().length
+    }
+    info(s"cursorOf $cursorJobs, score $scoreJobs jobs")
+    assert(cur.contains(src.snapshot) && scored == 1)
+    assert(cursorJobs == 0 && scoreJobs == 0)
+  }
+
   private lazy val boundRoot = Files.createTempDirectory("graft_dml_reads").toString
 
-  override def afterAll(): Unit =
+  override def afterAll(): Unit = {
     graft.streaming.MirrorLoop.rmrf(new java.io.File(boundRoot))
+    graft.streaming.MirrorLoop.rmrf(new java.io.File(docsRoot))
+  }
 
   private lazy val bound: GraftTable = {
     val tmp = boundRoot

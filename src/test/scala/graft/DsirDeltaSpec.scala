@@ -157,9 +157,9 @@ class DsirDeltaSpec extends GraftSpec {
     graft.streaming.MirrorLoop.rmrf(new java.io.File(tmp))
   }
 
-  /** One round is the cursor read, the change read, the target
-    * snapshot, the state read, one signed aggregate and the cursor
-    * append: 14 jobs at sf0.001 on 4 local cores, budget 16 with
-    * headroom. */
-  private val JobBudget = 16
+  /** One round is the change read, collected once; the cursor and
+    * state reads, the target snapshot, the signed aggregate, the state
+    * write and the cursor append all run on the driver: 1 job at sf0.001
+    * on 4 local cores, budget 3 with headroom. */
+  private val JobBudget = 3
 }

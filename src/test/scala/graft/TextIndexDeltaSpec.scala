@@ -178,4 +178,81 @@ class TextIndexDeltaSpec extends GraftSpec {
     assert(dls == ref, "backfill wave: doclens diverged")
     assert(!dls.contains(delId), "deleted doc kept its doclens row")
   }
+
+  /** A postings lake over 60 source docs, bootstrapped: (source, index
+    * root, tmp). */
+  private def indexed(tag: String): (GraftTable, String, String) = {
+    val tmp = Files.createTempDirectory(tag).toString
+    val src = GraftTable(spark, s"$tmp/src_ledger", s"$tmp/src_gen")
+    spark.read.parquet(s"$sf/documents.parquet")
+      .select("doc_id", "text")
+      .limit(60).repartition(2)
+      .write.parquet(s"$tmp/landing")
+    src.ingest(s"$tmp/landing")
+    val idx = s"$tmp/idx"
+    TextIndexDelta.bootstrap(spark, src.ledgerDir, idx)
+    (src, idx, tmp)
+  }
+
+  test("one round lands ONE postings snapshot: a reader one snapshot " +
+      "back sees the pre-round index, never tombstones without postings") {
+    val sp = spark; import sp.implicits._
+    val (src, idx, tmp) = indexed("graft_tidx_atomic")
+    val terms = Seq("spark", "merge")
+    src.merge(Seq((900101L, "spark merge indexed first")).toDF("doc_id", "text"),
+      "doc_id", changeFeed = true)
+    TextIndexDelta.applyRound(spark, src.ledgerDir, idx)
+    val t = TextIndexDelta.table(spark, idx)
+    def search(postings: org.apache.spark.sql.DataFrame): Set[Long] =
+      postings.filter(col("token").isin(terms: _*)).groupBy(col("doc_id"))
+        .agg(countDistinct(col("token")).as("n"))
+        .filter(col("n") === terms.size)
+        .collect().map(_.getLong(0)).toSet
+    val before = search(t.read())
+    assert(before.contains(900101L))
+    val head0 = t.snapshot
+    // the matching doc is rewritten (still matching) and a new one
+    // arrives: its tombstones and the segment in one round
+    src.merge(Seq((900101L, "spark merge rewritten"),
+      (900102L, "spark merge arrived")).toDF("doc_id", "text"),
+      "doc_id", changeFeed = true)
+    TextIndexDelta.applyRound(spark, src.ledgerDir, idx)
+    assert(t.snapshot == head0 + 1,
+      s"the round added ${t.snapshot - head0} postings snapshots")
+    assert(search(t.readAt(t.snapshot - 1)) == before)
+    assert(search(t.read()) == tokenBaseline(src.read(), terms))
+    assert(TextIndexDelta.dlTable(spark, idx).read()
+      .filter(col("doc_id") === 900101L).head().getLong(1) == 3L)
+    graft.streaming.MirrorLoop.rmrf(new java.io.File(tmp))
+  }
+
+  test("a torn cursor append (a leftover temp or dot file) is ignored " +
+      "by the cursor read, and the next round folds past it") {
+    val sp = spark; import sp.implicits._
+    val (src, idx, tmp) = indexed("graft_tidx_torn_cursor")
+    val cur = graft.streaming.ChangeFold.cursorOf(spark, idx)
+    assert(cur.nonEmpty)
+    // what a crash mid-append leaves: a partial hidden temp; and the
+    // names a Spark write or a checksummed filesystem leaves beside
+    val dir = new java.io.File(s"$idx/_cursor")
+    Files.write(new java.io.File(dir, ".tmp-torn").toPath, "PAR1xx".getBytes)
+    Files.write(new java.io.File(dir, "..tmp-torn.crc").toPath, Array[Byte](1))
+    Files.write(new java.io.File(dir, "_SUCCESS").toPath, Array.empty[Byte])
+    assert(graft.streaming.ChangeFold.cursorOf(spark, idx) == cur)
+    src.merge(Seq((900201L, "spark merge after a torn append"))
+      .toDF("doc_id", "text"), "doc_id", changeFeed = true)
+    val next = TextIndexDelta.applyRound(spark, src.ledgerDir, idx)
+    assert(next > cur.get &&
+      graft.streaming.ChangeFold.cursorOf(spark, idx).contains(next))
+    assert(TextIndexDelta.search(spark, idx, Seq("spark", "merge")).collect()
+      .map(_.getLong(0)).toSet == tokenBaseline(src.read(), Seq("spark", "merge")))
+    // a cursor dir holding nothing visible is no cursor: the state never
+    // went live
+    val empty = s"$tmp/never_live"
+    new java.io.File(s"$empty/_cursor").mkdirs()
+    Files.write(new java.io.File(s"$empty/_cursor/.tmp-torn").toPath,
+      "PAR1".getBytes)
+    assert(graft.streaming.ChangeFold.cursorOf(spark, empty).isEmpty)
+    graft.streaming.MirrorLoop.rmrf(new java.io.File(tmp))
+  }
 }
