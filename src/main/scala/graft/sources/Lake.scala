@@ -1249,12 +1249,7 @@ object Lake {
       keepPos: Boolean = false): DataFrame = {
     val recorded =
       if (atSnapshot >= 0) recordedSchemaAt(ledgerDir, atSnapshot) else None
-    val renames =
-      if (recorded.isDefined) renameLog(ledgerDir).filter(_.snapshot <= atSnapshot)
-      else Nil
-    val widens =
-      if (recorded.isDefined) widenLog(ledgerDir).filter(_.snapshot <= atSnapshot)
-      else Nil
+    val (renames, widens) = epochLogs(ledgerDir, atSnapshot, recorded)
     if (renames.isEmpty && widens.isEmpty) {
       val scan = org.apache.spark.sql.GraftShim.parquetScan(spark, index,
         mergeSchemas = recorded.isEmpty && isEvolved(ledgerDir),
@@ -1263,6 +1258,92 @@ object Lake {
     }
     else renameEpochScan(spark, ledgerDir, index, atSnapshot, recorded.get,
       keepPos, byName = renames.isEmpty)
+  }
+
+  /** The rename and widen log entries a [[tableScan]] at `atSnapshot`
+    * resolves epochs by: none without a `recorded` schema. */
+  private def epochLogs(ledgerDir: String, atSnapshot: Long,
+      recorded: Option[org.apache.spark.sql.types.StructType])
+      : (Seq[RenameRec], Seq[WidenRec]) =
+    if (recorded.isEmpty) (Nil, Nil)
+    else (renameLog(ledgerDir).filter(_.snapshot <= atSnapshot),
+      widenLog(ledgerDir).filter(_.snapshot <= atSnapshot))
+
+  /** Whether [[tableScan]] at `atSnapshot` is ONE parquet scan that reads
+    * every file under one schema — no rename or widen epoch, no footer
+    * merge — so a [[driverScan]] of its files reads the same rows. */
+  private def plainScan(ledgerDir: String, atSnapshot: Long): Boolean = {
+    val recorded = recordedSchemaAt(ledgerDir, atSnapshot)
+    val (renames, widens) = epochLogs(ledgerDir, atSnapshot, recorded)
+    renames.isEmpty && widens.isEmpty &&
+      !(recorded.isEmpty && isEvolved(ledgerDir))
+  }
+
+  /** DRIVER SCAN: the rows of the live `files` at `snapshot` read on the
+    * driver ([[GraftParquetShim.readRows]]), no Spark job, under the
+    * scan's `schema` plus the row identity a [[tableScan]] with `keepPos`
+    * materializes — `__graft_fp` (the file's `_metadata.file_path`,
+    * normalized) and `__graft_pos` (the row's ordinal in its file, which
+    * is its `_metadata.row_index`): every row, and those the vectors
+    * active at `snapshot` keep ([[activeDvs]]). Files come larger first,
+    * path order among equal sizes — the order a file scan packs its
+    * splits, so the rows come out as a relational collect of the scan
+    * lists them (for files within one split). Only for a [[plainScan]]. */
+  private def driverScan(spark: SparkSession, st: LedgerState,
+      snapshot: Long, files: Seq[org.apache.hadoop.fs.FileStatus],
+      schema: org.apache.spark.sql.types.StructType)
+      : (Seq[org.apache.spark.sql.catalyst.InternalRow],
+        Seq[org.apache.spark.sql.catalyst.InternalRow]) = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.unsafe.types.UTF8String
+    val ordered = files.sortBy(-_.getLen)
+    val dead = activeDvs(spark, st, snapshot)
+      .groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
+    val n = schema.length
+    val shim = org.apache.spark.sql.execution.datasources.parquet.GraftParquetShim
+    val read = shim.readRows(spark, ordered.map(f => f.getPath.toString -> f.getLen),
+        schema).lazyZip(ordered).map { (rows, f) =>
+      val fp = normPath(shim.filePathOf(f.getPath.toString))
+      val gone = dead.getOrElse(fp, Set.empty[Long])
+      val fpv = UTF8String.fromString(fp)
+      rows.iterator.zipWithIndex.map { case (r, pos) =>
+        val vs = new Array[Any](n + 2)
+        var i = 0
+        while (i < n) { vs(i) = r.get(i, schema(i).dataType); i += 1 }
+        vs(n) = fpv
+        vs(n + 1) = pos.toLong
+        (new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vs)
+          : InternalRow, !gone(pos.toLong))
+      }.toVector
+    }.flatten
+    (read.map(_._1), read.collect { case (r, true) => r })
+  }
+
+  /** `schema` plus the row-identity columns of a [[driverScan]]. */
+  private def withIdentity(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType =
+    schema.add("__graft_fp", "string").add("__graft_pos", "long")
+
+  /** Every live row at `snapshot` with its identity, through the
+    * [[driverScan]] — None when the table's scan there is not a
+    * [[plainScan]] — and through the relational scan a commit falls back
+    * to ([[tableScan]] with `keepPos`, then [[applyDvsAt]]): the two
+    * sides of the driver-scan parity check. */
+  private[graft] def identityScans(spark: SparkSession, ledgerDir: String,
+      snapshot: Long): (Option[DataFrame], DataFrame) = {
+    val st = LedgerState.open(spark, ledgerDir)
+    val idx = LedgerState.index(st.liveAt(snapshot))
+    val rel = applyDvsAt(spark, st, snapshot,
+      tableScan(spark, ledgerDir, idx, snapshot, keepPos = true),
+      keepPos = true)
+    val drv = Option.when(plainScan(ledgerDir, snapshot)) {
+      val schema = rel.schema.fields.filterNot(_.name.startsWith("__graft_"))
+      val sch = org.apache.spark.sql.types.StructType(schema)
+      org.apache.spark.sql.GraftLocal.frame(spark, withIdentity(sch),
+        driverScan(spark, st, snapshot,
+          idx.listFiles(Nil, Nil).flatMap(_.files.map(_.fileStatus)), sch)._2)
+    }
+    (drv, rel)
   }
 
   /** The (file, position) identity columns off a scan\'s `_metadata` —
@@ -1804,7 +1885,9 @@ object Lake {
     * `write.driver` / `write.distributed` — a gen-dir write's path;
     * `write.fallback` — a driver collect that failed (the result-size
     * guard): a gen-dir write re-ran on the distributed writer, or a
-    * commit's input stayed relational. */
+    * commit's input stayed relational; `scan.driver` / `scan.relational`
+    * — a row-level commit read its candidate files on the driver, or
+    * found its matches with a relational scan. */
   def writePaths: Map[String, Long] = {
     import scala.jdk.CollectionConverters._
     writePathCounts.asScala.map { case (k, v) => k -> v.get }.toMap
@@ -1875,21 +1958,28 @@ object Lake {
     *  - Open: the snapshot and its live actions from the table's
     *    [[LedgerState]], the `LedgerFileIndex` over them and (lazily)
     *    the target scan.
-    *  - [[affectedFiles]]: one collect of the live files holding a
-    *    matching row — the only driver-side file list, bounded by the
-    *    commit's blast radius, never the table's file count.
+    *  - [[affected]]: the live files holding a matching row — the only
+    *    driver-side file list, bounded by the commit's blast radius,
+    *    never the table's file count. When the candidate files (those
+    *    whose ledger stats admit the match's pushed filters) fit
+    *    [[DriverWriteMaxBytes]], a [[driveScan]] reads them on the
+    *    driver once, DV-applied and with their row identity, and the
+    *    affected files, the blast radius and a MOR match set all derive
+    *    from those rows: the commit runs no Spark job. Otherwise one
+    *    relational job collects the file names.
     *  - [[onDriver]]: the commit's ONE driver/distributed choice, from
     *    the ledger sizes of the files it reads (plus any other input it
     *    holds) against [[DriverWriteMaxBytes]], counted in
     *    [[writePaths]].
-    *  - [[affectedRows]]: a DV-applied scan of those files through a
-    *    SUB-INDEX of the live index. MOR-deleted rows never carry into a
-    *    rewrite, count as matched or surface as pre-images; the rewrite
+    *  - [[affectedRows]]: the DV-applied rows of those files — taken from
+    *    the driver scan's rows, or a relational scan through a SUB-INDEX
+    *    of the live index. MOR-deleted rows never carry into a rewrite,
+    *    count as matched or surface as pre-images; the rewrite
     *    materializes the files' vectors (its winning add postdates them,
-    *    so they go inert). On the driver path it is COLLECTED once — the
-    *    commit's one data pass — and every output (carry, delta, change
-    *    feed, vectors), each file's stats and the ledger rows derive from
-    *    the rows in hand with no further job
+    *    so they go inert). On the driver path the relational scan is
+    *    COLLECTED once — the commit's one data pass — and every output
+    *    (carry, delta, change feed, vectors), each file's stats and the
+    *    ledger rows derive from the rows in hand with no further job
     *    ([[org.apache.spark.sql.GraftLocal]]); key membership is then an
     *    InSet over collected keys ([[KeySet]]), never a join.
     *  - [[commit]]: reserve, write, stat, append.
@@ -1916,26 +2006,82 @@ object Lake {
     def step[T](name: String)(body: => T): T =
       described(spark, s"Lake.commit $kind: $name")(body)
 
-    /** Normalized paths of the live files holding a row of `scan` that
-      * `matching` keeps: one job, each task returning its partition's
-      * distinct names (no shuffle stage for a global distinct). */
-    def affectedFiles(scan: DataFrame)(
-        matching: DataFrame => DataFrame): Set[String] =
-      step("affected-files") {
-        matching(scan.withColumn("_file",
-            regexp_replace(input_file_name(), "^file:/+", "/")))
-          .select(col("_file"))
-          .as(org.apache.spark.sql.Encoders.STRING)
-          .mapPartitions((it: Iterator[String]) => it.toSet.iterator)(
-            org.apache.spark.sql.Encoders.STRING)
-          .collect().toSet
+    /** Whether the target reads as one [[plainScan]]. */
+    private lazy val plain: Boolean = plainScan(ledgerDir, snap)
+
+    /** The candidate rows a [[driveScan]] read for this commit. */
+    private var scanned: Option[Scanned] = None
+
+    /** The rows, with their identity, of the CANDIDATE files of
+      * `matching(target)` — the live files whose ledger stats admit its
+      * pushed filters, what a relational scan of it reads — read on the
+      * driver ([[driverScan]]), no job; `matching` then runs over the
+      * rows in hand. None, counted `scan.relational`, where the scan
+      * stays relational: a rename/widen epoch or footer-merging scan
+      * ([[plainScan]]), a `matching` the driver cannot evaluate (a MERGE
+      * whose source stays relational joins it), or candidates whose
+      * bytes plus `held` (another input the commit holds) exceed
+      * [[DriverWriteMaxBytes]]. Counted `scan.driver` otherwise. */
+    def driveScan(matching: DataFrame => DataFrame,
+        held: Long = 0L): Option[Scanned] = {
+      val t = target.get
+      val ids = withIdentity(t.schema)
+      def frame(rows: Seq[org.apache.spark.sql.catalyst.InternalRow]) =
+        org.apache.spark.sql.GraftLocal.frame(spark, ids, rows)
+      val files =
+        if (!plain || !org.apache.spark.sql.GraftLocal.isLocal(
+            matching(frame(Nil)))) None
+        else Some(index.get.listFiles(Nil,
+            org.apache.spark.sql.GraftShim.pushedFilters(matching(t)))
+          .flatMap(_.files.map(_.fileStatus)))
+      val bytes = files.fold(Long.MaxValue)(_.map(_.getLen).sum)
+      if (BigInt(bytes) + held > DriverWriteMaxBytes) {
+        countWrite("scan.relational")
+        None
+      } else {
+        countWrite("scan.driver")
+        val shim = org.apache.spark.sql.execution.datasources.parquet
+          .GraftParquetShim
+        val (all, live) = driverScan(spark, st, snap, files.get, t.schema)
+        scanned = Some(Scanned(frame(all), frame(live), bytes,
+          files.get.map { f =>
+            val p = f.getPath.toString
+            normPath(shim.filePathOf(p)) -> normPath(p)
+          }.toMap))
+        scanned
+      }
+    }
+
+    /** Normalized paths of the live files holding a row of the target
+      * that `matching` keeps — a row a vector deleted counts too, as in
+      * the target scan, so the rewrite materializes that vector: from
+      * the candidate rows a [[driveScan]] read on the driver when it can
+      * (no job); else one job, each task returning its partition's
+      * distinct names (no shuffle stage for a global distinct). `held`:
+      * see [[driveScan]]. */
+    def affected(matching: DataFrame => DataFrame,
+        held: Long = 0L): Set[String] =
+      driveScan(matching, held) match {
+        case Some(sc) =>
+          org.apache.spark.sql.GraftLocal.collect(
+              matching(sc.all).select(col("__graft_fp")))
+            .iterator.map(r => sc.byFp(r.getUTF8String(0).toString)).toSet
+        case None => step("affected-files") {
+          matching(target.get.withColumn("_file",
+              regexp_replace(input_file_name(), "^file:/+", "/")))
+            .select(col("_file"))
+            .as(org.apache.spark.sql.Encoders.STRING)
+            .mapPartitions((it: Iterator[String]) => it.toSet.iterator)(
+              org.apache.spark.sql.Encoders.STRING)
+            .collect().toSet
+        }
       }
 
-    /** [[affectedFiles]] under a row predicate, pushed straight at the
+    /** [[affected]] under a row predicate, pushed straight at the
       * manifest-pruned target scan: only files whose stats admit a match
       * are read at all. */
     def affectedWhere(cond: org.apache.spark.sql.Column): Set[String] =
-      affectedFiles(target.get)(_.filter(coalesce(cond, lit(false))))
+      affected(_.filter(coalesce(cond, lit(false))))
 
     /** Ledger bytes of the live `files`. */
     def bytesOf(files: Set[String]): Long =
@@ -1970,16 +2116,28 @@ object Lake {
       if (!driver) df
       else collected(df).getOrElse { onDriverPath = false; df }
 
-    /** The DV-applied rows of the live `files`: collected once on the
-      * driver path ([[onDriver]], [[hold]]); otherwise the relational
-      * scan, checkpointed when `reuse`d by several consumers. */
-    def affectedRows(files: Set[String], reuse: Boolean = false): DataFrame = {
-      val scan = dvApplied(index.get.subIndex(files))
-      step("rewrite") {
-        val held = hold(scan)
-        if (driver) held else if (reuse) scan.localCheckpoint() else scan
+    /** The DV-applied rows of the live `files`: on the driver path,
+      * those of the candidate rows a [[driveScan]] read, else collected
+      * once ([[onDriver]], [[hold]]); otherwise the relational scan,
+      * checkpointed when `reuse`d by several consumers. */
+    def affectedRows(files: Set[String], reuse: Boolean = false): DataFrame =
+      scanned match {
+        case Some(sc) if driver =>
+          val fps = sc.byFp.collect { case (fp, p) if files(p) => fp }.toSet
+          org.apache.spark.sql.GraftLocal.materialize(sc.live
+            .filter(org.apache.spark.sql.GraftShim.column(
+              org.apache.spark.sql.catalyst.expressions.InSet(
+                org.apache.spark.sql.GraftShim.expression(col("__graft_fp")),
+                fps.map(org.apache.spark.unsafe.types.UTF8String.fromString)
+                  .toSet[Any])))
+            .drop("__graft_fp", "__graft_pos"))
+        case _ =>
+          val scan = dvApplied(index.get.subIndex(files))
+          step("rewrite") {
+            val held = hold(scan)
+            if (driver) held else if (reuse) scan.localCheckpoint() else scan
+          }
       }
-    }
 
     /** Every live row, DV-applied (an overwrite's delete pre-images);
       * collected on the driver path. */
@@ -2047,6 +2205,13 @@ object Lake {
       if (landed) next else snap
     }
   }
+
+  /** The candidate rows a [[RowCommit.driveScan]] read: `all` of them,
+    * the `live` ones the active vectors keep (both frames carry the row
+    * identity), the ledger bytes of their files, and each file's
+    * normalized path by its `__graft_fp`. */
+  private final case class Scanned(all: DataFrame, live: DataFrame,
+      bytes: Long, byFp: Map[String, String])
 
   /** Open a [[RowCommit]] of `kind` and run `body` over it, every job it
     * launches described `Lake.commit <kind>` at least. */
@@ -2210,8 +2375,11 @@ object Lake {
       * source in hand. A source that stays relational keeps the whole
       * commit relational. */
     def commitBytes(radius: Long): Long = srcSet.fold(Long.MaxValue)(_ =>
-      (BigInt(radius) + estimatedBytes(source)).min(BigInt(Long.MaxValue))
-        .toLong)
+      (BigInt(radius) + heldBytes).min(BigInt(Long.MaxValue)).toLong)
+    /** The source's estimated bytes: what the commit holds besides the
+      * target rows it reads. */
+    lazy val heldBytes: Long =
+      estimatedBytes(source).min(BigInt(Long.MaxValue)).toLong
     /** The source's distinct keys, relationally. */
     lazy val srcKeys: DataFrame = source.select(keys.map(col): _*).distinct()
     /** The source's keys as the match scan filters by them, before the
@@ -2233,9 +2401,17 @@ object Lake {
     private lazy val genExprs: Map[String, String] =
       generatedColumns(ledgerDir).toMap
 
-    /** Scope a target scan to the source's key range ([[keyRangeScope]]). */
-    def scoped(scan: DataFrame): DataFrame =
-      keyRangeScope(scan, source.select(keys.map(col): _*), keys)
+    /** The source's key range as a pushable predicate
+      * ([[keyRangeScope]]), computed once. */
+    private lazy val scope: Option[org.apache.spark.sql.Column] =
+      keyRangeScope(source.select(keys.map(col): _*), keys)
+
+    /** Scope a target scan to the source's key range. */
+    def scoped(scan: DataFrame): DataFrame = scope.fold(scan)(scan.filter)
+
+    /** The target rows the match reads: scoped to the key range, then
+      * only the source's keys ([[scanKeySet]]). */
+    def matching(scan: DataFrame): DataFrame = scanKeySet.semi(scoped(scan))
 
     /** The keys of `rows` (target rows) the source also holds, in the
       * form of [[srcKeySet]]. */
@@ -2369,9 +2545,10 @@ object Lake {
     // the rewrite set: live files containing at least one matched key,
     // found by a discovery scan scoped to the batch's key range (sound
     // superset; pushable — manifest stats prune it to the batch's file
-    // footprint on a key-clustered table, see keyRangeScope)
-    val affected: Set[String] = c.target.fold(Set.empty[String])(t =>
-      c.affectedFiles(m.scoped(t))(m.scanKeySet.semi))
+    // footprint on a key-clustered table, see keyRangeScope), read on
+    // the driver when the candidates and the source fit its bound
+    val affected: Set[String] =
+      if (c.index.isEmpty) Set.empty else c.affected(m.matching, m.heldBytes)
     c.onDriver(m.commitBytes(c.bytesOf(affected)))
     // the blast radius: matched keys live ONLY in affected files, so the
     // deleteWhen filter, the change feed and the carry all read just
@@ -2643,20 +2820,29 @@ object Lake {
     // (file, position) identity columns must materialize BEFORE the DV
     // anti-join — `_metadata` is unresolvable/ambiguous above a join of
     // two file scans.
-    val target = applyDvsAt(spark, c.st, c.snap,
+    lazy val target = applyDvsAt(spark, c.st, c.snap,
       tableScan(spark, ledgerDir, c.index.get, c.snap, keepPos = true),
       keepPos = true)
     // ONE match scan: the position set is delete-sized (exactly what the
     // sidecar will hold), so materialize it once instead of re-scanning
     // the table for the emptiness check and again for the sidecar write.
-    // On the driver path (the scanned table within the driver bound) it
-    // is collected — whole rows under the change feed, so its pre-images
-    // come from the same rows in hand
+    // Its candidate files are read on the driver when they fit the bound
+    // (no job); else, on the driver path (the scanned table within the
+    // bound), the relational match is collected. Either way whole rows
+    // are held under the change feed, so its pre-images come from the
+    // same rows in hand
     val ids = Seq(col("__graft_fp"), col("__graft_pos"))
-    c.onDriver(c.liveBytes)
-    val held = c.step("match")(c.hold(
-      if (changeFeed) matches(target) else matches(target).select(ids: _*)))
-    val hitRows: Option[DataFrame] = if (c.driver) Some(held) else None
+    def hitsOf(df: DataFrame): DataFrame =
+      if (changeFeed) matches(df) else matches(df).select(ids: _*)
+    val hitRows: Option[DataFrame] = c.driveScan(matches) match {
+      case Some(sc) =>
+        c.onDriver(sc.bytes)
+        Some(org.apache.spark.sql.GraftLocal.materialize(hitsOf(sc.live)))
+      case None =>
+        c.onDriver(c.liveBytes)
+        val held = c.step("match")(c.hold(hitsOf(target)))
+        if (c.driver) Some(held) else None
+    }
     val hits = hitRows.getOrElse(c.step("match")(
         matches(target).select(ids: _*).localCheckpoint()))
       .select(col("__graft_fp").as("dpath"), col("__graft_pos").as("pos"))
@@ -2682,7 +2868,7 @@ object Lake {
     org.apache.spark.sql.GraftLocal.rows(df).map(_.nonEmpty)
       .getOrElse(!df.isEmpty)
 
-  /** Scope a table scan to the key range of a merge batch: a SOUND
+  /** The key range of a merge batch as a scan predicate: a SOUND
     * superset of the equality matches (a key outside [min, max] of the
     * batch's keys can never equal one of them) expressed as a pushable
     * BETWEEN on the bare key column — so on a key-clustered table the
@@ -2691,9 +2877,10 @@ object Lake {
     * file-targeted-merge property; a hash-scattered table degrades
     * gracefully to the full scan it needed anyway). One tiny driver
     * action on the batch's key columns — none when the batch is in hand
-    * ([[headRow]]). */
-  private def keyRangeScope(scan: DataFrame, srcKeys: DataFrame,
-      keys: Seq[String]): DataFrame = {
+    * ([[headRow]]). None for an empty or all-null batch (the semi-join
+    * empties the scan). */
+  private def keyRangeScope(srcKeys: DataFrame,
+      keys: Seq[String]): Option[org.apache.spark.sql.Column] = {
     // ONE driver action carries every column's bounds; composite keys AND
     // the per-column BETWEENs (each independently sound — a row outside
     // ANY column's range cannot equal a batch row on ALL columns, and
@@ -2704,8 +2891,7 @@ object Lake {
       if (b.isNullAt(2 * i)) None // all-null column: no sound bound
       else Some(col(k).between(lit(b.get(2 * i)), lit(b.get(2 * i + 1))))
     }
-    if (preds.isEmpty) scan // empty/all-null batch: semi-join empties it
-    else scan.filter(preds.reduce(_ && _))
+    preds.reduceOption(_ && _)
   }
 
   /** Apply the deletion vectors active at `snapshot` to a table scan:
@@ -2767,21 +2953,42 @@ object Lake {
     }
   }
 
+  /** The (dpath, pos) rows of every vector ACTIVE at `snapshot` (the
+    * [[activeDvRows]] rule), its sidecars read on the driver: no job. */
+  private def activeDvs(spark: SparkSession, st: LedgerState,
+      snapshot: Long): Seq[(String, Long)] =
+    if (!st.hasDv) Nil
+    else {
+      val dvActs = st.rows.filter(a => a.op == "dv" && a.snapshot <= snapshot)
+      if (dvActs.isEmpty) Nil
+      else {
+        val ads = st.addSnapshots(snapshot)
+        org.apache.spark.sql.execution.datasources.parquet.GraftParquetShim
+          .readRows(spark, dvActs.sortBy(_.path).map(a => a.path -> a.size),
+            DvSchema).flatten.collect {
+            case r if !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2) &&
+                ads.get(r.getUTF8String(0).toString)
+                  .exists(r.getLong(2) >= _) =>
+              (r.getUTF8String(0).toString, r.getLong(1))
+          }
+      }
+    }
+
+  /** A deletion-vector sidecar's columns. */
+  private val DvSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "dpath string, pos bigint, dv_snap bigint")
+
   /** Count of ACTIVE deletion-vector rows at `snapshot` (positions whose
     * vector still applies to a live file) — the "how much MOR debt has
     * this table accumulated" signal a maintenance policy reads; 0 after a
-    * compaction materializes everything. KB-scale: sidecars + ledger. */
+    * compaction materializes everything. KB-scale: the sidecars are read
+    * on the driver ([[activeDvs]]), no job. */
   def dvRows(spark: SparkSession, ledgerDir: String,
       snapshot: Long = Long.MaxValue): Long = {
-    import spark.implicits._
     val st = LedgerState.open(spark, ledgerDir)
     val s = snapshot min st.head
-    activeDvRows(spark, st, s) match {
-      case None => 0L
-      case Some(active) =>
-        active.join(st.liveAt(s).map(_.normPath).toDF("dpath"), Seq("dpath"),
-          "left_semi").count()
-    }
+    val live = st.liveAt(s).iterator.map(_.normPath).toSet
+    activeDvs(spark, st, s).count { case (dpath, _) => live(dpath) }.toLong
   }
 
   /** Plain ROW APPEND — the INSERT INTO leg of the DML surface: land
@@ -3375,7 +3582,7 @@ object Lake {
     // it), a pushable literal predicate, so on a key-clustered table
     // manifest min/max stats prune the match scan to the batch's file
     // footprint instead of the whole table (see keyRangeScope).
-    val matched: Option[DataFrame] = c.index.map { idx =>
+    lazy val matched: Option[DataFrame] = c.index.map { idx =>
       m.scanKeySet.semi(applyDvsAt(spark, c.st, c.snap,
         m.scoped(tableScan(spark, ledgerDir, idx, c.snap, keepPos = true)),
         keepPos = true))
@@ -3384,18 +3591,25 @@ object Lake {
     // the matched-key set and the sidecar: the NARROW identity projection
     // (key, file, pos — match-sized, exactly what the sidecar holds).
     // The change feed's pre-images re-scan (the COW affectedScan shape),
-    // except on the driver path (the scanned table within the driver
-    // bound), which collects whole rows under the feed instead
-    c.onDriver(m.commitBytes(c.liveBytes))
-    val matchedIds: Option[DataFrame] = matched.map { df =>
-      val narrow = df.select(keys.map(col) ++
-        Seq(col("__graft_fp"), col("__graft_pos")): _*)
-      c.step("match") {
-        val held = c.hold(if (changeFeed) df else narrow)
-        if (c.driver) held else narrow.localCheckpoint()
+    // except on the driver path, which holds whole rows under the feed
+    // instead: read from the candidate files on the driver when they fit
+    // the bound with the source (no job), else the relational match
+    // collected when the scanned table does
+    def narrow(df: DataFrame): DataFrame = df.select(keys.map(col) ++
+      Seq(col("__graft_fp"), col("__graft_pos")): _*)
+    val driven = c.index.flatMap(_ => c.driveScan(m.matching, m.heldBytes))
+    c.onDriver(m.commitBytes(driven.fold(c.liveBytes)(_.bytes)))
+    val matchedIds: Option[DataFrame] = driven.map(_.live) match {
+      case Some(rows) => Some(org.apache.spark.sql.GraftLocal.materialize(
+        if (changeFeed) m.matching(rows) else narrow(m.matching(rows))))
+      case None => matched.map { df =>
+        c.step("match") {
+          val held = c.hold(if (changeFeed) df else narrow(df))
+          if (c.driver) held else narrow(df).localCheckpoint()
+        }
       }
     }
-    val anyMatches = matchedIds.exists(!_.isEmpty)
+    val anyMatches = matchedIds.exists(nonEmpty)
     // the matched rows hold only source keys (the scan is filtered by
     // them): their keys are the matched keys
     val matchedKeys: Option[KeySet] =

@@ -16,8 +16,8 @@ import org.apache.spark.sql.types.StructType
   *
   *  - `_cursor` is a tiny sidecar of applied source snapshot ids,
   *    written LAST: a missing cursor means the state never went live.
-  *    It and the additive states are read and appended on the driver
-  *    ([[sidecarRows]], [[appendSidecar]]) with no Spark job;
+  *    It and the additive states are read and written on the driver
+  *    ([[sidecarRows]], [[replaceSidecar]]) with no Spark job;
   *  - [[bootstrap]] builds the state at the source's current snapshot
   *    after WIPING the root — partial state of a crashed earlier
   *    bootstrap (ledgered rows pointing at landing files a re-run's write
@@ -60,36 +60,18 @@ object ChangeFold {
   private val CursorSchema = StructType.fromDDL("snapshot_id bigint")
 
   private def markCursor(spark: SparkSession, root: String, snap: Long): Unit =
-    appendSidecar(spark, s"$root/_cursor", CursorSchema, InternalRow(snap))
+    replaceSidecar(spark, s"$root/_cursor", CursorSchema, InternalRow(snap))
 
-  /** Every row of a sidecar dir (a cursor, a state generation): its
-    * visible files — the names a Spark read lists, so `_`- and `.`-named
-    * ones (a writer's `_SUCCESS` and checksums, a crashed append's temp)
-    * are hidden — read on the driver with no Spark job, under the
-    * schema of the first one's footer. None when the dir holds no
-    * visible file. */
-  private[graft] def sidecarRows(spark: SparkSession,
-      dir: String): Option[Seq[Row]] = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val files = (if (fs.isDirectory(path)) fs.listStatus(path).toSeq else Nil)
-      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-        !f.getPath.getName.startsWith("."))
-      .sortBy(_.getPath.toString)
-    files.headOption.map { first =>
-      GraftParquetShim.readFiles(spark,
-        files.map(f => f.getPath.toString -> f.getLen),
-        GraftShim.asNullable(GraftParquetShim.footerSchema(spark, first)))
-        .flatten
-    }
-  }
-
-  /** Append `row` to a sidecar dir as one driver-written parquet file:
-    * written under a dot-named temp, then atomically renamed into a
-    * visible name, so a crash leaves either the whole row or a hidden
-    * temp that [[sidecarRows]] skips. */
-  private[graft] def appendSidecar(spark: SparkSession, dir: String,
+  /** Replace a cursor sidecar's rows by `row`: one driver-written
+    * parquet file, written under a dot-named temp and atomically renamed
+    * into a visible name (a crash leaves either the whole row or a hidden
+    * temp that [[sidecarRows]] skips), then the files it supersedes are
+    * deleted, so a cursor read takes one file whatever the number of
+    * rounds. The old files go only once the new one is visible: a crash
+    * in between leaves several, and their max is still the cursor. */
+  private[graft] def replaceSidecar(spark: SparkSession, dir: String,
       schema: StructType, row: InternalRow): Unit = {
+    val old = visibleFiles(spark, dir)
     val d = new java.io.File(dir)
     d.mkdirs()
     val id = java.util.UUID.randomUUID()
@@ -99,8 +81,35 @@ object ChangeFold {
     java.nio.file.Files.move(tmp.toPath, new java.io.File(d,
       s"part-$id.parquet").toPath,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    // the local filesystem's checksum of the temp names no file now
-    new java.io.File(d, s".${tmp.getName}.crc").delete(): Unit
+    old.foreach(f => new java.io.File(f.getPath.toUri).delete(): Unit)
+  }
+
+  /** The files of `dir` a Spark read lists, in path order: `_`- and
+    * `.`-named ones (a writer's `_SUCCESS` and checksums, a crashed
+    * append's temp) are hidden. */
+  private def visibleFiles(spark: SparkSession,
+      dir: String): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    (if (fs.isDirectory(path)) fs.listStatus(path).toSeq else Nil)
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.toString)
+  }
+
+  /** Every row of a sidecar dir (a cursor, a state generation): its
+    * [[visibleFiles]] read on the driver with no Spark job, under the
+    * schema of the first one's footer. None when the dir holds no
+    * visible file. */
+  private[graft] def sidecarRows(spark: SparkSession,
+      dir: String): Option[Seq[Row]] = {
+    val files = visibleFiles(spark, dir)
+    files.headOption.map { first =>
+      GraftParquetShim.readFiles(spark,
+        files.map(f => f.getPath.toString -> f.getLen),
+        GraftShim.asNullable(GraftParquetShim.footerSchema(spark, first)))
+        .flatten
+    }
   }
 
   def genDir(root: String, snap: Long): String = s"$root/gen-$snap"

@@ -78,7 +78,7 @@ object JoinView {
 
   private def markCursor(spark: SparkSession, viewDir: String,
       a: Long, b: Long): Unit =
-    ChangeFold.appendSidecar(spark, s"$viewDir/_cursor2", CursorSchema,
+    ChangeFold.replaceSidecar(spark, s"$viewDir/_cursor2", CursorSchema,
       InternalRow(a, b))
 
   private def genDir(viewDir: String, a: Long, b: Long) =

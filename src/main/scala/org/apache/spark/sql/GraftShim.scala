@@ -65,6 +65,25 @@ object GraftShim {
     ofRows(spark, LogicalRelation(rel))
   }
 
+  /** The data filters Spark pushes into the scan of `df`'s one
+    * file-source relation — what its `FileIndex.listFiles` prunes by
+    * (FileSourceStrategy's split: the deterministic conjuncts without a
+    * subquery, names normalized to the relation's output); none when `df`
+    * is not projections and filters over one file relation. */
+  def pushedFilters(df: DataFrame)
+      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
+    import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+    import org.apache.spark.sql.catalyst.planning.PhysicalOperation
+    import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, HadoopFsRelation, LogicalRelation}
+    df.asInstanceOf[classic.Dataset[_]].queryExecution.optimizedPlan match {
+      case PhysicalOperation(_, filters, l: LogicalRelation)
+          if l.relation.isInstanceOf[HadoopFsRelation] =>
+        DataSourceStrategy.normalizeExprs(filters.filter(f =>
+          f.deterministic && !SubqueryExpression.hasSubquery(f)), l.output)
+      case _ => Nil
+    }
+  }
+
   /** Block until the async listener bus has delivered all queued events —
     * needed before reading job counts off a SparkListener in tests
     * (`listenerBus` is `private[spark]`, hence this shim). */

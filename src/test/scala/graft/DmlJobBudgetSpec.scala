@@ -8,9 +8,9 @@ import java.nio.file.Files
   * UPDATE, DELETE, INSERT and MERGE (one matched and one new key), and a
   * change-feed MERGE delete and UPDATE, runs under a job listener and
   * must stay inside its budget, so a change to the commit path cannot
-  * add jobs silently; the write path each commit takes is counted.
-  * Reads of a bound table launch only their data-scan job once its
-  * ledger state is warm, and every job of a commit or a maintained
+  * add jobs silently; the write path and the scan each commit takes are
+  * counted. Reads of a bound table launch only their data-scan job once
+  * its ledger state is warm, and every job of a commit or a maintained
   * state's round carries a description. */
 class DmlJobBudgetSpec extends GraftSpec {
 
@@ -59,39 +59,50 @@ class DmlJobBudgetSpec extends GraftSpec {
         "budget_cust.c_custkey = src.c_custkey WHEN MATCHED THEN UPDATE " +
         "SET * WHEN NOT MATCHED THEN INSERT *"))
     val paths0 = Lake.writePaths
+    // per statement: its jobs, and the commit.driver and scan.driver
+    // counts it added
     val used = stmts.map { case (kind, sql) =>
       val head = t.snapshot
+      val before = Lake.writePaths
       val jobs = jobsOf { assert(t.sql(sql).head().getLong(0) == head + 1) }
-      kind -> jobs
+      val after = Lake.writePaths
+      def d(k: String) = after.getOrElse(k, 0L) - before.getOrElse(k, 0L)
+      kind -> (jobs, d("commit.driver"), d("scan.driver"))
     }.toMap
     val paths = Lake.writePaths
     def delta(k: String) = paths.getOrElse(k, 0L) - paths0.getOrElse(k, 0L)
-    info(s"jobs per statement: $used; write paths: " +
-      Seq("commit.driver", "commit.distributed", "write.fallback")
+    info(s"(jobs, commit.driver, scan.driver) per statement: $used; " +
+      "write paths: " + Seq("commit.driver", "commit.distributed",
+        "write.fallback", "scan.driver", "scan.relational")
         .map(k => s"$k +${delta(k)}").mkString(", "))
-    // an INSERT of literal rows launches no job; every other statement
-    // scans, so a listener that saw none of its jobs is broken
-    used.foreach { case (kind, jobs) =>
-      assert((kind == "insert" || jobs > 0) && jobs <= JobBudget(kind),
+    // each statement took the driver path once; every row-level one read
+    // its candidate files on the driver
+    used.foreach { case (kind, (jobs, driver, scan)) =>
+      assert(jobs <= JobBudget(kind),
         s"single-row $kind launched $jobs jobs (budget ${JobBudget(kind)}); " +
           s"all: $used")
+      assert(driver == 1 && scan == (if (kind == "insert") 0 else 1),
+        s"single-row $kind: commit.driver +$driver, scan.driver +$scan")
     }
-    // each statement decided its write path once, on the driver, and no
-    // driver write fell back to the distributed writer
-    assert(delta("commit.driver") == 4 && delta("commit.distributed") == 0)
+    // no statement ran relationally, and no driver write fell back to the
+    // distributed writer
+    assert(delta("commit.distributed") == 0 && delta("scan.relational") == 0)
     assert(delta("write.fallback") == 0)
-    assert(t.read().count() == 150 - 1 + 2)
+    // a read scans its files, so a listener that saw none of its jobs is
+    // broken
+    assert(jobsOf(assert(t.sql("SELECT count(*) FROM budget_cust").head()
+      .getLong(0) == 150 - 1 + 2)) > 0)
     graft.streaming.MirrorLoop.rmrf(new java.io.File(tmp))
   }
 
-  /** Measured at sf0.001 on 4 local cores: UPDATE 2, DELETE 2, INSERT 0
-    * and MERGE 2 jobs (the affected-files scan and the one collect of the
-    * blast radius; an INSERT of literal rows runs none), and 2 each for a
-    * change-feed MERGE delete and UPDATE; each budget adds two of
-    * headroom. */
-  private val JobBudget = Map("update" -> 4, "delete" -> 4,
-    "insert" -> 2, "merge" -> 4, "feed-merge-delete" -> 4,
-    "feed-update" -> 4)
+  /** Measured at sf0.001 on 4 local cores: 0 jobs for each of UPDATE,
+    * DELETE, INSERT and MERGE (a row-level commit reads its candidate
+    * files on the driver; an INSERT of literal rows runs none), and 0
+    * each for a change-feed MERGE delete and UPDATE; each budget adds two
+    * of headroom. */
+  private val JobBudget = Map("update" -> 2, "delete" -> 2,
+    "insert" -> 2, "merge" -> 2, "feed-merge-delete" -> 2,
+    "feed-update" -> 2)
 
   test("change-feed MERGE with a delete arm and change-feed UPDATE stay " +
       "inside their Spark-job budgets") {
@@ -102,20 +113,27 @@ class DmlJobBudgetSpec extends GraftSpec {
       .repartition(8).write.parquet(s"$tmp/landing")
     t.ingest(s"$tmp/landing", statsCols = Seq("c_custkey"))
     val start = t.snapshot
+    // (jobs, commit.driver count added) of `body`
+    def measured(body: => Unit): (Int, Long) = {
+      val before = Lake.writePaths.getOrElse("commit.driver", 0L)
+      val jobs = jobsOf(body)
+      (jobs, Lake.writePaths.getOrElse("commit.driver", 0L) - before)
+    }
     val used = Map(
       // the documents wave's delete merge: matched keys, all deleted
-      "feed-merge-delete" -> jobsOf {
+      "feed-merge-delete" -> measured {
         t.merge(Seq((21L, "gone"), (22L, "gone")).toDF("c_custkey", "c_name"),
           "c_custkey", deleteWhen = Some(lit(true)), changeFeed = true)
       },
-      "feed-update" -> jobsOf {
+      "feed-update" -> measured {
         t.update(col("c_custkey") === 23L, Seq("c_acctbal" -> lit(4.5)),
           changeFeed = true)
       })
-    info(s"jobs per change-feed statement: $used")
-    used.foreach { case (kind, jobs) =>
-      assert(jobs > 0 && jobs <= JobBudget(kind),
-        s"$kind launched $jobs jobs (budget ${JobBudget(kind)}); all: $used")
+    info(s"(jobs, commit.driver) per change-feed statement: $used")
+    used.foreach { case (kind, (jobs, driver)) =>
+      assert(driver == 1 && jobs <= JobBudget(kind),
+        s"$kind launched $jobs jobs (budget ${JobBudget(kind)}), " +
+          s"commit.driver +$driver; all: $used")
     }
     assert(t.snapshot == start + 2)
     val changes = t.readChanges(start).select("c_custkey", "_change_type")
@@ -201,11 +219,10 @@ class DmlJobBudgetSpec extends GraftSpec {
       s"${descs.count(_.isEmpty)} of ${descs.size} jobs undescribed")
   }
 
-  /** Measured at sf0.001 on 4 local cores: 5 jobs — the change read,
-    * the tombstones' match scan, the doclens probe and the doclens
-    * merge's affected-files scan and blast-radius collect; two of
-    * headroom. */
-  private val TextIndexRoundBudget = 7
+  /** Measured at sf0.001 on 4 local cores: 2 jobs — the change read and
+    * one fold job; the tombstones' match and the doclens merge read
+    * their candidate files on the driver. Two of headroom. */
+  private val TextIndexRoundBudget = 4
 
   test("a maintained state's cursor read and a DsirDelta score of rows " +
       "in hand launch no job") {
@@ -258,25 +275,39 @@ class DmlJobBudgetSpec extends GraftSpec {
       assert(t.sql(s"SELECT count(*) FROM table_changes('budget_reads', 1)")
         .head().getLong(0) == 0L)
     }
+    // the table carries a deletion vector: its count reads the sidecar
+    // on the driver
+    val mor = t.deleteMor(col("c_custkey") === 30L)
     val meta = jobsOf {
-      assert(Lake.currentSnapshot(spark, t.ledgerDir) == v)
-      assert(Lake.dvRows(spark, t.ledgerDir) == 0L)
+      assert(Lake.currentSnapshot(spark, t.ledgerDir) == mor)
+      assert(Lake.dvRows(spark, t.ledgerDir) == 1L)
     }
     info(s"VERSION AS OF $versionRead, table_changes $changesRead, " +
       s"snapshot + dvRows $meta jobs")
     assert(versionRead == 1 && changesRead == 1 && meta == 0)
   }
 
+  // on a renamed table, whose rename epoch keeps the commit's match scan
+  // relational, so the statement runs jobs to describe
   test("every job of a single-row SQL UPDATE carries a Lake. description") {
-    val t = bound
+    val tmp = Files.createTempDirectory("graft_dml_renamed").toString
+    val t = GraftTable(spark, s"$tmp/ledger", s"$tmp/gen")
+    spark.read.parquet(s"$sf/customer.parquet")
+      .repartition(2).write.parquet(s"$tmp/landing")
+    t.ingest(s"$tmp/landing", statsCols = Seq("c_custkey"))
+    t.bindSql("budget_renamed")
+    t.renameColumn("c_name", "c_title")
+    val before = Lake.writePaths.getOrElse("scan.relational", 0L)
     val descs = jobDescriptions {
-      t.sql("UPDATE budget_reads SET c_acctbal = 3.5D WHERE c_custkey IN (9)")
+      t.sql("UPDATE budget_renamed SET c_acctbal = 3.5D WHERE c_custkey IN (9)")
         .head()
     }
     info(s"job descriptions: ${descs.distinct.mkString(" | ")}")
+    assert(Lake.writePaths.getOrElse("scan.relational", 0L) == before + 1)
     assert(descs.nonEmpty && descs.forall(_.startsWith("Lake.")),
       s"undescribed jobs: ${descs.filterNot(_.startsWith("Lake."))}")
     assert(spark.sparkContext.getLocalProperty("spark.job.description") == null,
       "the caller's (absent) description was not restored")
+    graft.streaming.MirrorLoop.rmrf(new java.io.File(tmp))
   }
 }
