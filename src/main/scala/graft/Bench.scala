@@ -10,11 +10,17 @@ import org.apache.spark.sql.SparkSession
   * A query that throws is NOT recorded as a timing (a fast crash must never
   * read as a speedup): failed queries go to an `errors` map in the JSON and
   * are excluded from `queries` and the total.
+  *
+  * The line also says where the run happened: `cpus` (the session's local
+  * cores), `git_rev` (the checkout's HEAD, "unknown" without git) and the
+  * one-minute system load average at start and end (`load_start`,
+  * `load_end`; -1 where the OS reports none).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val loadStart = loadAverage()
     // GraftSession.builder: same scale-tuned confs as the library prescribes
     // (AQE, broadcast threshold, UTC, parquet nanosAsLong for events)
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
@@ -87,7 +93,8 @@ object Bench {
     val errs = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
       .mkString("{", ",", "}")
     val total = timings.values.sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"phases":$phs,"errors":$errs,"n_failed":${errors.size},"sf":"$sfDir"}"""
+    val where = s""""cpus":${cpus.toInt},"git_rev":"${gitRev()}","load_start":$loadStart,"load_end":${loadAverage()}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"phases":$phs,"errors":$errs,"n_failed":${errors.size},"sf":"$sfDir",$where}"""
     println(line)
     // Also persist the COMPLETE line to a file: the driver's stdout capture can
     // truncate (r3's BENCH_r03.json lost its head), so the repo must carry an
@@ -102,4 +109,19 @@ object Bench {
     }
     spark.stop()
   }
+
+  /** The system's one-minute load average, -1 where the OS reports none. */
+  private def loadAverage(): Double =
+    java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .getSystemLoadAverage
+
+  /** The checkout's HEAD commit, "unknown" when git is absent or fails. */
+  private def gitRev(): String =
+    try {
+      import scala.sys.process._
+      Seq("git", "rev-parse", "HEAD").!!(ProcessLogger(_ => ())).trim match {
+        case rev if rev.matches("[0-9a-f]{7,64}") => rev
+        case _ => "unknown"
+      }
+    } catch { case _: Exception => "unknown" }
 }

@@ -502,7 +502,8 @@ object GraftSql {
   }
 
   /** Route a parsed (and substituted) statement on its plan node; any
-    * node not listed runs as a plain Spark query. */
+    * other command runs as Spark runs it, and any other query through
+    * [[DriverRead]]. */
   private def route(spark: SparkSession, plan: LogicalPlan): DataFrame = {
     import spark.implicits._
     plan match {
@@ -651,7 +652,10 @@ object GraftSql {
               s"table '$name' is not bound — CREATE OR REPLACE needs " +
                 "LOCATION 'dir' to create it")), q)
         }
-      case p => GraftShim.ofRows(spark, p)
+      case c: Command => GraftShim.ofRows(spark, c)
+      // a query: evaluated on the driver when its candidate files fit the
+      // driver bound and GraftLocal evaluates its plan (DriverRead)
+      case p => DriverRead(spark, GraftShim.ofRows(spark, p))
     }
   }
 

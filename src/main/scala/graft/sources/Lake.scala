@@ -1251,8 +1251,9 @@ object Lake {
       if (atSnapshot >= 0) recordedSchemaAt(ledgerDir, atSnapshot) else None
     val (renames, widens) = epochLogs(ledgerDir, atSnapshot, recorded)
     if (renames.isEmpty && widens.isEmpty) {
-      val scan = org.apache.spark.sql.GraftShim.parquetScan(spark, index,
-        mergeSchemas = recorded.isEmpty && isEvolved(ledgerDir),
+      val merge = recorded.isEmpty && isEvolved(ledgerDir)
+      val scan = org.apache.spark.sql.GraftShim.parquetScan(spark,
+        if (merge) index else index.asPlain, mergeSchemas = merge,
         dataSchema = recorded)
       if (keepPos) withRowIdentity(scan) else scan
     }
@@ -1296,7 +1297,7 @@ object Lake {
         Seq[org.apache.spark.sql.catalyst.InternalRow]) = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.unsafe.types.UTF8String
-    val ordered = files.sortBy(-_.getLen)
+    val ordered = scanOrder(files)
     val dead = activeDvs(spark, st, snapshot)
       .groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
     val n = schema.length
@@ -1318,6 +1319,11 @@ object Lake {
     }.flatten
     (read.map(_._1), read.collect { case (r, true) => r })
   }
+
+  /** `files` in the order a file scan packs its splits: larger first,
+    * listing order (an index lists path order) among equal sizes. */
+  private[sources] def scanOrder(files: Seq[org.apache.hadoop.fs.FileStatus])
+      : Seq[org.apache.hadoop.fs.FileStatus] = files.sortBy(-_.getLen)
 
   /** `schema` plus the row-identity columns of a [[driverScan]]. */
   private def withIdentity(schema: org.apache.spark.sql.types.StructType)
@@ -1748,16 +1754,23 @@ object Lake {
     n
   }
 
-  /** Max estimated bytes for which a commit's gen-dir output is
+  /** THE DRIVER BOUND: max bytes for which a commit's gen-dir output is
     * DRIVER-written (one collect + one ParquetWriteSupport file — the
-    * ledger path's r17 machinery) instead of a FileFormatWriter job.
-    * Profiled in r18: a KB-scale frame's distributed write costs a
-    * job + the output-committer temp/rename protocol ≈ 0.1-0.3 s of
+    * ledger path's r17 machinery) instead of a FileFormatWriter job, and
+    * for which a commit's candidate files, a held change batch and a
+    * GraftSql query's candidate files ([[DriverRead]]) are read on the
+    * driver. Profiled in r18: a KB-scale frame's distributed write costs
+    * a job + the output-committer temp/rename protocol ≈ 0.1-0.3 s of
     * fixed cost per dir, and a DML commit writes 2-3 dirs — while the
-    * rows are blast-radius-bounded metadata-scale almost always. 32 MB
-    * of estimated input leaves ~2 orders of magnitude of driver-heap
-    * headroom. */
-  private val DriverWriteMaxBytes: Long = 32L << 20
+    * rows are blast-radius-bounded metadata-scale almost always.
+    * WHAT IT COUNTS: a plan's size estimate for a gen-dir frame, and
+    * otherwise the COMPRESSED ledger sizes of the files read — while the
+    * driver holds their DECODED rows: the sf0.1 `customer` table's 15,000
+    * rows take 236 KB compacted on disk and about 1.3 MB as row payload
+    * (estimated from the row layout, before JVM object headers). The
+    * driver heap at the bound in decoded terms is unmeasured. A test
+    * hook, not a setting: at 0 every GraftSql query runs relationally. */
+  @volatile private[graft] var DriverWriteMaxBytes: Long = 32L << 20
 
   /** Write a commit generation dir (carry/delta/changes/dv): driver-side
     * single file when the rows are driver-bounded — a frame over rows
@@ -1874,7 +1887,7 @@ object Lake {
   private val writePathCounts = new java.util.concurrent
     .ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
 
-  private def countWrite(what: String): Unit =
+  private[sources] def countWrite(what: String): Unit =
     writePathCounts.computeIfAbsent(what,
       _ => new java.util.concurrent.atomic.AtomicLong()).incrementAndGet(): Unit
 
@@ -1887,7 +1900,9 @@ object Lake {
     * guard): a gen-dir write re-ran on the distributed writer, or a
     * commit's input stayed relational; `scan.driver` / `scan.relational`
     * — a row-level commit read its candidate files on the driver, or
-    * found its matches with a relational scan. */
+    * found its matches with a relational scan; `read.driver` /
+    * `read.relational` — a GraftSql query was evaluated on the driver
+    * ([[DriverRead]]), or returned as a relational frame. */
   def writePaths: Map[String, Long] = {
     import scala.jdk.CollectionConverters._
     writePathCounts.asScala.map { case (k, v) => k -> v.get }.toMap

@@ -103,9 +103,19 @@ object LedgerFileIndex {
   }
 }
 
-final class LedgerFileIndex private[sources] (entries: Seq[LedgerFileIndex.Entry])
+/** `plain`: set on the index of a PLAIN table scan ([[Lake]]'s
+  * `tableScan` with no rename or widen epoch and no footer merge): a
+  * relation over it reads exactly its files' rows under the relation's
+  * data schema, so a driver read of those files stands in for it
+  * ([[DriverRead]]). */
+final class LedgerFileIndex private[sources] (
+    entries: Seq[LedgerFileIndex.Entry], val plain: Boolean = false)
   extends FileIndex {
   import LedgerFileIndex._
+
+  /** This index marked [[plain]]. */
+  private[sources] def asPlain: LedgerFileIndex =
+    new LedgerFileIndex(entries, plain = true)
 
   /** Sub-index over the files whose NORMALIZED path is in `keepNorm` —
     * the affected-file scan of a blast-radius write

@@ -43,25 +43,37 @@ object GraftLocal {
     frame(df.sparkSession, df.schema, collect(df))
 
   /** True when [[rows]] evaluates `df` on the driver. */
-  def isLocal(df: DataFrame): Boolean = prepared(df).exists(supported)
+  def isLocal(df: DataFrame): Boolean = supports(analyzed(df))
 
   /** `df`'s rows evaluated on the driver, or None when its plan is not
     * Filters, Projects, Unions, literal Limits, aggregates (global, or
     * grouped on [[groupable]] keys), Generates and Sorts over
     * `LocalRelation`s with evaluable expressions. */
-  def rows(df: DataFrame): Option[Seq[InternalRow]] =
-    prepared(df).filter(supported).map(eval)
+  def rows(df: DataFrame): Option[Seq[InternalRow]] = planRows(analyzed(df))
 
-  /** The analyzed plan with the optimizer's expression rewrites that
-    * make it evaluable: `RuntimeReplaceable`s replaced, and
+  /** [[rows]] of a resolved plan, analyzed or optimized, with no Dataset
+    * built around it: analyzing a Dataset over a `LocalRelation` walks
+    * every held row, so a caller that substitutes rows into a plan
+    * evaluates the plan itself. */
+  def planRows(plan: LogicalPlan): Option[Seq[InternalRow]] =
+    prepared(plan).filter(supported).map(eval)
+
+  /** True when [[planRows]] evaluates `plan`: decided on its shape and
+    * expressions alone, so a plan over placeholder (empty) relations
+    * answers for the same plan over any rows. */
+  def supports(plan: LogicalPlan): Boolean = prepared(plan).exists(supported)
+
+  private def analyzed(df: DataFrame): LogicalPlan =
+    df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
+
+  /** The plan with the optimizer's expression rewrites that make it
+    * evaluable: `RuntimeReplaceable`s replaced, and
     * `current_timestamp()` and its kin fixed to one instant per plan
     * (every ledger row of a commit shares its `ingested_at`). */
-  private def prepared(df: DataFrame): Option[LogicalPlan] = {
-    val analyzed = df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
-    if (!analyzed.resolved) None
+  private def prepared(plan: LogicalPlan): Option[LogicalPlan] =
+    if (!plan.resolved) None
     else Some(ReplaceExpressions(ComputeCurrentTime(
-      EliminateSubqueryAliases(analyzed))))
-  }
+      EliminateSubqueryAliases(plan))))
 
   private def evaluable(e: Expression): Boolean = !e.exists {
     case _: Attribute => false

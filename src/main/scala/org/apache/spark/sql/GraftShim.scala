@@ -72,16 +72,41 @@ object GraftShim {
     * is not projections and filters over one file relation. */
   def pushedFilters(df: DataFrame)
       : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
+    import org.apache.spark.sql.catalyst.planning.PhysicalOperation
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    optimizedPlan(df) match {
+      case p @ PhysicalOperation(_, _, _: LogicalRelation) =>
+        scanFilters(p).headOption.map(_._2).getOrElse(Nil)
+      case _ => Nil
+    }
+  }
+
+  /** `df`'s optimized plan (Spark's, cached in its query execution). */
+  def optimizedPlan(df: DataFrame): LogicalPlan =
+    df.asInstanceOf[classic.Dataset[_]].queryExecution.optimizedPlan
+
+  /** Each file-source relation of the optimized `plan` with the data
+    * filters Spark pushes into its scan (the [[pushedFilters]] split,
+    * taken at the highest projections-and-filters chain over it), in
+    * plan order. */
+  def scanFilters(plan: LogicalPlan): Seq[(
+      org.apache.spark.sql.execution.datasources.LogicalRelation,
+      Seq[org.apache.spark.sql.catalyst.expressions.Expression])] = {
     import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
     import org.apache.spark.sql.catalyst.planning.PhysicalOperation
     import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, HadoopFsRelation, LogicalRelation}
-    df.asInstanceOf[classic.Dataset[_]].queryExecution.optimizedPlan match {
+    val out = scala.collection.mutable.ArrayBuffer.empty[
+      (LogicalRelation, Seq[org.apache.spark.sql.catalyst.expressions.Expression])]
+    // pre-order: a relation's first match is its highest chain
+    plan.foreach {
       case PhysicalOperation(_, filters, l: LogicalRelation)
-          if l.relation.isInstanceOf[HadoopFsRelation] =>
-        DataSourceStrategy.normalizeExprs(filters.filter(f =>
+          if l.relation.isInstanceOf[HadoopFsRelation] &&
+            !out.exists(_._1 eq l) =>
+        out += l -> DataSourceStrategy.normalizeExprs(filters.filter(f =>
           f.deterministic && !SubqueryExpression.hasSubquery(f)), l.output)
-      case _ => Nil
+      case _ =>
     }
+    out.toSeq
   }
 
   /** Block until the async listener bus has delivered all queued events —

@@ -97,14 +97,17 @@ object GraftParquetShim {
     * row-based read (`ParquetRecordReader` over [[ParquetReadSupport]],
     * under the session's parquet settings and each footer's rebase
     * mode), built here on the driver: `ParquetFileFormat`'s reader
-    * factory broadcasts the whole Hadoop configuration on every call. */
+    * factory broadcasts the whole Hadoop configuration on every call.
+    * `keep`: only the rows it accepts, tested on each decoded row before
+    * it is copied (their indexes are then no longer row indexes). */
   def readRows(spark: SparkSession, files: Seq[(String, Long)],
-      schema: StructType): Seq[Seq[InternalRow]] =
+      schema: StructType,
+      keep: InternalRow => Boolean = _ => true): Seq[Seq[InternalRow]] =
     if (files.isEmpty) Nil
     else {
       val sqlConf = spark.sessionState.conf
       val conf = readConf(spark, schema)
-      files.map { case (path, len) => readOne(conf, sqlConf, path, len) }
+      files.map { case (path, len) => readOne(conf, sqlConf, path, len, keep) }
     }
 
   /** The session's Hadoop configuration with the settings
@@ -132,7 +135,7 @@ object GraftParquetShim {
   }
 
   private def readOne(conf: Configuration, sqlConf: SQLConf, path: String,
-      len: Long): Vector[InternalRow] = {
+      len: Long, keep: InternalRow => Boolean): Vector[InternalRow] = {
     val p = new Path(path)
     val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(p, conf),
       ParquetMetadataConverter.NO_FILTER).getFileMetaData
@@ -153,7 +156,10 @@ object GraftParquetShim {
         new TaskAttemptContextImpl(conf,
           new TaskAttemptID(new TaskID(new JobID(), TaskType.MAP, 0), 0)))
       val out = Vector.newBuilder[InternalRow]
-      while (reader.nextKeyValue()) out += reader.getCurrentValue.copy()
+      while (reader.nextKeyValue()) {
+        val r = reader.getCurrentValue
+        if (keep(r)) out += r.copy()
+      }
       out.result()
     } finally reader.close()
   }

@@ -9,12 +9,29 @@ import java.nio.file.Files
   * change-feed MERGE delete and UPDATE, runs under a job listener and
   * must stay inside its budget, so a change to the commit path cannot
   * add jobs silently; the write path and the scan each commit takes are
-  * counted. Reads of a bound table launch only their data-scan job once
-  * its ledger state is warm, and every job of a commit or a maintained
-  * state's round carries a description. */
+  * counted. Warm reads of a bound table that fit the driver bound run on
+  * the driver with no job, a renamed table's read stays relational, and
+  * every job of a commit or a maintained state's round carries a
+  * description. */
 class DmlJobBudgetSpec extends GraftSpec {
 
   private def jobsOf(body: => Unit): Int = jobDescriptions(body).size
+
+  /** `body` with the driver bound at 0: every GraftSql query relational. */
+  private def relational[T](body: => T): T = {
+    val saved = Lake.DriverWriteMaxBytes
+    Lake.DriverWriteMaxBytes = 0
+    try body finally Lake.DriverWriteMaxBytes = saved
+  }
+
+  /** `body`'s jobs and the `read.driver` / `read.relational` counts it
+    * added. */
+  private def readJobs(body: => Unit): (Int, Long, Long) = {
+    def n(k: String) = Lake.writePaths.getOrElse(k, 0L)
+    val (d0, r0) = (n("read.driver"), n("read.relational"))
+    val jobs = jobsOf(body)
+    (jobs, n("read.driver") - d0, n("read.relational") - r0)
+  }
 
   /** The description of each job `body` launches ("" when unset). */
   private def jobDescriptions(body: => Unit): Seq[String] = {
@@ -88,10 +105,11 @@ class DmlJobBudgetSpec extends GraftSpec {
     // distributed writer
     assert(delta("commit.distributed") == 0 && delta("scan.relational") == 0)
     assert(delta("write.fallback") == 0)
-    // a read scans its files, so a listener that saw none of its jobs is
-    // broken
-    assert(jobsOf(assert(t.sql("SELECT count(*) FROM budget_cust").head()
-      .getLong(0) == 150 - 1 + 2)) > 0)
+    // a relational read scans its files, so a listener that saw none of
+    // its jobs is broken (at the default bound this read runs on the
+    // driver)
+    assert(relational(jobsOf(assert(t.sql("SELECT count(*) FROM budget_cust")
+      .head().getLong(0) == 150 - 1 + 2))) > 0)
     graft.streaming.MirrorLoop.rmrf(new java.io.File(tmp))
   }
 
@@ -267,11 +285,12 @@ class DmlJobBudgetSpec extends GraftSpec {
       .head()
     val v = t.snapshot
     t.sql(s"SELECT count(*) FROM budget_reads VERSION AS OF $v").collect()
-    val versionRead = jobsOf {
+    // both read on the driver (DriverRead)
+    val (versionRead, versionDriver, _) = readJobs {
       assert(t.sql(s"SELECT c_custkey FROM budget_reads VERSION AS OF ${v - 1} " +
         "WHERE c_custkey BETWEEN 1 AND 20").collect().length == 20)
     }
-    val changesRead = jobsOf {
+    val (changesRead, changesDriver, _) = readJobs {
       assert(t.sql(s"SELECT count(*) FROM table_changes('budget_reads', 1)")
         .head().getLong(0) == 0L)
     }
@@ -284,7 +303,44 @@ class DmlJobBudgetSpec extends GraftSpec {
     }
     info(s"VERSION AS OF $versionRead, table_changes $changesRead, " +
       s"snapshot + dvRows $meta jobs")
-    assert(versionRead == 1 && changesRead == 1 && meta == 0)
+    assert(versionRead == 0 && changesRead == 0 && meta == 0)
+    assert(versionDriver == 1 && changesDriver == 1)
+  }
+
+  test("warm point and aggregate SELECTs of a bound table read on the " +
+      "driver and launch no job") {
+    val t = bound
+    t.sql("SELECT count(*) FROM budget_reads").collect()
+    val point = readJobs {
+      assert(t.sql("SELECT c_name, c_acctbal FROM budget_reads " +
+        "WHERE c_custkey = 42").collect().length == 1)
+    }
+    val aggregate = readJobs {
+      assert(t.sql("SELECT c_mktsegment, count(*), sum(c_acctbal) FROM " +
+        "budget_reads GROUP BY c_mktsegment").collect().length == 5)
+    }
+    info(s"(jobs, read.driver, read.relational): point $point, " +
+      s"aggregate $aggregate")
+    assert(point == ((0, 1L, 0L)) && aggregate == ((0, 1L, 0L)))
+  }
+
+  test("a SELECT on a renamed table stays relational, and its scan runs " +
+      "jobs") {
+    val tmp = Files.createTempDirectory("graft_dml_renamed_read").toString
+    val t = GraftTable(spark, s"$tmp/ledger", s"$tmp/gen")
+    spark.read.parquet(s"$sf/customer.parquet")
+      .repartition(2).write.parquet(s"$tmp/landing")
+    t.ingest(s"$tmp/landing", statsCols = Seq("c_custkey"))
+    t.bindSql("budget_renamed_read")
+    t.renameColumn("c_name", "c_title")
+    t.bindSql("budget_renamed_read") // re-pins the view past the rename
+    val (jobs, driver, rel) = readJobs {
+      assert(t.sql("SELECT c_title FROM budget_renamed_read " +
+        "WHERE c_custkey = 42").collect().length == 1)
+    }
+    info(s"renamed-table point read: $jobs jobs")
+    assert(driver == 0 && rel == 1 && jobs > 0)
+    graft.streaming.MirrorLoop.rmrf(new java.io.File(tmp))
   }
 
   // on a renamed table, whose rename epoch keeps the commit's match scan

@@ -17,7 +17,19 @@ import re
 import sys
 
 
+# where a run happened; graft.Bench lines before these keys carry none
+WHERE_KEYS = ("cpus", "git_rev", "load_start", "load_end")
+
+
 def load_queries(path):
+    """(queries, errors, phases, where) of the run in `path`; `where` holds
+    the WHERE_KEYS the line carries (empty for older artifacts)."""
+    b = load_bench(path)
+    return (b["queries"], b.get("errors", {}), b.get("phases", {}),
+            {k: b[k] for k in WHERE_KEYS if k in b})
+
+
+def load_bench(path):
     with open(path) as f:
         text = f.read()
     # driver artifact?
@@ -25,8 +37,7 @@ def load_queries(path):
         d = json.loads(text)
         if isinstance(d, dict):
             if isinstance(d.get("parsed"), dict) and "queries" in d["parsed"]:
-                return (d["parsed"]["queries"], d["parsed"].get("errors", {}),
-                        d["parsed"].get("phases", {}))
+                return d["parsed"]
             if "tail" in d:
                 # A driver artifact must contain the COMPLETE one-line bench
                 # JSON. A truncated tail (r3's BENCH_r03.json lost its first
@@ -45,9 +56,9 @@ def load_queries(path):
                     sys.exit(
                         f"benchdiff: {path} 'tail' bench JSON is corrupt — "
                         "refusing to diff a partial artifact")
-                return b["queries"], b.get("errors", {}), b.get("phases", {})
+                return b
             if "queries" in d:
-                return d["queries"], d.get("errors", {}), d.get("phases", {})
+                return d
     except json.JSONDecodeError:
         pass
     # raw bench stdout: take the LAST {"metric"...} line
@@ -63,7 +74,7 @@ def load_queries(path):
     except json.JSONDecodeError:
         sys.exit(f"benchdiff: bench JSON in {path} is truncated/corrupt — "
                  "refusing to diff a partial artifact")
-    return b["queries"], b.get("errors", {}), b.get("phases", {})
+    return b
 
 
 def main():
@@ -84,8 +95,12 @@ def main():
         i += 1
     if len(args) != 2:
         sys.exit(__doc__)
-    old_q, old_e, old_p = load_queries(args[0])
-    new_q, new_e, new_p = load_queries(args[1])
+    old_q, old_e, old_p, old_w = load_queries(args[0])
+    new_q, new_e, new_p, new_w = load_queries(args[1])
+    for tag, where in (("OLD", old_w), ("NEW", new_w)):
+        if where:
+            print(f"{tag} ran on " + ", ".join(f"{k}={where[k]}" for k in WHERE_KEYS
+                                              if k in where))
 
     regressed, improved = [], []
     for name in sorted(set(old_q) | set(new_q)):
