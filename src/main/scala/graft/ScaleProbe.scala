@@ -406,8 +406,9 @@ object ScaleProbe {
         val gen = s"$mvRoot/$tag/gen"
         val viewDir = s"$mvRoot/$tag/view"
         Lake.ingestNewFiles(spark, s"$dataDir/orders.parquet", ledger)
+        Lake.enableChangeFeed(ledger)
         MatView.bootstrap(spark, ledger, viewDir, spec)
-        Lake.mergeInto(spark, ledger, gen, batch, "o_orderkey", changeFeed = true)
+        Lake.mergeInto(spark, ledger, gen, batch, "o_orderkey")
         val t = timed { MatView.applyRound(spark, ledger, viewDir, spec) }
         report(f"mv_round_$tag%-14s ${t}%6.2f s   (fixed ~1.5k-row batch)")
         t
@@ -437,8 +438,9 @@ object ScaleProbe {
           statsCols = Seq("o_orderkey", "o_custkey"))
         Lake.ingestNewFiles(spark, s"$dataDir/customer.parquet", lc,
           statsCols = Seq("c_custkey"))
+        Lake.enableChangeFeed(lo)
         JoinView.bootstrap(spark, lo, lc, viewDir, jvSpec)
-        Lake.mergeInto(spark, lo, go, jvBatch, "o_orderkey", changeFeed = true)
+        Lake.mergeInto(spark, lo, go, jvBatch, "o_orderkey")
         val t = timed { JoinView.applyRound(spark, lo, lc, viewDir, jvSpec) }
         report(f"jv_round_$tag%-14s ${t}%6.2f s   (fixed ~1.5k-row batch)")
         t
@@ -494,8 +496,8 @@ object ScaleProbe {
         Lake.ingestNewFiles(spark, s"$dataDir/orders.parquet", ledger,
           statsCols = Seq("o_orderkey"))
         val base = Lake.currentSnapshot(spark, ledger)
-        val snap = Lake.mergeInto(spark, ledger, gen, lcBatch, "o_orderkey",
-          changeFeed = true)
+        Lake.enableChangeFeed(ledger)
+        val snap = Lake.mergeInto(spark, ledger, gen, lcBatch, "o_orderkey")
         val tDiff = timed {
           Lake.tableDiff(spark, ledger, base, snap, "o_orderkey")
             .write.format("noop").mode("overwrite").save()
@@ -534,9 +536,10 @@ object ScaleProbe {
         val idx = s"$tiRoot/$tag/idx"
         graft.operators.TextIndexDelta.bootstrap(spark, srcT.ledgerDir, idx)
         import spark.implicits._
+        srcT.enableChangeFeed()
         srcT.merge((0L until 200L)
           .map(i => (900000000L + i, s"spark merge window probe doc $i"))
-          .toDF("doc_id", "text"), "doc_id", changeFeed = true)
+          .toDF("doc_id", "text"), "doc_id")
         val t = timed { graft.operators.TextIndexDelta
           .applyRound(spark, srcT.ledgerDir, idx): Unit }
         report(f"tidx_round_$tag%-12s ${t}%6.2f s   (fixed 200-doc wave)")
@@ -569,7 +572,8 @@ object ScaleProbe {
             .select(col("vec_id"),
               transform(col("embedding"), v => v * lit(2.0f)).as("embedding")))
           .localCheckpoint()
-        Lake.mergeInto(spark, ledger, gen, mdBatch, "vec_id", changeFeed = true)
+        Lake.enableChangeFeed(ledger)
+        Lake.mergeInto(spark, ledger, gen, mdBatch, "vec_id")
         val t = timed {
           graft.operators.MomentsDelta.applyRound(spark, ledger, root): Unit }
         report(f"momd_round_$tag%-12s ${t}%6.2f s   boot ${tBoot}%6.2f s   (fixed ~250-row batch)")
@@ -602,8 +606,8 @@ object ScaleProbe {
               concat(col("text"), lit(" probe tail")).as("text"),
               col("lang")))
           .localCheckpoint()
-        Lake.mergeInto(spark, ledger, s"$ddRoot/$tag/gen", ddBatch,
-          "doc_id", changeFeed = true)
+        Lake.enableChangeFeed(ledger)
+        Lake.mergeInto(spark, ledger, s"$ddRoot/$tag/gen", ddBatch, "doc_id")
         val t = timed {
           graft.operators.DsirDelta.applyRound(spark, ledger, root): Unit }
         report(f"dsird_round_$tag%-12s ${t}%6.2f s   boot ${tBoot}%6.2f s   (fixed ~250-doc batch)")
@@ -634,11 +638,10 @@ object ScaleProbe {
         val nwBatch = emb1.filter(col("vec_id") % 37 === 1)
           .select((col("vec_id") + maxId + 1).as("vec_id"), col("embedding"))
           .localCheckpoint()
-        Lake.mergeInto(spark, ledger, gen, nwBatch, "vec_id",
-          changeFeed = true)
+        Lake.enableChangeFeed(ledger)
+        Lake.mergeInto(spark, ledger, gen, nwBatch, "vec_id")
         Lake.deleteWhere(spark, ledger, gen,
-          col("vec_id") % 53 === 2 && col("vec_id") <= maxId / 20,
-          changeFeed = true)
+          col("vec_id") % 53 === 2 && col("vec_id") <= maxId / 20)
         val t = timed {
           graft.operators.NswDelta.applyRound(spark, ledger, root): Unit }
         report(f"nswd_round_$tag%-12s ${t}%6.2f s   boot ${tBoot}%6.2f s   (fixed fresh-id wave + bounded-range deletes)")

@@ -169,10 +169,10 @@ object DsirDelta {
       val rewrite = src.read().orderBy(col("doc_id")).limit(1)
         .select(col("doc_id"),
           concat(col("text"), lit(" rewritten tail")).as("text"), col("lang"))
-      src.merge(fresh.unionByName(rewrite), "doc_id", changeFeed = true)
+      src.merge(fresh.unionByName(rewrite), "doc_id")
       src.merge(
         Seq((maxId, "", "")).toDF("doc_id", "text", "lang"),
-        "doc_id", deleteWhen = Some(lit(true)), changeFeed = true): Unit
+        "doc_id", deleteWhen = Some(lit(true))): Unit
     } { (src, root) =>
       applyRound(spark, src.ledgerDir, root)
       score(spark, root, src.read())

@@ -250,7 +250,7 @@ object IvfDelta {
       .withColumn("vec_id", col("vec_id") + maxId)
     ChangeFold.gate(emb, "graft_ivfd")(
         bootstrap(spark, _, _, maxIter = 2)) {
-      _.merge(wave, "vec_id", changeFeed = true): Unit
+      _.merge(wave, "vec_id"): Unit
     } { (t, idx) =>
       applyRound(spark, t.ledgerDir, idx)
       val probeId = wave.agg(min(col("vec_id"))).head().getLong(0)

@@ -118,10 +118,10 @@ object MomentsDelta {
       val scaled = src.read().orderBy(col("vec_id")).limit(2)
         .select(col("vec_id"),
           transform(col("embedding"), v => v * lit(2.0f)).as("embedding"))
-      src.merge(fresh.unionByName(scaled), "vec_id", changeFeed = true)
+      src.merge(fresh.unionByName(scaled), "vec_id")
       src.merge(Seq((maxId, "x")).toDF("vec_id", "junk").select(col("vec_id"),
           lit(null).cast("array<float>").as("embedding")), "vec_id",
-        deleteWhen = Some(lit(true)), changeFeed = true): Unit
+        deleteWhen = Some(lit(true))): Unit
     } { (src, root) =>
       applyRound(spark, src.ledgerDir, root)
       val (m, c, n) = meanCov(spark, root)

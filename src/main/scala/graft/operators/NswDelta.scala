@@ -292,7 +292,7 @@ object NswDelta {
         // wave's scattered ids would COW-rewrite every file for a KB of
         // row removals — the sidecar path is exactly what MOR exists for,
         // and its change feed drives the fold identically
-        t.deleteMor(col("vec_id") % 97 < 8, changeFeed = true)
+        t.deleteMor(col("vec_id") % 97 < 8)
         applyRound(spark, t.ledgerDir, idx)
         driftReport(spark, idx, churnThreshold = 0.05)
     }
@@ -311,8 +311,8 @@ object NswDelta {
       .withColumn("vec_id", col("vec_id") + maxId)
     ChangeFold.gate(emb, "graft_nswd")(
         bootstrap(spark, _, _, maxIter = 2)) { t =>
-      t.merge(wave, "vec_id", changeFeed = true)
-      t.delete(col("vec_id") % 97 === 3, changeFeed = true): Unit
+      t.merge(wave, "vec_id")
+      t.delete(col("vec_id") % 97 === 3): Unit
     } { (t, idx) =>
       applyRound(spark, t.ledgerDir, idx)
       val probeId = wave.agg(min(col("vec_id"))).head().getLong(0)

@@ -165,9 +165,9 @@ object TextIndexDelta {
         (maxId + 1, "spark merge window fresh doc"),
         (maxId + 2, "spark merge another fresh doc"),
         (1L, "rewritten without the terms")).toDF("doc_id", "text"),
-        "doc_id", changeFeed = true)
+        "doc_id")
       src.merge(Seq((2L, "tombstoned")).toDF("doc_id", "text"), "doc_id",
-        deleteWhen = Some(lit(true)), changeFeed = true): Unit
+        deleteWhen = Some(lit(true))): Unit
     } { (src, idx) =>
       applyRound(spark, src.ledgerDir, idx)
       search(spark, idx, Seq("spark", "merge")).orderBy(col("doc_id"))

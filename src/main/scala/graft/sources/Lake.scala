@@ -151,9 +151,6 @@ object Lake {
     // batch — the same driver list class as the merge blast radius). A
     // quarantined path is not ledgered, so a fixed re-upload re-ingests
     // on the next run.
-    def conflicts(f: org.apache.spark.sql.types.StructType,
-        t: org.apache.spark.sql.types.StructType): Boolean =
-      f.exists(a => t.find(_.name == a.name).exists(_.dataType != a.dataType))
     val tableSchema = Some(LedgerState.index(st.liveAt(st.head)))
       .filterNot(_.isEmpty)
       .map(tableScan(spark, ledgerDir, _, st.head).schema)
@@ -244,6 +241,12 @@ object Lake {
       recordSchema(ledgerDir, nextSnapshot, goodSchema)
     n
   }
+
+  /** Whether a column of `f` has another type in `t` — what an ingest
+    * quarantines (absent and new columns do not conflict). */
+  private def conflicts(f: org.apache.spark.sql.types.StructType,
+      t: org.apache.spark.sql.types.StructType): Boolean =
+    f.exists(a => t.find(_.name == a.name).exists(_.dataType != a.dataType))
 
   /** Canonical ledger row columns (`stats` nullable — null or an absent
     * map key means "no stats recorded, never skip this file"). */
@@ -552,17 +555,21 @@ object Lake {
   }
 
   /** CHANGE DATA FEED read — the Delta `table_changes` / Iceberg changelog
-    * analog: every row-level effect each MERGE after `sinceSnapshot`
-    * committed, typed `_change_type` ∈ insert | update_preimage |
-    * update_postimage | delete and stamped `_commit_snapshot`. Unlike
+    * analog: every row-level effect committed after `sinceSnapshot` while
+    * the table's feed was on ([[enableChangeFeed]]), typed `_change_type`
+    * ∈ insert | update_preimage | update_postimage | delete and stamped
+    * `_commit_snapshot`. On a feed table every row-level writer (MERGE,
+    * UPDATE, DELETE, overwrite, their MOR forms) and every INSERT
+    * records its changes, whether called here or through SQL; `ingest`
+    * of landing files and `restore` record none. Unlike
     * `readSince` (which replays added ROWS and cannot express deletes or
     * distinguish an update from an insert), the change feed lets a
     * downstream consumer maintain an exact mirror or audit row history.
-    * cdc files are written once per merge (cost bounded by the merge's
-    * blast radius), registered under op="cdc" — invisible to every
+    * cdc files are written once per commit (cost bounded by its blast
+    * radius), registered under op="cdc" — invisible to every
     * table-state reader, never vacuumed (no add row) — and plan through
     * `LedgerFileIndex` like every other read (no driver path list).
-    * When no merge landed after the snapshot the frame is zero-row but
+    * When no change landed after the snapshot the frame is zero-row but
     * SCHEMA-CARRYING whenever any cdc file exists (a consumer may project
     * or filter on `_change_type` before checking emptiness, like
     * readSince's zero-row frames); only a table that never wrote a change
@@ -573,6 +580,15 @@ object Lake {
   def readChanges(spark: SparkSession, ledgerDir: String,
       sinceSnapshot: Long): DataFrame =
     changesOf(spark, LedgerState.open(spark, ledgerDir), sinceSnapshot)
+
+  /** Turn the table's CHANGE FEED on — Delta's
+    * `delta.enableChangeDataFeed` table property: every later commit of a
+    * row-level writer or an INSERT records its change rows
+    * ([[readChanges]]). A fact about the table, so no caller needs to
+    * know the table's feed policy; branches inherit it. Idempotent, and
+    * nothing turns it off. */
+  def enableChangeFeed(ledgerDir: String): Unit =
+    TableMeta.ChangeFeed.set(ledgerDir)
 
   private def changesOf(spark: SparkSession, st: LedgerState,
       sinceSnapshot: Long): DataFrame = {
@@ -2016,6 +2032,9 @@ object Lake {
       Some(LedgerState.index(liveActs)).filterNot(_.isEmpty)
     lazy val target: Option[DataFrame] =
       index.map(tableScan(spark, ledgerDir, _, snap))
+    /** Whether the table's change feed is on: the commit then writes its
+      * `changes` output. */
+    val feed: Boolean = TableMeta.ChangeFeed.exists(ledgerDir)
 
     /** Run `body` with its jobs described as this commit's step `name`. */
     def step[T](name: String)(body: => T): T =
@@ -2171,7 +2190,7 @@ object Lake {
       * `_commit_snapshot`, `dv` rows with their `dv_snap`). The adds of
       * every written dir come from ONE [[addsTagged]] call — carry adds
       * snapshot_op "replace" (rows that merely moved files; incremental
-      * consumers skip them, like compaction), delta adds "merge" (what
+      * consumers skip them, like compaction), delta adds `deltaOp` (what
       * readSince surfaces, exactly once), cdc and dv rows `changeOp`
       * (inert to every live-set reader — neither add nor remove — and
       * never vacuumed) — and carry/delta stat against the table's
@@ -2185,7 +2204,7 @@ object Lake {
       * nothing, keeps no reservation and returns `snap`. Any failure
       * releases the reservation ([[reserving]]). */
     def commit(removed: Seq[String] = Nil, removeOp: String = "merge",
-        changeOp: String = "merge",
+        changeOp: String = "merge", deltaOp: String = "merge",
         staged: Option[org.apache.spark.sql.types.StructType] = None)(
         write: GenWrite => Unit): Long = reserving(spark, ledgerDir, next) {
       lazy val contract = liveStatsContract(st, snap, renameLog(ledgerDir))
@@ -2194,7 +2213,7 @@ object Lake {
       write { (leaf, rows) =>
         val (op, snapOp, stamped) = leaf match {
           case "carry" => ("add", "replace", rows)
-          case "delta" => ("add", "merge", rows)
+          case "delta" => ("add", deltaOp, rows)
           case "changes" => ("cdc", changeOp,
             rows.withColumn("_commit_snapshot", lit(next)))
           case "dv" => ("dv", changeOp, rows.withColumn("dv_snap", lit(next)))
@@ -2460,20 +2479,20 @@ object Lake {
       else Some(org.apache.spark.sql.types.StructType(unionNames.map(n =>
         org.apache.spark.sql.types.StructField(n, dtypeOf(n)))))
 
-    /** The merge's `delta` (and, with `changeFeed`, `changes`) outputs once
+    /** The merge's `delta` (and, on a feed table, `changes`) outputs once
       * `matched` keys are known (None: nothing matched). `deleteWhen`
       * consumes MATCHED source rows only (SQL MERGE semantics); every
       * surviving source row lands — whole-row replace makes updates and
       * inserts both just the live source. The standing CHECK constraints
       * gate those rows HERE, before any reservation (a violating merge
       * never contends for the id). CHANGE DATA FEED (the Delta CDF /
-      * Iceberg changelog analog, opt-in like enableChangeDataFeed — the
-      * classification re-reads the blast radius): a matched key whose
+      * Iceberg changelog analog — the classification re-reads the blast
+      * radius): a matched key whose
       * source row survives deleteWhen is an update (pre + post image),
       * one consumed by deleteWhen is a delete (pre image), an unmatched
       * source row is an insert. */
-    def outputs(matched: Option[KeySet], pre: => DataFrame,
-        changeFeed: Boolean): GenWrite => Unit = {
+    def outputs(matched: Option[KeySet], pre: => DataFrame)
+        : GenWrite => Unit = {
       val srcLive = (deleteWhen, matched) match {
         case (Some(w), Some(mk)) => mk.unless(source, w)
         case _ => source // no delete clause, or nothing matched
@@ -2482,7 +2501,7 @@ object Lake {
       out => {
         def tag(df: DataFrame, t: String): DataFrame =
           conform(df).withColumn("_change_type", lit(t))
-        if (changeFeed) out("changes", matched match {
+        if (c.feed) out("changes", matched match {
           case Some(mk) =>
             val liveKeys = mk.keysOf(srcLive)
             val matchedPre = mk.semi(pre)
@@ -2537,10 +2556,9 @@ object Lake {
   def mergeInto(spark: SparkSession, ledgerDir: String, genRoot: String,
       source: DataFrame, key: String,
       deleteWhen: Option[org.apache.spark.sql.Column] = None,
-      changeFeed: Boolean = false,
       evolveSchema: Boolean = false): Long =
     mergeIntoKeys(spark, ledgerDir, genRoot, source, Seq(key), deleteWhen,
-      changeFeed, evolveSchema)
+      evolveSchema)
 
   /** [[mergeInto]] on a COMPOSITE key — the (date, id) / (tenant, key)
     * tables every real warehouse has. Identical semantics with the match
@@ -2552,7 +2570,6 @@ object Lake {
   def mergeIntoKeys(spark: SparkSession, ledgerDir: String, genRoot: String,
       source: DataFrame, keys: Seq[String],
       deleteWhen: Option[org.apache.spark.sql.Column] = None,
-      changeFeed: Boolean = false,
       evolveSchema: Boolean = false): Long =
     rowCommit(spark, ledgerDir, genRoot, "merge") { c =>
     val m = new MergePrep(spark, ledgerDir, c, source, keys, deleteWhen,
@@ -2571,7 +2588,7 @@ object Lake {
     val affectedScan: Option[DataFrame] =
       if (affected.isEmpty) None else Some(c.affectedRows(affected))
     val matched: Option[KeySet] = affectedScan.map(m.matchedIn)
-    val mergeOut = m.outputs(matched, affectedScan.get, changeFeed)
+    val mergeOut = m.outputs(matched, affectedScan.get)
     c.commit(c.actsOf(affected), staged = m.evolved) { out =>
       mergeOut(out)
       affectedScan.foreach(rows =>
@@ -2585,7 +2602,7 @@ object Lake {
     * incremental consumers see nothing — COW delete semantics). Time travel
     * to any prior snapshot still sees the deleted rows. */
   def deleteWhere(spark: SparkSession, ledgerDir: String, genRoot: String,
-      cond: org.apache.spark.sql.Column, changeFeed: Boolean = false): Long =
+      cond: org.apache.spark.sql.Column): Long =
     rowCommit(spark, ledgerDir, genRoot, "delete") { c =>
     if (c.index.isEmpty) return c.snap // empty table: nothing to delete
     val cols = c.target.get.columns.map(col)
@@ -2598,11 +2615,11 @@ object Lake {
     c.commit(c.actsOf(affected), removeOp = "replace", changeOp = "replace") {
       out =>
         out("carry", rows.filter(!coalesce(cond, lit(false))).select(cols: _*))
-        // opt-in CHANGE FEED (the mergeInto discipline): the deleted rows'
+        // CHANGE FEED (the mergeInto discipline): the deleted rows'
         // PRE-IMAGES as _change_type='delete' cdc rows, bounded by the
         // delete's blast radius — without it a readChanges-maintained
         // mirror would silently keep rows this table dropped
-        if (changeFeed) out("changes", rows
+        if (c.feed) out("changes", rows
           .filter(coalesce(cond, lit(false))).select(cols: _*)
           .withColumn("_change_type", lit("delete")))
     }
@@ -2621,14 +2638,13 @@ object Lake {
     * constraints are
     * enforced on the POST-image of the updated rows before anything is
     * reserved or written (read-only scan; a refused update aborts with
-    * the table bit-unchanged). Opt-in `changeFeed` records
+    * the table bit-unchanged). On a feed table it records
     * update_preimage/update_postimage pairs, the [[mergeInto]] CDC
     * shape. Returns the new snapshot (or the current one when nothing
     * matched). */
   def updateWhere(spark: SparkSession, ledgerDir: String, genRoot: String,
       cond: org.apache.spark.sql.Column,
-      sets: Seq[(String, org.apache.spark.sql.Column)],
-      changeFeed: Boolean = false): Long =
+      sets: Seq[(String, org.apache.spark.sql.Column)]): Long =
     rowCommit(spark, ledgerDir, genRoot, "update") { c =>
     require(sets.nonEmpty, "UPDATE with no assignments")
     if (c.index.isEmpty) return c.snap // empty table: nothing to update
@@ -2701,7 +2717,7 @@ object Lake {
       out("carry",
         affectedRows.filter(!coalesce(cond, lit(false))).select(cols: _*))
       out("delta", postImage(pre))
-      if (changeFeed) out("changes",
+      if (c.feed) out("changes",
         pre.withColumn("_change_type", lit("update_preimage"))
           .unionByName(postImage(pre)
             .withColumn("_change_type", lit("update_postimage"))))
@@ -2751,30 +2767,23 @@ object Lake {
     * auto-releases. Returns the delete's snapshot id (or the current one
     * when nothing matched). */
   def deleteWhereMor(spark: SparkSession, ledgerDir: String, genRoot: String,
-      cond: org.apache.spark.sql.Column, changeFeed: Boolean = false): Long =
+      cond: org.apache.spark.sql.Column): Long =
     deleteMorMatching(spark, ledgerDir, genRoot,
-      df => df.filter(coalesce(cond, lit(false))), changeFeed)
+      df => df.filter(coalesce(cond, lit(false))))
 
   /** [[deleteWhereMor]] with a RELATIONAL key predicate: delete the rows
-    * whose `keyCol` appears in `keys` (a semi-join, never a driver-side
-    * In list — the backfill-wave form: a Column predicate would need the
-    * key set materialized on the driver, unbounded for a change-feed
+    * whose key columns `keyCols` appear in `keys` (a semi-join on every
+    * column — the mergeIntoKeys convention — never a driver-side In
+    * list: the backfill-wave form, where a Column predicate would need
+    * the key set materialized on the driver, unbounded for a change-feed
     * wave re-ingesting a corpus slice). Same sidecar/ledger semantics. */
-  def deleteWhereMorKeys(spark: SparkSession, ledgerDir: String,
-      genRoot: String, keys: org.apache.spark.sql.DataFrame, keyCol: String,
-      changeFeed: Boolean = false): Long =
-    deleteWhereMorKeysCols(spark, ledgerDir, genRoot, keys, Seq(keyCol),
-      changeFeed)
-
-  /** [[deleteWhereMorKeys]] on a COMPOSITE key — the semi-join matches
-    * on every column of `keyCols` (the mergeIntoKeys convention). */
   def deleteWhereMorKeysCols(spark: SparkSession, ledgerDir: String,
       genRoot: String, keys: org.apache.spark.sql.DataFrame,
-      keyCols: Seq[String], changeFeed: Boolean = false): Long = {
+      keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "delete needs at least one key column")
     val k = keys.select(keyCols.map(col): _*).distinct()
     deleteMorMatching(spark, ledgerDir, genRoot,
-      df => df.join(k, keyCols, "left_semi"), changeFeed)
+      df => df.join(k, keyCols, "left_semi"))
   }
 
   /** MOR KEY REPLACEMENT — every live row that `cond` matches drops as a
@@ -2793,19 +2802,18 @@ object Lake {
       genRoot: String, cond: org.apache.spark.sql.Column,
       rows: DataFrame): Long =
     deleteMorMatching(spark, ledgerDir, genRoot,
-      df => df.filter(coalesce(cond, lit(false))), changeFeed = false,
-      Some(rows))
+      df => df.filter(coalesce(cond, lit(false))), Some(rows))
 
   /** [[replaceWhereMor]] with a RELATIONAL key predicate: the rows whose
-    * `keyCol` appears in `keys` (a semi-join — the [[deleteWhereMorKeys]]
-    * form for a wave too large for a driver-side key list). */
+    * `keyCol` appears in `keys` (a semi-join — the
+    * [[deleteWhereMorKeysCols]] form for a wave too large for a
+    * driver-side key list). */
   def replaceWhereMorKeys(spark: SparkSession, ledgerDir: String,
       genRoot: String, keys: DataFrame, keyCol: String,
       rows: DataFrame): Long = {
     val k = keys.select(col(keyCol)).distinct()
     deleteMorMatching(spark, ledgerDir, genRoot,
-      df => df.join(k, Seq(keyCol), "left_semi"), changeFeed = false,
-      Some(rows))
+      df => df.join(k, Seq(keyCol), "left_semi"), Some(rows))
   }
 
   /** The MOR delete skeleton: the DV-applied rows `matches` keeps drop
@@ -2813,7 +2821,7 @@ object Lake {
     * same snapshot ([[replaceWhereMor]]). */
   private def deleteMorMatching(spark: SparkSession, ledgerDir: String,
       genRoot: String, matches: DataFrame => DataFrame,
-      changeFeed: Boolean, rows: Option[DataFrame] = None): Long =
+      rows: Option[DataFrame] = None): Long =
     rowCommit(spark, ledgerDir, genRoot,
         if (rows.isEmpty) "delete" else "replace") { c =>
     // the incoming rows: conformed, in hand when driver-bounded, gated
@@ -2824,10 +2832,20 @@ object Lake {
       enforceConstraints(spark, ledgerDir, named)
       named
     }.filter(nonEmpty)
+    // CHANGE FEED: the `deleted` pre-images (the rows the sidecar points
+    // at — cost bounded by the delete size, like the sidecar) and the
+    // incoming rows' insert images
+    def feedOut(out: GenWrite, deleted: => Option[DataFrame]): Unit =
+      if (c.feed) (deleted.map(_.withColumn("_change_type", lit("delete")))
+          ++ fresh.map(_.withColumn("_change_type", lit("insert"))))
+        .reduceOption(_.unionByName(_)).foreach(out("changes", _))
     // an empty table: nothing to delete
     if (c.index.isEmpty) {
       if (fresh.isEmpty) return c.snap
-      return c.commit(changeOp = "mor-merge")(out => out("delta", fresh.get))
+      return c.commit(changeOp = "mor-merge") { out =>
+        out("delta", fresh.get)
+        feedOut(out, None)
+      }
     }
     // already-deleted rows must not re-record their positions (the
     // anti-join would dedup them, but sidecar sizes and dvRows() counts
@@ -2848,7 +2866,7 @@ object Lake {
     // same rows in hand
     val ids = Seq(col("__graft_fp"), col("__graft_pos"))
     def hitsOf(df: DataFrame): DataFrame =
-      if (changeFeed) matches(df) else matches(df).select(ids: _*)
+      if (c.feed) matches(df) else matches(df).select(ids: _*)
     val hitRows: Option[DataFrame] = c.driveScan(matches) match {
       case Some(sc) =>
         c.onDriver(sc.bytes)
@@ -2867,12 +2885,8 @@ object Lake {
     c.commit(changeOp = if (rows.isEmpty) "mor-delete" else "mor-merge") {
         out =>
       if (anyHits) out("dv", hits)
-      // opt-in CHANGE FEED: deleted pre-images, same rows the sidecar
-      // points at (cost bounded by the delete size, like the sidecar)
-      if (anyHits && changeFeed) out("changes",
-        hitRows.getOrElse(matches(target))
-          .drop("__graft_fp", "__graft_pos")
-          .withColumn("_change_type", lit("delete")))
+      feedOut(out, if (!anyHits) None else Some(
+        hitRows.getOrElse(matches(target)).drop("__graft_fp", "__graft_pos")))
       fresh.foreach(out("delta", _))
     }
   }
@@ -3011,11 +3025,16 @@ object Lake {
     * (PAR1 + schema quarantine, CHECK constraints, adler32 + stats all
     * apply). The table's standing skipping contract (stats/bloom column
     * lists observed on the live files) carries onto the new files
-    * automatically, so appends never erode manifest pruning. Returns the
-    * new snapshot (the current one when `rows` is empty). */
+    * automatically, so appends never erode manifest pruning. On a feed
+    * table the rows land through [[landRows]] instead, beside their
+    * insert images. Returns the new snapshot (the current one when `rows`
+    * is empty). */
   def appendRows(spark: SparkSession, ledgerDir: String, genRoot: String,
       rows: DataFrame): Long =
-    described(spark, "Lake.commit insert") {
+    if (TableMeta.ChangeFeed.exists(ledgerDir))
+      rowCommit(spark, ledgerDir, genRoot, "insert")(
+        landRows(spark, ledgerDir, _, rows, replace = false))
+    else described(spark, "Lake.commit insert") {
     // a driver-bounded frame is collected once (its one data pass):
     // emptiness, constraints, the write and the new file's stats all
     // read the rows in hand
@@ -3053,64 +3072,66 @@ object Lake {
     * store-assignment contract). Adds land `snapshot_op="merge"` (the
     * rows are genuinely new content — `readSince` consumers see them
     * exactly once); removes land `snapshot_op="overwrite"` (display-only
-    * on remove rows — `history()` shows the op distinctly). Opt-in
-    * CHANGE FEED records delete pre-images for every old row plus
-    * inserts for every new row (a full-table cost by definition of
+    * on remove rows — `history()` shows the op distinctly). On a feed
+    * table the CHANGE FEED records delete pre-images for every old row
+    * plus inserts for every new row (a full-table cost by definition of
     * overwrite — the one lake op whose blast radius IS the table); the
     * insert side re-reads the LANDED delta files, so cdc rows match the
     * committed bytes even for a nondeterministic `rows` plan. An empty
     * `rows` is TRUNCATE: pure removes, no generation write. An empty
     * table delegates to [[appendRows]]. Scale: cost is O(new data +
     * old FILE COUNT) — the removes are ledger rows, old data is never
-    * read (except under the opt-in change feed). */
+    * read (except under the change feed). */
   def overwriteWith(spark: SparkSession, ledgerDir: String, genRoot: String,
-      rows: DataFrame, changeFeed: Boolean = false): Long =
+      rows: DataFrame): Long =
     rowCommit(spark, ledgerDir, genRoot, "overwrite") { c =>
-    // an empty table may only delegate to the plain append when NO change
-    // feed is requested: appendRows records no cdc rows, and a feed
-    // consumer (MomentsDelta/TextIndexDelta maintenance) would silently
-    // miss every inserted row of the overwrite — an overwrite's inserts
-    // must land insert-images regardless of prior emptiness (the Delta
-    // CDF contract). The empty+changeFeed path below commits adds + cdc
-    // with no removes in the same one-snapshot shape.
-    if (c.index.isEmpty && !changeFeed)
-      return appendRows(spark, ledgerDir, genRoot, rows)
-    // the incoming rows, and the old rows a change feed deletes, on the
-    // driver when they are driver-bounded (collected once: emptiness,
-    // constraints, the write and the insert images read them in hand)
-    c.onDriver((estimatedBytes(rows) + (if (changeFeed) c.liveBytes else 0L))
-      .min(BigInt(Long.MaxValue)).toLong)
+    // an empty table has nothing to replace: a plain append (which
+    // records the insert images on a feed table)
+    if (c.index.isEmpty) appendRows(spark, ledgerDir, genRoot, rows)
+    else landRows(spark, ledgerDir, c, rows, replace = true)
+  }
+
+  /** Land `rows` as commit `c`'s delta: in place of every live file when
+    * `replace` ([[overwriteWith]]), beside them otherwise (an
+    * [[appendRows]] on a feed table, its adds tagged "append" as an
+    * ingest's are; no rows land nothing). The incoming rows, and the old
+    * rows a change feed deletes, are on the driver when driver-bounded
+    * (collected once: emptiness, constraints, the write and the insert
+    * images read them in hand). On a feed table the change rows are the
+    * replaced rows' delete pre-images and the landed rows' insert
+    * images. */
+  private def landRows(spark: SparkSession, ledgerDir: String, c: RowCommit,
+      rows: DataFrame, replace: Boolean): Long = {
+    c.onDriver((estimatedBytes(rows) + (if (replace && c.feed) c.liveBytes
+      else 0L)).min(BigInt(Long.MaxValue)).toLong)
     val rowsL = c.hold(rows)
+    // an append refuses the column types an ingest would quarantine
+    require(replace || c.target.forall(t => !conflicts(
+        org.apache.spark.sql.GraftShim.asNullable(rowsL.schema), t.schema)),
+      s"appended columns conflict with the table's types: ${rowsL.schema}")
     enforceConstraints(spark, ledgerDir, rowsL)
     val newEmpty = rowsL.isEmpty
-    // truncating an already-empty table: nothing to remove, nothing to
-    // add, no change rows — a genuine no-op at the current snapshot
-    if (c.index.isEmpty && newEmpty) return c.snap
-    // a table whose FIRST row-landing snapshot comes through this path
-    // (empty ledger + changeFeed — the appendRows delegate normally
-    // records via ingestNewFiles) must still get a schema recording,
-    // or every later plan pays footer inference and a subsequent
-    // TRUNCATE leaves the zero-file table schema-less (unreadable)
+    if (newEmpty && !replace) return c.snap
+    // a table with no schema recording yet (a new one, or one a merge
+    // created) records the incoming schema: otherwise every later plan
+    // pays footer inference, and a later TRUNCATE leaves the zero-file
+    // table schema-less (unreadable)
     val needSchema = !newEmpty &&
       recordedSchemaAt(ledgerDir, Long.MaxValue).isEmpty
-    c.commit(c.liveActs.map(_.path), removeOp = "overwrite",
+    val op = if (replace) "merge" else "append"
+    c.commit(if (replace) c.liveActs.map(_.path) else Nil,
+        removeOp = "overwrite", changeOp = op, deltaOp = op,
         staged = if (needSchema) Some(rows.schema) else None) { out =>
       if (!newEmpty) out("delta", rowsL)
-      if (changeFeed) {
-        val inserted =
-          if (newEmpty) None
-          else Some(landed(spark, rowsL, s"${c.genDir}/delta")
-            .withColumn("_change_type", lit("insert")))
-        val deleted = c.index.map(_ =>
-          c.liveRows.withColumn("_change_type", lit("delete")))
-        // an empty table with empty rows returned above, so at least one
-        // side is present here
-        out("changes", (deleted ++ inserted).reduce(_.unionByName(_)))
-      }
+      if (c.feed) out("changes", (Option.when(replace)(
+          c.liveRows.withColumn("_change_type", lit("delete"))) ++
+        Option.when(!newEmpty)(landed(spark, rowsL, s"${c.genDir}/delta")
+          .withColumn("_change_type", lit("insert")))
+      ).reduce(_.unionByName(_)))
     }
   }
 
-  /** The rows an overwrite's delta landed at `dir`, as its change feed's
+  /** The rows a [[landRows]] delta landed at `dir`, as its change feed's
     * insert images: `rows` themselves when they are in hand (the exact
     * rows written, with the nullable schema a read of the file has), a
     * re-read of the landed files otherwise — so cdc rows match the
@@ -3143,14 +3164,13 @@ object Lake {
     * Empty `rows` = a scoped delete (pure removes+carry). Ledger shape:
     * carry adds land snapshot_op="replace" (incremental consumers skip
     * them), delta adds "merge" (consumers see the new rows exactly
-    * once), removes "overwrite" (history() shows the verb). Opt-in
-    * change feed records delete pre-images for every replaced row plus
+    * once), removes "overwrite" (history() shows the verb). On a feed
+    * table the change feed records delete pre-images for every replaced row plus
     * insert images for `rows` — cost bounded by the region, like
     * everything else here. Returns the new snapshot (current one when
     * the region is empty and `rows` is too). */
   def overwriteWhere(spark: SparkSession, ledgerDir: String, genRoot: String,
-      pred: org.apache.spark.sql.Column, rows: DataFrame,
-      changeFeed: Boolean = false): Long =
+      pred: org.apache.spark.sql.Column, rows: DataFrame): Long =
     rowCommit(spark, ledgerDir, genRoot, "overwrite") { c =>
     // materialize the incoming frame ONCE (the runMergeColumnList USING
     // discipline): it is evaluated several times below (emptiness, the
@@ -3170,14 +3190,10 @@ object Lake {
         "satisfy the predicate — they lie outside the replaced region")
       enforceConstraints(spark, ledgerDir, rowsM)
     }
-    if (c.index.isEmpty) {
-      // empty table: the region is trivially empty — a pure insert.
-      // Delegate to the whole-table overwrite (NOT appendRows): its
-      // empty-table path carries the change feed's insert images, which
-      // appendRows does not record (the overwriteWith lesson)
+    // empty table: the region is trivially empty — a pure insert
+    if (c.index.isEmpty)
       return if (newEmpty) c.snap
-        else overwriteWith(spark, ledgerDir, genRoot, rowsM, changeFeed)
-    }
+        else appendRows(spark, ledgerDir, genRoot, rowsM)
     val cols = c.target.get.columns.map(col)
     // only files actually holding a match enter the blast radius
     val affected = c.affectedWhere(pred)
@@ -3188,12 +3204,12 @@ object Lake {
     // updateWhere discipline)
     val affectedRows: Option[DataFrame] =
       if (affected.isEmpty) None
-      else Some(c.affectedRows(affected, reuse = changeFeed))
+      else Some(c.affectedRows(affected, reuse = c.feed))
     c.commit(c.actsOf(affected), removeOp = "overwrite") { out =>
       affectedRows.foreach(r => out("carry",
         r.filter(!coalesce(pred, lit(false))).select(cols: _*)))
       if (!newEmpty) out("delta", rowsM)
-      if (changeFeed) {
+      if (c.feed) {
         val deleted = affectedRows
           .map(_.filter(coalesce(pred, lit(false))))
           .getOrElse(c.target.get.limit(0))
@@ -3557,7 +3573,7 @@ object Lake {
     * scan is DV-applied, so rows already MOR-deleted can neither
     * re-record positions nor surface as change-feed pre-images.
     *
-    * `changeFeed` classifies the same insert / update pre+post /
+    * On a feed table it classifies the same insert / update pre+post /
     * delete images as COW merge (from the DV-applied matched scan +
     * source — never a full-table re-pass beyond the match scan itself)
     * under op="cdc", so MirrorLoop/MatView consumers work unchanged over
@@ -3574,10 +3590,9 @@ object Lake {
   def mergeIntoMor(spark: SparkSession, ledgerDir: String, genRoot: String,
       source: DataFrame, key: String,
       deleteWhen: Option[org.apache.spark.sql.Column] = None,
-      changeFeed: Boolean = false,
       genSuffix: Option[String] = None): Long =
     mergeIntoMorKeys(spark, ledgerDir, genRoot, source, Seq(key), deleteWhen,
-      changeFeed, genSuffix)
+      genSuffix)
 
   /** [[mergeIntoMor]] on a COMPOSITE key — equality on every column of
     * `keys`, per-column BETWEEN range scoping on the match scan (the
@@ -3585,7 +3600,6 @@ object Lake {
   def mergeIntoMorKeys(spark: SparkSession, ledgerDir: String,
       genRoot: String, source: DataFrame, keys: Seq[String],
       deleteWhen: Option[org.apache.spark.sql.Column] = None,
-      changeFeed: Boolean = false,
       genSuffix: Option[String] = None): Long =
     rowCommit(spark, ledgerDir, genRoot, "merge", genSuffix = genSuffix) { c =>
     val m = new MergePrep(spark, ledgerDir, c, source, keys, deleteWhen,
@@ -3616,10 +3630,10 @@ object Lake {
     c.onDriver(m.commitBytes(driven.fold(c.liveBytes)(_.bytes)))
     val matchedIds: Option[DataFrame] = driven.map(_.live) match {
       case Some(rows) => Some(org.apache.spark.sql.GraftLocal.materialize(
-        if (changeFeed) m.matching(rows) else narrow(m.matching(rows))))
+        if (c.feed) m.matching(rows) else narrow(m.matching(rows))))
       case None => matched.map { df =>
         c.step("match") {
-          val held = c.hold(if (changeFeed) df else narrow(df))
+          val held = c.hold(if (c.feed) df else narrow(df))
           if (c.driver) held else narrow(df).localCheckpoint()
         }
       }
@@ -3631,7 +3645,7 @@ object Lake {
       if (!anyMatches) None else matchedIds.map(m.srcKeySet.keysOf)
     val mergeOut = m.outputs(matchedKeys,
       (if (c.driver) matchedIds else matched).get
-        .drop("__graft_fp", "__graft_pos"), changeFeed)
+        .drop("__graft_fp", "__graft_pos"))
     // dv sidecars are positional metadata — no stats (they are never
     // live-set scanned)
     c.commit(changeOp = "mor-merge") { out =>
@@ -4080,15 +4094,15 @@ object Lake {
     graft.BenchPhase("fixture") {
       cust.repartition(8).write.parquet(landing)
       ingestNewFiles(spark, landing, ledger)
+      enableChangeFeed(ledger)
       mergeInto(spark, ledger, gen,
         cust.filter(col("c_custkey") % 7 === 0)
           .withColumn("c_acctbal", col("c_acctbal") + 1000),
-        "c_custkey", changeFeed = true)
+        "c_custkey")
       mergeInto(spark, ledger, gen,
         cust.filter(col("c_custkey") % 14 === 0)
           .withColumn("c_acctbal", col("c_acctbal") + 1500),
-        "c_custkey", deleteWhen = Some(col("c_mktsegment") === "BUILDING"),
-        changeFeed = true)
+        "c_custkey", deleteWhen = Some(col("c_mktsegment") === "BUILDING"))
     }
     val out = graft.BenchPhase("op") {
       scd2(readChanges(spark, ledger, 0), "c_custkey")
@@ -4581,12 +4595,14 @@ object Lake {
     * missing them would read pre-rename files through the wrong physical
     * names); generated-column expressions and column defaults (missing
     * ones would lose the fills, and the copied gen_ constraints would
-    * then refuse writes the source accepts); and the identity allocators.
-    * Tags are refs into main's history, not table metadata: they stay. */
+    * then refuse writes the source accepts); the identity allocators; and
+    * the change-feed marker (a branch's DML must feed its consumers as
+    * main's does). Tags are refs into main's history, not table
+    * metadata: they stay. */
   private val BranchedMeta: Seq[TableMeta.Kind] = {
     import TableMeta._
     Seq(Constraints, Schemas, Renames, Widens, Generated, Defaults, Identity,
-      Evolved)
+      Evolved, ChangeFeed)
   }
 
   /** The kinds [[publish]] fast-forwards onto main, each only for the

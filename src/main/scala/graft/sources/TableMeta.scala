@@ -19,7 +19,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
   *    (a generation expression), `_defaults/<col>` (a DEFAULT
   *    expression), `_identity/<col>` (`start step hwm`);
   *  - the `_evolved` MARKER (empty file: merged-footer reads for tables
-  *    without a schema recording);
+  *    without a schema recording) and the `_changefeed` MARKER (every
+  *    row-level commit records its change rows);
   *  - `_branch.json`, a branch's lineage.
   *
   * Every write lands a dot-named temp beside its target and
@@ -156,5 +157,6 @@ private[sources] object TableMeta {
   val Defaults = new Keyed("_defaults")
   val Identity = new Keyed("_identity")
   val Evolved = new Single("_evolved")
+  val ChangeFeed = new Single("_changefeed")
   val Lineage = new Single("_branch.json")
 }

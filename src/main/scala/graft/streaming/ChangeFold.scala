@@ -253,7 +253,8 @@ object ChangeFold {
       throw new IllegalStateException(s"no state row in $dir"))
 
   /** The driver-gate scaffold of a maintained state: in a temp dir, lake
-    * `rows` as the source (4 files), bootstrap the state at `root`
+    * `rows` as the source (4 files) with its change feed on, bootstrap
+    * the state at `root`
     * (`bootstrap(srcLedger, root)`) and land the `wave` of change-feed
     * commits — the bench "fixture" phase; then `op` (the round and a
     * read of the state) is the "op" phase, its result materialized
@@ -267,6 +268,7 @@ object ChangeFold {
     graft.BenchPhase("fixture") {
       rows.repartition(4).write.parquet(s"$tmp/landing")
       src.ingest(s"$tmp/landing")
+      src.enableChangeFeed()
       bootstrap(src.ledgerDir, root)
       wave(src)
     }

@@ -223,6 +223,8 @@ object JoinView {
         .write.parquet(s"$tmp/c_landing")
       Lake.ingestNewFiles(spark, s"$tmp/c_landing", lc,
         statsCols = Seq("c_custkey"))
+      Lake.enableChangeFeed(lo)
+      Lake.enableChangeFeed(lc)
       bootstrap(spark, lo, lc, viewDir, spec): Unit
     }
     val out = graft.BenchPhase("op") {
@@ -234,7 +236,7 @@ object JoinView {
       val ins = orders.filter(col("o_orderkey") % 97 === 0)
         .withColumn("o_orderkey", col("o_orderkey") + 10000000)
       Lake.mergeInto(spark, lo, go, upd.unionByName(ins), "o_orderkey",
-        deleteWhen = Some(col("o_orderstatus") === "F"), changeFeed = true)
+        deleteWhen = Some(col("o_orderstatus") === "F"))
       applyRound(spark, lo, lc, viewDir, spec)
       // customer wave: every 11th moves to BUILDING, every 50th+3
       // deleted (their orders leave the view)
@@ -244,12 +246,11 @@ object JoinView {
       val gone = cust.filter(col("c_custkey") % 50 === 3)
         .withColumn("c_mktsegment", lit("dropped"))
       Lake.mergeInto(spark, lc, gc, moved.unionByName(gone), "c_custkey",
-        deleteWhen = Some(col("c_mktsegment") === "dropped"),
-        changeFeed = true)
+        deleteWhen = Some(col("c_mktsegment") === "dropped"))
       // both-sides round: one more orders wave lands BEFORE the round
       val ins2 = orders.filter(col("o_orderkey") % 101 === 0)
         .withColumn("o_orderkey", col("o_orderkey") + 20000000)
-      Lake.mergeInto(spark, lo, go, ins2, "o_orderkey", changeFeed = true)
+      Lake.mergeInto(spark, lo, go, ins2, "o_orderkey")
       applyRound(spark, lo, lc, viewDir, spec)
       view(spark, viewDir)
         .select(col("c_mktsegment"), col("mv_cnt").as("n_orders"),

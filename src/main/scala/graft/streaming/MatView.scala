@@ -218,6 +218,7 @@ object MatView {
     graft.BenchPhase("fixture") {
       orders.repartitionByRange(8, col("o_orderkey")).write.parquet(landing)
       Lake.ingestNewFiles(spark, landing, ledger)
+      Lake.enableChangeFeed(ledger)
       bootstrap(spark, ledger, viewDir, spec)
     }
     val upd1 = orders.filter(col("o_orderkey") % 7 === 0
@@ -227,13 +228,13 @@ object MatView {
       .withColumn("o_orderkey", col("o_orderkey") + 10000000)
     graft.BenchPhase("op") {
     Lake.mergeInto(spark, ledger, gen, upd1.unionByName(ins1), "o_orderkey",
-      deleteWhen = Some(col("o_orderstatus") === "F"), changeFeed = true)
+      deleteWhen = Some(col("o_orderstatus") === "F"))
     applyRound(spark, ledger, viewDir, spec): Unit
     }
     val ins2 = orders.filter(col("o_orderkey") % 101 === 0)
       .withColumn("o_orderkey", col("o_orderkey") + 20000000)
     val out = graft.BenchPhase("op") {
-    Lake.mergeInto(spark, ledger, gen, ins2, "o_orderkey", changeFeed = true)
+    Lake.mergeInto(spark, ledger, gen, ins2, "o_orderkey")
     applyRound(spark, ledger, viewDir, spec): Unit
     view(spark, viewDir)
       .select(col("o_orderpriority"), col("mv_cnt").as("n_orders"),

@@ -55,7 +55,7 @@ object UpsertLoop {
     * crash mid-query. */
   def applyBatch(ledgerDir: String, genRoot: String, key: String,
       orderCol: String, deleteWhen: Option[org.apache.spark.sql.Column],
-      changeFeed: Boolean, batch: DataFrame, batchId: Long): Option[Long] = {
+      batch: DataFrame, batchId: Long): Option[Long] = {
     val spark = batch.sparkSession
     val tag = s"upsert-$batchId"
     if (applied(spark, ledgerDir, tag)) return None
@@ -86,20 +86,18 @@ object UpsertLoop {
       case None => latest
     }
     Some(Lake.mergeIntoMor(spark, ledgerDir, genRoot, src, key,
-      deleteWhen = deleteWhen, changeFeed = changeFeed,
-      genSuffix = Some(tag)))
+      deleteWhen = deleteWhen, genSuffix = Some(tag)))
   }
 
   /** The stream writer: every micro-batch through [[applyBatch]]. Caller
     * sets checkpointLocation and trigger before `.start()`. */
   def upsertStream(stream: DataFrame, ledgerDir: String, genRoot: String,
       key: String, orderCol: String,
-      deleteWhen: Option[org.apache.spark.sql.Column] = None,
-      changeFeed: Boolean = false)
+      deleteWhen: Option[org.apache.spark.sql.Column] = None)
       : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
     stream.writeStream.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         applyBatch(ledgerDir, genRoot, key, orderCol, deleteWhen,
-          changeFeed, batch, batchId): Unit
+          batch, batchId): Unit
     }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.Lake
+import graft.sources.{GraftTable, Lake}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -81,10 +81,11 @@ class BranchSpec extends GraftSpec {
     val branchDir = ledger.replace("/ledger", "/branch")
     val fork = Lake.branch(spark, ledger, branchDir)
     val cust = spark.read.parquet(s"$sf/customer.parquet")
+    Lake.enableChangeFeed(branchDir)
     Lake.mergeInto(spark, branchDir, gen,
       cust.filter(col("c_custkey") % 3 === 0)
         .withColumn("c_acctbal", col("c_acctbal") + 10),
-      "c_custkey", changeFeed = true)
+      "c_custkey")
     val branchState = state(branchDir)
     val ids = Lake.publish(spark, branchDir)
     assert(ids == Seq(fork + 1))
@@ -105,6 +106,37 @@ class BranchSpec extends GraftSpec {
     assert(Lake.publish(spark, b2) == Seq(fork2 + 1))
     assert(state(ledger) == want)
     assert(state(ledger).forall(_._1 % 7 != 0))
+  }
+
+  test("SQL DML on a branch of a feed table records change rows; a table " +
+      "that never turned its feed on reads the schema-less empty feed") {
+    val row = "'Customer#feed', 3, 10.5D, 'BUILDING'"
+    def dml(t: GraftTable, name: String): Unit = {
+      t.bindSql(name)
+      t.sql(s"UPDATE $name SET c_acctbal = c_acctbal + 1 WHERE c_custkey = 7")
+      t.sql(s"DELETE FROM $name WHERE c_custkey = 11")
+      t.sql(s"INSERT INTO $name SELECT * FROM VALUES (90000001L, $row) " +
+        "AS v(c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment)")
+    }
+    val (landing, ledger, gen) = fresh()
+    land(landing, ledger)
+    Lake.enableChangeFeed(ledger)
+    val branchDir = ledger.replace("/ledger", "/branch")
+    val fork = Lake.branch(spark, ledger, branchDir)
+    dml(GraftTable(spark, branchDir, gen + "_branch"), "feed_branch")
+    val changes = Lake.readChanges(spark, branchDir, fork)
+      .select("c_custkey", "_change_type", "_commit_snapshot").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    assert(changes == Set((7L, "update_preimage", fork + 1),
+      (7L, "update_postimage", fork + 1), (11L, "delete", fork + 2),
+      (90000001L, "insert", fork + 3)))
+    // the same statements on a table without the feed: no change rows,
+    // and the feed reads as the schema-less empty frame
+    val (landing2, ledger2, gen2) = fresh()
+    land(landing2, ledger2)
+    dml(GraftTable(spark, ledger2, gen2), "feedless_cust")
+    val none = Lake.readChanges(spark, ledger2, 0)
+    assert(none.columns.isEmpty && none.isEmpty)
   }
 
   test("stale main refuses with nothing appended; held marker aborts " +

@@ -5,11 +5,11 @@ import org.apache.spark.sql.functions.{col, lit}
 import java.nio.file.Files
 
 /** Spark-job budget of single-row SQL DML on a ledger table: each of
-  * UPDATE, DELETE, INSERT and MERGE (one matched and one new key), and a
-  * change-feed MERGE delete and UPDATE, runs under a job listener and
-  * must stay inside its budget, so a change to the commit path cannot
-  * add jobs silently; the write path and the scan each commit takes are
-  * counted. Warm reads of a bound table that fit the driver bound run on
+  * UPDATE, DELETE, INSERT and MERGE (one matched and one new key), a
+  * change-feed MERGE delete and UPDATE, and the four SQL statements on a
+  * change-feed table, runs under a job listener and must stay inside
+  * its budget, so a change to the commit path cannot add jobs silently;
+  * the write path and the scan each commit takes are counted. Warm reads of a bound table that fit the driver bound run on
   * the driver with no job, a renamed table's read stays relational, and
   * every job of a commit or a maintained state's round carries a
   * description. */
@@ -130,6 +130,7 @@ class DmlJobBudgetSpec extends GraftSpec {
     spark.read.parquet(s"$sf/customer.parquet")
       .repartition(8).write.parquet(s"$tmp/landing")
     t.ingest(s"$tmp/landing", statsCols = Seq("c_custkey"))
+    t.enableChangeFeed()
     val start = t.snapshot
     // (jobs, commit.driver count added) of `body`
     def measured(body: => Unit): (Int, Long) = {
@@ -144,8 +145,7 @@ class DmlJobBudgetSpec extends GraftSpec {
           "c_custkey", deleteWhen = Some(lit(true)), changeFeed = true)
       },
       "feed-update" -> measured {
-        t.update(col("c_custkey") === 23L, Seq("c_acctbal" -> lit(4.5)),
-          changeFeed = true)
+        t.update(col("c_custkey") === 23L, Seq("c_acctbal" -> lit(4.5)))
       })
     info(s"(jobs, commit.driver) per change-feed statement: $used")
     used.foreach { case (kind, (jobs, driver)) =>
@@ -158,6 +158,51 @@ class DmlJobBudgetSpec extends GraftSpec {
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(changes == Set((21L, "delete"), (22L, "delete"),
       (23L, "update_preimage"), (23L, "update_postimage")))
+    graft.streaming.MirrorLoop.rmrf(new java.io.File(tmp))
+  }
+
+  test("warm single-row SQL UPDATE, DELETE, MERGE and INSERT on a feed " +
+      "table run no Spark job and take the driver path") {
+    val tmp = Files.createTempDirectory("graft_dml_feed_sql").toString
+    val t = GraftTable(spark, s"$tmp/ledger", s"$tmp/gen")
+    spark.read.parquet(s"$sf/customer.parquet")
+      .repartition(8).write.parquet(s"$tmp/landing")
+    t.ingest(s"$tmp/landing", statsCols = Seq("c_custkey"))
+    t.enableChangeFeed()
+    t.bindSql("feed_budget_cust")
+    val row = "'Customer#feed', 3, 10.5D, 'BUILDING'"
+    def values(keys: Long*): String = "SELECT * FROM VALUES " +
+      keys.map(k => s"(${k}L, $row)").mkString(", ") +
+      " AS v(c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment)"
+    // the four statements on keys k (update), k+1 (delete), k+2 (merge,
+    // matched) and k+90000000 (merge, new), k+90000100 (insert)
+    def stmts(k: Long) = Seq(
+      "update" -> (s"UPDATE feed_budget_cust SET c_acctbal = 1.5D " +
+        s"WHERE c_custkey IN ($k)"),
+      "delete" -> s"DELETE FROM feed_budget_cust WHERE c_custkey IN (${k + 1})",
+      "merge" -> (s"MERGE INTO feed_budget_cust USING (" +
+        values(k + 2, k + 90000000L) + ") src ON " +
+        "feed_budget_cust.c_custkey = src.c_custkey WHEN MATCHED THEN " +
+        "UPDATE SET * WHEN NOT MATCHED THEN INSERT *"),
+      "insert" -> s"INSERT INTO feed_budget_cust ${values(k + 90000100L)}")
+    stmts(20).foreach { case (_, sql) => t.sql(sql).head() } // warm-up
+    val start = t.snapshot
+    val used = stmts(30).map { case (kind, sql) =>
+      val head = t.snapshot
+      val before = Lake.writePaths.getOrElse("commit.driver", 0L)
+      val jobs = jobsOf { assert(t.sql(sql).head().getLong(0) == head + 1) }
+      kind -> (jobs, Lake.writePaths.getOrElse("commit.driver", 0L) - before)
+    }
+    info(s"(jobs, commit.driver) per feed-table statement: $used")
+    used.foreach { case (kind, (jobs, driver)) =>
+      assert(jobs == 0 && driver == 1,
+        s"$kind launched $jobs jobs, commit.driver +$driver; all: $used")
+    }
+    val changes = t.readChanges(start).select("c_custkey", "_change_type")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(changes == Set((30L, "update_preimage"), (30L, "update_postimage"),
+      (31L, "delete"), (32L, "update_preimage"), (32L, "update_postimage"),
+      (90000030L, "insert"), (90000130L, "insert")))
     graft.streaming.MirrorLoop.rmrf(new java.io.File(tmp))
   }
 

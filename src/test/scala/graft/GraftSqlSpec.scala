@@ -199,8 +199,8 @@ class GraftSqlSpec extends GraftSpec {
     Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(s"$tmp/landing")
     tbl.ingest(s"$tmp/landing")
     val head = tbl.snapshot
-    tbl.overwrite(Seq((3L, "c"), (4L, "d"), (5L, "e")).toDF("k", "v"),
-      changeFeed = true)
+    tbl.enableChangeFeed()
+    tbl.overwrite(Seq((3L, "c"), (4L, "d"), (5L, "e")).toDF("k", "v"))
     val ch = tbl.readChanges(head)
     assert(ch.filter(col("_change_type") === "delete").select(col("k"))
       .collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
@@ -612,7 +612,7 @@ class GraftSqlSpec extends GraftSpec {
     // two change-feed commits: an upsert merge and a delete
     tbl.merge(Seq((2L, "b2", 25.0), (4L, "d", 40.0)).toDF("k", "name", "v"),
       "k", changeFeed = true)
-    tbl.delete(col("k") === 1L, changeFeed = true)
+    tbl.delete(col("k") === 1L)
     // the function form joins like any relation
     val typed = tbl.sql(
       s"""SELECT _change_type AS ct, CAST(count(*) AS BIGINT) AS n
@@ -800,8 +800,9 @@ class GraftSqlSpec extends GraftSpec {
     tbl.ingest(s"$tmp/landing")
     val pathsBefore = tbl.files().select("path").collect().map(_.getString(0)).toSet
     val head = tbl.snapshot
+    tbl.enableChangeFeed()
     val snap = tbl.update(col("n_regionkey") === 0,
-      Seq("n_name" -> concat(col("n_name"), lit("_U"))), changeFeed = true)
+      Seq("n_name" -> concat(col("n_name"), lit("_U"))))
     assert(snap == head + 1)
     val pathsAfter = tbl.files().select("path").collect().map(_.getString(0)).toSet
     val kept = pathsBefore.intersect(pathsAfter)

@@ -29,8 +29,9 @@ class LedgerSchemaSpec extends GraftSpec {
     t.ingest(s"$tmp/landing", statsCols = Seq("k"))
     // every ledger-row-producing op family: COW update (remove+add+cdc),
     // MOR delete (dv sidecar rows), plain append, checkpoint
-    t.update(col("k") === 3L, Seq("v" -> lit("upd")), changeFeed = true)
-    t.deleteMor(col("k") === 7L, changeFeed = true)
+    t.enableChangeFeed()
+    t.update(col("k") === 3L, Seq("v" -> lit("upd")))
+    t.deleteMor(col("k") === 7L)
     t.append(Seq((100L, "x", 0L)).toDF("k", "v", "g"))
     t.compactLedger()
     t.append(Seq((101L, "y", 1L)).toDF("k", "v", "g"))
@@ -90,8 +91,8 @@ class LedgerSchemaSpec extends GraftSpec {
       .select(lit(0L).as("k"), lit("").as("v")).limit(0))
     assert(t.read().count() == 0)
     val head = t.snapshot
-    t.overwrite(Seq((10L, "x"), (11L, "y")).toDF("k", "v"),
-      changeFeed = true)
+    t.enableChangeFeed()
+    t.overwrite(Seq((10L, "x"), (11L, "y")).toDF("k", "v"))
     val ch = t.readChanges(head)
     assert(ch.filter(col("_change_type") === "insert").select(col("k"))
       .collect().map(_.getLong(0)).sorted.toSeq == Seq(10L, 11L),
@@ -104,8 +105,8 @@ class LedgerSchemaSpec extends GraftSpec {
     t2.ingest(s"$tmp/landing2")
     t2.overwrite(Seq.empty[(Long, String)].toDF("k", "v"))
     val empHead = t2.snapshot
-    t2.overwrite(Seq.empty[(Long, String)].toDF("k", "v"),
-      changeFeed = true)
+    t2.enableChangeFeed()
+    t2.overwrite(Seq.empty[(Long, String)].toDF("k", "v"))
     assert(t2.snapshot == empHead, "truncate of empty table must no-op")
   }
 

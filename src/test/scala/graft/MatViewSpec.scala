@@ -44,13 +44,13 @@ class MatViewSpec extends GraftSpec {
 
     // merge 1: updates + a FULL group deletion (all MACHINERY) — the
     // min/max touched-group rescan path, and count-zero elimination
+    Lake.enableChangeFeed(ledger)
     Lake.mergeInto(spark, ledger, gen,
       cust.filter(col("c_custkey") % 10 === 0
           && col("c_mktsegment") =!= "MACHINERY")
         .withColumn("c_acctbal", col("c_acctbal") + 1)
         .unionByName(cust.filter(col("c_mktsegment") === "MACHINERY")),
-      "c_custkey", deleteWhen = Some(col("c_mktsegment") === "MACHINERY"),
-      changeFeed = true)
+      "c_custkey", deleteWhen = Some(col("c_mktsegment") === "MACHINERY"))
     val cur1 = MatView.applyRound(spark, ledger, viewDir, spec)
     assert(cur1 > snap0)
     assert(canon(MatView.view(spark, viewDir)) == canon(recompute(ledger)))
@@ -66,7 +66,7 @@ class MatViewSpec extends GraftSpec {
       cust.filter(col("c_custkey") % 7 === 0
           && col("c_mktsegment") =!= "MACHINERY")
         .withColumn("c_custkey", col("c_custkey") + 1000000),
-      "c_custkey", changeFeed = true)
+      "c_custkey")
     val folded = MatView.applyDelta(
       MatView.view(spark, viewDir),
       Lake.readChanges(spark, ledger, cur1), spec,
@@ -82,12 +82,12 @@ class MatViewSpec extends GraftSpec {
       cust.filter(col("c_custkey") % 3 === 0
           && col("c_mktsegment") =!= "MACHINERY")
         .withColumn("c_acctbal", col("c_acctbal") + 5),
-      "c_custkey", changeFeed = true)
+      "c_custkey")
     Lake.mergeInto(spark, ledger, gen,
       cust.filter(col("c_custkey") % 6 === 0
           && col("c_mktsegment") =!= "MACHINERY")
         .withColumn("c_acctbal", col("c_acctbal") + 11),
-      "c_custkey", changeFeed = true)
+      "c_custkey")
     val cur3 = MatView.applyRound(spark, ledger, viewDir, spec)
     assert(canon(MatView.view(spark, viewDir)) == canon(recompute(ledger)))
 
@@ -107,7 +107,7 @@ class MatViewSpec extends GraftSpec {
       cust.filter(col("c_custkey") % 10 === 3
           && col("c_mktsegment") =!= "MACHINERY")
         .withColumn("c_acctbal", col("c_acctbal") + 9),
-      "c_custkey", changeFeed = true)
+      "c_custkey")
     MatView.viewStream(spark, ledger, viewDir, spec, ckpt).awaitTermination()
     assert(canon(MatView.view(spark, viewDir)) == canon(recompute(ledger)))
     MatView.viewStream(spark, ledger, viewDir, spec, ckpt).awaitTermination()

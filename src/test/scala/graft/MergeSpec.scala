@@ -258,10 +258,10 @@ class MergeSpec extends GraftSpec {
     val toDelete = cust.filter(col("c_mktsegment") === "MACHINERY")
     val source = updates.unionByName(inserts).unionByName(toDelete)
     val (nOrig, nIns, nDel) = (cust.count(), inserts.count(), toDelete.count())
+    Lake.enableChangeFeed(ledger)
     plans.synchronized(plans.clear()) // judge only the merge's own plans
     val snap1 = Lake.mergeInto(s2, ledger, gen, source, "c_custkey",
-      deleteWhen = Some(col("c_mktsegment") === "MACHINERY"),
-      changeFeed = true)
+      deleteWhen = Some(col("c_mktsegment") === "MACHINERY"))
     // the listener bus delivers asynchronously: wait until it goes quiet
     var stable = 0
     var last = -1
@@ -308,9 +308,9 @@ class MergeSpec extends GraftSpec {
     val nUpd = updates.count()
     val nIns = inserts.count()
     val nDel = toDelete.count()
+    Lake.enableChangeFeed(ledger)
     val snap1 = Lake.mergeInto(spark, ledger, gen, source,
-      "c_custkey", deleteWhen = Some(col("c_mktsegment") === "MACHINERY"),
-      changeFeed = true)
+      "c_custkey", deleteWhen = Some(col("c_mktsegment") === "MACHINERY"))
     val ch = Lake.readChanges(spark, ledger, snap0)
     val byType = ch.groupBy(col("_change_type")).count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -339,8 +339,7 @@ class MergeSpec extends GraftSpec {
     val more = cust.filter(col("c_custkey") % 10 === 3
         && col("c_mktsegment") =!= "MACHINERY").limit(5)
       .withColumn("c_acctbal", col("c_acctbal") + 7)
-    val snap2 = Lake.mergeInto(spark, ledger, gen, more, "c_custkey",
-      changeFeed = true)
+    val snap2 = Lake.mergeInto(spark, ledger, gen, more, "c_custkey")
     val ch2 = Lake.readChanges(spark, ledger, snap1)
     assert(ch2.filter(col("_change_type") === "update_postimage").count() == 5)
     assert(ch2.select(col("_commit_snapshot")).distinct().collect()
@@ -352,11 +351,13 @@ class MergeSpec extends GraftSpec {
     assert(Lake.readAt(spark, ledger, snap2)
       .filter(col("c_mktsegment") === "MACHINERY"
         && col("c_custkey") < 1000000).count() == 0)
-    // the feed is OPT-IN: a flagless merge pays no classification cost
-    // and emits nothing
-    Lake.mergeInto(spark, ledger, gen,
+    // the feed is a property of the table: on a table that never turned
+    // it on, a merge pays no classification cost and emits nothing
+    val (landingOff, ledgerOff, genOff) = fresh()
+    val off0 = landCustomers(landingOff, ledgerOff)
+    Lake.mergeInto(spark, ledgerOff, genOff,
       cust.filter(col("c_custkey") % 10 === 7).limit(3), "c_custkey")
-    assert(Lake.readChanges(spark, ledger, snap2).count() == 0)
+    assert(Lake.readChanges(spark, ledgerOff, off0).count() == 0)
     // the empty frame CARRIES the cdc schema: a consumer may project or
     // filter on _change_type before checking emptiness (ADVICE r7 closed)
     assert(Lake.readChanges(spark, ledger, snap2)
@@ -394,8 +395,9 @@ class MergeSpec extends GraftSpec {
     assert(Lake.readChanges(spark, ledger, snap0).count() == 0,
       "feed-off delete leaked cdc rows")
     // feed ON: exactly the deleted rows, typed delete, stamped
+    Lake.enableChangeFeed(ledger)
     val sOn = Lake.deleteWhere(spark, ledger, gen,
-      col("c_mktsegment") === "MACHINERY", changeFeed = true)
+      col("c_mktsegment") === "MACHINERY")
     val ch = Lake.readChanges(spark, ledger, sOff)
     assert(ch.select("_change_type").distinct().collect()
       .map(_.getString(0)).toSeq == Seq("delete"))

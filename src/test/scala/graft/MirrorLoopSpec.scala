@@ -37,20 +37,20 @@ class MirrorLoopSpec extends GraftSpec {
 
     val cust = spark.read.parquet(s"$sf/customer.parquet")
     // merge 1: updates + deletes (disjoint key sets), with the feed on
+    Lake.enableChangeFeed(ledger)
     Lake.mergeInto(spark, ledger, gen,
       cust.filter(col("c_custkey") % 10 === 0
           && col("c_mktsegment") =!= "MACHINERY")
         .withColumn("c_acctbal", col("c_acctbal") + 1)
         .unionByName(cust.filter(col("c_mktsegment") === "MACHINERY")),
-      "c_custkey", deleteWhen = Some(col("c_mktsegment") === "MACHINERY"),
-      changeFeed = true)
+      "c_custkey", deleteWhen = Some(col("c_mktsegment") === "MACHINERY"))
     // compaction between merges: a rewrite, not row changes — feed silent
     Lake.compactIngested(spark, ledger, s"$t/compact", 1000000)
     // merge 2: inserts
     Lake.mergeInto(spark, ledger, gen,
       cust.filter(col("c_custkey") % 7 === 0)
         .withColumn("c_custkey", col("c_custkey") + 1000000),
-      "c_custkey", changeFeed = true)
+      "c_custkey")
 
     // ONE catch-up round applies both merges (last-writer-wins per key)
     val cur1 = MirrorLoop.applyRound(spark, ledger, mir, "c_custkey")
@@ -76,7 +76,7 @@ class MirrorLoopSpec extends GraftSpec {
       cust.filter(col("c_custkey") % 10 === 3
           && col("c_mktsegment") =!= "MACHINERY")
         .withColumn("c_acctbal", col("c_acctbal") + 5),
-      "c_custkey", changeFeed = true)
+      "c_custkey")
     MirrorLoop.changeStream(spark, ledger, mir, "c_custkey", ckpt)
       .awaitTermination()
     assert(canon(MirrorLoop.mirror(spark, mir)) == canon(truth(ledger)))
@@ -89,7 +89,7 @@ class MirrorLoopSpec extends GraftSpec {
       cust.filter(col("c_custkey") % 10 === 6
           && col("c_mktsegment") =!= "MACHINERY")
         .withColumn("c_acctbal", col("c_acctbal") + 9),
-      "c_custkey", changeFeed = true)
+      "c_custkey")
     MirrorLoop.changeStream(spark, ledger, mir, "c_custkey", ckpt)
       .awaitTermination()
     assert(canon(MirrorLoop.mirror(spark, mir)) == canon(truth(ledger)))
@@ -108,11 +108,12 @@ class MirrorLoopSpec extends GraftSpec {
     cust.repartitionByRange(2, col("c_custkey")).write.parquet(landing)
     Lake.ingestNewFiles(spark, landing, ledger)
     MirrorLoop.bootstrap(spark, ledger, mir)
+    Lake.enableChangeFeed(ledger)
     for (i <- 1 to 3) {
       Lake.mergeInto(spark, ledger, gen,
         cust.filter(col("c_custkey") % 10 === i)
           .withColumn("c_acctbal", col("c_acctbal") + i),
-        "c_custkey", changeFeed = true)
+        "c_custkey")
       MirrorLoop.applyRound(spark, ledger, mir, "c_custkey")
     }
     assert(canon(MirrorLoop.mirror(spark, mir)) == canon(truth(ledger)))

@@ -320,10 +320,10 @@ class MorSpec extends GraftSpec {
       .unionByName(cust.filter(col("c_custkey") % 101 === 0)
         .withColumn("c_custkey", col("c_custkey") + 20000000))
     val del = Some(col("c_acctbal") < 0) // matched negatives delete
-    Lake.mergeIntoMor(spark, ledgerA, genA, src, "c_custkey", del,
-      changeFeed = true)
-    Lake.mergeInto(spark, ledgerB, genB, src, "c_custkey", del,
-      changeFeed = true)
+    Lake.enableChangeFeed(ledgerA)
+    Lake.enableChangeFeed(ledgerB)
+    Lake.mergeIntoMor(spark, ledgerA, genA, src, "c_custkey", del)
+    Lake.mergeInto(spark, ledgerB, genB, src, "c_custkey", del)
     def feed(ledger: String, s: Long) =
       Lake.readChanges(spark, ledger, s)
         .select(col("c_custkey"), col("c_acctbal").cast("string"),
@@ -348,8 +348,9 @@ class MorSpec extends GraftSpec {
     val sOff = Lake.deleteWhereMor(spark, ledger, gen,
       col("c_custkey") % 11 === 0)
     assert(Lake.readChanges(spark, ledger, snap0).count() == 0)
+    Lake.enableChangeFeed(ledger)
     val sOn = Lake.deleteWhereMor(spark, ledger, gen,
-      col("c_mktsegment") === "FURNITURE", changeFeed = true)
+      col("c_mktsegment") === "FURNITURE")
     val ch = Lake.readChanges(spark, ledger, sOff)
     assert(ch.select("_change_type").distinct().collect()
       .map(_.getString(0)).toSeq == Seq("delete"))

@@ -62,7 +62,7 @@ class NswDeltaSpec extends GraftSpec {
     val delIds = t.read().filter(col("vec_id") % 97 === 3)
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet
     assert(delIds.nonEmpty)
-    t.delete(col("vec_id") % 97 === 3, changeFeed = true)
+    t.delete(col("vec_id") % 97 === 3)
     NswDelta.applyRound(spark, t.ledgerDir, idx)
     assertInvariants(idx, t) // node set == post-delete corpus ⇒ rows gone
     val g = NswDelta.table(spark, idx).read()
@@ -96,7 +96,7 @@ class NswDeltaSpec extends GraftSpec {
     val ghost = t.read().filter(col("vec_id") === 2L)
       .withColumn("vec_id", lit(990001L))
     t.merge(ghost, "vec_id", changeFeed = true)
-    t.delete(col("vec_id") === 990001L, changeFeed = true)
+    t.delete(col("vec_id") === 990001L)
     NswDelta.applyRound(spark, t.ledgerDir, idx)
     assertInvariants(idx, t)
     assert(NswDelta.table(spark, idx).read().count() == n0,
@@ -116,7 +116,8 @@ class NswDeltaSpec extends GraftSpec {
     val victims = g0.filter(col("list_id") === heavyCell)
       .orderBy(col("vec_id")).collect().map(_.getLong(1))
       .zipWithIndex.filter(_._2 % 3 != 0).map(_._1)
-    t.delete(col("vec_id").isin(victims: _*), changeFeed = true)
+    t.enableChangeFeed()
+    t.delete(col("vec_id").isin(victims: _*))
     NswDelta.applyRound(spark, t.ledgerDir, idx)
     val rep = NswDelta.driftReport(spark, idx).collect()
       .map(r => r.getInt(0) -> r).toMap
@@ -165,7 +166,7 @@ class NswDeltaSpec extends GraftSpec {
       t.merge(emb.filter(col("vec_id") % 41 === 0)
         .withColumn("vec_id", col("vec_id") + maxId),
         "vec_id", changeFeed = true)
-      t.delete(col("vec_id") % 89 === 5, changeFeed = true)
+      t.delete(col("vec_id") % 89 === 5)
       NswDelta.applyRound(spark, t.ledgerDir, idx)
       NswDelta.table(spark, idx).read()
         .select(col("vec_id"), col("nbrs")).collect()

@@ -155,8 +155,8 @@ class OccSpec extends GraftSpec {
     val src = spark.read.parquet(s"$sf/nation.parquet")
       .filter(col("n_nationkey") < 3)
       .withColumn("n_name", lit("cdc"))
-    val snap2 = Lake.mergeInto(spark, ledger, gen, src, "n_nationkey",
-      changeFeed = true)
+    Lake.enableChangeFeed(ledger)
+    val snap2 = Lake.mergeInto(spark, ledger, gen, src, "n_nationkey")
     val rowsBefore = Lake.readAt(spark, ledger, snap2).count()
     val histBefore = Lake.history(spark, ledger).count()
     val changesBefore = Lake.readChanges(spark, ledger, snap).count()

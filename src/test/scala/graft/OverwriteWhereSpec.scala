@@ -80,7 +80,8 @@ class OverwriteWhereSpec extends GraftSpec {
     val (t, _) = dayTable()
     val head = t.snapshot
     val repl = Seq(("d1", 200L, 5.0)).toDF("day", "id", "v")
-    t.overwriteWhere(col("day") === "d1", repl, changeFeed = true)
+    t.enableChangeFeed()
+    t.overwriteWhere(col("day") === "d1", repl)
     val ch = t.readChanges(head)
     assert(ch.filter(col("_change_type") === "delete").count() == 10)
     assert(ch.filter(col("_change_type") === "delete"
@@ -97,8 +98,9 @@ class OverwriteWhereSpec extends GraftSpec {
     val (t, _) = dayTable()
     t.overwrite(t.read().limit(0))
     val head = t.snapshot
+    t.enableChangeFeed()
     t.overwriteWhere(col("day") === "d1",
-      Seq(("d1", 500L, 1.0)).toDF("day", "id", "v"), changeFeed = true)
+      Seq(("d1", 500L, 1.0)).toDF("day", "id", "v"))
     val ch = t.readChanges(head)
     assert(ch.filter(col("_change_type") === "insert").count() == 1,
       "empty-table scoped overwrite must record insert images")
@@ -106,8 +108,8 @@ class OverwriteWhereSpec extends GraftSpec {
     // the schema must still be recorded (truncate must stay readable)
     val tmp = Files.createTempDirectory("graft_owfresh").toString
     val t2 = GraftTable(spark, s"$tmp/ledger", s"$tmp/gen")
-    t2.overwrite(Seq((1L, "a"), (2L, "b")).toDF("k", "v"),
-      changeFeed = true)
+    t2.enableChangeFeed()
+    t2.overwrite(Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
     assert(t2.readChanges(0).filter(col("_change_type") === "insert")
       .count() == 2)
     t2.overwrite(t2.read().limit(0)) // truncate

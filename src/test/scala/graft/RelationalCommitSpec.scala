@@ -79,8 +79,9 @@ class RelationalCommitSpec extends GraftSpec {
     val tu = GraftTable(spark, s"$tmp/update/ledger", s"$tmp/update/gen")
     tu.ingest(s"$tmp/landing", statsCols = Seq("id"))
     val u0 = tu.snapshot
+    tu.enableChangeFeed()
     val before2 = Lake.writePaths
-    tu.update(col("id") === 3L, Seq("v" -> lit(-3L)), changeFeed = true)
+    tu.update(col("id") === 3L, Seq("v" -> lit(-3L)))
     assert(pathDelta(before2)("commit.distributed") == 1
       && pathDelta(before2)("commit.driver") == 0)
     assert(tu.snapshot == u0 + 1)

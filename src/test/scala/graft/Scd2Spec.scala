@@ -21,12 +21,13 @@ class Scd2Spec extends GraftSpec {
       .withColumn("n_name", lit(name))
     // s2: update key 3; s3: delete key 3 (matched delete arm);
     // s4: re-insert key 3
+    Lake.enableChangeFeed(ledger)
     val s2 = Lake.mergeInto(spark, ledger, gen, one(3, "ERA_A"),
-      "n_nationkey", changeFeed = true)
+      "n_nationkey")
     val s3 = Lake.mergeInto(spark, ledger, gen, one(3, "doomed"),
-      "n_nationkey", deleteWhen = Some(lit(true)), changeFeed = true)
+      "n_nationkey", deleteWhen = Some(lit(true)))
     val s4 = Lake.mergeInto(spark, ledger, gen, one(3, "ERA_B"),
-      "n_nationkey", changeFeed = true)
+      "n_nationkey")
     val dim = Lake.scd2(Lake.readChanges(spark, ledger, 0), "n_nationkey")
       .filter(col("n_nationkey") === 3)
       .select(col("valid_from"), col("valid_to"), col("n_name"))

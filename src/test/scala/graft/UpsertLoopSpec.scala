@@ -36,13 +36,13 @@ class UpsertLoopSpec extends GraftSpec {
     val b0 = Seq(Upd(1, "a", 1, false), Upd(2, "b", 1, false),
       Upd(1, "a2", 2, false)).toDF()
     assert(UpsertLoop.applyBatch(ledger, gen, "k", "ver", del,
-      changeFeed = false, b0, 0L).isDefined)
+      b0, 0L).isDefined)
     assert(state(ledger) == Map(1L -> ("a2", 2L), 2L -> ("b", 1L)))
 
     // REPLAY of batch 0: must be a no-op (no new snapshot, no re-feed)
     val snapAfter0 = Lake.currentSnapshot(spark, ledger)
     assert(UpsertLoop.applyBatch(ledger, gen, "k", "ver", del,
-      changeFeed = false, b0, 0L).isEmpty)
+      b0, 0L).isEmpty)
     assert(Lake.currentSnapshot(spark, ledger) == snapAfter0)
 
     // batch 1: update k=2, insert k=3, tombstone k=1, and a tombstone
@@ -50,13 +50,13 @@ class UpsertLoopSpec extends GraftSpec {
     val b1 = Seq(Upd(2, "b2", 2, false), Upd(3, "c", 1, false),
       Upd(1, "", 3, true), Upd(99, "", 1, true)).toDF()
     assert(UpsertLoop.applyBatch(ledger, gen, "k", "ver", del,
-      changeFeed = false, b1, 1L).isDefined)
+      b1, 1L).isDefined)
     assert(state(ledger) == Map(2L -> ("b2", 2L), 3L -> ("c", 1L)))
 
     // in-batch upsert-then-tombstone of the SAME key: latest (the
     // tombstone) wins, key ends absent
     val b2 = Seq(Upd(3, "c2", 2, false), Upd(3, "", 3, true)).toDF()
-    UpsertLoop.applyBatch(ledger, gen, "k", "ver", del, false, b2, 2L)
+    UpsertLoop.applyBatch(ledger, gen, "k", "ver", del, b2, 2L)
     assert(state(ledger) == Map(2L -> ("b2", 2L)))
 
     // the sink never rewrote a data file: every commit is dv+delta only
